@@ -1302,8 +1302,9 @@ def _run_to_memory(out: DataFrame, stop_after_batch0: bool = False):
     processing-time timeouts — those never self-terminate (no-data
     micro-batches run forever), so stop once the data batch committed."""
     import tempfile
-    import time
     import uuid
+
+    from homonim_spark.streaming import stop_after_data_batch
 
     name = f"gate_stream_{uuid.uuid4().hex[:8]}"
     ck = tempfile.mkdtemp(prefix="homonim-stream-ck-")
@@ -1311,15 +1312,7 @@ def _run_to_memory(out: DataFrame, stop_after_batch0: bool = False):
          .queryName(name).option("checkpointLocation", ck)
          .trigger(availableNow=True).start())
     if stop_after_batch0:
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            if q.awaitTermination(3):
-                break
-            p = q.lastProgress
-            if p is not None and p.get("batchId", -1) >= 1:
-                break
-        q.stop()
-        q.awaitTermination(60)
+        stop_after_data_batch(q)
     else:
         q.awaitTermination()
     spark = out.sparkSession

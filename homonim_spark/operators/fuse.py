@@ -10,8 +10,8 @@ Spark-native re-expression:
     span structure                 tile payloads
                                         │ (src tiles block-mean → proc grid)
                                         ▼
-                     chunk+halo routing (JVM Column routing of whole tiles,
-                     or Arrow strip slicing — both border-exact)
+                     chunk+halo routing (JVM Column routing of whole
+                     tiles, border-exact)
                                         │ ONE shuffle on (image_id, band, chunk)
                                         ▼
         repartition+sort ► mapInPandas streaming groups
@@ -28,9 +28,8 @@ Design notes for 100 TB scale:
   cells (default 4×4), the engine analogue of the reference's
   ``max_block_mem`` block sizing (``raster_pair.py:227-269``) — it amortizes
   the Arrow/pandas crossing over 16 tiles, fits one model per canvas instead
-  of per tile (bigger vectorized numpy ops), and needs halo strips only at
-  chunk borders, cutting shuffle duplication from ~4·overlap/tile per tile
-  to ~4·overlap/(chunk·tile) per tile.
+  of per tile (bigger vectorized numpy ops), and needs halo tiles only at
+  chunk borders, so border-tile duplication shrinks as ~2/chunk.
 - The src↔ref pairing (reference BlockPair generation,
   ``raster_pair.py:342-428``) is NOT a separate join: source and reference
   tiles are unioned with a ``role`` column and co-grouped in the same
@@ -70,20 +69,6 @@ from homonim_spark.tiles import decode_tile, encode_tile
 # ---------------------------------------------------------------------------
 # schemas
 # ---------------------------------------------------------------------------
-
-HALO_PIECE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType(), False),
-    T.StructField("band", T.IntegerType(), False),
-    T.StructField("chunk_id", T.LongType(), False),     # destination chunk cell-id (chunk grid)
-    T.StructField("role", T.StringType(), False),       # 'src' | 'ref' | 'scov' | 'src_orig'
-    T.StructField("cell_id", T.LongType(), False),      # source tile's cell
-    T.StructField("py", T.IntegerType(), False),        # placement row in canvas
-    T.StructField("px", T.IntegerType(), False),        # placement col in canvas
-    T.StructField("ph", T.IntegerType(), False),
-    T.StructField("pw", T.IntegerType(), False),
-    T.StructField("media_ref", T.StringType(), True),
-    T.StructField("data", T.BinaryType(), False),
-])
 
 FUSED_TILE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -146,8 +131,8 @@ def infer_fuse_config(tiles: DataFrame, params: KernelModelParams,
     proc_crs = ProcCrs(proc_crs)
     if proc_crs == ProcCrs.auto:
         proc_crs = ProcCrs.ref if src_finer else ProcCrs.src
-    # halo correctness bound: both halo strategies exchange data with the
-    # 1-ring of neighbor tiles/chunks only, so the overlap must fit inside
+    # halo correctness bound: halo routing exchanges data with the 1-ring
+    # of neighbor tiles/chunks only, so the overlap must fit inside
     # one tile (the reference's block > overlap assertion,
     # raster_pair.py:254-255,364-365)
     oh, ow = overlap_for_kernel(params.kernel_shape)
@@ -220,112 +205,10 @@ def coverage_audit(tiles: DataFrame) -> int:
 
 
 # ---------------------------------------------------------------------------
-# stage 2: chunk + halo explode (the reference's block/overlap
-# materialisation, P3/P4, on the chunk grid)
-# ---------------------------------------------------------------------------
-
-def halo_explode(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
-    """Route every proc-grid tile into its chunk's canvas, plus the edge
-    strips neighboring chunks need for kernel-sum continuity (reference
-    overlap semantics: in-blocks overlap by ceil(k/2),
-    ``raster_pair.py:342-428`` + ``utils.py:136-153``).
-
-    The original-resolution src tile rides along as a ``src_orig`` piece
-    (center chunk only) for the apply stage.  Canvas-local placement is
-    computed from global pixel coordinates, so any chunk size (including 1)
-    gives identical assembled numerics.
-    """
-    tile_px = cfg.tile
-    oh, ow = overlap_for_kernel(cfg.params.kernel_shape)
-    factor = cfg.factor
-    K = cfg.chunk
-    ship_coverage = cfg.params.mask_partial
-    span = K * tile_px  # canvas interior size (proc px)
-
-    def slice_pieces(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "band", "chunk_id", "role", "cell_id",
-                                   "py", "px", "ph", "pw", "media_ref", "data")}
-
-            def emit(img, band, chk, role, cid, py, px, arr, mref=None):
-                out["image_id"].append(img)
-                out["band"].append(band)
-                out["chunk_id"].append(chk)
-                out["role"].append(role)
-                out["cell_id"].append(cid)
-                out["py"].append(py)
-                out["px"].append(px)
-                out["ph"].append(arr.shape[0])
-                out["pw"].append(arr.shape[1])
-                out["media_ref"].append(mref)
-                out["data"].append(encode_tile(arr))
-
-            def emit_with_halo(img, band, cid, role, arr):
-                """Intersect this tile with the ≤9 candidate chunk canvases
-                in global proc-pixel coordinates."""
-                res = grid.cell_res(cid)
-                r, c = grid.cell_row(cid), grid.cell_col(cid)
-                R, C = r // K, c // K
-                t0r, t0c = r * tile_px, c * tile_px
-                for dR in (-1, 0, 1):
-                    g0r = (R + dR) * span - oh
-                    g1r = (R + dR + 1) * span + oh
-                    i0r, i1r = max(t0r, g0r), min(t0r + tile_px, g1r)
-                    if i0r >= i1r:
-                        continue
-                    for dC in (-1, 0, 1):
-                        g0c = (C + dC) * span - ow
-                        g1c = (C + dC + 1) * span + ow
-                        i0c, i1c = max(t0c, g0c), min(t0c + tile_px, g1c)
-                        if i0c >= i1c:
-                            continue
-                        piece = arr[i0r - t0r : i1r - t0r, i0c - t0c : i1c - t0c]
-                        if (dR or dC) and np.all(np.isnan(piece)):
-                            continue  # all-nodata strips carry no information
-                        chk = grid.cell_id(res, R + dR, C + dC)
-                        emit(img, band, chk, role, cid, i0r - g0r, i0c - g0c, piece)
-
-            for r in pdf.itertuples(index=False):
-                arr = decode_tile(r.data, r.h, r.w)
-                if r.role == "src":
-                    # original-res src tile: center chunk only, for apply
-                    res = grid.cell_res(int(r.cell_id))
-                    rr, cc = grid.cell_row(int(r.cell_id)), grid.cell_col(int(r.cell_id))
-                    chk = grid.cell_id(res, rr // K, cc // K)
-                    emit(r.image_id, r.band, chk, "src_orig", int(r.cell_id),
-                         (rr % K) * tile_px * factor, (cc % K) * tile_px * factor,
-                         arr, r.media_ref)
-                    if ship_coverage:
-                        # plain block-mean of the src-grid mask — the strict
-                        # coverage channel for mask_partial (the reference's
-                        # mask reproject with average, kernel_model.py:396-399)
-                        cov = ops.block_mean(
-                            (~np.isnan(arr)).astype(np.float32), (factor, factor)
-                        )
-                        cov[cov <= 0] = np.nan  # reuse NaN strip elision
-                        emit_with_halo(r.image_id, r.band, int(r.cell_id), "scov", cov)
-                    # reproject to proc grid for fitting (block-mean average,
-                    # reference RefSpaceModel.fit kernel_model.py:476-482)
-                    arr = ops.downsample_average(arr, (factor, factor))
-                emit_with_halo(r.image_id, r.band, int(r.cell_id), r.role, arr)
-            yield pd.DataFrame(out)
-
-    return tiles.select(
-        "image_id", "band", "cell_id", "role", "h", "w", "media_ref", "data"
-    ).mapInPandas(slice_pieces, schema=HALO_PIECE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# stage 2b: JVM-side tile routing (the fast-CPU halo mode)
-#
-# ``halo_explode`` (above) ships minimal bytes: only the edge strips cross
-# chunk borders — the right choice when the cluster is shuffle-bound (the
-# usual case at 100 TB).  ``route_tiles`` instead routes *whole tiles* to
-# border-adjacent chunks with pure Column arithmetic — zero Python before
-# the group stage, at the cost of duplicating border tiles (~+40% shuffle at
-# chunk=4, shrinking as 2/chunk for larger chunks).  Slicing then happens
-# during canvas assembly.  Both modes produce bit-identical fused output
-# (tests/test_fuse_spark.py::test_halo_modes_agree).
+# stage 2: chunk + halo routing (the reference's block/overlap
+# materialisation, P3/P4, on the chunk grid).  Whole-tile routing keeps
+# payloads out of Python until the group stage, at the cost of ~2/chunk
+# duplication of border tiles.
 # ---------------------------------------------------------------------------
 
 def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
@@ -392,9 +275,9 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
     is per batch (~100 groups), not per group.  Results are identical; the
     sort is per-partition (spillable, no extra exchange).
 
-    Numerically identical to the strip mode: downsampling before or after
-    assembly commutes because each proc pixel's f×f source block lies
-    inside exactly one tile."""
+    Downsampling the assembled canvas equals downsampling each tile,
+    because each proc pixel's f×f source block lies inside exactly one
+    tile."""
     tile_px = cfg.tile
     oh, ow = overlap_for_kernel(cfg.params.kernel_shape)
     f = cfg.factor
@@ -448,9 +331,6 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
                 continue
             canvas[i0r - g0r : i1r - g0r, i0c - g0c : i1c - g0c] = \
                 arr[i0r - t0r : i1r - t0r, i0c - t0c : i1c - t0c]
-
-        if not owned:
-            return
 
         src_interior = src_canvas[oh * s_sc : (oh + span) * s_sc,
                                   ow * s_sc : (ow + span) * s_sc]
@@ -599,143 +479,7 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stage 3: co-grouped assemble + fit + apply (one canvas per chunk)
-# ---------------------------------------------------------------------------
-
-def fuse_blocks(pieces: DataFrame, cfg: FuseConfig) -> DataFrame:
-    """groupBy (image_id, band, chunk_id) → assemble src/ref canvases with
-    halo → kernel-model fit on the proc grid → apply to the original src
-    tiles → per-cell output rows.
-
-    One exchange realizes the reference's BlockPair read
-    (``raster_pair.py:313-340``), ``model.fit`` and ``model.apply``
-    (``fuse.py:396-401``) — src↔ref pairing included (union + co-group, so
-    no second join shuffle).
-    """
-    tile_px = cfg.tile
-    oh, ow = overlap_for_kernel(cfg.params.kernel_shape)
-    factor = cfg.factor
-    K = cfg.chunk
-    params = cfg.params
-    span = K * tile_px
-    bh, bw = span + 2 * oh, span + 2 * ow
-    src_px = tile_px * factor
-    find_r2 = params.find_r2 or (
-        Model(params.model) == Model.gain_offset and params.r2_inpaint_thresh is not None
-    )
-
-    def process_group(image_id, band, chunk_id, rows, out):
-        """rows = (role, cell_id, py, px, ph, pw, media_ref, data) tuples."""
-        blocks = {
-            "src": np.full((bh, bw), np.nan, dtype=np.float32),
-            "ref": np.full((bh, bw), np.nan, dtype=np.float32),
-        }
-        if params.mask_partial:
-            blocks["scov"] = np.full((bh, bw), np.nan, dtype=np.float32)
-        src_canvas = np.full((span * factor, span * factor), np.nan, dtype=np.float32)
-        owned = []  # (cell_id, media_ref, local_r, local_c) of src tiles here
-        for role, cell_id, py, px, ph, pw, media_ref, data in rows:
-            arr = decode_tile(data, ph, pw)
-            if role == "src_orig":
-                src_canvas[py : py + ph, px : px + pw] = arr
-                owned.append((int(cell_id), media_ref,
-                              py // (tile_px * factor), px // (tile_px * factor)))
-            else:
-                blocks[role][py : py + ph, px : px + pw] = arr
-
-        # exactly-once out-block ownership (reference raster_pair.py:389-427):
-        # only chunks owning source tiles write output — halo-only groups
-        # (strips leaked past the image edge) emit nothing
-        if not owned or not (~np.isnan(blocks["src"]) & ~np.isnan(blocks["ref"])).any():
-            return
-
-        param = fit_model(blocks["src"], blocks["ref"], params)
-        # crop params to the canvas interior (the chunk's out-block)
-        pc = param[:, oh : oh + span, ow : ow + span]
-
-        # params on the src grid for the apply stage (same interp dispatch
-        # as the routed mode — the two halo modes must stay bit-identical)
-        if factor == 1:
-            param_us = pc[:2].copy()
-        elif params.param_interp == "nearest":
-            param_us = np.stack([
-                ops.upsample_nearest(pc[0], (factor, factor)),
-                ops.upsample_nearest(pc[1], (factor, factor)),
-            ])
-        else:
-            up = ops.param_upsampler(params.param_interp)
-            fsl = (slice(oh * factor, (oh + span) * factor),
-                   slice(ow * factor, (ow + span) * factor))
-            param_us = np.stack([
-                up(param[0], (factor, factor))[fsl],
-                up(param[1], (factor, factor))[fsl],
-            ])
-        if params.mask_partial:
-            # strict coverage (kernel_model.py:375-409): proc pixels whose
-            # src coverage fraction is 1, AND param validity, eroded by a
-            # k+2 rect SE. Halo radius == erosion radius (ceil(k/2) ==
-            # k//2+1 for odd k), so the interior crop is exact.
-            cov_frac = np.nan_to_num(blocks["scov"], nan=0.0)
-            mask = (cov_frac >= 1).astype(np.uint8)
-            mask &= (~np.isnan(param[0])).astype(np.uint8)
-            se = (params.kernel_shape[0] + 2, params.kernel_shape[1] + 2)
-            full_cov = ops.erode_rect(mask, se).astype(bool)
-            cov_us = ops.upsample_nearest(
-                full_cov[oh : oh + span, ow : ow + span].astype(np.float32),
-                (factor, factor)) >= 0.5
-            param_us[:, ~cov_us] = np.nan
-        else:
-            param_us[:, np.isnan(src_canvas)] = np.nan
-        corr_canvas = apply_model(src_canvas, param_us)
-
-        for cid, mref, lr, lc in owned:
-            g = pc[0, lr * tile_px : (lr + 1) * tile_px, lc * tile_px : (lc + 1) * tile_px]
-            o = pc[1, lr * tile_px : (lr + 1) * tile_px, lc * tile_px : (lc + 1) * tile_px]
-            out["image_id"].append(image_id)
-            out["band"].append(int(band))
-            out["cell_id"].append(cid)
-            out["media_ref"].append(mref)
-            out["h"].append(tile_px)
-            out["w"].append(tile_px)
-            out["corr"].append(encode_tile(
-                corr_canvas[lr * src_px : (lr + 1) * src_px, lc * src_px : (lc + 1) * src_px]))
-            out["gain"].append(encode_tile(g))
-            out["offset"].append(encode_tile(o))
-            out["r2"].append(encode_tile(
-                pc[2, lr * tile_px : (lr + 1) * tile_px, lc * tile_px : (lc + 1) * tile_px])
-                if find_r2 and pc.shape[0] > 2 else None)
-            out["n_valid"].append(int(np.count_nonzero(~np.isnan(g))))
-
-    def stream_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # same many-small-groups streaming pattern as fuse_blocks_routed
-        cur_key = None
-        buf: list = []
-        for pdf in batches:
-            out = {f.name: [] for f in FUSED_TILE_SCHEMA.fields}
-            for row in zip(pdf["image_id"], pdf["band"], pdf["chunk_id"],
-                           pdf["role"], pdf["cell_id"], pdf["py"], pdf["px"],
-                           pdf["ph"], pdf["pw"], pdf["media_ref"], pdf["data"]):
-                key = (row[0], row[1], row[2])
-                if key != cur_key:
-                    if cur_key is not None and buf:
-                        process_group(cur_key[0], cur_key[1], cur_key[2], buf, out)
-                    cur_key, buf = key, []
-                buf.append(row[3:])
-            if out["cell_id"]:
-                yield pd.DataFrame(out)
-        if cur_key is not None and buf:
-            out = {f.name: [] for f in FUSED_TILE_SCHEMA.fields}
-            process_group(cur_key[0], cur_key[1], cur_key[2], buf, out)
-            yield pd.DataFrame(out)
-
-    from homonim_spark.partitioning import pinned_repartition
-    keyed = pinned_repartition(pieces, "image_id", "band", "chunk_id") \
-        .sortWithinPartitions("image_id", "band", "chunk_id")
-    return keyed.mapInPandas(stream_groups, schema=FUSED_TILE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# stage 4: document reassembly (span-sequence equality)
+# stage 3: document reassembly (span-sequence equality)
 # ---------------------------------------------------------------------------
 
 def reassemble_documents(spans: DataFrame) -> DataFrame:
@@ -843,7 +587,6 @@ def fuse(
     proc_crs: ProcCrs | str = ProcCrs.auto,
     check_coverage: bool = False,
     chunk: int = 4,
-    halo_mode: str = "routed",
     band_map=None,
     knn_fallback_ring: int = 0,
     sigma_clip: Optional[float] = None,
@@ -854,20 +597,8 @@ def fuse(
     """Run the full fuse pipeline; returns the fused-tile DataFrame
     (corrected src tiles + gain/offset/r2 parameter tiles per cell).
 
-    ``halo_mode``:
-    - ``"routed"`` (default): JVM-side whole-tile routing — payloads cross
-      the Python boundary exactly once (the group stage), at ~+2/chunk
-      shuffle duplication of border tiles. Measured ~40% faster wall-clock
-      on CPU-bound local executors.
-    - ``"strips"``: an Arrow pre-stage slices minimal halo strips — lowest
-      shuffle bytes (~+4·overlap/(chunk·tile), ≈1% at production tile
-      sizes) at the cost of a second payload traversal; choose when the
-      cluster is network/shuffle-bound.
-    Both produce bit-identical fused output
-    (tests/test_fuse_spark.py::test_halo_modes_agree).
-
-    Lazy end-to-end: Catalyst sees scan → semi-join → (routing expr | Arrow
-    slicer) → one hash-partitioned exchange → applyInPandas.
+    Lazy end-to-end: Catalyst sees scan → semi-join → routing expr → one
+    hash-partitioned exchange → mapInPandas.
     """
     params = KernelModelParams(
         model=Model(model), kernel_shape=tuple(kernel_shape), find_r2=find_r2,
@@ -887,14 +618,4 @@ def fuse(
         used = knn_ref_fallback(used, max_ring=knn_fallback_ring)
     if check_coverage and coverage_audit(used) > 0:
         raise ImageContentError("reference tiles do not cover all source cells")
-    if halo_mode == "routed":
-        return fuse_blocks_routed(route_tiles(used, cfg), cfg)
-    if cfg.proc_crs != ProcCrs.ref or not cfg.src_finer:
-        from homonim_spark.enums import ConfigError
-        raise ConfigError(
-            "halo_mode='strips' supports the src-finer / proc_crs='ref' "
-            "configuration only — use halo_mode='routed' (the default) for "
-            "src-space processing or a coarser-than-reference source"
-        )
-    pieces = halo_explode(used, cfg)
-    return fuse_blocks(pieces, cfg)
+    return fuse_blocks_routed(route_tiles(used, cfg), cfg)

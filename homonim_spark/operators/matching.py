@@ -18,7 +18,6 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 from homonim_spark.enums import BandMatchError
 
@@ -159,8 +158,3 @@ def match_bands(
         "ref_band": ref_bands.iloc[match_ref[ok].astype(int)]["band"].astype(int).values,
         "match_dist": match_dist[ok],
     })
-
-
-def band_map_df(spark: SparkSession, mapping: pd.DataFrame) -> DataFrame:
-    """The plan-time band mapping as a broadcastable Spark DataFrame."""
-    return spark.createDataFrame(mapping)

@@ -156,25 +156,6 @@ def cosine_topk_np(
     )
 
 
-def srp_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-random-projection bucket id as a Column expression: one bit per
-    hyperplane — ``bit_i = (v · p_i) > 0``.
-
-    NOTE: this form folds n_planes × dim float literals into the Catalyst
-    plan and runs one ``aggregate`` dot product per plane per row — fine
-    for ad-hoc use at small dim, but a plan-size/multi-pass hazard at
-    production embedding dims.  The pipelines below use
-    :func:`srp_buckets` (closure-broadcast plane matrix + one sign-GEMM
-    per Arrow batch — O(1) plan size at any dim × n_planes, mirroring the
-    ``ivf_topk`` centroid-matrix fix)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(vec, plane) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def srp_buckets(df: DataFrame, vec_col: str, planes: np.ndarray,
                 out_col: str = "bucket") -> DataFrame:
     """Append an SRP bucket column via one sign-GEMM per Arrow batch.

@@ -29,61 +29,6 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def token_count(col: Column) -> Column:
-    return F.when(F.length(F.trim(col)) == 0, F.lit(0)).otherwise(F.size(tokens(col)))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """A BPE-like proxy: count of word/number/punctuation units from a
-    regex segmentation (deterministic, JVM-side)."""
-    # split into word-ish units; each ~4.5 chars of a word becomes a token.
-    # NOTE: [^\p{Alnum}]+ is character-for-character the same class as the
-    # spelled-out [^A-Za-z0-9]+ under Java's default (non-unicode) POSIX
-    # classes, but avoids a ~50x regex slow path measured on Spark 4.1 for
-    # explicit range classes (40 CPU-s vs 0.7 CPU-s over 50k docs).
-    words = F.size(F.split(F.trim(col), r"[^\p{Alnum}]+"))
-    chars = F.length(F.regexp_replace(col, r"\s+", ""))
-    return (words + F.floor(chars / F.lit(16))).cast("long")
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def punct_ratio(col: Column) -> Column:
-    total = F.greatest(F.length(col), F.lit(1))
-    punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
-    return punct / total
-
-
-def mean_word_len(col: Column) -> Column:
-    toks = tokens(col)
-    return (
-        F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t))
-        / F.greatest(F.size(toks), F.lit(1))
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document-quality heuristic: rewards reasonable length and
-    stopword presence, penalizes punctuation soup. All built-ins."""
-    llen = F.log1p(F.length(col))
-    return (
-        F.lit(0.4) * F.least(llen / F.lit(8.0), F.lit(1.0))
-        + F.lit(0.4) * F.least(stopword_ratio(col) * 4, F.lit(1.0))
-        + F.lit(0.2) * (F.lit(1.0) - F.least(punct_ratio(col) * 5, F.lit(1.0)))
-    )
-
-
-def lang_id(col: Column) -> Column:
-    """n-gram/stopword language-ID heuristic: 'en' when English stopwords
-    make up a meaningful share of tokens, else 'unk'. Deterministic,
-    SQL-expressible."""
-    return F.when(stopword_ratio(col) >= 0.05, F.lit("en")).otherwise(F.lit("unk"))
-
-
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 hex of the normalized text. md5 is
     bit-identical across Spark and DuckDB, so dedup decisions replicate
@@ -180,8 +125,9 @@ def text_profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
                         lambda t: t.isin(EN_STOPWORDS))).alias("_n_stop"),
         F.length(F.regexp_replace(c, r"[^\w\s]", "")).alias("_n_punct_kept"),
         F.length(F.regexp_replace(c, r"\s+", "")).alias("_n_nonws"),
-        # [^\p{Alnum}]+ == [^A-Za-z0-9]+ (see bpe_ish_token_count) — the
-        # spelled-out range class costs ~50x more on Spark 4.1
+        # [^\p{Alnum}]+ == [^A-Za-z0-9]+ under Java's default POSIX
+        # classes; the spelled-out range class hits a ~50x regex slow path
+        # on Spark 4.1 (40 CPU-s vs 0.7 CPU-s over 50k docs)
         F.size(F.split(F.trim(c), r"[^\p{Alnum}]+")).alias("_n_units"),
         fingerprint(c).alias("fingerprint"),
     )

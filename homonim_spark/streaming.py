@@ -4,8 +4,8 @@ The reference is strictly batch (SURVEY.md §2.7) — the engine adds an
 incremental mode for the 100 TB operating reality: new document files arrive
 continuously and each micro-batch must be corrected exactly once.
 
-- ``incremental_media_features``: readStream over a documents directory →
-  explode → feature extraction → append sink, ``Trigger.AvailableNow`` for
+- ``incremental_media_refs`` / ``incremental_fuse``: readStream over a
+  documents directory → explode → append sink, ``Trigger.AvailableNow`` for
   catch-up-then-stop semantics with a durable checkpoint.
 - ``windowed_event_stats``: watermarked sliding-window aggregation over an
   event stream (late data dropped after the watermark) — the standard
@@ -13,6 +13,8 @@ continuously and each micro-batch must be corrected exactly once.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,23 +33,22 @@ def read_document_stream(spark: SparkSession, path: str,
     )
 
 
-def incremental_span_counts(
-    docs_stream: DataFrame, out_path: str, checkpoint: str
-) -> StreamingQuery:
-    """Per-document span-kind counts, incrementally: explode is stateless, so
-    this runs append-mode with exactly-once file-sink semantics."""
-    counts = (
-        docs_stream.select("doc_id", F.explode("spans").alias("span"))
-        .groupBy("doc_id", F.col("span.kind").alias("kind"))
-        .agg(F.count("*").alias("n_spans"))
-    )
-    return (
-        counts.writeStream.outputMode("complete")
-        .format("memory").queryName("span_counts")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+def stop_after_data_batch(q: StreamingQuery) -> None:
+    """Stop an ``availableNow`` query once its data batch has committed.
+
+    A stateful query with pending processing-time timeouts never ends on
+    its own: it keeps running no-data micro-batches.  Batch 0 holds all the
+    data available at start, so stop once batch 1 reports progress (or the
+    query ends by itself, or 240 s pass)."""
+    deadline = time.time() + 240
+    while time.time() < deadline:
+        if q.awaitTermination(3):
+            break
+        p = q.lastProgress
+        if p is not None and p.get("batchId", -1) >= 1:
+            break
+    q.stop()
+    q.awaitTermination(60)
 
 
 def incremental_media_refs(

@@ -47,20 +47,26 @@ def assemble_image(fused_pdf: pd.DataFrame, col: str, spec, origin_cells, scale=
     return img
 
 
-@pytest.mark.parametrize("model,kernel", [
-    (Model.gain, (1, 1)),
-    (Model.gain, (5, 5)),
-    (Model.gain_offset, (5, 5)),
+@pytest.mark.parametrize("model,kernel,chunk,partial", [
+    pytest.param(Model.gain, (1, 1), 4, False, id="gain-kernel0"),
+    pytest.param(Model.gain, (5, 5), 4, False, id="gain-kernel1"),
+    pytest.param(Model.gain_offset, (5, 5), 4, False, id="gain-offset-kernel2"),
+] + [
+    pytest.param(model, (5, 5), chunk, True, id=f"{model.value}-partial-chunk{chunk}")
+    for model in (Model.gain, Model.gain_offset) for chunk in (1, 2, 4)
 ])
-def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel):
-    """Tiled + halo distributed result == single-block numpy oracle.
+def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel,
+                                         chunk, partial):
+    """Tiled + halo distributed result == single-block numpy oracle, at
+    any chunk size and with strict partial-coverage masking.
 
     (gain-blk-offset is excluded here by design: its block-norm statistic is
     block-scoped in the reference too, so tiled != whole-image for it.)
     """
     spec, docs_pdf, tiles_pdf, docs, tiles = fixture_tables
     fused = fuse_ops.fuse(docs, tiles, model=model, kernel_shape=kernel,
-                          find_r2=True, r2_inpaint_thresh=None).toPandas()
+                          find_r2=True, r2_inpaint_thresh=None,
+                          mask_partial=partial, chunk=chunk).toPandas()
     assert len(fused) == spec.cells[0] * spec.cells[1]
 
     got_gain = assemble_image(fused, "gain", spec, spec.origin)
@@ -68,7 +74,7 @@ def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel):
 
     ref_img, src_img = datagen.make_pair_arrays(spec, band=0)
     params = KernelModelParams(model=model, kernel_shape=kernel, find_r2=True,
-                               r2_inpaint_thresh=None)
+                               r2_inpaint_thresh=None, mask_partial=partial)
     want_param, want_corr = fit_and_apply_ref_space(src_img, ref_img, params,
                                                     (spec.factor, spec.factor))
 
@@ -175,26 +181,6 @@ def test_parallelism_invariance(spark, fixture_tables):
     for col in ("gain", "offset", "corr"):
         for x, y in zip(a[col], b[col]):
             assert x == y  # bit-exact across parallelism levels
-
-
-@pytest.mark.parametrize("model,partial", [("gain", False), ("gain-offset", False),
-                                           ("gain-blk-offset", True)])
-def test_halo_modes_agree(spark, fixture_tables, model, partial):
-    """JVM whole-tile routing and Arrow strip slicing produce bit-identical
-    fused output (the two halo_mode strategies are interchangeable)."""
-    spec, docs_pdf, tiles_pdf, docs, tiles = fixture_tables
-
-    def run(mode):
-        f = fuse_ops.fuse(docs, tiles, model=model, kernel_shape=(5, 5),
-                          find_r2=True, r2_inpaint_thresh=None,
-                          mask_partial=partial, halo_mode=mode).toPandas()
-        return f.sort_values(["band", "cell_id"]).reset_index(drop=True)
-
-    a, b = run("routed"), run("strips")
-    assert list(a["cell_id"]) == list(b["cell_id"])
-    for col in ("gain", "offset", "r2", "corr"):
-        for x, y in zip(a[col], b[col]):
-            assert x == y
 
 
 def test_join_output_rows_and_assignments_exact(spark, fixture_tables):

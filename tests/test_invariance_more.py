@@ -55,7 +55,7 @@ def test_media_payload_dedup(spark):
 def test_stateful_sessionize_executes(spark, tmp_path):
     """applyInPandasWithState sessionization over a file stream: sessions
     split on the inactivity gap and match the batch lag-window answer."""
-    from homonim_spark.streaming import stateful_sessionize
+    from homonim_spark.streaming import stateful_sessionize, stop_after_data_batch
     base = pd.Timestamp("2026-01-01 00:00:00")
     rows = []
     # user 1: two sessions separated by 1 hour; user 2: one session
@@ -74,7 +74,7 @@ def test_stateful_sessionize_executes(spark, tmp_path):
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("sessions").option("checkpointLocation", str(tmp_path / "sck"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    stop_after_data_batch(q)
     res = spark.sql("select * from sessions").toPandas()
     # the gap-closed session for user 1 is emitted; open sessions stay in
     # state (would emit on timeout in a long-running stream)
@@ -90,7 +90,7 @@ def test_stateful_sessionize_group_larger_than_arrow_batch(spark, tmp_path):
     operator must sessionize the whole group in ts order, not per chunk
     (regression: per-chunk sorting merged/split sessions whenever a
     later-ts chunk was processed first)."""
-    from homonim_spark.streaming import stateful_sessionize
+    from homonim_spark.streaming import stateful_sessionize, stop_after_data_batch
     base = pd.Timestamp("2026-01-01 00:00:00")
     rows = []
     # one user, 3 sessions x 220 events (660 rows total, ~3 Arrow chunks),
@@ -109,8 +109,7 @@ def test_stateful_sessionize_group_larger_than_arrow_batch(spark, tmp_path):
          .queryName("big_sessions")
          .option("checkpointLocation", str(tmp_path / "big_sck"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    q.stop()
+    stop_after_data_batch(q)
     res = spark.sql("select * from big_sessions").toPandas()
     # first two sessions closed by the 2h gaps; third stays in state
     assert len(res) == 2

