@@ -43,10 +43,10 @@ class KernelModelParams:
     #: analogue is a NaN-safe bilinear (DOCUMENTED DEVIATION — within the
     #: reference's own abs-2 corrected-value tolerance).  ``"nearest"`` is
     #: the opt-in exact/fast path; ``"cubic"`` (Catmull-Rom) is the closest
-    #: analogue of the reference default (needs kernels ≥ 3 for chunked ==
-    #: whole-image: 2 px of halo context); ``"lanczos"`` (Lanczos-3) is the
-    #: sharpest rasterio option the reference exposes (needs kernels ≥ 5:
-    #: 3 px of halo context).
+    #: analogue of the reference default; ``"lanczos"`` (Lanczos-3) is the
+    #: sharpest rasterio option the reference exposes.  The chunk halo
+    #: grows with the upsampler's context (:func:`chunk_halo`), so every
+    #: value is chunk-invariant at any kernel size.
     param_interp: str = "bilinear"
 
     def __post_init__(self):
@@ -58,18 +58,6 @@ class KernelModelParams:
         kh, kw = self.kernel_shape
         if kh % 2 != 1 or kw % 2 != 1:
             raise ConfigError("`kernel_shape` must be odd in both dimensions.")
-        # chunk-invariance guard: the halo is ceil(k/2) px, but cubic needs
-        # 2 px and lanczos-3 needs 3 px of context — with smaller kernels the
-        # interpolator silently reads zero-padding at chunk edges and
-        # chunked != whole-image (documented above; now enforced)
-        _interp_min_k = {"cubic": 3, "lanczos": 5}
-        min_k = _interp_min_k.get(self.param_interp)
-        if min_k is not None and min(kh, kw) < min_k:
-            raise ConfigError(
-                f"`param_interp='{self.param_interp}'` requires "
-                f"`kernel_shape` >= {min_k} in both dimensions (needs "
-                f"{min_k // 2 + 1} px of halo context; ceil(k/2) halo gives "
-                "less for smaller kernels, breaking chunk-invariance).")
         if kh < 1 or kw < 1:
             raise ConfigError("`kernel_shape` must be a minimum of one in both dimensions.")
         if Model(self.model) == Model.gain_offset and kh * kw < 2:
@@ -78,13 +66,13 @@ class KernelModelParams:
             )
 
 
-def overlap_for_kernel(kernel_shape: Tuple[int, int]) -> Tuple[int, int]:
-    """Halo (block overlap) for a kernel: ceil(k/2) per dim
-    (reference ``utils.py:136-153``)."""
-    return (
-        int(np.ceil(kernel_shape[0] / 2)),
-        int(np.ceil(kernel_shape[1] / 2)),
-    )
+def chunk_halo(params: KernelModelParams) -> Tuple[int, int]:
+    """Chunk halo per dim (the reference's block overlap, ``utils.py:
+    136-153``, is ceil(k/2)): the kernel's reach k//2 plus the px of exact
+    params the upsampler reads past the interior (at least 1, so ceil(k/2)
+    for nearest and bilinear) — chunked == whole-image for every interp."""
+    ctx = max(1, ops.PARAM_CONTEXT[params.param_interp])
+    return params.kernel_shape[0] // 2 + ctx, params.kernel_shape[1] // 2 + ctx
 
 
 def _combined_mask(src: NDArray, ref: NDArray) -> NDArray:
@@ -373,23 +361,41 @@ def fit_and_apply_ref_space(
     return param, corr
 
 
-def fit_and_apply_src_space(
-    src: NDArray,
-    ref: NDArray,
-    params: KernelModelParams,
-    factor: Tuple[int, int],
-) -> Tuple[NDArray, NDArray]:
-    """SrcSpaceModel fit+apply (reference ``kernel_model.py:506-535``):
-    upsample ref to the src grid, fit and apply there.
-    ``factor`` = src pixels per ref pixel per dim."""
-    ref_us = ops.upsample_bilinear(ref, factor)
-    param = fit_model(src, ref_us, params)
+def fit_and_apply_canvas(
+    src: NDArray, ref: NDArray, params: KernelModelParams, src_scale: int,
+    ref_scale: int, proc_src: bool, halo: Tuple[int, int], span: int,
+) -> Optional[Tuple[NDArray, NDArray]]:
+    """Fit + apply one halo'd canvas on either processing grid, like the
+    reference's ``RefSpaceModel`` / ``SrcSpaceModel`` (``kernel_model.py:
+    466-535``).  ``src``/``ref`` cover ``span + 2·halo`` coarse px per dim at
+    ``src_scale``/``ref_scale`` px each; ``proc_src`` picks the proc grid.
+    Params return to the src grid from the whole canvas, then are cropped;
+    ``mask_partial`` keeps the other image's eroded full coverage
+    (``kernel_model.py:375-409,526-533``).  Returns (interior params on the
+    proc grid, corrected interior src), or None if no pixel pairs up."""
+    proc_scale = src_scale if proc_src else ref_scale
+    src_p = ops.to_grid(src, src_scale, proc_scale)
+    ref_p = ops.to_grid(ref, ref_scale, proc_scale)
+    if not _combined_mask(src_p, ref_p).any():
+        return None
+    param = fit_model(src_p, ref_p, params)
+    oh, ow = halo
+
+    def interior(a: NDArray, scale: int) -> NDArray:
+        return a[..., oh * scale:(oh + span) * scale, ow * scale:(ow + span) * scale]
+
+    up = ops.param_upsampler(params.param_interp)
+    param_src = np.stack([interior(ops.to_grid(p, proc_scale, src_scale, up), src_scale)
+                          for p in param[:2]])
+    src_in = interior(src, src_scale)
     if params.mask_partial:
-        out_mask = full_coverage_mask(
-            ~np.isnan(ref_us), ~np.isnan(param[0]), (1, 1), params.kernel_shape
-        )
-        param[:, ~out_mask] = np.nan
+        other, other_scale = (ref, ref_scale) if proc_src else (src, src_scale)
+        mask = ops.coverage_to_grid(~np.isnan(other), other_scale, proc_scale).astype(np.uint8)
+        mask &= (~np.isnan(param[0])).astype(np.uint8)
+        se = (params.kernel_shape[0] + 2, params.kernel_shape[1] + 2)
+        full = ops.erode_rect(mask, se).astype(bool)
+        keep = ops.coverage_to_grid(interior(full, proc_scale), proc_scale, src_scale)
+        param_src[:, ~keep] = np.nan
     else:
-        param[:, np.isnan(src)] = np.nan
-    corr = apply_model(src, param)
-    return param, corr
+        param_src[:, np.isnan(src_in)] = np.nan
+    return interior(param, proc_scale), apply_model(src_in, param_src)

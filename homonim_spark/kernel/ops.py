@@ -180,32 +180,32 @@ def upsample_bilinear(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     return out
 
 
-def upsample_bilinear_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe integer-factor bilinear upsample (normalized convolution).
-
-    Plain bilinear propagates NaN into every output pixel whose 2×2 support
-    touches nodata — at mask borders this eats a ring of valid output.  Here
-    NaN inputs get zero weight instead (interpolate value·mask / mask), and
-    output validity follows the *nearest* input pixel, matching how the
-    reference masks reprojected parameters by the proc-grid mask
-    (``/root/reference/homonim/kernel_model.py:138-140,396-409``).
-    """
+def _upsample_masked(arr: np.ndarray, factor: Tuple[int, int], up,
+                     guard: float) -> np.ndarray:
+    """NaN-safe integer-factor upsample with interpolator ``up``
+    (normalized convolution): NaN inputs get zero weight instead of eating a
+    ring of valid output, and validity follows the *nearest* input pixel,
+    as the reference masks reprojected params by the proc-grid mask
+    (``kernel_model.py:138-140,396-409``).  Output
+    is NaN where |weight sum| ≤ ``guard`` (signed kernels need more)."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
     valid = ~np.isnan(arr)
     if valid.all():
-        # fully-valid fast path (the common interior-chunk case): one
-        # bilinear pass instead of value+weight passes + nearest mask
-        return upsample_bilinear(arr, factor)
+        return up(arr, factor)  # fast path: the common interior-chunk case
     v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_bilinear(v, factor)
-    den = upsample_bilinear(valid.astype(np.float32), factor)
+    num = up(v, factor)
+    den = up(valid.astype(np.float32), factor)
     out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=den > np.float32(1e-6))
-    nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
-    out[~nv] = np.nan
+    np.divide(num, den, out=out, where=np.abs(den) > np.float32(guard))
+    out[~(upsample_nearest(valid.astype(np.float32), factor) >= 0.5)] = np.nan
     return out
+
+
+def upsample_bilinear_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """NaN-safe bilinear upsample (see :func:`_upsample_masked`)."""
+    return _upsample_masked(arr, factor, upsample_bilinear, 1e-6)
 
 
 def _shift_rows(a: np.ndarray, s: int) -> np.ndarray:
@@ -247,15 +247,12 @@ def _lanczos_weights(t: float, a: int = 3):
     return w.astype(np.float32)
 
 
-def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """Integer-factor separable Lanczos-3 upsample on pixel-center
-    alignment, edge-replicate borders — the analogue of the reference's
-    ``Resampling.lanczos`` option (``raster_array.py:526-578`` exposes the
-    full rasterio resampling enum; the engine's model paths default to
-    cubic/average like the reference defaults, lanczos is the sharpest
-    opt-in).  Same phase-decomposition strategy as :func:`upsample_cubic`:
-    weights repeat with period f, so each pass is 6 clamped shifts per
-    phase."""
+def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
+                        weights) -> np.ndarray:
+    """Integer-factor separable upsample, pixel-center aligned, edge
+    replicated: ``weights(t)`` gives the n taps at fraction t, tap m at input
+    offset floor + m − (n/2 − 1).  Weights repeat with period f (as in
+    :func:`upsample_bilinear`), so a pass is n clamped shifts per phase."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
@@ -271,106 +268,83 @@ def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     row_cache = {}
     for i in range(fh):
         br, ty = phase(fh, i)
-        wy = _lanczos_weights(ty)
+        wy = weights(ty)
+        lo = 1 - len(wy) // 2
         ri = row_cache.get((br, round(ty, 12)))
         if ri is None:
-            ri = sum(wy[m] * _shift_rows(a, br - 2 + m) for m in range(6))
+            ri = sum(wy[m] * _shift_rows(a, br + lo + m) for m in range(len(wy)))
             row_cache[(br, round(ty, 12))] = ri
         for j in range(fw):
             bc, tx = phase(fw, j)
-            wx = _lanczos_weights(tx)
+            wx = weights(tx)
             out[i::fh, j::fw] = sum(
-                wx[m] * _shift_cols(ri, bc - 2 + m) for m in range(6))
-    return out
-
-
-def upsample_lanczos_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe Lanczos-3 upsample (normalized convolution +
-    nearest-validity), mirroring :func:`upsample_cubic_masked`; lanczos
-    negative lobes are larger than cubic's, so the same enlarged
-    weight-sum guard applies."""
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    valid = ~np.isnan(arr)
-    if valid.all():
-        return upsample_lanczos(arr, factor)
-    v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_lanczos(v, factor)
-    den = upsample_lanczos(valid.astype(np.float32), factor)
-    out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=np.abs(den) > np.float32(1e-3))
-    nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
-    out[~nv] = np.nan
+                wx[m] * _shift_cols(ri, bc + lo + m) for m in range(len(wx)))
     return out
 
 
 def upsample_cubic(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """Integer-factor separable cubic (Catmull-Rom) upsample on pixel-center
-    alignment, edge-replicate borders — the engine's smooth-interpolation
-    analogue of the reference's default ``Resampling.cubic_spline``
-    parameter upsampling (``/root/reference/homonim/kernel_model.py:101``).
-    Same phase-decomposition strategy as :func:`upsample_bilinear`:
-    weights repeat with period f, so the pass is 4 clamped shifts per phase.
-    """
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    out = np.empty((h * fh, w * fw), dtype=np.float32)
+    """Catmull-Rom upsample — the analogue of the reference's default
+    ``Resampling.cubic_spline`` param upsampling (``kernel_model.py:101``)."""
+    return _upsample_separable(arr, factor, _catmull_rom_weights)
 
-    def phase(f: int, i: int):
-        o = (i + 0.5) / f - 0.5
-        b = int(np.floor(o))
-        return b, o - b
 
-    row_cache = {}
-    for i in range(fh):
-        br, ty = phase(fh, i)
-        wy = _catmull_rom_weights(ty)
-        ri = row_cache.get((br, round(ty, 12)))
-        if ri is None:
-            ri = sum(wy[m] * _shift_rows(a, br - 1 + m) for m in range(4))
-            row_cache[(br, round(ty, 12))] = ri
-        for j in range(fw):
-            bc, tx = phase(fw, j)
-            wx = _catmull_rom_weights(tx)
-            out[i::fh, j::fw] = sum(
-                wx[m] * _shift_cols(ri, bc - 1 + m) for m in range(4))
-    return out
+def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """Lanczos-3 upsample — the reference's sharpest resampling option,
+    ``Resampling.lanczos`` (``raster_array.py:526-578``)."""
+    return _upsample_separable(arr, factor, _lanczos_weights)
 
 
 def upsample_cubic_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe cubic upsample (normalized convolution + nearest-validity),
-    mirroring :func:`upsample_bilinear_masked`: NaN inputs get zero weight,
-    output validity follows the nearest input pixel.  Note cubic weights are
-    signed, so the weight-sum guard is larger than bilinear's."""
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    valid = ~np.isnan(arr)
-    if valid.all():
-        return upsample_cubic(arr, factor)
-    v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_cubic(v, factor)
-    den = upsample_cubic(valid.astype(np.float32), factor)
-    out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=np.abs(den) > np.float32(1e-3))
-    nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
-    out[~nv] = np.nan
-    return out
+    """NaN-safe cubic upsample (see :func:`_upsample_masked`)."""
+    return _upsample_masked(arr, factor, upsample_cubic, 1e-3)
+
+
+def upsample_lanczos_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """NaN-safe Lanczos-3 upsample (see :func:`_upsample_masked`)."""
+    return _upsample_masked(arr, factor, upsample_lanczos, 1e-3)
+
+
+#: input px each param upsampler reads on either side (models.chunk_halo)
+PARAM_CONTEXT = {"nearest": 0, "bilinear": 1, "cubic": 2, "lanczos": 3}
 
 
 def param_upsampler(name: str):
     """proc→src parameter upsampling dispatch (``KernelModelParams.
     param_interp``): nearest (exact/fast), bilinear (NaN-safe smooth
-    default), cubic (Catmull-Rom — the reference's cubic-spline analogue;
-    needs 2 px of halo context, i.e. kernels ≥ 3 for chunk-invariance)."""
+    default), cubic (Catmull-Rom — the reference's cubic-spline analogue),
+    lanczos (Lanczos-3).  Each reads :data:`PARAM_CONTEXT` px around a
+    pixel, which the chunk halo supplies at any kernel size."""
     return {"nearest": upsample_nearest,
             "bilinear": upsample_bilinear_masked,
             "cubic": upsample_cubic_masked,
             "lanczos": upsample_lanczos_masked}[name]
+
+
+def to_grid(arr: np.ndarray, from_scale: int, to_scale: int,
+            up=upsample_bilinear) -> np.ndarray:
+    """Move ``arr`` between aligned grids (scales in px per common coarse
+    px): as is, :func:`downsample_average` onto coarser, ``up`` onto finer."""
+    if to_scale == from_scale:
+        return arr
+    if to_scale < from_scale:
+        f = from_scale // to_scale
+        return downsample_average(arr, (f, f))
+    f = to_scale // from_scale
+    return up(arr, (f, f))
+
+
+def coverage_to_grid(mask: np.ndarray, from_scale: int, to_scale: int) -> np.ndarray:
+    """:func:`to_grid` for a boolean coverage mask: a coarse pixel is covered
+    iff all its fine pixels are (block mean ≥ 1, ``kernel_model.py:396-399``);
+    a fine pixel takes its coarse pixel's coverage."""
+    if to_scale == from_scale:
+        return mask
+    m = mask.astype(np.float32)
+    if to_scale < from_scale:
+        f = from_scale // to_scale
+        return block_mean(m, (f, f)) >= 1
+    f = to_scale // from_scale
+    return upsample_nearest(m, (f, f)) >= 0.5
 
 
 def fill_nodata(arr: np.ndarray, valid_mask: np.ndarray,

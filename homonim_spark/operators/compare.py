@@ -56,10 +56,10 @@ def tile_pair_join(tiles: DataFrame) -> DataFrame:
 
 
 def block_sums(pairs: DataFrame, proc_crs: str = "ref") -> DataFrame:
-    """Per-tile partial sums (``compare.py:232-256``): bring both tiles onto
-    the processing grid (proc_crs='ref': block-mean src down; 'src':
-    bilinear-upsample ref — reference ``compare.py:236-242``), mask to the
-    common valid set, emit the seven sums."""
+    """Per-tile partial sums (``compare.py:232-256``): bring the other tile
+    onto the processing grid (block-mean onto a coarser grid, bilinear onto
+    a finer one — reference ``compare.py:236-242``; either image may be the
+    finer), mask to the common valid set, emit the seven sums."""
 
     def sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -67,12 +67,10 @@ def block_sums(pairs: DataFrame, proc_crs: str = "ref") -> DataFrame:
             for r in pdf.itertuples(index=False):
                 src = decode_tile(r.src_data, r.src_h, r.src_w)
                 ref = decode_tile(r.ref_data, r.ref_h, r.ref_w)
-                if src.shape != ref.shape:
-                    f = src.shape[0] // ref.shape[0]
-                    if proc_crs == "src":
-                        ref = ops.upsample_bilinear(ref, (f, f))
-                    else:
-                        src = ops.downsample_average(src, (f, f))
+                if proc_crs == "src":
+                    ref = ops.to_grid(ref, r.ref_h, r.src_h)
+                else:
+                    src = ops.to_grid(src, r.src_h, r.ref_h)
                 mask = ~np.isnan(src) & ~np.isnan(ref)
                 s = np.where(mask, src, 0).astype(np.float64)
                 v = np.where(mask, ref, 0).astype(np.float64)

@@ -57,12 +57,10 @@ from pyspark.sql import types as T
 
 from homonim_spark import grid
 from homonim_spark.enums import ImageContentError, Model, ProcCrs
-from homonim_spark.kernel import ops
 from homonim_spark.kernel.models import (
     KernelModelParams,
-    apply_model,
-    fit_model,
-    overlap_for_kernel,
+    chunk_halo,
+    fit_and_apply_canvas,
 )
 from homonim_spark.tiles import decode_tile, encode_tile
 
@@ -132,14 +130,15 @@ def infer_fuse_config(tiles: DataFrame, params: KernelModelParams,
     if proc_crs == ProcCrs.auto:
         proc_crs = ProcCrs.ref if src_finer else ProcCrs.src
     # halo correctness bound: halo routing exchanges data with the 1-ring
-    # of neighbor tiles/chunks only, so the overlap must fit inside
+    # of neighbor tiles/chunks only, so the halo must fit inside
     # one tile (the reference's block > overlap assertion,
     # raster_pair.py:254-255,364-365)
-    oh, ow = overlap_for_kernel(params.kernel_shape)
+    oh, ow = chunk_halo(params)
     if oh > coarse_h or ow > coarse_h:
         from homonim_spark.enums import ConfigError
         raise ConfigError(
-            f"kernel {params.kernel_shape} needs a {max(oh, ow)}px halo, larger "
+            f"kernel {params.kernel_shape} with param_interp "
+            f"'{params.param_interp}' needs a {max(oh, ow)}px halo, larger "
             f"than the {coarse_h}px tile — use larger tiles (or a coarser proc grid)"
         )
     return FuseConfig(tile=coarse_h, factor=fine_h // coarse_h, params=params,
@@ -216,7 +215,6 @@ def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
     chunks that need it for halo continuity — all JVM-side (codegen):
     no Python worker touches the payload until the group stage."""
     K = cfg.chunk
-    oh, ow = overlap_for_kernel(cfg.params.kernel_shape)
     row, col = grid.cell_row_col_expr(F.col("cell_id"))
     res = grid.cell_res_expr(F.col("cell_id"))
     # floor division toward -inf (rows/cols may be negative)
@@ -241,19 +239,10 @@ def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
     empty = F.array().cast("array<long>")
     cands = []
     for dR in (-1, 0, 1):
-        rc = (
-            F.lit(True) if dR == 0
-            else (lr == 0) if (dR == -1 and oh > 0)
-            else (lr == K - 1) if (dR == 1 and oh > 0)
-            else F.lit(False)
-        )
+        # the halo is ≥ 1 px, so a border tile always feeds its neighbor
+        rc = F.lit(True) if dR == 0 else (lr == 0) if dR == -1 else (lr == K - 1)
         for dC in (-1, 0, 1):
-            cc = (
-                F.lit(True) if dC == 0
-                else (lc == 0) if (dC == -1 and ow > 0)
-                else (lc == K - 1) if (dC == 1 and ow > 0)
-                else F.lit(False)
-            )
+            cc = F.lit(True) if dC == 0 else (lc == 0) if dC == -1 else (lc == K - 1)
             inb = (R + dR).between(F.col("_minR"), F.col("_maxR")) & \
                 (C + dC).between(F.col("_minC"), F.col("_maxC"))
             dest = grid.cell_id_col(res, R + dR, C + dC)
@@ -279,14 +268,14 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
     because each proc pixel's f×f source block lies inside exactly one
     tile."""
     tile_px = cfg.tile
-    oh, ow = overlap_for_kernel(cfg.params.kernel_shape)
-    f = cfg.factor
+    oh, ow = chunk_halo(cfg.params)
     K = cfg.chunk
     params = cfg.params
     span = K * tile_px
     s_sc, r_sc = cfg.src_scale, cfg.ref_scale   # px per coarse px, per role
     src_px = tile_px * s_sc                     # src tile px per cell
-    ref_px = tile_px * r_sc                     # ref tile px per cell
+    proc_src = cfg.proc_crs == ProcCrs.src
+    out_px = tile_px * (s_sc if proc_src else r_sc)  # param tile px per cell
     find_r2 = params.find_r2 or (
         Model(params.model) == Model.gain_offset and params.r2_inpaint_thresh is not None
     )
@@ -314,16 +303,11 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
         for role, cell_id, h, w, media_ref, data in rows:
             arr = decode_tile(data, h, w)
             cr, cc_ = grid.cell_row(int(cell_id)), grid.cell_col(int(cell_id))
-            if role == "src":
-                t0r, t0c = cr * src_px, cc_ * src_px
-                canvas = src_canvas
-                g0r, g0c, H, W = pg0r * s_sc, pg0c * s_sc, ph_ * s_sc, pw_ * s_sc
-                if cr // K == Rc and cc_ // K == Cc:
-                    owned.append((int(cell_id), media_ref, cr - Rc * K, cc_ - Cc * K))
-            else:
-                t0r, t0c = cr * ref_px, cc_ * ref_px
-                canvas = ref_canvas
-                g0r, g0c, H, W = pg0r * r_sc, pg0c * r_sc, ph_ * r_sc, pw_ * r_sc
+            canvas, sc = (src_canvas, s_sc) if role == "src" else (ref_canvas, r_sc)
+            if role == "src" and cr // K == Rc and cc_ // K == Cc:
+                owned.append((int(cell_id), media_ref, cr - Rc * K, cc_ - Cc * K))
+            t0r, t0c = cr * tile_px * sc, cc_ * tile_px * sc
+            g0r, g0c, H, W = pg0r * sc, pg0c * sc, ph_ * sc, pw_ * sc
             # intersect tile with canvas, slice and place
             i0r, i1r = max(t0r, g0r), min(t0r + arr.shape[0], g0r + H)
             i0c, i1c = max(t0c, g0c), min(t0c + arr.shape[1], g0c + W)
@@ -332,105 +316,11 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
             canvas[i0r - g0r : i1r - g0r, i0c - g0c : i1c - g0c] = \
                 arr[i0r - t0r : i1r - t0r, i0c - t0c : i1c - t0c]
 
-        src_interior = src_canvas[oh * s_sc : (oh + span) * s_sc,
-                                  ow * s_sc : (ow + span) * s_sc]
-
-        if cfg.proc_crs == ProcCrs.src:
-            # SrcSpaceModel (kernel_model.py:506-535): resample ref to the
-            # src grid, fit and apply there; params live on the src grid.
-            # src finer → upsample ref (bilinear); src coarser (the auto
-            # resolution when the source is the lower-res image,
-            # raster_pair.py:193-224) → block-mean downsample ref.
-            if s_sc >= r_sc:
-                ref_rs = ops.upsample_bilinear(ref_canvas, (f, f)) if f > 1 else ref_canvas
-                ref_cov = ops.upsample_nearest(
-                    (~np.isnan(ref_canvas)).astype(np.float32), (f, f)) >= 1 \
-                    if f > 1 else ~np.isnan(ref_canvas)
-            else:
-                ref_rs = ops.downsample_average(ref_canvas, (f, f))
-                ref_cov = ops.block_mean(
-                    (~np.isnan(ref_canvas)).astype(np.float32), (f, f)) >= 1
-            if not (~np.isnan(src_canvas) & ~np.isnan(ref_rs)).any():
-                return
-            param = fit_model(src_canvas, ref_rs, params)
-            pc = param[:, oh * s_sc : (oh + span) * s_sc, ow * s_sc : (ow + span) * s_sc]
-            param_us = pc[:2].copy()
-            if params.mask_partial:
-                # coverage = ref mask resampled to the src grid
-                # (kernel_model.py:526-533)
-                mask = ref_cov.astype(np.uint8)
-                mask &= (~np.isnan(param[0])).astype(np.uint8)
-                se = (params.kernel_shape[0] + 2, params.kernel_shape[1] + 2)
-                full_cov = ops.erode_rect(mask, se).astype(bool)
-                param_us[:, ~full_cov[oh * s_sc : (oh + span) * s_sc,
-                                      ow * s_sc : (ow + span) * s_sc]] = np.nan
-            else:
-                param_us[:, np.isnan(src_interior)] = np.nan
-            out_px = src_px  # params on src grid
-        else:
-            # RefSpaceModel (kernel_model.py:466-503): fit on the ref grid.
-            # src finer → block-mean downsample src (the recommended combo);
-            # src coarser → bilinear-upsample src onto the finer ref grid
-            # (the reference's warned-but-allowed combination).
-            if s_sc >= r_sc:
-                src_proc = ops.downsample_average(src_canvas, (f, f)) if f > 1 else src_canvas
-            else:
-                src_proc = ops.upsample_bilinear(src_canvas, (f, f))
-            if not (~np.isnan(src_proc) & ~np.isnan(ref_canvas)).any():
-                return
-            param = fit_model(src_proc, ref_canvas, params)
-            pc = param[:, oh * r_sc : (oh + span) * r_sc, ow * r_sc : (ow + span) * r_sc]
-            if s_sc >= r_sc:
-                # params ref(coarse) → src(fine): the reference's smooth
-                # param upsampling (kernel_model.py:101).  Bilinear needs
-                # 1 proc px of context, so upsample the FULL halo canvas
-                # and crop in fine coordinates — keeps chunked == whole-
-                # image (halo oh ≥ 1 always: ceil(k/2) with k ≥ 1).
-                if f == 1:
-                    param_us = pc[:2].copy()
-                elif params.param_interp == "nearest":
-                    param_us = np.stack([
-                        ops.upsample_nearest(pc[0], (f, f)),
-                        ops.upsample_nearest(pc[1], (f, f)),
-                    ])
-                else:
-                    up = ops.param_upsampler(params.param_interp)
-                    fsl = (slice(oh * f, (oh + span) * f),
-                           slice(ow * f, (ow + span) * f))
-                    param_us = np.stack([
-                        up(param[0], (f, f))[fsl],
-                        up(param[1], (f, f))[fsl],
-                    ])
-            else:
-                # params ref(fine) → src(coarse): block-mean downsample
-                # (the reference's proc→src 'downsampling=average' default)
-                param_us = np.stack([
-                    ops.downsample_average(pc[0], (f, f)),
-                    ops.downsample_average(pc[1], (f, f)),
-                ])
-            if params.mask_partial:
-                if s_sc >= r_sc:
-                    cov_frac = ops.block_mean((~np.isnan(src_canvas)).astype(np.float32), (f, f)) \
-                        if f > 1 else (~np.isnan(src_canvas)).astype(np.float32)
-                else:
-                    cov_frac = (ops.upsample_nearest(
-                        (~np.isnan(src_canvas)).astype(np.float32), (f, f)))
-                mask = (cov_frac >= 1).astype(np.uint8)
-                mask &= (~np.isnan(param[0])).astype(np.uint8)
-                se = (params.kernel_shape[0] + 2, params.kernel_shape[1] + 2)
-                full_cov = ops.erode_rect(mask, se).astype(bool)
-                fc = full_cov[oh * r_sc : (oh + span) * r_sc,
-                              ow * r_sc : (ow + span) * r_sc].astype(np.float32)
-                if s_sc >= r_sc:
-                    cov_us = (ops.upsample_nearest(fc, (f, f)) if f > 1 else fc) >= 0.5
-                else:
-                    cov_us = ops.block_mean(fc, (f, f)) >= 1
-                param_us[:, ~cov_us] = np.nan
-            else:
-                param_us[:, np.isnan(src_interior)] = np.nan
-            out_px = ref_px  # params on ref grid
-
-        corr_canvas = apply_model(src_interior, param_us)
+        res = fit_and_apply_canvas(src_canvas, ref_canvas, params, s_sc, r_sc,
+                                   proc_src, (oh, ow), span)
+        if res is None:
+            return
+        pc, corr_canvas = res
 
         for cid, mref, lr_, lc_ in owned:
             sl = (slice(lr_ * out_px, (lr_ + 1) * out_px),

@@ -2,7 +2,8 @@
 
 Tuned for Arrow-batched pandas UDF pipelines over binary tile payloads;
 designed for a multi-executor cluster (AQE on, skew-join on) and tested on
-``local[N]``.
+``local[N]``.  Local defaults are sized from the host: one core per CPU in
+the process's affinity set, a driver heap of min(16g, half of physical RAM).
 """
 
 from __future__ import annotations
@@ -11,6 +12,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+from homonim_spark.enums import ConfigError
+
+_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def _ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (Spark size syntax; a bare number is MiB),
+    else min(16g, half of physical RAM); a heap beyond RAM fails here."""
+    ram = _ram_bytes()
+    req = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not req:
+        return f"{min(16 * 2**10, ram // 2**21)}m"
+    v = req.strip().lower()
+    if int(v.rstrip("kmgt")) * _UNITS.get(v[-1], 2**20) > ram:
+        raise ConfigError(f"SPARK_GRAFT_DRIVER_MEM={req} exceeds this host's "
+                          f"{ram / 2**30:.1f} GiB of physical RAM")
+    return req
+
 
 def get_spark(
     app_name: str = "homonim-spark",
@@ -18,7 +41,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # local mode: match cores; on a cluster this is overridden per job
         cores = master.split("[")[-1].rstrip("]")
@@ -71,7 +95,7 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"))
         # binary tile payloads make rows heavy; keep file partitions modest
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         # event-time semantics (watermarks, NTZ→TIMESTAMP casts,
         # unix_timestamp/unix_micros) must not depend on the host's zone:
         # the DuckDB oracles read the same parquet NTZ values as UTC

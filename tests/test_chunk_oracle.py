@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from homonim_spark import datagen, grid
 from homonim_spark.kernel import ops
 from homonim_spark.kernel.models import (
-    KernelModelParams, apply_model, fit_model, overlap_for_kernel,
+    KernelModelParams, apply_model, chunk_halo, fit_model,
 )
 from homonim_spark.operators import fuse as fuse_ops
 from homonim_spark.tiles import decode_tile
@@ -33,7 +33,7 @@ def test_gain_blk_offset_chunk_oracle(spark):
 
     ref_img, src_img = datagen.make_pair_arrays(spec, 0)
     params = KernelModelParams(model="gain-blk-offset", kernel_shape=kernel)
-    oh, ow = overlap_for_kernel(kernel)
+    oh, ow = chunk_halo(params)
     T, f = spec.tile, spec.factor
     span = K * T
 

@@ -61,6 +61,28 @@ def test_compare_proc_space_symmetry(spark):
     assert b["n"] > a["n"]  # src grid has factor^2 more pixels
 
 
+def test_compare_src_coarser_mirrors_src_finer(spark):
+    """Either image may be the finer: compare on a pair whose source is the
+    coarse image equals compare on the unswapped pair with the other proc
+    grid (same two grids, same resampling), on r2, rmse and n.  rrmse is
+    relative to the reference mean, so it differs by design."""
+    spec = datagen.RasterFixtureSpec(pair_id="sw0", cells=(3, 4), tile=16,
+                                     factor=2, true_gain=2.0, true_offset=10.0)
+    docs_pdf, tiles_pdf = datagen.build_pair_tables(spec)
+    swapped_pdf = tiles_pdf.copy()
+    swapped_pdf["role"] = swapped_pdf["role"].map({"ref": "src", "src": "ref"})
+    _, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
+    _, swapped = datagen.to_spark(spark, docs_pdf, swapped_pdf)
+    for proc, other, want in (("ref", "src", (0.966072, 59.422341, 10980)),
+                              ("src", "ref", (1.0, 59.918187, 2852))):
+        a = compare(swapped, proc_crs=proc).toPandas().iloc[0]
+        b = compare(tiles, proc_crs=other).toPandas().iloc[0]
+        assert a["n"] == b["n"] == want[2]
+        for i, col in enumerate(("r2", "rmse")):
+            assert a[col] == pytest.approx(b[col], rel=1e-9)
+            assert a[col] == pytest.approx(want[i], rel=1e-6)
+
+
 def test_cli_fuse_compare_stats(tmp_path):
     """Drive the CLI end-to-end in a subprocess: fuse → stats → compare."""
     import pyarrow  # noqa: F401  (ensure env)

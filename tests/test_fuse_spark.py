@@ -47,18 +47,24 @@ def assemble_image(fused_pdf: pd.DataFrame, col: str, spec, origin_cells, scale=
     return img
 
 
-@pytest.mark.parametrize("model,kernel,chunk,partial", [
-    pytest.param(Model.gain, (1, 1), 4, False, id="gain-kernel0"),
-    pytest.param(Model.gain, (5, 5), 4, False, id="gain-kernel1"),
-    pytest.param(Model.gain_offset, (5, 5), 4, False, id="gain-offset-kernel2"),
+@pytest.mark.parametrize("model,kernel,chunk,partial,interp", [
+    pytest.param(Model.gain, (1, 1), 4, False, "bilinear", id="gain-kernel0"),
+    pytest.param(Model.gain, (5, 5), 4, False, "bilinear", id="gain-kernel1"),
+    pytest.param(Model.gain_offset, (5, 5), 4, False, "bilinear", id="gain-offset-kernel2"),
 ] + [
-    pytest.param(model, (5, 5), chunk, True, id=f"{model.value}-partial-chunk{chunk}")
+    pytest.param(model, (5, 5), chunk, True, "bilinear",
+                 id=f"{model.value}-partial-chunk{chunk}")
     for model in (Model.gain, Model.gain_offset) for chunk in (1, 2, 4)
+] + [
+    pytest.param(Model.gain, (k, k), chunk, False, interp,
+                 id=f"{interp}-kernel{k}-chunk{chunk}")
+    for interp in ("cubic", "lanczos") for k, chunk in ((5, 1), (5, 2), (1, 1))
 ])
 def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel,
-                                         chunk, partial):
+                                         chunk, partial, interp):
     """Tiled + halo distributed result == single-block numpy oracle, at
-    any chunk size and with strict partial-coverage masking.
+    any chunk size, with strict partial-coverage masking, and for the
+    wide param upsamplers across chunk borders at any kernel size.
 
     (gain-blk-offset is excluded here by design: its block-norm statistic is
     block-scoped in the reference too, so tiled != whole-image for it.)
@@ -66,7 +72,8 @@ def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel,
     spec, docs_pdf, tiles_pdf, docs, tiles = fixture_tables
     fused = fuse_ops.fuse(docs, tiles, model=model, kernel_shape=kernel,
                           find_r2=True, r2_inpaint_thresh=None,
-                          mask_partial=partial, chunk=chunk).toPandas()
+                          mask_partial=partial, chunk=chunk,
+                          param_interp=interp).toPandas()
     assert len(fused) == spec.cells[0] * spec.cells[1]
 
     got_gain = assemble_image(fused, "gain", spec, spec.origin)
@@ -74,7 +81,8 @@ def test_fuse_matches_whole_image_oracle(spark, fixture_tables, model, kernel,
 
     ref_img, src_img = datagen.make_pair_arrays(spec, band=0)
     params = KernelModelParams(model=model, kernel_shape=kernel, find_r2=True,
-                               r2_inpaint_thresh=None, mask_partial=partial)
+                               r2_inpaint_thresh=None, mask_partial=partial,
+                               param_interp=interp)
     want_param, want_corr = fit_and_apply_ref_space(src_img, ref_img, params,
                                                     (spec.factor, spec.factor))
 
@@ -105,7 +113,7 @@ def test_param_interp_and_sigma_clip_exposed_through_fuse(spark, fixture_tables)
                                equal_nan=True)
 
     # lanczos (round-3 verdict missing #5): chunked fuse must reproduce the
-    # whole-image lanczos oracle (k=5 gives the 3-px halo lanczos needs)
+    # whole-image lanczos oracle
     lan = fuse_ops.fuse(docs, tiles, model="gain", kernel_shape=(5, 5),
                         param_interp="lanczos").toPandas()
     got_lan = assemble_image(lan, "corr", spec, spec.origin, scale=spec.factor)

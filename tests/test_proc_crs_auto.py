@@ -116,6 +116,33 @@ def test_src_coarser_forced_ref_space_runs(spark, swapped):
     assert np.isfinite(corr).sum() > 0
 
 
+@pytest.mark.parametrize("chunk", [1, 2])
+@pytest.mark.parametrize("src_finer,proc_crs", [
+    pytest.param(True, "src", id="finer-src"),
+    pytest.param(False, "auto", id="coarser-auto"),
+    pytest.param(False, "ref", id="coarser-ref"),
+])
+def test_mask_partial_chunk_invariant(spark, swapped, src_finer, proc_crs, chunk):
+    """Strict partial-coverage masking is chunk-invariant on every grid
+    pairing: chunks of 1 and 2 cells reproduce the single chunk that covers
+    the whole 3×4-cell image (gains on the proc grid, corrected tiles on
+    the src grid, NaN pattern included)."""
+    docs, tiles = (datagen.to_spark(spark, *datagen.build_pair_tables(SPEC))
+                   if src_finer else swapped)
+    kw = dict(model=Model.gain, kernel_shape=(5, 5), mask_partial=True,
+              proc_crs=proc_crs)
+    whole = fuse_ops.fuse(docs, tiles, chunk=4, **kw).toPandas()
+    got = fuse_ops.fuse(docs, tiles, chunk=chunk, **kw).toPandas()
+    fine, coarse = SPEC.tile * SPEC.factor, SPEC.tile
+    src_px = fine if src_finer else coarse
+    proc_px = src_px if proc_crs != "ref" else (coarse if src_finer else fine)
+    for col, px in (("gain", proc_px), ("corr", src_px)):
+        want = _assemble(whole, col, px)
+        assert np.isnan(want).any() and not np.isnan(want).all()
+        np.testing.assert_allclose(_assemble(got, col, px), want, rtol=1e-5,
+                                   atol=1e-4, equal_nan=True)
+
+
 def test_non_integer_resolution_ratio_rejected(spark):
     """Tile sizes that aren't integer-related still raise (both orders)."""
     from homonim_spark.enums import ImageContentError

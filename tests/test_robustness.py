@@ -89,19 +89,35 @@ def test_kernel_halo_exceeding_tile_rejected(spark):
 
 
 def test_param_interp_kernel_context_validated():
-    """cubic needs 2 px and lanczos-3 needs 3 px of halo context; the ceil(k/2)
-    halo of smaller kernels silently breaks chunked == whole-image, so the
-    config must reject the combination loudly (ADVICE r5 #3)."""
+    """cubic needs 2 px and lanczos-3 needs 3 px of exact param context past
+    a chunk's interior: the chunk halo supplies it at every kernel size
+    (k//2 + context, never less than ceil(k/2)), so no kernel/interp pairing
+    is rejected; unknown interpolators still are."""
     from homonim_spark.enums import ConfigError
-    from homonim_spark.kernel.models import KernelModelParams
-    with pytest.raises(ConfigError, match="lanczos"):
-        KernelModelParams(kernel_shape=(3, 3), param_interp="lanczos")
-    with pytest.raises(ConfigError, match="cubic"):
-        KernelModelParams(kernel_shape=(1, 1), param_interp="cubic")
-    # boundary cases are allowed
-    KernelModelParams(kernel_shape=(5, 5), param_interp="lanczos")
-    KernelModelParams(kernel_shape=(3, 3), param_interp="cubic")
-    KernelModelParams(kernel_shape=(1, 1), param_interp="bilinear")
+    from homonim_spark.kernel.models import KernelModelParams, chunk_halo
+    for k, interp, halo in (((1, 1), "lanczos", (3, 3)), ((3, 3), "cubic", (3, 3)),
+                            ((5, 3), "lanczos", (5, 4)), ((1, 1), "bilinear", (1, 1)),
+                            ((5, 5), "nearest", (3, 3)), ((7, 7), "bilinear", (4, 4))):
+        assert chunk_halo(KernelModelParams(kernel_shape=k, param_interp=interp)) == halo
+    with pytest.raises(ConfigError, match="param_interp"):
+        KernelModelParams(kernel_shape=(5, 5), param_interp="area")
+
+
+def test_driver_heap_sized_from_host(monkeypatch):
+    """The default driver heap is min(16g, half of physical RAM); a
+    requested heap beyond physical RAM fails loudly before a JVM starts."""
+    from homonim_spark import session
+    from homonim_spark.enums import ConfigError
+    monkeypatch.setattr(session, "_ram_bytes", lambda: 8 * 2**30)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session._driver_memory() == "4096m"
+    monkeypatch.setattr(session, "_ram_bytes", lambda: 64 * 2**30)
+    assert session._driver_memory() == "16384m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
+    assert session._driver_memory() == "48g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "65g")
+    with pytest.raises(ConfigError, match="exceeds"):
+        session._driver_memory()
 
 
 # --- randomized property checks ---------------------------------------------

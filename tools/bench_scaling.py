@@ -105,12 +105,12 @@ print(json.dumps({"np2": t2, "np8": t8, "np_eff_2_8": (t2 / t8) / 4}))
 
 
 def run_level(cpus: int) -> dict:
-    # generous heap: an undersized heap turns the 32-core level into a GC
-    # benchmark (measured 3x slowdown)
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="60g")
+    # the heap is session.get_spark's host default, min(16g, RAM/2): an
+    # undersized heap turns a many-core level into a GC benchmark (measured
+    # 3x slowdown), so set SPARK_GRAFT_DRIVER_MEM on hosts that need more
     out = subprocess.run(
         [sys.executable, "-c", RUN_SNIPPET, str(cpus), str(PAIRS), str(TILE)],
-        capture_output=True, text=True, timeout=2400, env=env,
+        capture_output=True, text=True, timeout=2400,
     )
     lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:

@@ -38,7 +38,7 @@ def main():
     import __spark_entry__ as entry
     from homonim_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")  # local[host cores]
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
