@@ -1,7 +1,9 @@
 """Benchmark harness — prints ONE JSON line with per-query seconds.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32):
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+tables) on ``session.get_spark``'s host-sized session:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs in the process's affinity
+set) and a heap of min(16g, RAM/2) (``$SPARK_GRAFT_DRIVER_MEM`` overrides):
 
 - the flagship fuse pipeline (gain-blk-offset, 5×5 kernel — BASELINE.json's
   metric) over the deterministic synthetic interleaved-documents table,
@@ -25,28 +27,27 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 FUSE_SCALE_PAIRS = int(os.environ.get("SPARK_GRAFT_FUSE_PAIRS", "512"))
 FUSE_TILE = int(os.environ.get("SPARK_GRAFT_FUSE_TILE", "64"))
 
+#: operator-suite leaves timed over the driver tables.  Scale-safe set:
+#: linear or LSH-pruned operators only.  The quadratic exact-verification
+#: variants (ngram_jaccard, exact embedding_neardup, minhash verify) are
+#: correctness-gate queries at sf0.01; their scale paths are benchmarked via
+#: the pruned operators (``embedding_neardup_lsh`` is timed after these).
+SUITE = [
+    "compare_stats", "param_stats", "tpch_q1", "join_pushdown",
+    "band_match_rank", "topk_orders", "text_profile", "dedup_exact",
+    "similarity_topk", "rollup_mean", "data_window",
+]
+#: tables scanned once before timing, so timings measure query compute, not
+#: first-scan page faults
+WARM_TABLES = ("lineitem", "orders", "customer", "supplier", "nation",
+               "region", "events", "documents", "embeddings")
 
-def build_raster_bench_input(spark):
-    from pyspark.sql import functions as F
-    from homonim_spark import datagen
-    # executors synthesize tiles closed-form — no driver bottleneck
-    docs, tiles = datagen.distributed_fixture(
-        spark, n_pairs=FUSE_SCALE_PAIRS, tile=FUSE_TILE,
-        partitions=4 * int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    docs, tiles = docs.cache(), tiles.cache()
-    n_src = tiles.filter(F.col("role") == "src").count()
-    return docs, tiles, n_src
 
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
+def bench_session(app_name: str):
+    """The bench session: ``session.get_spark``'s host-sized master and
+    heap, 4×cores shuffle partitions, shuffle files in /dev/shm."""
     from homonim_spark.session import get_spark
-    import __spark_entry__ as entry
-
-    extra = {"spark.driver.memory":
-             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")}
+    extra = {}
     if os.path.isdir("/dev/shm"):
         # single-box stand-in for node-local NVMe shuffle (which scales
         # with executor count on a real cluster) — with disk shuffle a
@@ -55,9 +56,30 @@ def main() -> None:
         extra.update({"spark.local.dir": "/dev/shm/spark-bench",
                       "spark.shuffle.compress": "false",
                       "spark.shuffle.spill.compress": "false"})
-    spark = get_spark(app_name="homonim-spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=4 * int(cpus), extra_conf=extra)
+    spark = get_spark(app_name=app_name, extra_conf=extra)
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(4 * spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def build_raster_bench_input(spark):
+    from pyspark.sql import functions as F
+    from homonim_spark import datagen
+    # executors synthesize tiles closed-form — no driver bottleneck
+    docs, tiles = datagen.distributed_fixture(
+        spark, n_pairs=FUSE_SCALE_PAIRS, tile=FUSE_TILE,
+        partitions=4 * spark.sparkContext.defaultParallelism)
+    docs, tiles = docs.cache(), tiles.cache()
+    n_src = tiles.filter(F.col("role") == "src").count()
+    return docs, tiles, n_src
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    import __spark_entry__ as entry
+
+    spark = bench_session("homonim-spark-bench")
 
     timings: dict[str, float] = {}
 
@@ -94,20 +116,10 @@ def main() -> None:
 
     # warm the relational side: touch every table once so timings measure
     # query compute, not first-scan page faults
-    for t in ("lineitem", "orders", "customer", "supplier", "nation", "region",
-              "events", "documents", "embeddings"):
+    for t in WARM_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
 
     # --- operator suite over the driver tables ------------------------------
-    # scale-safe set: linear or LSH-pruned operators only.  The quadratic
-    # exact-verification variants (ngram_jaccard, exact embedding_neardup,
-    # minhash verify) are correctness-gate queries at sf0.01; their scale
-    # paths are benchmarked via the pruned operators below.
-    suite = [
-        "compare_stats", "param_stats", "tpch_q1", "join_pushdown",
-        "band_match_rank", "topk_orders", "text_profile", "dedup_exact",
-        "similarity_topk", "rollup_mean", "data_window",
-    ]
     qs = entry.queries()
 
     # Suite protocol (round-4 verdict #2): same convergence rule as the fuse —
@@ -133,7 +145,7 @@ def main() -> None:
         suite_reps[name] = reps
         return best
 
-    for name in suite:
+    for name in SUITE:
         timings[name] = round(timed_min(
             name, lambda: qs[name](spark, sf_dir).write.format("noop")
             .mode("overwrite").save()), 3)
@@ -166,7 +178,7 @@ def main() -> None:
         "fuse_reps": fuse_reps,
         "suite_reps": suite_reps,
         "loadavg": loadavg,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(out))
     spark.stop()

@@ -1,14 +1,15 @@
-"""Extra benchmarks for the optimization round (bench.py is FROZEN — this
-file holds the guide §1.4 noop-sink isolation runs, per-query explain
-capture, and component breakdowns cited in OPTIMIZATION_r06.md).
+"""Extra benchmarks beside bench.py's timed protocol: the guide §1.4
+noop-sink isolation runs, per-query explain capture, and component
+breakdowns cited in OPTIMIZATION_r06.md.
 
 Usage:
     python bench_extra.py [--sf SF_DIR] [--reps N] [--plans DIR] [--only q1,q2]
 
 Prints one JSON line per query: {"query": ..., "reps": [...], "min": ...}.
 With --plans DIR, writes `<query>.txt` with .explain("formatted") output.
-Methodology matches bench.py: same session config, noop sink, one untimed
-warm-up rep, then N timed reps, report min.
+Methodology matches bench.py: the same session (``bench.bench_session``),
+suite list and warm-up tables, noop sink, one untimed warm-up rep, then N
+timed reps, report min.
 """
 
 from __future__ import annotations
@@ -20,21 +21,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def get_session(cpus: str):
-    from homonim_spark.session import get_spark
-    extra = {"spark.driver.memory":
-             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")}
-    if os.path.isdir("/dev/shm"):
-        extra.update({"spark.local.dir": "/dev/shm/spark-bench",
-                      "spark.shuffle.compress": "false",
-                      "spark.shuffle.spill.compress": "false"})
-    spark = get_spark(app_name="homonim-spark-bench-extra",
-                      master=f"local[{cpus}]",
-                      shuffle_partitions=4 * int(cpus), extra_conf=extra)
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def main() -> None:
@@ -49,18 +35,13 @@ def main() -> None:
                     help="also run the fuse flagship (pairs from env)")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_session(cpus)
+    import bench
+    spark = bench.bench_session("homonim-spark-bench-extra")
     sf_dir = args.sf
 
     import __spark_entry__ as entry
     qs = entry.queries()
 
-    suite = ["compare_stats", "param_stats", "tpch_q1", "join_pushdown",
-             "band_match_rank", "topk_orders", "text_profile", "dedup_exact",
-             "similarity_topk", "rollup_mean", "data_window"]
-
-    from pyspark.sql import functions as F
     from homonim_spark.operators.similarity import embedding_near_duplicates
 
     def lsh(spark, sf_dir):
@@ -69,14 +50,14 @@ def main() -> None:
         return embedding_near_duplicates(
             emb, threshold=0.45, exact=False, dim=dim, n_planes=10)
 
-    builders = {name: (lambda s, d, fn=qs[name]: fn(s, d)) for name in suite}
+    builders = {name: (lambda s, d, fn=qs[name]: fn(s, d))
+                for name in bench.SUITE}
     builders["embedding_neardup_lsh"] = lsh
 
     only = set(args.only.split(",")) if args.only else None
 
     # warm every input table once (bench.py does the same)
-    for t in ("lineitem", "orders", "customer", "supplier", "nation", "region",
-              "events", "documents", "embeddings"):
+    for t in bench.WARM_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
 
     if args.plans:
@@ -107,7 +88,6 @@ def main() -> None:
               flush=True)
 
     if args.fuse:
-        import bench
         from homonim_spark.operators.fuse import fuse
         docs, tiles, n_src = bench.build_raster_bench_input(spark)
         docs.count(); tiles.count()
@@ -125,7 +105,9 @@ def main() -> None:
               flush=True)
 
     print(json.dumps({"summary": {k: min(v) for k, v in results.items()},
-                      "sf": sf_dir, "cpus": int(cpus)}), flush=True)
+                      "sf": sf_dir,
+                      "cpus": spark.sparkContext.defaultParallelism}),
+          flush=True)
     spark.stop()
 
 

@@ -342,6 +342,35 @@ _BAND_ROW_SCHEMA = T.StructType([
 ])
 
 
+def _emit_band_rows(out: dict, src, path: str, meta, y0: int, y1: int,
+                    role: str, nodata: float | None) -> None:
+    """Decode rows [y0, y1) of ``src`` (a path, URL or raw file bytes with
+    IFD ``meta``) and append one ``_BAND_ROW_SCHEMA`` row per band to
+    ``out``: nodata → NaN, transform = the window-local affine."""
+    from homonim_spark.tiffio import decode_window
+    if meta.transform is None:
+        raise ValueError(f"{path}: no geo transform tags")
+    raw = decode_window(src, meta, y0, y1)
+    arr = raw.astype(np.float32)
+    nd = nodata if nodata is not None else meta.nodata
+    if nd is not None:
+        arr[raw == nd] = np.nan
+    a, b, c, d, e, f_ = meta.transform
+    # window-local affine: same pixel scale, origin shifted to the
+    # window's first row
+    tr = [float(v) for v in (a, b, b * y0 + c, d, e, e * y0 + f_)]
+    stem = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
+    for band in range(arr.shape[0]):
+        out["image_id"].append(stem)
+        out["role"].append(role)
+        out["band"].append(band)
+        out["transform"].append(tr)
+        out["h"].append(arr.shape[1])
+        out["w"].append(arr.shape[2])
+        out["crs"].append(meta.crs)
+        out["data"].append(encode_tile(arr[band]))
+
+
 def gtiff_band_rows(binary_files: DataFrame, role: str,
                     nodata: float | None = None) -> DataFrame:
     """Decode ``binaryFile`` rows (path, content) into per-band regrid-input
@@ -354,27 +383,14 @@ def gtiff_band_rows(binary_files: DataFrame, role: str,
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from homonim_spark.tiffio import read_gtiff
+        from homonim_spark.tiffio import read_gtiff_meta
         for pdf in batches:
             out = {f.name: [] for f in _BAND_ROW_SCHEMA.fields}
             for r in pdf.itertuples(index=False):
-                t = read_gtiff(bytes(r.content))
-                if t.transform is None:
-                    raise ValueError(f"{r.path}: no geo transform tags")
-                nd = nodata if nodata is not None else t.nodata
-                arr = t.data.astype(np.float32)
-                if nd is not None:
-                    arr[t.data == nd] = np.nan
-                stem = r.path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                for band in range(arr.shape[0]):
-                    out["image_id"].append(stem)
-                    out["role"].append(role)
-                    out["band"].append(band)
-                    out["transform"].append([float(v) for v in t.transform])
-                    out["h"].append(arr.shape[1])
-                    out["w"].append(arr.shape[2])
-                    out["crs"].append(t.crs)
-                    out["data"].append(encode_tile(arr[band]))
+                src = bytes(r.content)
+                meta = read_gtiff_meta(src)
+                _emit_band_rows(out, src, r.path, meta, 0, meta.height,
+                                role, nodata)
             yield pd.DataFrame(out)
 
     return binary_files.select("path", "content").mapInPandas(
@@ -397,7 +413,7 @@ def gtiff_window_rows(spark, paths: list, role: str,
     exist in at least one window, and halo-overlap fragments carry
     identical values, so the mosaic average reproduces them exactly.
     """
-    from homonim_spark.tiffio import read_gtiff_meta, decode_window
+    from homonim_spark.tiffio import read_gtiff_meta
 
     paths_df = spark.createDataFrame(pd.DataFrame({"path": list(paths)}))
 
@@ -406,8 +422,6 @@ def gtiff_window_rows(spark, paths: list, role: str,
             rows = []
             for p in pdf["path"]:
                 meta = read_gtiff_meta(p)
-                if meta.transform is None:
-                    raise ValueError(f"{p}: no geo transform tags")
                 step = max(meta.block_h,
                            (window_rows // meta.block_h) * meta.block_h)
                 for a in range(0, meta.height, step):
@@ -429,25 +443,8 @@ def gtiff_window_rows(spark, paths: list, role: str,
                 meta = metas.get(r.path)
                 if meta is None:
                     meta = metas[r.path] = read_gtiff_meta(r.path)
-                raw = decode_window(r.path, meta, int(r.y0), int(r.y1))
-                arr = raw.astype(np.float32)
-                nd = nodata if nodata is not None else meta.nodata
-                if nd is not None:
-                    arr[raw == nd] = np.nan
-                a, b_, c, d, e, f_ = meta.transform
-                # window-local affine: same pixel scale, origin shifted to
-                # the window's first row
-                tr = [a, b_, b_ * r.y0 + c, d, e, e * r.y0 + f_]
-                stem = r.path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                for band in range(arr.shape[0]):
-                    out["image_id"].append(stem)
-                    out["role"].append(role)
-                    out["band"].append(band)
-                    out["transform"].append([float(v) for v in tr])
-                    out["h"].append(arr.shape[1])
-                    out["w"].append(arr.shape[2])
-                    out["crs"].append(meta.crs)
-                    out["data"].append(encode_tile(arr[band]))
+                _emit_band_rows(out, r.path, r.path, meta, int(r.y0),
+                                int(r.y1), role, nodata)
             yield pd.DataFrame(out)
 
     return units.mapInPandas(decode, schema=_BAND_ROW_SCHEMA)

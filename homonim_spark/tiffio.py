@@ -1,12 +1,18 @@
-"""Minimal pure-python GeoTIFF reader (stdlib ``struct`` + ``zlib`` only).
+"""Pure-python GeoTIFF reader and writer (stdlib ``struct`` + ``zlib``).
 
-Purpose: load the reference's committed golden artifacts — e.g.
-``/root/reference/tests/data/parameter/float_100cm_rgb_FUSE_cREF_mGAIN-OFFSET_k5_5_PARAM.tif``
-— so the engine's fuse numerics can be cross-checked against files the
-reference itself produced (its ``ParamStats`` goldens,
-``/root/reference/tests/test_stats.py:36-50``).  rasterio/GDAL are absent in
-this environment; the goldens are small classic little-endian TIFFs with
-deflate-compressed tiles or strips, which is a ~150-line parse.
+The engine's stand-in for rasterio/GDAL: it reads real-world GeoTIFFs
+(driver-side, executor-side from ``binaryFile`` bytes, or windowed over
+``http(s)://`` range requests), the reference's committed golden PARAM
+files, and writes the sink's GTiff exports.
+
+There is ONE read path, over a seekable file (a local path, an HTTP range
+reader, or raw bytes wrapped in ``io.BytesIO``): ``_read_meta`` parses the
+selected IFD into a :class:`GTiffMeta` block index, and ``_decode_rows``
+decodes a row range from it.  :func:`read_gtiff_meta` + :func:`decode_window`
+expose the two steps for windowed reads; :func:`read_gtiff` is the same
+parse plus a full-height decode, with the GDAL metadata and overview count
+attached — the reference likewise reads whole images and windows through
+the same GDAL windows (``raster_array.py:129-199``).
 
 Supported: classic TIFF (magic 42) AND BigTIFF (magic 43, 8-byte offsets —
 files > 4 GiB), II and MM byte orders, compression 1 (none),
@@ -20,6 +26,7 @@ pixel cube.
 
 from __future__ import annotations
 
+import io
 import re
 import struct
 import zlib
@@ -182,29 +189,34 @@ def _parse_tiff_header(head: bytes):
     raise ValueError(f"not a TIFF (magic {magic})")
 
 
-def _read_ifd(buf: bytes, off: int, bo: str, big: bool = False):
+def _read_ifd(f, off: int, bo: str, big: bool = False):
+    """``({tag: (type, count, inline bytes)}, next-IFD offset)`` of the IFD
+    at ``off`` in the seekable file ``f``."""
     cfmt, esz, inline = ("Q", 20, 8) if big else ("H", 12, 4)
-    (n,) = struct.unpack_from(bo + cfmt, buf, off)
-    base = off + struct.calcsize(cfmt)
+    ofmt = bo + ("Q" if big else "I")
+    f.seek(off)
+    (n,) = struct.unpack(bo + cfmt, f.read(struct.calcsize(cfmt)))
+    entries = f.read(n * esz + (8 if big else 4))
     tags = {}
     for i in range(n):
-        tag, typ = struct.unpack_from(bo + "HH", buf, base + i * esz)
-        (cnt,) = struct.unpack_from(bo + ("Q" if big else "I"),
-                                    buf, base + i * esz + 4)
-        raw = buf[base + i * esz + esz - inline: base + (i + 1) * esz]
-        tags[tag] = (typ, cnt, raw)
-    (nxt,) = struct.unpack_from(bo + ("Q" if big else "I"), buf, base + n * esz)
+        tag, typ = struct.unpack_from(bo + "HH", entries, i * esz)
+        (cnt,) = struct.unpack_from(ofmt, entries, i * esz + 4)
+        tags[tag] = (typ, cnt, entries[i * esz + esz - inline: (i + 1) * esz])
+    (nxt,) = struct.unpack_from(ofmt, entries, n * esz)
     return tags, nxt
 
 
-def _tag_value(buf: bytes, t, bo: str, big: bool = False):
+def _tag_value(f, t, bo: str, big: bool = False):
+    """Decoded value of one ``_read_ifd`` entry; out-of-line data is read
+    from the seekable file ``f``."""
     typ, cnt, raw = t
     size = _TYPE_SIZE.get(typ, 1) * cnt
     if size <= (8 if big else 4):
         data = raw[:size]
     else:
         (o,) = struct.unpack(bo + ("Q" if big else "I"), raw)
-        data = buf[o: o + size]
+        f.seek(o)
+        data = f.read(size)
     if typ == 2:  # ascii
         return data.rstrip(b"\0").decode("utf-8", "replace")
     if typ in (5, 10):  # rational
@@ -260,6 +272,7 @@ class GTiffMeta:
     bo: str = "<"                   # sample byte order: "<" (II) or ">" (MM)
     jpeg_tables: bytes | None = None  # tag 347: abbreviated DQT/DHT stream
     photometric: int = 1            # tag 262: 6 = YCbCr (JPEG color)
+    big: bool = False               # BigTIFF: 8-byte offsets and counts
 
 
 class _HttpRangeFile:
@@ -343,128 +356,102 @@ class _HttpRangeFile:
         return data
 
 
-def _open_raster(path: str):
-    """``open(path, 'rb')`` for local paths; an HTTP range reader for
-    ``http(s)://`` URLs.  (``binaryFile``/whole-file scans cover any
-    Hadoop-FS URI — file://, hdfs://, s3a:// with the vendor jar; plain
-    https has no Hadoop FS, so the windowed reader speaks it natively.)"""
-    if path.startswith(("http://", "https://")):
-        return _HttpRangeFile(path)
-    return open(path, "rb")
+def _open_raster(src):
+    """A seekable binary file over ``src``: ``open(path, 'rb')`` for local
+    paths, an HTTP range reader for ``http(s)://`` URLs, ``io.BytesIO`` for
+    raw bytes.  (``binaryFile``/whole-file scans cover any Hadoop-FS URI —
+    file://, hdfs://, s3a:// with the vendor jar — and hand the reader
+    bytes; plain https has no Hadoop FS, so the reader speaks it
+    natively.)"""
+    if isinstance(src, (bytes, bytearray, memoryview)):
+        return io.BytesIO(src)
+    if src.startswith(("http://", "https://")):
+        return _HttpRangeFile(src)
+    return open(src, "rb")
 
 
-def _tag_value_f(f, t, bo: str, big: bool = False):
-    """_tag_value against a seekable file instead of a full buffer."""
-    typ, cnt, raw = t
-    size = _TYPE_SIZE.get(typ, 1) * cnt
-    if size <= (8 if big else 4):
-        data = raw[:size]
+def _read_meta(f, ifd: int):
+    """Parse IFD ``ifd`` of the open TIFF ``f``: ``(GTiffMeta, tag getter,
+    next-IFD offset)``.  The getter ``g(tag, default)`` decodes any tag of
+    the selected IFD."""
+    f.seek(0)
+    bo, big, ifd_off = _parse_tiff_header(f.read(16))
+    for _ in range(ifd):
+        _, ifd_off = _read_ifd(f, ifd_off, bo, big)
+        if not ifd_off:
+            raise ValueError(f"requested IFD {ifd} but chain ended")
+    tags, nxt = _read_ifd(f, ifd_off, bo, big)
+    g = lambda tag, default=None: (_tag_value(f, tags[tag], bo, big)
+                                   if tag in tags else default)
+    width, height = g(256)[0], g(257)[0]
+    spp = g(277, [1])[0]
+    bits = g(258, [8])[0]
+    comp = g(259, [1])[0]
+    planar = g(284, [1])[0]
+    sfmt = g(339, [1])[0]
+    _decompressor(comp)  # validate early, at meta-parse time
+    predictor = g(317, [1])[0]
+    jpeg_tables = g(347) if comp == 7 else None
+    if isinstance(jpeg_tables, list):   # UNDEFINED read as byte list
+        jpeg_tables = bytes(jpeg_tables)
+    photometric = g(262, [1])[0]
+    dtype = f"{_SAMPLE_KIND[sfmt]}{bits // 8}"
+    tiled = 324 in tags
+    if tiled:
+        block_w, block_h = g(322)[0], g(323)[0]
+        offsets, counts = g(324), g(325)
     else:
-        (o,) = struct.unpack(bo + ("Q" if big else "I"), raw)
-        f.seek(o)
-        data = f.read(size)
-    if typ == 2:
-        return data.rstrip(b"\0").decode("utf-8", "replace")
-    if typ in (5, 10):
-        vals = struct.unpack(bo + f"{cnt * 2}" + ("I" if typ == 5 else "i"), data)
-        return [vals[i] / vals[i + 1] if vals[i + 1] else float("nan")
-                for i in range(0, len(vals), 2)]
-    fmt = _TYPE_FMT.get(typ)
-    if fmt is None:
-        return data
-    return list(struct.unpack(bo + str(cnt) + fmt, data))
+        block_w = width
+        block_h = g(278, [height])[0]
+        offsets, counts = g(273), g(279)
+    nodata = None
+    nd = g(42113)
+    if nd is not None:
+        nodata = float(nd.strip())
+    transform = None
+    scale, tie = g(33550), g(33922)
+    if scale and tie and len(tie) >= 6:
+        # tiepoint (i,j,k,x,y,z): raster (i,j) ↦ model (x,y); north-up
+        transform = (scale[0], 0.0, tie[3] - tie[0] * scale[0],
+                     0.0, -scale[1], tie[4] + tie[1] * scale[1])
+    crs = _parse_geokeys(g(34735))
+    if ifd > 0 and (nodata is None or transform is None or crs is None):
+        # GDAL presents internal overviews with the PRIMARY dataset's
+        # nodata/CRS and a pixel-scaled geotransform; the overview IFD
+        # itself carries none of those tags (returning nodata=None would
+        # make masked() treat fill values as valid data)
+        m0, _, _ = _read_meta(f, 0)
+        if nodata is None:
+            nodata = m0.nodata
+        if crs is None:
+            crs = m0.crs
+        if transform is None and m0.transform is not None and width and height:
+            a, b, c, d, e, f_ = m0.transform
+            sx, sy = m0.width / width, m0.height / height
+            transform = (a * sx, b, c, d, e * sy, f_)
+    meta = GTiffMeta(
+        width=width, height=height, spp=spp, dtype=dtype, comp=comp,
+        planar=planar, tiled=tiled, block_w=block_w, block_h=block_h,
+        offsets=offsets, counts=counts, nodata=nodata,
+        transform=transform, crs=crs,
+        predictor=predictor, bo=bo,
+        jpeg_tables=jpeg_tables, photometric=photometric, big=big,
+    )
+    return meta, g, nxt
 
 
-def read_gtiff_meta(path: str, ifd: int = 0) -> GTiffMeta:
+def read_gtiff_meta(path, ifd: int = 0) -> GTiffMeta:
     """Parse ONLY the IFD of a GeoTIFF — a few KB of reads regardless of
     file size (for ``http(s)://`` URLs they ARE range GETs of the same few
-    KB — see ``_HttpRangeFile``).  Classic or BigTIFF, II or MM.  ``ifd``
-    selects a chained image (n ≥ 1 = internal overview), so windowed reads
-    work on pyramid levels too."""
+    KB — see ``_HttpRangeFile``).  Classic or BigTIFF, II or MM; ``path``
+    may also be raw bytes.  ``ifd`` selects a chained image (n ≥ 1 =
+    internal overview), so windowed reads work on pyramid levels too."""
     with _open_raster(path) as f:
-        bo, big, ifd_off = _parse_tiff_header(f.read(16))
-        cfmt, esz, inline = ("Q", 20, 8) if big else ("H", 12, 4)
-        csz = struct.calcsize(cfmt)
-        nfmt = bo + ("Q" if big else "I")
-        for _ in range(ifd):
-            f.seek(ifd_off)
-            (n,) = struct.unpack(bo + cfmt, f.read(csz))
-            f.seek(ifd_off + csz + n * esz)
-            (ifd_off,) = struct.unpack(nfmt, f.read(8 if big else 4))
-            if not ifd_off:
-                raise ValueError(f"requested IFD {ifd} but chain ended")
-        f.seek(ifd_off)
-        (n,) = struct.unpack(bo + cfmt, f.read(csz))
-        entries = f.read(n * esz + (8 if big else 4))
-        tags = {}
-        for i in range(n):
-            tag, typ = struct.unpack_from(bo + "HH", entries, i * esz)
-            (cnt,) = struct.unpack_from(bo + ("Q" if big else "I"),
-                                        entries, i * esz + 4)
-            tags[tag] = (typ, cnt,
-                         entries[i * esz + esz - inline: (i + 1) * esz])
-        g = lambda tag, default=None: (_tag_value_f(f, tags[tag], bo, big)
-                                       if tag in tags else default)
-        width, height = g(256)[0], g(257)[0]
-        spp = g(277, [1])[0]
-        bits = g(258, [8])[0]
-        comp = g(259, [1])[0]
-        planar = g(284, [1])[0]
-        sfmt = g(339, [1])[0]
-        _decompressor(comp)  # validate early, at meta-parse time
-        predictor = g(317, [1])[0]
-        jpeg_tables = g(347) if comp == 7 else None
-        if isinstance(jpeg_tables, list):   # UNDEFINED read as byte list
-            jpeg_tables = bytes(jpeg_tables)
-        photometric = g(262, [1])[0]
-        dtype = f"{_SAMPLE_KIND[sfmt]}{bits // 8}"
-        tiled = 324 in tags
-        if tiled:
-            block_w, block_h = g(322)[0], g(323)[0]
-            offsets, counts = g(324), g(325)
-        else:
-            block_w = width
-            block_h = g(278, [height])[0]
-            offsets, counts = g(273), g(279)
-        nodata = None
-        nd = g(42113)
-        if nd is not None:
-            nodata = float(nd.strip())
-        transform = None
-        scale, tie = g(33550), g(33922)
-        if scale and tie and len(tie) >= 6:
-            transform = (scale[0], 0.0, tie[3] - tie[0] * scale[0],
-                         0.0, -scale[1], tie[4] + tie[1] * scale[1])
-        crs = _parse_geokeys(g(34735))
-        if ifd > 0 and (nodata is None or transform is None or crs is None):
-            # GDAL presents internal overviews with the PRIMARY dataset's
-            # nodata/CRS and a pixel-scaled geotransform; the overview IFD
-            # itself carries none of those tags (ADVICE r05 #1: returning
-            # nodata=None made masked() treat fill values as valid data)
-            m0 = read_gtiff_meta(path, 0)
-            if nodata is None:
-                nodata = m0.nodata
-            if crs is None:
-                crs = m0.crs
-            if transform is None and m0.transform is not None and width and height:
-                a, b, c, d, e, f_ = m0.transform
-                sx, sy = m0.width / width, m0.height / height
-                transform = (a * sx, b, c, d, e * sy, f_)
-        return GTiffMeta(
-            width=width, height=height, spp=spp, dtype=dtype, comp=comp,
-            planar=planar, tiled=tiled, block_w=block_w, block_h=block_h,
-            offsets=offsets, counts=counts, nodata=nodata,
-            transform=transform, crs=crs,
-            predictor=predictor, bo=bo,
-            jpeg_tables=jpeg_tables, photometric=photometric,
-        )
+        return _read_meta(f, ifd)[0]
 
 
-def decode_window(path: str, meta: GTiffMeta, y0: int, y1: int) -> np.ndarray:
-    """Decode rows [y0, y1) of all bands by reading ONLY the intersecting
-    blocks' byte ranges — per-task memory is the window plus one block row,
-    independent of file size.  Works over ``http(s)://`` URLs via range
-    requests (``_open_raster``)."""
+def _decode_rows(f, meta: GTiffMeta, y0: int, y1: int) -> np.ndarray:
+    """Rows [y0, y1) of all bands, reading only the intersecting blocks."""
     dtype = np.dtype(meta.bo + meta.dtype)
     decomp = _decompressor(meta.comp, meta.jpeg_tables)
     out = np.zeros((meta.spp, y1 - y0, meta.width), dtype=dtype.newbyteorder("="))
@@ -474,39 +461,47 @@ def decode_window(path: str, meta: GTiffMeta, y0: int, y1: int) -> np.ndarray:
     bpb = meta.spp if meta.planar == 1 else 1
     j_lo = y0 // meta.block_h
     j_hi = (y1 - 1) // meta.block_h
-    with _open_raster(path) as f:
-        for plane in range(1 if meta.planar == 1 else meta.spp):
-            for j in range(j_lo, j_hi + 1):
-                for i in range(bx):
-                    idx = plane * per_plane + j * bx + i
-                    f.seek(meta.offsets[idx])
-                    # native byte order BEFORE the predictor cumsum (the
-                    # unsigned view it uses reinterprets raw bytes)
-                    raw = np.frombuffer(decomp(f.read(meta.counts[idx])),
-                                        dtype=dtype).astype(
-                        dtype.newbyteorder("="), copy=False)
-                    # External writers routinely emit a SHORT final strip
-                    # (tiles are always padded, strips need not be): derive
-                    # the row count from the actual payload size.
-                    rows_in_block = raw.size // (meta.block_w * bpb)
-                    block = raw[: rows_in_block * meta.block_w * bpb].reshape(
-                        rows_in_block, meta.block_w, bpb)
-                    block = _undo_predictor(block, meta.predictor)
-                    # global row range of this block ∩ the window
-                    gy0 = j * meta.block_h
-                    r0 = max(y0, gy0)
-                    r1 = min(y1, gy0 + rows_in_block, meta.height)
-                    x0 = i * meta.block_w
-                    x1 = min(x0 + meta.block_w, meta.width)
-                    sub = block[r0 - gy0: r1 - gy0, : x1 - x0]
-                    for b in range(bpb):
-                        band = plane * bpb + b if meta.planar == 2 else b
-                        out[band, r0 - y0: r1 - y0, x0: x1] = sub[:, :, b]
+    for plane in range(1 if meta.planar == 1 else meta.spp):
+        for j in range(j_lo, j_hi + 1):
+            for i in range(bx):
+                idx = plane * per_plane + j * bx + i
+                f.seek(meta.offsets[idx])
+                # native byte order BEFORE the predictor cumsum (the
+                # unsigned view it uses reinterprets raw bytes)
+                raw = np.frombuffer(decomp(f.read(meta.counts[idx])),
+                                    dtype=dtype).astype(
+                    dtype.newbyteorder("="), copy=False)
+                # External writers routinely emit a SHORT final strip
+                # (tiles are always padded, strips need not be): derive
+                # the row count from the actual payload size.
+                rows_in_block = raw.size // (meta.block_w * bpb)
+                block = raw[: rows_in_block * meta.block_w * bpb].reshape(
+                    rows_in_block, meta.block_w, bpb)
+                block = _undo_predictor(block, meta.predictor)
+                # global row range of this block ∩ the window
+                gy0 = j * meta.block_h
+                r0 = max(y0, gy0)
+                r1 = min(y1, gy0 + rows_in_block, meta.height)
+                x0 = i * meta.block_w
+                x1 = min(x0 + meta.block_w, meta.width)
+                sub = block[r0 - gy0: r1 - gy0, : x1 - x0]
+                for b in range(bpb):
+                    band = plane * bpb + b if meta.planar == 2 else b
+                    out[band, r0 - y0: r1 - y0, x0: x1] = sub[:, :, b]
     if meta.photometric == 6 and meta.comp == 7 and meta.spp == 3:
         # JPEG-in-TIFF stores YCbCr (GDAL default); present RGB like GDAL
         from homonim_spark.jpegio import ycc_to_rgb
         out = ycc_to_rgb(out.transpose(1, 2, 0)).transpose(2, 0, 1)
     return out
+
+
+def decode_window(path, meta: GTiffMeta, y0: int, y1: int) -> np.ndarray:
+    """Decode rows [y0, y1) of all bands by reading ONLY the intersecting
+    blocks' byte ranges — per-task memory is the window plus one block row,
+    independent of file size.  Works over ``http(s)://`` URLs via range
+    requests and on raw bytes (``_open_raster``)."""
+    with _open_raster(path) as f:
+        return _decode_rows(f, meta, y0, y1)
 
 
 def _lzw_encode(data: bytes) -> bytes:
@@ -551,6 +546,10 @@ def _lzw_encode(data: bytes) -> bytes:
         w = bytes([ch])
     if w:
         emit(table[w], width)
+        # the decoder adds one more entry for this last code (libtiff's
+        # LZWPostEncode free_ent++) and may bump its width before EOI
+        if next_code + 1 == (1 << width) and width < 12:
+            width += 1
     emit(EOI, width)
     if nbits:
         out.append((buf << (8 - nbits)) & 0xFF)
@@ -937,126 +936,24 @@ def _parse_geokeys(geokeys: list[int] | None) -> str | None:
 
 def read_gtiff(src: "str | bytes | bytearray | memoryview",
                ifd: int = 0) -> GeoTiff:
-    """Decode a GeoTIFF from a filesystem path OR raw bytes.
+    """Decode a GeoTIFF from a filesystem path, ``http(s)://`` URL OR raw
+    bytes (e.g. a ``binaryFile`` content cell): the IFD parse plus a
+    full-height ``decode_window``, with GDAL metadata and the overview count.
 
-    The bytes form is the executor-side ingestion path:
-    ``spark.read.format('binaryFile')`` delivers file contents as a binary
-    column, so decode happens where the data is (the reference streams
-    windows via GDAL on one node, ``raster_array.py:129-199``; the engine
-    streams whole files through executors instead).  ``ifd`` selects an
-    image in the next-IFD chain: 0 = full resolution (default), n ≥ 1 = the
-    n-th internal overview (``GeoTiff.n_overviews`` reports how many chain
-    behind the selected IFD)."""
-    if isinstance(src, (bytes, bytearray, memoryview)):
-        buf = bytes(src)
-    else:
-        with _open_raster(src) as f:
-            buf = f.read()
-    bo, big, ifd_off = _parse_tiff_header(buf[:16])
-    tags, nxt = _read_ifd(buf, ifd_off, bo, big)
-    tags0 = tags  # primary IFD: overview IFDs inherit nodata/geo from it
-    for _ in range(ifd):
-        if not nxt:
-            raise ValueError(f"requested IFD {ifd} but chain ended")
-        tags, nxt = _read_ifd(buf, nxt, bo, big)
-    n_overviews = 0
-    while nxt:
-        n_overviews += 1
-        _, nxt = _read_ifd(buf, nxt, bo, big)
-    g = lambda tag, default=None: (_tag_value(buf, tags[tag], bo, big)
-                                   if tag in tags else default)
-    g0 = lambda tag, default=None: (_tag_value(buf, tags0[tag], bo, big)
-                                    if tag in tags0 else default)
-
-    width, height = g(256)[0], g(257)[0]
-    spp = g(277, [1])[0]
-    bits = g(258, [8])[0]
-    comp = g(259, [1])[0]
-    planar = g(284, [1])[0]
-    sfmt = g(339, [1])[0]
-    dtype = np.dtype(f"{bo}{_SAMPLE_KIND[sfmt]}{bits // 8}")
-
-    jpeg_tables = g(347) if comp == 7 else None
-    if isinstance(jpeg_tables, list):
-        jpeg_tables = bytes(jpeg_tables)
-    decomp = _decompressor(comp, jpeg_tables)
-    predictor = g(317, [1])[0]
-
-    out = np.zeros((spp, height, width), dtype=dtype.newbyteorder("="))
-
-    def paint(block: np.ndarray, band0: int, y0: int, x0: int):
-        """Place a decoded block; block is (h, w, bands_in_block)."""
-        h = min(block.shape[0], height - y0)
-        w = min(block.shape[1], width - x0)
-        for bi in range(block.shape[2]):
-            out[band0 + bi, y0: y0 + h, x0: x0 + w] = block[:h, :w, bi]
-
-    if 324 in tags:  # tiled
-        tw, tl = g(322)[0], g(323)[0]
-        offs, cnts = g(324), g(325)
-        tiles_x = (width + tw - 1) // tw
-        tiles_y = (height + tl - 1) // tl
-        per_plane = tiles_x * tiles_y
-        bpb = spp if planar == 1 else 1
-        for i, (o, c) in enumerate(zip(offs, cnts)):
-            raw = np.frombuffer(decomp(buf[o: o + c]), dtype=dtype).astype(
-                dtype.newbyteorder("="), copy=False)
-            block = _undo_predictor(raw.reshape(tl, tw, bpb), predictor)
-            plane = 0 if planar == 1 else i // per_plane
-            j = i if planar == 1 else i % per_plane
-            paint(block, plane, (j // tiles_x) * tl, (j % tiles_x) * tw)
-    else:  # stripped
-        rps = g(278, [height])[0]
-        offs, cnts = g(273), g(279)
-        strips_per_plane = (height + rps - 1) // rps
-        bpb = spp if planar == 1 else 1
-        for i, (o, c) in enumerate(zip(offs, cnts)):
-            raw = np.frombuffer(decomp(buf[o: o + c]), dtype=dtype).astype(
-                dtype.newbyteorder("="), copy=False)
-            plane = 0 if planar == 1 else i // strips_per_plane
-            j = i if planar == 1 else i % strips_per_plane
-            # derive rows from the payload (short final strips are legal)
-            h = min(rps, height - j * rps, raw.size // (width * bpb))
-            block = raw[: h * width * bpb].reshape(h, width, bpb)
-            paint(_undo_predictor(block, predictor), plane, j * rps, 0)
-
-    if g(262, [1])[0] == 6 and comp == 7 and spp == 3:
-        # JPEG-in-TIFF stores YCbCr (GDAL default); present RGB like GDAL
-        from homonim_spark.jpegio import ycc_to_rgb
-        out = ycc_to_rgb(out.transpose(1, 2, 0)).transpose(2, 0, 1)
-    nodata = None
-    nd = g(42113)
-    if nd is None and ifd > 0:
-        # GDAL presents internal overviews with the primary dataset's
-        # nodata (the overview IFD carries no nodata tag — ADVICE r05 #1)
-        nd = g0(42113)
-    if nd is not None:
-        nodata = float(nd.strip())
-    meta, band_names = {}, {}
-    xml = g(42112)
-    if xml:
-        meta, band_names = _parse_gdal_metadata(xml)
-    transform = None
-    scale, tie = g(33550), g(33922)
-    if scale and tie and len(tie) >= 6:
-        # tiepoint (i,j,k,x,y,z): raster (i,j) ↦ model (x,y); north-up
-        transform = (scale[0], 0.0, tie[3] - tie[0] * scale[0],
-                     0.0, -scale[1], tie[4] + tie[1] * scale[1])
-    crs = _parse_geokeys(g(34735))
-    if ifd > 0:
-        if transform is None:
-            scale0, tie0 = g0(33550), g0(33922)
-            if scale0 and tie0 and len(tie0) >= 6 and width and height:
-                w0, h0 = g0(256)[0], g0(257)[0]
-                transform = (scale0[0] * (w0 / width), 0.0,
-                             tie0[3] - tie0[0] * scale0[0],
-                             0.0, -scale0[1] * (h0 / height),
-                             tie0[4] + tie0[1] * scale0[1])
-        if crs is None:
-            crs = _parse_geokeys(g0(34735))
+    ``ifd`` selects an image in the next-IFD chain: 0 = full resolution
+    (default), n ≥ 1 = the n-th internal overview (``GeoTiff.n_overviews``
+    reports how many chain behind the selected IFD)."""
+    with _open_raster(src) as f:
+        meta, g, nxt = _read_meta(f, ifd)
+        data = _decode_rows(f, meta, 0, meta.height)
+        items, band_names = _parse_gdal_metadata(g(42112) or "")
+        n_overviews = 0
+        while nxt:
+            n_overviews += 1
+            _, nxt = _read_ifd(f, nxt, meta.bo, meta.big)
     return GeoTiff(
-        data=out, nodata=nodata,
-        band_names=[band_names.get(i, f"B{i + 1}") for i in range(spp)],
-        metadata=meta, transform=transform, crs=crs,
+        data=data, nodata=meta.nodata,
+        band_names=[band_names.get(i, f"B{i + 1}") for i in range(meta.spp)],
+        metadata=items, transform=meta.transform, crs=meta.crs,
         n_overviews=n_overviews,
     )

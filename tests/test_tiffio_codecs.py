@@ -10,7 +10,10 @@ every codec is round-trip-tested without GDAL.
 
 from __future__ import annotations
 
+import io
 import os
+import struct
+import zlib
 
 import numpy as np
 import pytest
@@ -39,10 +42,12 @@ def test_packbits_spec_vector():
     assert _packbits_decode(_packbits_encode(unpacked)) == unpacked
 
 
-@pytest.mark.parametrize("seed,n", [(0, 1), (1, 255), (2, 4096), (3, 300_000)])
+@pytest.mark.parametrize("seed,n", [(0, 1), (1, 255), (2, 4096), (3, 300_000),
+                                    (1810, 1810)])
 def test_lzw_roundtrip(seed, n):
     """Round-trip across code-width bumps (511/1023/2047) and, at 300 kB,
-    the 4094-entry table reset."""
+    the 4094-entry table reset.  (1810, 1810) ends with the final data code
+    landing on a width boundary, where EOI must go out at the bumped width."""
     rng = np.random.default_rng(seed)
     # mix of compressible runs and noise so the table actually grows
     noise = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
@@ -77,6 +82,104 @@ def test_short_final_strip_whole_and_windowed(tmp_path):
     np.testing.assert_array_equal(win, img[:, 3:5])
     # and the full-height window
     np.testing.assert_array_equal(decode_window(path, meta, 0, 5), img)
+
+
+# ------------------------------------- separate planes + GDAL_METADATA
+
+_GDAL_XML = (
+    '<GDALMetadata>\n'
+    '  <Item name="FUSE_MODEL">GAIN_BLK_OFFSET</Item>\n'
+    '  <Item name="FUSE_KERNEL_SHAPE">(5, 5)</Item>\n'
+    '  <Item name="DESCRIPTION" sample="0" role="description">Red</Item>\n'
+    '  <Item name="DESCRIPTION" sample="1" role="description">Green</Item>\n'
+    '  <Item name="DESCRIPTION" sample="2" role="description">Blue</Item>\n'
+    '</GDALMetadata>')
+
+
+def _planar_separate_tiff(path: str, img: np.ndarray, xml: str,
+                          tile: tuple | None = None, rps: int = 1):
+    """Hand-assemble a deflate TIFF with PlanarConfiguration 2 (one plane
+    per band, blocks ordered plane-major) and a GDAL_METADATA (42112) XML —
+    two shapes the engine's own writer never produces.  Stripped layouts
+    end in a short strip when ``rps`` does not divide the height."""
+    spp, h, w = img.shape
+    blocks = []
+    for plane in img:
+        if tile:
+            th, tw = tile
+            for j in range(0, h, th):
+                for i in range(0, w, tw):
+                    pad = np.zeros((th, tw), dtype=img.dtype)
+                    sub = plane[j: j + th, i: i + tw]
+                    pad[: sub.shape[0], : sub.shape[1]] = sub
+                    blocks.append(pad)
+        else:
+            blocks += [plane[j: j + rps] for j in range(0, h, rps)]
+    payload = [zlib.compress(np.ascontiguousarray(b).astype("<u2").tobytes())
+               for b in blocks]
+    entries = [  # (tag, type, values); type 2 = ascii bytes
+        (256, 4, [w]), (257, 4, [h]), (258, 3, [16] * spp), (259, 3, [8]),
+        (262, 3, [1]), (277, 3, [spp]), (284, 3, [2]), (339, 3, [1] * spp),
+        (42112, 2, list(xml.encode() + b"\0")),
+    ]
+    entries += ([(322, 4, [tile[1]]), (323, 4, [tile[0]])] if tile
+                else [(278, 4, [rps])])
+    n = len(entries) + 2                       # + block offsets, counts
+    data_off = 8 + 2 + n * 12 + 4
+    fmt = {2: "B", 3: "H", 4: "I"}
+    blobs = [(tag, typ, len(vals),
+              struct.pack("<" + str(len(vals)) + fmt[typ], *vals))
+             for tag, typ, vals in entries]
+    idx_sz = 2 * 4 * len(payload)              # offsets + counts blobs
+    blocks_off = (data_off + idx_sz
+                  + sum(len(b) for _, _, _, b in blobs if len(b) > 4))
+    offsets = list(np.cumsum([blocks_off] + [len(p) for p in payload])[:-1])
+    blobs.append((324 if tile else 273, 4, len(payload),
+                  struct.pack(f"<{len(payload)}I", *offsets)))
+    blobs.append((325 if tile else 279, 4, len(payload),
+                  struct.pack(f"<{len(payload)}I", *map(len, payload))))
+    blobs.sort(key=lambda b: b[0])
+    out = bytearray(struct.pack("<2sHI", b"II", 42, 8))
+    out += struct.pack("<H", n)
+    extra = bytearray()
+    for tag, typ, cnt, blob in blobs:
+        out += struct.pack("<HHI", tag, typ, cnt)
+        if len(blob) <= 4:
+            out += blob.ljust(4, b"\0")
+        else:
+            out += struct.pack("<I", data_off + len(extra))
+            extra += blob
+    out += struct.pack("<I", 0)
+    assert len(out) == data_off
+    out += extra
+    assert len(out) == blocks_off
+    for p in payload:
+        out += p
+    with open(path, "wb") as f:
+        f.write(bytes(out))
+
+
+@pytest.mark.parametrize("tile,rps", [(None, 4), (None, 37), ((16, 32), 1)],
+                         ids=["strip4", "strip37", "tiled"])
+def test_planar_separate_with_gdal_metadata(tmp_path, tile, rps):
+    """Planar config 2 (separate planes) in stripped and tiled layouts,
+    with GDAL_METADATA band descriptions and items, decodes bit-identically
+    whole-file and windowed."""
+    rng = np.random.default_rng(8)
+    img = rng.integers(0, 60_000, (3, 37, 52), dtype=np.uint16)
+    path = str(tmp_path / "planar2.tif")
+    _planar_separate_tiff(path, img, _GDAL_XML, tile=tile, rps=rps)
+
+    got = read_gtiff(path)
+    np.testing.assert_array_equal(got.data, img)
+    assert got.band_names == ["Red", "Green", "Blue"]
+    assert got.metadata == {"FUSE_MODEL": "GAIN_BLK_OFFSET",
+                            "FUSE_KERNEL_SHAPE": "(5, 5)"}
+    meta = read_gtiff_meta(path)
+    assert meta.planar == 2 and meta.tiled == bool(tile)
+    for y0, y1 in [(0, 37), (5, 21), (33, 37)]:
+        np.testing.assert_array_equal(decode_window(path, meta, y0, y1),
+                                      img[:, y0:y1])
 
 
 # ------------------------------------------------------- e2e TIFF variants
@@ -143,8 +246,9 @@ def test_geokey_geographic_vs_projected(tmp_path):
         buf = open(path, "rb").read()
         from homonim_spark.tiffio import _read_ifd, _tag_value
         (_, ifd_off) = _struct.unpack("<HI", buf[2:8])
-        tags, _ = _read_ifd(buf, ifd_off, "<")
-        gk = _tag_value(buf, tags[34735], "<")
+        f = io.BytesIO(buf)
+        tags, _ = _read_ifd(f, ifd_off, "<")
+        gk = _tag_value(f, tags[34735], "<")
         keys = {gk[4 + i * 4]: gk[7 + i * 4] for i in range(gk[3])}
         assert keys[1024] == want_model          # GTModelTypeGeoKey
         assert keys[1025] == 1                   # GTRasterTypeGeoKey
