@@ -18,6 +18,7 @@ Everything is seeded — no wall-clock, no external data.
 
 from __future__ import annotations
 
+import zlib
 from dataclasses import dataclass
 from typing import List, Optional, Tuple
 
@@ -124,7 +125,7 @@ def build_pair_tables(spec: RasterFixtureSpec, seed: int = 42) -> Tuple[pd.DataF
     text, … from a seeded RNG — FIXTURES.md §1); one document per
     (band, cell-row) holding that row's src and ref tiles as media spans.
     """
-    rng = np.random.default_rng(seed + hash(spec.pair_id) % (2 ** 16))
+    rng = np.random.default_rng([seed, zlib.crc32(spec.pair_id.encode())])
     ch, cw = spec.cells
     trow0, tcol0 = spec.origin
     px_ref = grid.cell_size(FIXTURE_RES) / spec.tile

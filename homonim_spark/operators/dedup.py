@@ -1,26 +1,31 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding near-dup.
+content-defined passage overlap.
 
 Scale design notes (these run over the full corpus at 100 TB):
 - exact: one groupBy on a 128-bit fingerprint — partial aggregation, no
   payload shuffle (only doc_id + hash move).
-- MinHash+LSH: shingle → permuted min-hashes → band buckets → self-join on
-  (band, bucket) — candidate volume is O(near-dup pairs), not O(n²); the
-  expensive exact-Jaccard verify runs only on candidates.
-- SimHash: 64-bit signature from token hash sign sums; near-dup via banded
-  equality join on signature chunks (Hamming ≤ d ⇒ some chunk equal).
+- MinHash+LSH and SimHash are both bucket-candidates-then-refine: each doc
+  emits bucket keys, :func:`_bucket_pairs` self-joins docs sharing a key
+  (candidate volume O(near-dup pairs), not O(n²)), and the exact measure
+  (Jaccard / Hamming) is verified only on candidates.
 - n-gram Jaccard: exact verification primitive, also usable standalone at
   small scale / on candidate pairs at large scale.
+- passage overlap: content-defined chunks fingerprinted per document, then
+  an inverted-index join on chunk fingerprints.
 
-All hashing uses xxhash64/md5 built-ins (JVM-side); no Python UDFs.
+Hashing uses xxhash64/md5 built-ins (JVM-side); the one Python stage is
+the ``mapInPandas`` chunker of :func:`content_chunks`.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from homonim_spark.operators.textops import normalize_text, tokens
+from homonim_spark.operators.textops import fingerprint, normalize_text, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -30,9 +35,8 @@ from homonim_spark.operators.textops import normalize_text, tokens
 def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact-duplicate groups by md5 of normalized text: one row per
     duplicated fingerprint with the canonical (min) doc_id and group size."""
-    fp = F.md5(normalize_text(F.col(text_col)))
     return (
-        documents.select(F.col("doc_id"), fp.alias("fingerprint"))
+        documents.select(F.col("doc_id"), fingerprint(F.col(text_col)).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("canonical_doc_id"), F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") > 1)
@@ -41,10 +45,9 @@ def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 def dedup_exact(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Keep one document per exact-duplicate group (min doc_id wins)."""
-    fp = F.md5(normalize_text(F.col(text_col)))
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
-        documents.withColumn("fingerprint", fp)
+        documents.withColumn("fingerprint", fingerprint(F.col(text_col)))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "fingerprint")
@@ -75,7 +78,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Pairs (doc_a < doc_b) with word-``n``-gram Jaccard ≥ ``threshold``.
 
@@ -84,13 +86,6 @@ def jaccard_pairs(
     an inverted-index join on shared shingles (never a blind crossJoin):
     only pairs sharing ≥1 shingle are scored, which is the exact support of
     Jaccard > 0.
-
-    ``max_df``: drop shingles occurring in more than this many documents
-    from the *inverted index* (not from the Jaccard denominator).  This is
-    the standard frequent-shingle cut that bounds the index join's worst
-    case (a shingle shared by d docs contributes d² candidate rows); it can
-    only lose pairs whose every shared shingle is frequent.  Leave None for
-    exact semantics (the oracle-checked mode).
     """
     sh = documents.select(
         F.col("doc_id"), word_shingles(F.col(text_col), n).alias("shingles")
@@ -98,9 +93,6 @@ def jaccard_pairs(
 
     if candidates is None:
         inv = sh.select("doc_id", F.explode("shingles").alias("sh"))
-        if max_df is not None:
-            df_counts = inv.groupBy("sh").agg(F.count("*").alias("_df"))
-            inv = inv.join(df_counts.filter(F.col("_df") <= max_df).select("sh"), "sh")
         a = inv.alias("a")
         b = inv.alias("b")
         inter = (
@@ -139,63 +131,68 @@ def jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+#: LSH banding: the 64-permutation MinHash signature is 16 bands × 4 rows
+MINHASH_BANDS = 16
+MINHASH_ROWS = 4
+_NUM_PERM = MINHASH_BANDS * MINHASH_ROWS
+
+
 def minhash_signatures(
-    documents: DataFrame, text_col: str = "text", n: int = 3, num_perm: int = 64
+    documents: DataFrame, text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """MinHash signature per doc: ``num_perm`` permutations simulated as
+    """MinHash signature per doc: 64 permutations simulated as
     ``min(xxhash64(shingle, seed_i))`` — all JVM-side array ops.
 
     ONE traversal of the shingle array: a single ``aggregate`` whose
-    accumulator is the ``num_perm``-wide running-min array, updated per
-    shingle with ``zip_with(acc, seeds, least)`` — the same one-pass fix
-    as ``simhash`` below (round-3 verdict: the per-permutation form
-    ``array_min(transform(sh, ...))`` × num_perm traversed the shingle
-    array and repeated the ``word_shingles`` subtree once per permutation,
-    a plan-size/multi-pass hazard at corpus scale).  Signatures are
+    accumulator is the 64-wide running-min array, updated per shingle with
+    ``zip_with(acc, seeds, least)`` — the same one-pass fix as ``simhash``
+    below (round-3 verdict: the per-permutation form
+    ``array_min(transform(sh, ...))`` × 64 traversed the shingle array and
+    repeated the ``word_shingles`` subtree once per permutation, a
+    plan-size/multi-pass hazard at corpus scale).  Signatures are
     bit-identical between the forms: the same xxhash64(shingle, seed_i)
     values feed the same running min; NULL/empty shingle arrays yield the
     all-NULL signature the old form produced."""
     sh = word_shingles(F.col(text_col), n)
-    seeds = F.array(*[F.lit(i) for i in range(num_perm)])
+    seeds = F.array(*[F.lit(i) for i in range(_NUM_PERM)])
     one_pass = F.aggregate(
         sh,
-        F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_perm),
+        F.array_repeat(F.lit((1 << 63) - 1).cast("long"), _NUM_PERM),
         lambda acc, s: F.zip_with(
             acc, seeds, lambda a, seed: F.least(a, F.xxhash64(s, seed))),
     )
-    null_sig = F.array_repeat(F.lit(None).cast("long"), num_perm)
+    null_sig = F.array_repeat(F.lit(None).cast("long"), _NUM_PERM)
     sig = (F.when(sh.isNull() | (F.size(sh) == 0), null_sig)
            .otherwise(one_pass))
     return documents.select(F.col("doc_id"), sig.alias("minhash"))
 
 
-def _cap_buckets(exploded: DataFrame, keys: list[str],
-                 max_bucket_size: int | None) -> DataFrame:
-    """Drop LSH buckets larger than ``max_bucket_size`` before the self-join.
+def _bucket_pairs(keyed: DataFrame, keys: list[str], carry=()) -> DataFrame:
+    """Distinct pairs (doc_a < doc_b) of ``keyed`` rows that agree on every
+    column in ``keys``: the candidate step shared by MinHash-LSH and SimHash.
 
-    A bucket of B members contributes B² candidate rows in ONE reducer; on
-    duplicate-heavy corpora B is unbounded. Callers that pre-collapse exact
-    duplicates (the default pipelines below) keep semantics; a cap on top is
-    a recall-trading safety valve for mega-clusters of *near* duplicates.
+    Each ``carry`` column comes along as ``<col>_a`` / ``<col>_b``.  Only
+    the bucket rows shuffle (doc_id, keys, carry), never the documents.
     """
-    if max_bucket_size is None:
-        return exploded
-    sizes = exploded.groupBy(*keys).agg(F.count("*").alias("_bsz"))
-    return (exploded.join(sizes.filter(F.col("_bsz") <= max_bucket_size)
-                          .select(*keys), keys))
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cond = reduce(and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+                  + [F.col("a.doc_id") < F.col("b.doc_id")])
+    return (
+        a.join(b, cond)
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+                *[F.col(f"{side}.{c}").alias(f"{c}_{side}")
+                  for c in carry for side in ("a", "b")])
+        .distinct()
+    )
 
 
-def lsh_candidates(
-    signatures: DataFrame, bands: int = 16, rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def lsh_candidates(signatures: DataFrame) -> DataFrame:
     """Band the signature; docs sharing any (band, bucket) are candidates.
 
-    Recall at Jaccard j: 1 − (1 − j^r)^b — with the 16×4 default, j=0.8 →
-    0.9992.  The bucket join is a groupBy on (band, hash-of-rows): shuffle
-    carries only (doc_id, 2 longs).  ``max_bucket_size`` drops over-cap
-    buckets (see :func:`_cap_buckets`); run exact-duplicate collapse first
-    (as :func:`minhash_near_duplicates` does) so identical docs never
+    Recall at Jaccard j: 1 − (1 − j^r)^b — with the 16×4 banding, j=0.8 →
+    0.9992.  The bucket join is an equi-join on (band, hash-of-rows):
+    shuffle carries only (doc_id, 2 longs).  Run exact-duplicate collapse
+    first (as :func:`minhash_near_duplicates` does) so identical docs never
     inflate a bucket.
     """
     exploded = signatures.select(
@@ -203,22 +200,14 @@ def lsh_candidates(
         F.posexplode(
             F.array(*[
                 F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("minhash", b * rows_per_band + r + 1).cast("string")
-                           for r in range(rows_per_band)]
+                    ",", *[F.element_at("minhash", b * MINHASH_ROWS + r + 1).cast("string")
+                           for r in range(MINHASH_ROWS)]
                 ))
-                for b in range(bands)
+                for b in range(MINHASH_BANDS)
             ])
         ).alias("band", "bucket"),
     )
-    exploded = _cap_buckets(exploded, ["band", "bucket"], max_bucket_size)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(exploded, ["band", "bucket"])
 
 
 # ---------------------------------------------------------------------------
@@ -240,8 +229,8 @@ def _collapse_exact(documents: DataFrame, text_col: str):
     ``word_shingles`` short-doc convention, so empty docs DO pair at
     jaccard 1.0 / hamming 0 in both pipelines.)
     """
-    fp = F.md5(normalize_text(F.col(text_col)))
-    tagged = (documents.select(F.col("doc_id"), F.col(text_col), fp.alias("_fp"))
+    tagged = (documents.select(F.col("doc_id"), F.col(text_col),
+                               fingerprint(F.col(text_col)).alias("_fp"))
               .filter(F.col("_fp").isNotNull()))
     reps = (tagged.groupBy("_fp")
             .agg(F.min("doc_id").alias("doc_id"),
@@ -286,10 +275,6 @@ def minhash_near_duplicates(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: exact-duplicate collapse →
     signature → band buckets → candidate pairs → exact-Jaccard verify ≥
@@ -299,8 +284,8 @@ def minhash_near_duplicates(
     produce B² candidate rows per bucket: buckets hold one representative
     per distinct text."""
     reps, members = _collapse_exact(documents, text_col)
-    sigs = minhash_signatures(reps, text_col, n, num_perm)
-    cands = lsh_candidates(sigs, bands, rows_per_band, max_bucket_size)
+    sigs = minhash_signatures(reps, text_col, n)
+    cands = lsh_candidates(sigs)
     rep_pairs = jaccard_pairs(reps, text_col, n, threshold, candidates=cands)
     out = _expand_pairs(rep_pairs, reps, members, "jaccard", 1.0)
     return out.filter(F.col("jaccard") >= threshold)
@@ -438,33 +423,33 @@ def simhash(col: Column, bits: int = 64, hash_fn: str = "xxhash64") -> Column:
 
 def simhash_near_duplicates(
     documents: DataFrame, text_col: str = "text", max_hamming: int = 3,
-    chunks: int = 4, max_bucket_size: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
 
-    Pigeonhole banding: split the 64-bit signature into ``chunks`` 16-bit
-    chunks; distance ≤ 3 ⇒ at least one chunk identical → equality join per
+    Pigeonhole banding: split the 64-bit signature into
+    ``max_hamming + 1`` disjoint chunks (at least 2); distance ≤
+    ``max_hamming`` leaves at least one chunk identical → equality join per
     chunk, then exact popcount verify.  Exact duplicates are collapsed to
     one representative before banding (identical text ⇒ identical SimHash ⇒
     shared every chunk bucket) and expanded back afterward at Hamming 0, so
     duplicate clusters cannot blow up a chunk bucket.
     """
     reps, members = _collapse_exact(documents, text_col)
-    rep_pairs = _simhash_rep_pairs(reps, text_col, max_hamming, chunks,
-                                   max_bucket_size, hash_fn)
+    rep_pairs = _simhash_rep_pairs(reps, text_col, max_hamming, hash_fn)
     out = _expand_pairs(rep_pairs, reps, members, "hamming", 0)
     return out.filter(F.col("hamming") <= max_hamming)
 
 
 def _simhash_rep_pairs(
-    documents: DataFrame, text_col: str, max_hamming: int, chunks: int,
-    max_bucket_size: int | None = None, hash_fn: str = "xxhash64",
+    documents: DataFrame, text_col: str, max_hamming: int,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
+    chunks = max(2, max_hamming + 1)
+    width = 64 // chunks
     sh = documents.select(
         F.col("doc_id"),
         simhash(F.col(text_col), hash_fn=hash_fn).alias("sig"))
-    width = 64 // chunks
     chunked = sh.select(
         "doc_id", "sig",
         F.posexplode(F.array(*[
@@ -472,19 +457,7 @@ def _simhash_rep_pairs(
             for i in range(chunks)
         ])).alias("chunk_i", "chunk_v"),
     )
-    chunked = _cap_buckets(chunked, ["chunk_i", "chunk_v"], max_bucket_size)
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    cand = (
-        a.join(b, (F.col("a.chunk_i") == F.col("b.chunk_i"))
-               & (F.col("a.chunk_v") == F.col("b.chunk_v"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(chunked, ["chunk_i", "chunk_v"], carry=["sig"])
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return cand.select(
         "doc_a", "doc_b", hamming.alias("hamming")
@@ -577,13 +550,11 @@ def _chunk_fingerprints(codes: "np.ndarray", bounds: "np.ndarray") -> "np.ndarra
     return packed
 
 
-def content_chunks(
-    documents: DataFrame, text_col: str = "text",
-    window: int = CDC_WINDOW, modulus: int = CDC_MODULUS,
-) -> DataFrame:
+def content_chunks(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Content-defined chunking: split each (normalized) document at
-    positions where a polynomial rolling hash of the trailing ``window``
-    code points ≡ 0 (mod ``modulus``), and fingerprint each chunk.
+    positions where a polynomial rolling hash of the trailing
+    ``CDC_WINDOW`` code points ≡ 0 (mod ``CDC_MODULUS``), and fingerprint
+    each chunk.
 
     Boundaries depend only on LOCAL content, so a shared passage chunks
     identically in every document containing it regardless of where it
@@ -623,7 +594,7 @@ def content_chunks(
                     continue
                 codes = np.frombuffer(
                     t.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-                if n < window:
+                if n < CDC_WINDOW:
                     bounds = np.array([0, n], dtype=np.int64)
                 else:
                     cut_list = []
@@ -634,19 +605,20 @@ def content_chunks(
                     # (the fold trick is documented in _chunk_fingerprints;
                     # 2³¹ ≡ 1 mod the Mersenne prime).  Sliced by stride
                     # so per-doc scratch stays O(stride) at any doc length.
-                    for s0 in range(0, n - window + 1, 65536):
-                        s1 = min(s0 + 65536, n - window + 1)
+                    for s0 in range(0, n - CDC_WINDOW + 1, 65536):
+                        s1 = min(s0 + 65536, n - CDC_WINDOW + 1)
                         m = s1 - s0
-                        L = m + window - 1
+                        L = m + CDC_WINDOW - 1
                         t = codes[s0:s0 + L] * _pow_table(_CDC_P, _CDC_M, L)
                         t = (t >> 31) + (t & 0x7FFFFFFF)
                         T = np.zeros(L + 1, dtype=np.int64)
                         np.cumsum(t, out=T[1:])
                         hv = (_pow_table(pinv, _CDC_M, m)
-                              * ((T[window:window + m] - T[:m]) % _CDC_M)
+                              * ((T[CDC_WINDOW:CDC_WINDOW + m] - T[:m])
+                                 % _CDC_M)
                               ) % _CDC_M
                         cut_list.append(
-                            np.nonzero(hv % modulus == 0)[0] + s0 + window)
+                            np.nonzero(hv % CDC_MODULUS == 0)[0] + s0 + CDC_WINDOW)
                     cuts = np.concatenate(cut_list)
                     bounds = np.unique(np.concatenate(
                         [[0, n], cuts]).astype(np.int64))
@@ -665,24 +637,16 @@ def content_chunks(
 
 def passage_overlap_pairs(
     documents: DataFrame, text_col: str = "text", min_shared: int = 2,
-    max_df: int | None = None, window: int = CDC_WINDOW,
-    modulus: int = CDC_MODULUS,
 ) -> DataFrame:
     """Pairs of documents sharing ≥ ``min_shared`` distinct content-defined
     chunks — partial-duplicate / contamination candidates that whole-doc
     fingerprints and even MinHash (which needs global similarity) miss.
 
     Inverted-index join on chunk fingerprints: candidate volume is
-    Σ df(fp)² over shared fingerprints, bounded by ``max_df`` (drop
-    stop-chunks with document frequency above it — same knob as the
-    n-gram index).  Only (doc_id, fp) pairs shuffle.
+    Σ df(fp)² over shared fingerprints.  Only (doc_id, fp) pairs shuffle.
     """
-    ch = (content_chunks(documents, text_col, window, modulus)
+    ch = (content_chunks(documents, text_col)
           .select("doc_id", "chunk_fp").distinct())
-    if max_df is not None:
-        hot = (ch.groupBy("chunk_fp").count()
-               .filter(F.col("count") > max_df).select("chunk_fp"))
-        ch = ch.join(F.broadcast(hot), "chunk_fp", "left_anti")
     a, b = ch.alias("a"), ch.alias("b")
     return (
         a.join(b, (F.col("a.chunk_fp") == F.col("b.chunk_fp"))

@@ -3,10 +3,11 @@
 - ``cosine_topk``: exact brute-force top-k — the correctness baseline.
   Queries are broadcast (small side); the corpus side streams. Dot products
   are JVM-side ``F.zip_with`` + ``F.aggregate`` (no Python).
-- ``lsh_topk``: the scale path — sign-random-projection (SRP) bucketing with
-  multi-probe; candidates only within matching buckets, then exact rerank.
+- ``lsh_topk`` / ``ivf_topk``: the scale paths — each query probes a few
+  buckets (SRP signatures at Hamming ≤ 1, or the nearest IVF lists) and
+  :func:`_rerank` scores only the corpus rows in them exactly.
 - ``embedding_near_duplicates``: all pairs with cosine ≥ threshold via the
-  same bucketing (near-dup semantics for embedding-based dedup).
+  same SRP bucketing (near-dup semantics for embedding-based dedup).
 
 Deterministic: projection hyperplanes are seeded; ties in top-k rank break
 by vec_id.
@@ -38,6 +39,13 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Keep each query's ``k`` best (query_id, neighbor_id, cosine) rows,
+    ranked by cosine descending with ties broken by neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -64,12 +72,7 @@ def cosine_topk(
             cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored, k).withColumn("cosine", F.round("cosine", 6))
 
 
 def cosine_topk_np(
@@ -148,12 +151,30 @@ def cosine_topk_np(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         part, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(scored, k)
+
+
+def _rerank(c: DataFrame, q: DataFrame, key: str, k: int) -> DataFrame:
+    """Exact top-k within probed buckets: broadcast the probe rows ``q``
+    (query_id, q_vec, ``key``) onto the corpus rows ``c`` (neighbor_id,
+    c_vec, ``key``), drop self-matches, score each pair with the cosine,
+    keep one row per (query, neighbor) reached through several probes,
+    then rank and round to 6 dp."""
+    scored = (
+        c.join(F.broadcast(q), key)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id",
+                cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.first("cosine").alias("cosine"))
     )
+    return _top_k(scored, k).withColumn("cosine", F.round("cosine", 6))
+
+
+def _hamming1(bucket: Column, n_planes: int) -> Column:
+    """``bucket`` followed by its ``n_planes`` one-bit flips: the SRP
+    multi-probe set at Hamming distance ≤ 1 (all values distinct)."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)])
 
 
 def srp_buckets(df: DataFrame, vec_col: str, planes: np.ndarray,
@@ -195,17 +216,16 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    probe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: SRP bucket join + exact rerank within candidates.
 
-    Multi-probe: each query also probes all buckets at Hamming distance
-    ≤ ``probe_bits`` (flip one bit), trading candidate volume for recall.
+    Multi-probe: each query also probes the ``n_planes`` buckets at Hamming
+    distance 1 (one bit flipped), trading candidate volume for recall.
     At 100 TB the bucket join replaces the O(n·q) crossJoin with
-    O(n·q / 2^{n_planes−probe cost}) candidate volume.
+    O(n·q·(n_planes + 1) / 2^n_planes) candidate volume.
     """
     planes = make_planes(dim, n_planes, seed)
     c = srp_buckets(
@@ -216,26 +236,8 @@ def lsh_topk(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_vec")),
         "q_vec", planes, "q_bucket")
-    probes = [F.col("q_bucket")]
-    if probe_bits >= 1:
-        probes += [F.col("q_bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
-    q = q.withColumn("bucket", F.explode(F.array(*probes)))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.first("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    q = q.withColumn("bucket", F.explode(_hamming1(F.col("q_bucket"), n_planes)))
+    return _rerank(c, q, "bucket", k)
 
 
 def train_ivf_centroids(
@@ -357,20 +359,7 @@ def ivf_topk(
         assign_corpus, schema=f"neighbor_id {id_t}, c_vec {vec_t}, list_id int")
     q = queries.select(id_col, vec_col).mapInPandas(
         probe_queries, schema=f"query_id {id_t}, q_vec {vec_t}, list_id int")
-    scored = (
-        c.join(F.broadcast(q), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id",
-                cosine_similarity(F.col("q_vec"), F.col("c_vec")).alias("cosine"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.first("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rerank(c, q, "list_id", k)
 
 
 #: corpus sizes up to this many raw matrix bytes use the broadcast-matrix
@@ -388,7 +377,6 @@ def embedding_near_duplicates(
     n_planes: int = 8,
     exact: bool = False,
     seed: int = 42,
-    verify_broadcast_bytes: int = VERIFY_BROADCAST_BYTES,
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold.
 
@@ -416,13 +404,7 @@ def embedding_near_duplicates(
         # ~40 MB of ids for the identical candidate set.
         sig = srp_buckets(rebalance(c), "vec", planes, "bucket") \
             .select("vid", "bucket")
-        probes = sig.withColumn(
-            "bucket",
-            F.explode(F.array(
-                F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-            )),
-        )
+        probes = sig.withColumn("bucket", F.explode(_hamming1(F.col("bucket"), n_planes)))
         # No pair-dedup needed: a pair (x, y) with bucket distance ≤ 1 is
         # emitted by EXACTLY one of x's 11 probe rows (the probe buckets
         # {b_x} ∪ {b_x ^ bit} are pairwise distinct and y's signature is a
@@ -436,8 +418,7 @@ def embedding_near_duplicates(
                   & (F.col("pa.vid") < F.col("pb.vid")))
             .select(F.col("pa.vid").alias("_va"), F.col("pb.vid").alias("_vb"))
         )
-        return _verify_candidates(c, cand, threshold, verify_broadcast_bytes,
-                                  dim)
+        return _verify_candidates(c, cand, threshold, dim)
     return (
         pairs.select(
             F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"),
@@ -449,7 +430,7 @@ def embedding_near_duplicates(
 
 
 def _verify_candidates(c: DataFrame, cand: DataFrame, threshold: float,
-                       verify_broadcast_bytes: int, dim: int) -> DataFrame:
+                       dim: int) -> DataFrame:
     """Exact cosine verification of candidate id pairs, vectorized.
 
     The per-pair higher-order-function cosine (zip_with + three aggregate
@@ -457,7 +438,7 @@ def _verify_candidates(c: DataFrame, cand: DataFrame, threshold: float,
     numpy einsum verifies the same pairs in milliseconds of CPU.  Two
     shapes by corpus size (guide §8 "broadcast the plan" / attach rules):
 
-    - corpus matrix ≤ ``verify_broadcast_bytes``: broadcast (ids, matrix)
+    - corpus matrix ≤ ``VERIFY_BROADCAST_BYTES``: broadcast (ids, matrix)
       once per worker; only (vid, vid) id pairs cross Arrow, vectors never
       shuffle at all.
     - larger corpora: equi-join the two vector columns onto the id pairs
@@ -476,7 +457,7 @@ def _verify_candidates(c: DataFrame, cand: DataFrame, threshold: float,
     # dim).  If the limit did not truncate, the collected frame IS the
     # whole corpus; a 100 TB corpus stops the scan after cap+1 rows
     # instead of paying a full count.
-    cap = max(1, verify_broadcast_bytes // (8 * dim))
+    cap = max(1, VERIFY_BROADCAST_BYTES // (8 * dim))
     pdf = c.limit(cap + 1).toPandas()
     if 0 < len(pdf) <= cap:
         ids = pdf["vid"].to_numpy(dtype=np.int64)
@@ -502,27 +483,26 @@ def _verify_candidates(c: DataFrame, cand: DataFrame, threshold: float,
                 yield pd.DataFrame({"vec_a": a[keep], "vec_b": b[keep],
                                     "cosine": cos[keep]})
 
-        # ROUND outside the UDF: Spark's half-up semantics, matching the
-        # HOF tail (np.round is half-even)
-        return cand.mapInPandas(
-            verify, schema="vec_a long, vec_b long, cosine double") \
-            .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
+        kept = cand.mapInPandas(
+            verify, schema="vec_a long, vec_b long, cosine double")
+    else:
+        @F.pandas_udf("double")
+        def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
+            A = np.asarray(list(a), dtype=np.float64)
+            B = np.asarray(list(b), dtype=np.float64)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = np.einsum("ij,ij->i", A, B) \
+                    / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
+            return pd.Series(cos)
 
-    @F.pandas_udf("double")
-    def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.asarray(list(a), dtype=np.float64)
-        B = np.asarray(list(b), dtype=np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = np.einsum("ij,ij->i", A, B) \
-                / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
-        return pd.Series(cos)
-
-    attached = (
-        cand
-        .join(c.select(F.col("vid").alias("_va"), F.col("vec").alias("_vva")), "_va")
-        .join(c.select(F.col("vid").alias("_vb"), F.col("vec").alias("_vvb")), "_vb")
-        .select(F.col("_va").alias("vec_a"), F.col("_vb").alias("vec_b"),
-                pair_cosine(F.col("_vva"), F.col("_vvb")).alias("cosine"))
-    )
-    return (attached.filter(F.col("cosine") >= threshold)
-            .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine")))
+        kept = (
+            cand
+            .join(c.select(F.col("vid").alias("_va"), F.col("vec").alias("_vva")), "_va")
+            .join(c.select(F.col("vid").alias("_vb"), F.col("vec").alias("_vvb")), "_vb")
+            .select(F.col("_va").alias("vec_a"), F.col("_vb").alias("vec_b"),
+                    pair_cosine(F.col("_vva"), F.col("_vvb")).alias("cosine"))
+            .filter(F.col("cosine") >= threshold)
+        )
+    # ROUND outside the UDF: Spark's half-up semantics, matching the HOF
+    # tail (np.round is half-even)
+    return kept.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))

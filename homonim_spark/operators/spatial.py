@@ -64,7 +64,8 @@ def skew_report(df: DataFrame, keys: List[str], top: int = 10) -> DataFrame:
     """Key-distribution diagnostics for a prospective join/groupBy: per-key
     row counts reduced to (n_keys, total_rows, max_rows, avg_rows,
     skew_ratio). The north_rule requires skew handled *explicitly* — this is
-    the measurement that sizes ``n_salt`` (measure, don't guess)."""
+    the measurement that sizes :func:`salted_join`'s ``n_salt`` (measure,
+    don't guess)."""
     counts = df.groupBy(*keys).agg(F.count("*").alias("n"))
     return counts.agg(
         F.count("*").alias("n_keys"),
@@ -73,13 +74,6 @@ def skew_report(df: DataFrame, keys: List[str], top: int = 10) -> DataFrame:
         F.round(F.avg("n"), 6).alias("avg_rows"),
         F.round(F.max("n") / F.avg("n"), 6).alias("skew_ratio"),
     )
-
-
-def suggest_salt(df: DataFrame, keys: List[str], target_rows_per_task: int = 100_000) -> int:
-    """Salting factor from measured skew: split the hottest key into pieces
-    of ~``target_rows_per_task`` rows (1 = no salting needed)."""
-    row = skew_report(df, keys).collect()[0]
-    return max(1, int(-(-row["max_rows"] // target_rows_per_task)))
 
 
 # ---------------------------------------------------------------------------

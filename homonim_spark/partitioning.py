@@ -36,16 +36,16 @@ def pinned_repartition(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *cols)
 
 
-def rebalance(df: DataFrame, min_ratio: float = 1.0) -> DataFrame:
+def rebalance(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the session default parallelism if
     its current partitioning underuses the cluster.
 
-    Triggers only when ``n_partitions < min_ratio * defaultParallelism`` —
-    i.e. for small/unsplittable inputs whose shuffle cost is trivial; large
+    Triggers only when ``n_partitions < defaultParallelism`` — i.e. for
+    small/unsplittable inputs whose shuffle cost is trivial; large
     well-split scans pass through unchanged, so this is scale-safe.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < int(min_ratio * target):
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

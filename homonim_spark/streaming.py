@@ -223,7 +223,7 @@ def streaming_dedup_exact(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    from homonim_spark.operators.textops import normalize_text
+    from homonim_spark.operators.textops import fingerprint
 
     out_schema = T.StructType([
         T.StructField("doc_id", T.StringType()),
@@ -271,7 +271,7 @@ def streaming_dedup_exact(
     # docs would invent duplicates across semantically different rows.
     keyed = doc_stream.select(
         "doc_id",
-        F.md5(normalize_text(F.col(text_col))).alias("fingerprint"),
+        fingerprint(F.col(text_col)).alias("fingerprint"),
     ).filter(F.col("fingerprint").isNotNull())
     return keyed.groupBy("fingerprint").applyInPandasWithState(
         update, outputStructType=out_schema, stateStructType=state_schema,

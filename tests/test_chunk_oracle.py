@@ -88,9 +88,7 @@ def _formatted_plan(df):
 def test_plan_hygiene_join_pushdown(spark):
     """Regression guard on plan quality: the star join broadcasts dims, the
     region filter reaches the scan, and scans are column-pruned."""
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as e
+    import __spark_entry__ as e  # the checkout root is on sys.path (conftest)
     plan = _formatted_plan(e.queries()["join_pushdown"](spark, "/root/testdata/sf0.001"))
     assert "BroadcastHashJoin" in plan
     assert "EqualTo(r_name,ASIA)" in plan

@@ -3,6 +3,7 @@
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -13,6 +14,8 @@ from homonim_spark.operators import fuse as fuse_ops
 from homonim_spark.operators.compare import compare
 from homonim_spark.operators.matching import match_bands
 from homonim_spark.tiles import decode_tile
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_band_map_fuse(spark):
@@ -100,7 +103,7 @@ def test_cli_fuse_compare_stats(tmp_path):
          "--tiles", tdir, "--out", out, "--model", "gain-blk-offset",
          "--kernel", "5", "5", "--master", "local[2]",
          "--export-gtiff", tif_dir, "--export-epsg", "32734"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     last = json.loads(r.stdout.strip().splitlines()[-1])
     assert last["corrected_tiles"] == 4
@@ -118,7 +121,7 @@ def test_cli_fuse_compare_stats(tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "homonim_spark.cli", "stats", "--params",
          f"{out}/params", "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert r2.returncode == 0, r2.stderr[-2000:]
     stats = json.loads(r2.stdout.strip().splitlines()[-1])
     by_param = {s["param"]: s for s in stats}
@@ -127,7 +130,7 @@ def test_cli_fuse_compare_stats(tmp_path):
     r3 = subprocess.run(
         [sys.executable, "-m", "homonim_spark.cli", "compare", "--documents", ddir,
          "--tiles", tdir, "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert r3.returncode == 0, r3.stderr[-2000:]
     cmp_stats = json.loads(r3.stdout.strip().splitlines()[-1])
     assert any(abs(s["r2"] - 1.0) < 1e-6 for s in cmp_stats)
@@ -151,7 +154,7 @@ def test_cli_yaml_conf_and_table_report(tmp_path):
         [sys.executable, "-m", "homonim_spark.cli", "fuse", "--documents", ddir,
          "--tiles", tdir, "--out", out, "--model", "gain-offset",
          "--conf", str(conf), "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     manifest = json.load(open(f"{out}/MANIFEST.json"))
     assert manifest["FUSE_MODEL"] == "gain-offset"   # CLI wins
@@ -163,7 +166,7 @@ def test_cli_yaml_conf_and_table_report(tmp_path):
     rbad = subprocess.run(
         [sys.executable, "-m", "homonim_spark.cli", "fuse", "--documents", ddir,
          "--tiles", tdir, "--out", out, "--conf", str(bad), "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert rbad.returncode != 0
     assert "no_such_param" in (rbad.stderr + rbad.stdout)
 
@@ -172,7 +175,7 @@ def test_cli_yaml_conf_and_table_report(tmp_path):
         [sys.executable, "-m", "homonim_spark.cli", "stats", "--params",
          f"{out}/params", "--model", "gain-offset", "--report", "table",
          "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert r2.returncode == 0, r2.stderr[-2000:]
     body = r2.stdout
     lines = [l for l in body.splitlines() if l.strip()]

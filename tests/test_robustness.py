@@ -143,3 +143,23 @@ def test_downsample_upsample_property(f, seed):
     up = ops.upsample_nearest(base, (f, f))
     down = ops.downsample_average(up, (f, f))
     np.testing.assert_allclose(down, base, rtol=1e-5)
+
+
+def test_build_pair_tables_same_text_in_every_process():
+    """The document text RNG must not depend on Python's per-process str
+    hash salt: two interpreters with different PYTHONHASHSEED build
+    identical documents."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = ("import sys; from homonim_spark import datagen; "
+            "d, _ = datagen.build_pair_tables(datagen.RasterFixtureSpec()); "
+            "sys.stdout.write(d.to_json())")
+    root = Path(__file__).resolve().parents[1]
+    outs = [subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                           capture_output=True, text=True,
+                           env={**os.environ, "PYTHONHASHSEED": seed}).stdout
+            for seed in ("1", "2")]
+    assert outs[0] and outs[0] == outs[1]

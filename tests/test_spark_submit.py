@@ -10,9 +10,11 @@ import os
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
+ROOT = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 JOB = """
@@ -33,10 +35,10 @@ spark.stop()
 
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
 def test_spark_submit_pyfiles(tmp_path):
-    r = subprocess.run(["bash", "/root/repo/tools/make_pyfiles.sh"],
+    r = subprocess.run(["bash", str(ROOT / "tools" / "make_pyfiles.sh")],
                        capture_output=True, text=True, timeout=120)
     assert r.returncode == 0, r.stderr[-1500:]
-    zip_path = "/root/repo/dist/homonim_spark.zip"
+    zip_path = str(ROOT / "dist" / "homonim_spark.zip")
     assert os.path.exists(zip_path)
 
     job = tmp_path / "job.py"

@@ -84,6 +84,21 @@ def test_simhash_md5_hash_fn_same_exact_dups(spark, docs):
     assert all("d4" not in a + b for a, b in pairs)
 
 
+@pytest.mark.parametrize("max_hamming", [0, 3, 4])
+def test_simhash_chunks_cover_max_hamming(spark, max_hamming):
+    """Pigeonhole banding needs more chunks than ``max_hamming``: with a
+    fixed 4 chunks, this md5 pair at Hamming 4 (one differing bit per
+    16-bit chunk) shared no chunk and was never a candidate."""
+    a = ("tile river field kernel kernel landsat calibration offset shadow "
+         "ortho drone reflectance")
+    docs = spark.createDataFrame(
+        [("a", a), ("b", a.replace("drone", "river"))], "doc_id string, text string")
+    out = dedup.simhash_near_duplicates(docs, max_hamming=max_hamming,
+                                        hash_fn="md5").toPandas()
+    got = [tuple(r) for r in out[["doc_a", "doc_b", "hamming"]].values.tolist()]
+    assert got == ([("a", "b", 4)] if max_hamming >= 4 else [])
+
+
 def test_md5_hash64_matches_reference_bits(spark):
     """Pin the md5→int64 construction (hex chars 1-16, big-endian, two's
     complement) against Python's hashlib so the DuckDB oracle's nibble
@@ -179,7 +194,7 @@ def test_lsh_topk_high_dim_plan_stays_bounded(spark):
     vecs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["vec_id", "embedding"])).cache()
     out_df = similarity.lsh_topk(vecs, vecs.filter(F.col("vec_id") == 0),
-                                 dim=1024, k=1, n_planes=16, probe_bits=1)
+                                 dim=1024, k=1, n_planes=16)
     plan = out_df._jdf.queryExecution().optimizedPlan().toString()
     # the literal-plane form folded 16 x 1024 float literals into the plan
     # (hundreds of KB); the GEMM form's plan is O(1) in dim x planes
@@ -197,6 +212,28 @@ def test_embedding_near_duplicates_exact_vs_bucketed(spark, vectors):
     bucketed = similarity.embedding_near_duplicates(
         vectors, threshold=0.95, exact=False, dim=16, n_planes=4).toPandas()
     assert set(map(tuple, bucketed[["vec_a", "vec_b"]].values.tolist())) == {(0, 1)}
+
+
+def test_embedding_near_duplicates_large_corpus_verify_path(spark, monkeypatch):
+    """The join-attach verification (corpus matrix over the broadcast
+    budget) returns exactly what the broadcast-matrix verification returns,
+    and only pairs the exact self-join also finds."""
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal((200, 16)).astype(np.float32)
+    rows = [(i, [float(x) for x in base[i]]) for i in range(200)]
+    vecs = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"])).repartition(4).cache()
+
+    def run(**kw):
+        out = similarity.embedding_near_duplicates(vecs, threshold=0.5, **kw).toPandas()
+        return sorted(map(tuple, out[["vec_a", "vec_b", "cosine"]].values.tolist()))
+
+    broadcast = run(exact=False, dim=16, n_planes=4)
+    exact = run(exact=True)
+    monkeypatch.setattr(similarity, "VERIFY_BROADCAST_BYTES", 1)
+    joined = run(exact=False, dim=16, n_planes=4)
+    assert joined and joined == broadcast
+    assert set(joined) <= set(exact)
 
 
 def test_cosine_topk_np_matches_hof_path(spark):

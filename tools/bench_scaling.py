@@ -27,14 +27,17 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 PAIRS = int(sys.argv[1]) if len(sys.argv) > 1 else 1024
 TILE = int(sys.argv[2]) if len(sys.argv) > 2 else 64
 ROUNDS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+# the checkout this script lives in; the snippets run with it as cwd, so
+# `python -c` imports its homonim_spark
+ROOT = Path(__file__).resolve().parents[1]
 
 RUN_SNIPPET = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cpus = int(sys.argv[1]); pairs = int(sys.argv[2]); tile = int(sys.argv[3])
 from homonim_spark.session import get_spark
 from homonim_spark import datagen
@@ -79,7 +82,6 @@ spark.stop()
 NUMPY_CONTROL = r"""
 import json, sys, time
 import numpy as np
-sys.path.insert(0, "/root/repo")
 from multiprocessing import Pool
 from homonim_spark.kernel.models import KernelModelParams, fit_and_apply_ref_space
 
@@ -110,7 +112,7 @@ def run_level(cpus: int) -> dict:
     # 3x slowdown), so set SPARK_GRAFT_DRIVER_MEM on hosts that need more
     out = subprocess.run(
         [sys.executable, "-c", RUN_SNIPPET, str(cpus), str(PAIRS), str(TILE)],
-        capture_output=True, text=True, timeout=2400,
+        capture_output=True, text=True, timeout=2400, cwd=ROOT,
     )
     lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:
@@ -130,12 +132,12 @@ def main():
     r32 = run_level(32)
     np_ctl = json.loads(subprocess.run(
         [sys.executable, "-c", NUMPY_CONTROL], capture_output=True,
-        text=True, timeout=1200).stdout.strip().splitlines()[-1])
+        text=True, timeout=1200, cwd=ROOT).stdout.strip().splitlines()[-1])
 
     r2, r8 = best[2], best[8]
     eff_2_8 = (r2["sec"] / r8["sec"]) / 4
     eff_8_32 = (r8["sec"] / r32["sec"]) / 4
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(ROOT / "BENCH", exist_ok=True)
     hist = "\n".join(
         f"  round {i // 2}: local[{r['cpus']}] {r['sec']:.2f} s"
         for i, r in enumerate(rounds))
@@ -210,7 +212,7 @@ Correctness across parallelism levels is bit-exact
 cross-session determinism check: identical value hashes at local[4]/shuf=4
 vs local[16]/shuf=32).
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(ROOT / "BENCH" / "BASELINE.md", "w") as f:
         f.write(md)
     print(json.dumps({"n2": r2, "n8": r8, "n32": r32,
                       "efficiency_2_8": eff_2_8, "efficiency_8_32": eff_8_32,
