@@ -754,6 +754,40 @@ FROM px GROUP BY role, band, cr, cc ORDER BY media_ref
 """
 
 
+def _explode_px(df: DataFrame, tile: int, cols: dict,
+                dp: int | None = None) -> DataFrame:
+    """Per-pixel rows ``(r, c, <outputs>)`` of ``tile``×``tile`` float32 tile
+    columns keyed by ``cell_id``.  ``cols`` maps tile columns to output
+    names; a pixel is emitted where the first column is not NaN; values
+    are the float64 view of the float32 pixel, rounded with ``np.round`` to
+    ``dp`` places (verified to agree with DuckDB ROUND on the fixtures'
+    ranges) or left as is when ``dp`` is None."""
+    import numpy as np
+    import pandas as pd
+    from homonim_spark import grid
+    from homonim_spark.tiles import decode_tile
+
+    names = ["r", "c", *cols.values()]
+
+    def explode(batches):
+        for pdf in batches:
+            rows = []
+            for rr in pdf.itertuples(index=False):
+                arrs = [decode_tile(getattr(rr, k), tile, tile) for k in cols]
+                r0 = grid.cell_row(int(rr.cell_id)) * tile
+                c0 = grid.cell_col(int(rr.cell_id)) * tile
+                ys, xs = np.nonzero(~np.isnan(arrs[0]))
+                for y, x in zip(ys, xs):
+                    vals = [np.float64(a[y, x]) for a in arrs]
+                    if dp is not None:
+                        vals = [np.round(v, dp) for v in vals]
+                    rows.append([int(r0 + y), int(c0 + x), *map(float, vals)])
+            yield pd.DataFrame(rows, columns=names)
+
+    schema = ", ".join(["r int", "c int", *(f"{n} double" for n in cols.values())])
+    return df.select("cell_id", *cols).mapInPandas(explode, schema=schema)
+
+
 def q_fuse_gain_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuse numerics, ORACLE-CHECKED end-to-end (VERDICT r01 next-step #8):
     gain model, 1×1 kernel, ref space — per proc pixel the fitted gain is
@@ -764,11 +798,8 @@ def q_fuse_gain_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with generate_series and reproduces every fitted gain to 4 dp
     (float32-vs-float64 round stability verified over the full value range),
     pinning scan → pairing → halo → blockmean → fit → tile emit per-pixel."""
-    import numpy as np
-    import pandas as pd
-    from homonim_spark import datagen, grid
+    from homonim_spark import datagen
     from homonim_spark.operators.fuse import fuse
-    from homonim_spark.tiles import decode_tile
 
     spec = datagen.RasterFixtureSpec(pair_id="k1", cells=(2, 2), tile=8,
                                      factor=2, bands=1,
@@ -777,26 +808,7 @@ def q_fuse_gain_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
     fused = fuse(docs, tiles, model="gain", kernel_shape=(1, 1))
 
-    def explode_px(batches):
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                g = decode_tile(rr.gain, 8, 8)
-                cr = grid.cell_row(int(rr.cell_id))
-                cc = grid.cell_col(int(rr.cell_id))
-                ys, xs = np.nonzero(~np.isnan(g))
-                for y, x in zip(ys, xs):
-                    rows.append({
-                        "r": int(cr * 8 + y), "c": int(cc * 8 + x),
-                        # np.round on the float64 view of the float32 gain —
-                        # verified to agree with DuckDB ROUND on this range
-                        "gain": float(np.round(np.float64(g[y, x]), 4)),
-                    })
-            yield pd.DataFrame(rows, columns=["r", "c", "gain"])
-
-    return (fused.select("cell_id", "gain")
-            .mapInPandas(explode_px, schema="r int, c int, gain double")
-            .orderBy("r", "c"))
+    return _explode_px(fused, 8, {"gain": "gain"}, dp=4).orderBy("r", "c")
 
 
 ORACLE_FUSE_GAIN_K1 = """
@@ -821,11 +833,8 @@ def q_fuse_gain_offset_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     this fixture all values are dyadic rationals small enough that the
     engine's float32 integral images are exact (verified: float32 result
     == float64 OLS bit-for-bit), so both engines compute identical doubles."""
-    import numpy as np
-    import pandas as pd
-    from homonim_spark import datagen, grid
+    from homonim_spark import datagen
     from homonim_spark.operators.fuse import fuse
-    from homonim_spark.tiles import decode_tile
 
     spec = datagen.RasterFixtureSpec(pair_id="go5", cells=(2, 2), tile=8,
                                      factor=2, bands=1,
@@ -835,25 +844,7 @@ def q_fuse_gain_offset_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = fuse(docs, tiles, model="gain-offset", kernel_shape=(5, 5),
                  r2_inpaint_thresh=None)
 
-    def explode_px(batches):
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                g = decode_tile(rr.gain, 8, 8)
-                o = decode_tile(rr.offset, 8, 8)
-                cr = grid.cell_row(int(rr.cell_id))
-                cc = grid.cell_col(int(rr.cell_id))
-                ys, xs = np.nonzero(~np.isnan(g))
-                for y, x in zip(ys, xs):
-                    rows.append({
-                        "r": int(cr * 8 + y), "c": int(cc * 8 + x),
-                        "gain": float(np.round(np.float64(g[y, x]), 6)),
-                        "offset": float(np.round(np.float64(o[y, x]), 6)),
-                    })
-            yield pd.DataFrame(rows, columns=["r", "c", "gain", "offset"])
-
-    return (fused.select("cell_id", "gain", "offset")
-            .mapInPandas(explode_px, schema="r int, c int, gain double, offset double")
+    return (_explode_px(fused, 8, {"gain": "gain", "offset": "offset"}, dp=6)
             .orderBy("r", "c"))
 
 
@@ -894,36 +885,15 @@ def q_fuse_gain_blk_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded params are exactly (G, C) per chunk.  DuckDB genuinely recomputes
     the block norm with ``stddev_pop`` + ``quantile_cont(0.01)`` and the
     5×5 window sums in float64 — identical doubles, no tolerance needed."""
-    import numpy as np
-    import pandas as pd
-    from homonim_spark import datagen, grid
+    from homonim_spark import datagen
     from homonim_spark.operators.fuse import fuse
-    from homonim_spark.tiles import decode_tile
 
     docs_pdf, tiles_pdf = datagen.build_blknorm_tables()
     docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
     fused = fuse(docs, tiles, model="gain-blk-offset", kernel_shape=(5, 5),
                  chunk=1)
 
-    def explode_px(batches):
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                g = decode_tile(rr.gain, 16, 16)
-                o = decode_tile(rr.offset, 16, 16)
-                cr = grid.cell_row(int(rr.cell_id))
-                cc = grid.cell_col(int(rr.cell_id))
-                ys, xs = np.nonzero(~np.isnan(g))
-                for y, x in zip(ys, xs):
-                    rows.append({
-                        "r": int(cr * 16 + y), "c": int(cc * 16 + x),
-                        "gain": float(np.round(np.float64(g[y, x]), 6)),
-                        "offset": float(np.round(np.float64(o[y, x]), 6)),
-                    })
-            yield pd.DataFrame(rows, columns=["r", "c", "gain", "offset"])
-
-    return (fused.select("cell_id", "gain", "offset")
-            .mapInPandas(explode_px, schema="r int, c int, gain double, offset double")
+    return (_explode_px(fused, 16, {"gain": "gain", "offset": "offset"}, dp=6)
             .orderBy("r", "c"))
 
 
@@ -970,11 +940,8 @@ def q_overview_level1(spark: SparkSession, sf_dir: str) -> DataFrame:
     2×2 children, which DuckDB reproduces from generate_series.  Only
     fully-valid interior pixels are emitted (partial border blocks divide
     by 1-3 → non-dyadic float32 values; interior /4 is exact)."""
-    import numpy as np
-    import pandas as pd
-    from homonim_spark import datagen, grid
+    from homonim_spark import datagen
     from homonim_spark.operators.sink import build_overviews
-    from homonim_spark.tiles import decode_tile
 
     spec = datagen.RasterFixtureSpec(pair_id="ov1", cells=(2, 2), tile=8,
                                      factor=1, bands=1, nan_border_src=1)
@@ -983,25 +950,8 @@ def q_overview_level1(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels = build_overviews(ref.select("image_id", "band", "cell_id",
                                         "h", "w", "data"),
                              tile_px=8, max_levels=1, min_px=8)
-    lvl1 = levels[0]
-
-    def explode_px(batches):
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                a = decode_tile(rr.data, 8, 8)
-                pr0 = grid.cell_row(int(rr.cell_id)) * 8
-                pc0 = grid.cell_col(int(rr.cell_id)) * 8
-                for y in range(8):
-                    for x in range(8):
-                        if 1 <= pr0 + y <= 6 and 1 <= pc0 + x <= 6 \
-                                and not np.isnan(a[y, x]):
-                            rows.append({"r": pr0 + y, "c": pc0 + x,
-                                         "val": float(np.float64(a[y, x]))})
-            yield pd.DataFrame(rows, columns=["r", "c", "val"])
-
-    return (lvl1.select("cell_id", "data")
-            .mapInPandas(explode_px, schema="r int, c int, val double")
+    return (_explode_px(levels[0], 8, {"data": "val"})
+            .filter(F.col("r").between(1, 6) & F.col("c").between(1, 6))
             .orderBy("r", "c"))
 
 

@@ -118,6 +118,54 @@ def media_ref_str(pair_id: str, role: str, band: int, row: int, col: int) -> str
     return f"tile://{pair_id}/{role}/{band}/{row}/{col}"
 
 
+def _tile_rows(spec: RasterFixtureSpec, band: int, cr: int,
+               ref_img: np.ndarray, src_img: np.ndarray) -> List[dict]:
+    """Tile rows of one (band, cell-row) strip: ref then src per cell."""
+    trow0, tcol0 = spec.origin
+    size = grid.cell_size(FIXTURE_RES)
+    px_ref = size / spec.tile
+    rows = []
+    for cc in range(spec.cells[1]):
+        for role, img, t, px in (("ref", ref_img, spec.tile, px_ref),
+                                 ("src", src_img, spec.tile * spec.factor,
+                                  px_ref / spec.factor)):
+            rows.append({
+                "media_ref": media_ref_str(spec.pair_id, role, band, cr, cc),
+                "image_id": spec.pair_id, "role": role, "band": band,
+                "cell_id": grid.cell_id(FIXTURE_RES, trow0 + cr, tcol0 + cc),
+                "row": trow0 + cr, "col": tcol0 + cc, "h": t, "w": t,
+                "transform": [px, 0.0, (tcol0 + cc) * size, 0.0, px, (trow0 + cr) * size],
+                "data": encode_tile(img[cr * t : (cr + 1) * t, cc * t : (cc + 1) * t]),
+            })
+    return rows
+
+
+def _document(pair_id: str, band: int, cr: int, n_cols: int,
+              rng: np.random.Generator) -> dict:
+    """One interleaved document for a (band, cell-row) strip: text, then
+    each cell's ref and src media spans with a text span after a cell at
+    probability 1/2, then text."""
+    spans: List[dict] = []
+
+    def add(kind: str, text: str = "", media_ref: str = "") -> None:
+        spans.append({"kind": kind, "text": text, "media_ref": media_ref,
+                      "offset": len(spans)})
+
+    def add_text() -> None:
+        n = int(rng.integers(3, 9))
+        add("text", " ".join(_TEXT_WORDS[int(i)]
+                             for i in rng.integers(0, len(_TEXT_WORDS), n)))
+
+    add_text()
+    for cc in range(n_cols):
+        for role in ("ref", "src"):
+            add("media", media_ref=media_ref_str(pair_id, role, band, cr, cc))
+        if rng.random() < 0.5:
+            add_text()
+    add_text()
+    return {"doc_id": f"doc-{pair_id}-b{band}-r{cr:04d}", "spans": spans}
+
+
 def build_pair_tables(spec: RasterFixtureSpec, seed: int = 42) -> Tuple[pd.DataFrame, pd.DataFrame]:
     """(documents_pdf, tiles_pdf) for one image pair.
 
@@ -126,54 +174,13 @@ def build_pair_tables(spec: RasterFixtureSpec, seed: int = 42) -> Tuple[pd.DataF
     (band, cell-row) holding that row's src and ref tiles as media spans.
     """
     rng = np.random.default_rng([seed, zlib.crc32(spec.pair_id.encode())])
-    ch, cw = spec.cells
-    trow0, tcol0 = spec.origin
-    px_ref = grid.cell_size(FIXTURE_RES) / spec.tile
-    px_src = px_ref / spec.factor
-
     tile_rows: List[dict] = []
     doc_rows: List[dict] = []
-
-    per_band = {}
     for band in range(spec.bands):
-        per_band[band] = make_pair_arrays(spec, band)
-
-    for band in range(spec.bands):
-        ref_img, src_img = per_band[band]
-        for cr in range(ch):
-            spans: List[dict] = []
-            offset = 0
-
-            def add_text():
-                nonlocal offset
-                n = int(rng.integers(3, 9))
-                words = [_TEXT_WORDS[int(i)] for i in rng.integers(0, len(_TEXT_WORDS), n)]
-                spans.append({"kind": "text", "text": " ".join(words), "media_ref": "", "offset": offset})
-                offset += 1
-
-            add_text()
-            for cc in range(cw):
-                for role, img, t in (("ref", ref_img, spec.tile), ("src", src_img, spec.tile * spec.factor)):
-                    arr = img[cr * t : (cr + 1) * t, cc * t : (cc + 1) * t]
-                    mref = media_ref_str(spec.pair_id, role, band, cr, cc)
-                    cid = grid.cell_id(FIXTURE_RES, trow0 + cr, tcol0 + cc)
-                    px = px_ref if role == "ref" else px_src
-                    x0 = (tcol0 + cc) * grid.cell_size(FIXTURE_RES)
-                    y0 = (trow0 + cr) * grid.cell_size(FIXTURE_RES)
-                    tile_rows.append({
-                        "media_ref": mref, "image_id": spec.pair_id, "role": role,
-                        "band": band, "cell_id": cid, "row": trow0 + cr, "col": tcol0 + cc,
-                        "h": t, "w": t,
-                        "transform": [px, 0.0, x0, 0.0, px, y0],
-                        "data": encode_tile(arr),
-                    })
-                    spans.append({"kind": "media", "text": "", "media_ref": mref, "offset": offset})
-                    offset += 1
-                if rng.random() < 0.5:
-                    add_text()
-            add_text()
-            doc_rows.append({"doc_id": f"doc-{spec.pair_id}-b{band}-r{cr:04d}", "spans": spans})
-
+        ref_img, src_img = make_pair_arrays(spec, band)
+        for cr in range(spec.cells[0]):
+            tile_rows += _tile_rows(spec, band, cr, ref_img, src_img)
+            doc_rows.append(_document(spec.pair_id, band, cr, spec.cells[1], rng))
     return pd.DataFrame(doc_rows), pd.DataFrame(tile_rows)
 
 
@@ -233,87 +240,40 @@ def distributed_fixture(
     per (pair, band, cell-row) work unit, everything derived closed-form
     from the unit index (deterministic under any partitioning).
 
-    Pixel content matches the driver-side generator's gradients; document
-    text/interleaving uses a per-unit seeded RNG (so the distributed corpus
-    is deterministic but not byte-identical to ``build_pair_tables`` — use
-    that one for golden tests, this one for scale benchmarks).
+    Tiles and documents come from the same row builders as
+    ``build_pair_tables``; document text/interleaving uses a per-unit
+    seeded RNG (so the distributed corpus is deterministic but not
+    byte-identical to ``build_pair_tables`` — use that one for golden
+    tests, this one for scale benchmarks).
     """
     ch, cw = cells
     n_units = n_pairs * bands * ch
     parts = partitions or max(32, n_units // 8)
     units = spark.range(0, n_units, 1, parts)
-    px_ref = grid.cell_size(FIXTURE_RES) / tile
+
+    def unit(uid):
+        uid = int(uid)
+        return uid // (ch * bands), (uid // ch) % bands, uid % ch
 
     def gen_tiles(batches):
         for pdf in batches:
-            out = {f.name: [] for f in TILES_SCHEMA.fields}
-            for uid in pdf["id"]:
-                uid = int(uid)
-                cr = uid % ch
-                band = (uid // ch) % bands
-                pi = uid // (ch * bands)
+            rows = []
+            for pi, band, cr in map(unit, pdf["id"]):
                 spec = RasterFixtureSpec(
                     pair_id=f"pair{pi}", cells=cells, tile=tile, factor=factor,
                     bands=bands, true_gain=1.0 + 0.25 * (pi % 4),
                     true_offset=float(2 * (pi % 3)),
                     origin=(8 * (pi // 4096), 8 * (pi % 4096)),
                 )
-                trow0, tcol0 = spec.origin
-                # generate only this cell-row strip of the pair (closed form)
-                ref_img, src_img = make_pair_arrays(spec, band)
-                for cc in range(cw):
-                    for role, img, t in (("ref", ref_img, tile), ("src", src_img, tile * factor)):
-                        arr = img[cr * t : (cr + 1) * t, cc * t : (cc + 1) * t]
-                        px = px_ref if role == "ref" else px_ref / factor
-                        out["media_ref"].append(media_ref_str(spec.pair_id, role, band, cr, cc))
-                        out["image_id"].append(spec.pair_id)
-                        out["role"].append(role)
-                        out["band"].append(band)
-                        out["cell_id"].append(grid.cell_id(FIXTURE_RES, trow0 + cr, tcol0 + cc))
-                        out["row"].append(trow0 + cr)
-                        out["col"].append(tcol0 + cc)
-                        out["h"].append(t)
-                        out["w"].append(t)
-                        out["transform"].append([px, 0.0,
-                                                 (tcol0 + cc) * grid.cell_size(FIXTURE_RES),
-                                                 0.0, px,
-                                                 (trow0 + cr) * grid.cell_size(FIXTURE_RES)])
-                        out["data"].append(encode_tile(arr))
-            yield pd.DataFrame(out)
+                rows += _tile_rows(spec, band, cr, *make_pair_arrays(spec, band))
+            yield pd.DataFrame(rows, columns=TILES_SCHEMA.fieldNames())
 
     def gen_docs(batches):
         for pdf in batches:
-            rows = []
-            for uid in pdf["id"]:
-                uid = int(uid)
-                cr = uid % ch
-                band = (uid // ch) % bands
-                pi = uid // (ch * bands)
-                rng = np.random.default_rng([seed, pi, band, cr])
-                pair_id = f"pair{pi}"
-                spans = []
-                offset = 0
-
-                def add_text():
-                    nonlocal offset
-                    n = int(rng.integers(3, 9))
-                    words = [_TEXT_WORDS[int(i)] for i in rng.integers(0, len(_TEXT_WORDS), n)]
-                    spans.append({"kind": "text", "text": " ".join(words),
-                                  "media_ref": "", "offset": offset})
-                    offset += 1
-
-                add_text()
-                for cc in range(cw):
-                    for role in ("ref", "src"):
-                        spans.append({"kind": "media", "text": "",
-                                      "media_ref": media_ref_str(pair_id, role, band, cr, cc),
-                                      "offset": offset})
-                        offset += 1
-                    if rng.random() < 0.5:
-                        add_text()
-                add_text()
-                rows.append({"doc_id": f"doc-{pair_id}-b{band}-r{cr:04d}", "spans": spans})
-            yield pd.DataFrame(rows)
+            rows = [_document(f"pair{pi}", band, cr, cw,
+                              np.random.default_rng([seed, pi, band, cr]))
+                    for pi, band, cr in map(unit, pdf["id"])]
+            yield pd.DataFrame(rows, columns=DOCUMENTS_SCHEMA.fieldNames())
 
     tiles = units.mapInPandas(gen_tiles, schema=TILES_SCHEMA)
     docs = units.mapInPandas(gen_docs, schema=DOCUMENTS_SCHEMA)

@@ -48,10 +48,6 @@ class ImageContentError(HomonimSparkError):
     """
 
 
-class ImageFormatError(HomonimSparkError):
-    """Schema / format violations (reference ``errors.py``: ImageFormatError)."""
-
-
 class BandMatchError(HomonimSparkError):
     """Band auto-matching failures (reference ``matched_pair.py:286-301``)."""
 

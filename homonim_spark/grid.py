@@ -87,13 +87,6 @@ def k_ring(cid: int, k: int) -> List[int]:
     ]
 
 
-def ring_distance(cid_a: int, cid_b: int) -> int:
-    """Chebyshev grid distance between two same-resolution cells."""
-    return int(
-        max(abs(cell_row(cid_a) - cell_row(cid_b)), abs(cell_col(cid_a) - cell_col(cid_b)))
-    )
-
-
 def parent(cid: int, steps: int = 1) -> int:
     """Parent cell ``steps`` resolutions coarser (aperture-4: floor-div 2)."""
     res = cell_res(cid)

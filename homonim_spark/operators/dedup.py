@@ -32,17 +32,6 @@ from homonim_spark.operators.textops import fingerprint, normalize_text, tokens
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-duplicate groups by md5 of normalized text: one row per
-    duplicated fingerprint with the canonical (min) doc_id and group size."""
-    return (
-        documents.select(F.col("doc_id"), fingerprint(F.col(text_col)).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("canonical_doc_id"), F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def dedup_exact(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Keep one document per exact-duplicate group (min doc_id wins)."""
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
@@ -348,22 +337,6 @@ def duplicate_clusters(
         edges.unpersist()
     return labels.select(F.col("a").alias("doc_id"),
                          F.col("label").alias("cluster_id"))
-
-
-def collapse_duplicate_clusters(
-    documents: DataFrame, pairs: DataFrame,
-    id_col: str = "doc_id", id_a: str = "doc_a", id_b: str = "doc_b",
-) -> DataFrame:
-    """Keep one canonical document (min doc_id) per near-duplicate
-    cluster; documents in no pair pass through untouched.  The standard
-    corpus-dedup endgame: detection emits pairs, this emits the deduped
-    corpus."""
-    clusters = duplicate_clusters(pairs, id_a, id_b)
-    non_canonical = clusters.filter(F.col("doc_id") != F.col("cluster_id")) \
-                            .select(F.col("doc_id").alias(id_col))
-    # plain anti-join: the non-canonical set scales with the dup volume, so
-    # no broadcast hint — AQE picks broadcast when it IS small
-    return documents.join(non_canonical, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------

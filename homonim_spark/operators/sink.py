@@ -19,7 +19,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -254,17 +254,15 @@ def _coarsen_level(tiles: DataFrame, tile_px: int, value_col: str) -> DataFrame:
         coarsen, schema=_OVERVIEW_SCHEMA)
 
 
-def overview_level_count(shape: tuple, max_levels: int = 8,
-                         min_px: int = 256) -> int:
-    """The reference's overview stop rule (``fuse.py:151-165``): levels are
-    successive powers of 2, limited so the highest level keeps at least
-    ``min_px`` pixels along the shortest dimension and there are at most
-    ``max_levels`` levels."""
-    import numpy as np
-    if min(shape) < 1:
-        return 0
-    max_ovw = int(np.floor(np.log2(min(shape))))
-    return max(0, min(int(max_levels), max_ovw - int(np.log2(min_px))))
+def _overview_level_col(min_shape: Column, max_levels: int, min_px: int) -> Column:
+    """:func:`tiffio.overview_level_count` as a Column over the shortest
+    image side in pixels, in exact integer math: floor(log2(n)) ==
+    length(bin(n)) - 1 for n ≥ 1, so no float-log boundary drift."""
+    max_ovw = F.length(F.bin(min_shape)) - F.lit(1)
+    return F.when(
+        min_shape < 1, F.lit(0)
+    ).otherwise(F.greatest(F.lit(0), F.least(F.lit(int(max_levels)),
+                                             max_ovw - F.lit(int(np.log2(min_px))))))
 
 
 def build_overviews(
@@ -281,17 +279,9 @@ def build_overviews(
     row, col = grid.cell_row_col_expr(F.col("cell_id"))
     # Per-image level counts COMPUTED AS A COLUMN — no image list ever
     # reaches the driver (at 100 TB the former driver round-trip was
-    # O(n_images) rows pulled plus O(n_images) rebuilt per level).  The rule
-    # max(0, min(max_levels, floor(log2(min_shape)) - log2(min_px))) is
-    # evaluated in exact integer math: floor(log2(n)) == length(bin(n)) - 1
-    # for n ≥ 1, so no float-log boundary drift vs the numpy driver rule.
+    # O(n_images) rows pulled plus O(n_images) rebuilt per level).
     min_shape = F.least(F.col("ch"), F.col("cw")) * F.lit(tile_px)
-    max_ovw = F.length(F.bin(min_shape)) - F.lit(1)
-    log2_min_px = int(np.log2(min_px))
-    n_levels_col = F.when(
-        min_shape < 1, F.lit(0)
-    ).otherwise(F.greatest(F.lit(0), F.least(F.lit(int(max_levels)),
-                                             max_ovw - F.lit(log2_min_px))))
+    n_levels_col = _overview_level_col(min_shape, max_levels, min_px)
     lvl = (tiles.groupBy("image_id")
            .agg((F.max(row) - F.min(row) + 1).alias("ch"),
                 (F.max(col) - F.min(col) + 1).alias("cw"))

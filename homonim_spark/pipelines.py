@@ -79,14 +79,10 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, max_levels, min_px):
          "max_levels": max_levels, "min_px": min_px},
         sort_keys=True).encode()).hexdigest()[:16]
     cat = TableCatalog(spark, warehouse)
-    # snapshots() returns [] for a not-yet-created table on both backends;
-    # FileNotFoundError kept for older fallback warehouses
-    try:
-        done = {int(s["properties"]["level"]): s["snapshot_id"]
-                for s in cat.snapshots("overviews")
-                if s["properties"].get("fingerprint") == fp}
-    except FileNotFoundError:
-        done = {}
+    # snapshots() returns [] for a not-yet-created table on both backends
+    done = {int(s["properties"]["level"]): s["snapshot_id"]
+            for s in cat.snapshots("overviews")
+            if s["properties"].get("fingerprint") == fp}
     tile_px = int(corrected.agg({"h": "max"}).collect()[0][0])
     levels = build_overviews(
         corrected.select("image_id", "band", "cell_id", "h", "w", "data"),
@@ -100,17 +96,9 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, max_levels, min_px):
     lvl_filter = lambda i: (F.col("level") == i) & (F.col("fingerprint") == fp)
     for i, lvl in enumerate(levels):
         if i in done:  # resume across restarts: snapshot already committed
-            prior = cat.read("overviews", as_of=done[i])
-            if "fingerprint" not in prior.columns:
-                # snapshot committed by a pre-fingerprint-column version:
-                # the property matched (same config) but the rows can't be
-                # filtered by fingerprint — recompute the level instead of
-                # raising an unresolved-column AnalysisException
-                done.pop(i)
-            else:
-                out.append(prior.filter(lvl_filter(i))
-                           .drop("level", "fingerprint"))
-                continue
+            out.append(cat.read("overviews", as_of=done[i])
+                       .filter(lvl_filter(i)).drop("level", "fingerprint"))
+            continue
         snap = cat.write(
             lvl.withColumn("level", F.lit(i)).withColumn("fingerprint", F.lit(fp)),
             "overviews", properties={"level": i, "fingerprint": fp})

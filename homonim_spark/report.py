@@ -67,26 +67,3 @@ def merge_cli_config(args, argv: Sequence[str], config_path: str,
         if dest in given:
             continue  # command line wins
         setattr(args, dest, value)
-
-
-def combine_profiles(in_profile: Dict, config_profile: Dict) -> Dict:
-    """Nested out-profile merge (reference ``utils.py:273-310``): when the
-    configured driver differs, only generic keys survive from the input
-    profile; driver-specific nested dicts (``creation_options``) flatten
-    into the root."""
-    if str(in_profile.get("driver", "")).lower() != \
-            str(config_profile.get("driver", in_profile.get("driver", ""))).lower():
-        copy_keys = ["driver", "width", "height", "count", "dtype", "crs", "transform"]
-        out = {k: in_profile[k] for k in copy_keys if k in in_profile}
-    else:
-        out = dict(in_profile)
-
-    def nested_update(dst: Dict, other: Dict) -> Dict:
-        for k, v in other.items():
-            if isinstance(v, dict):
-                nested_update(dst, v)
-            else:
-                dst[k] = v
-        return dst
-
-    return nested_update(out, config_profile)

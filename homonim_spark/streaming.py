@@ -16,21 +16,9 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-from homonim_spark.datagen import DOCUMENTS_SCHEMA
-
-
-def read_document_stream(spark: SparkSession, path: str,
-                         max_files_per_trigger: int = 64) -> DataFrame:
-    """File-source stream of interleaved-span documents (parquet)."""
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
 
 
 def stop_after_data_batch(q: StreamingQuery) -> None:

@@ -786,6 +786,18 @@ def _ifd_segment(
     return out, next_ptr_pos
 
 
+def overview_level_count(shape: tuple, max_levels: int = 8,
+                         min_px: int = 256) -> int:
+    """The reference's overview stop rule (``fuse.py:151-165``): levels are
+    successive powers of 2, limited so the highest level keeps at least
+    ``min_px`` pixels along the shortest dimension and there are at most
+    ``max_levels`` levels."""
+    if min(shape) < 1:
+        return 0
+    max_ovw = int(np.floor(np.log2(min(shape))))
+    return max(0, min(int(max_levels), max_ovw - int(np.log2(min_px))))
+
+
 def build_overviews(
     data: np.ndarray,
     nodata: float | None = None,
@@ -794,26 +806,18 @@ def build_overviews(
 ) -> list[np.ndarray]:
     """Reduced-resolution pyramid for :func:`write_gtiff`'s ``overviews``.
 
-    The level rule is the reference's (``fuse.py:152-165``): successive
-    powers of 2, at most ``max_num_levels`` levels, stopping while the
-    shortest dimension still has ≥ ``min_level_pixels`` pixels; average
+    Level count from :func:`overview_level_count`; average
     resampling (rasterio ``Resampling.average``), nodata/NaN-aware — each
     output pixel is the mean of the VALID source pixels in its 2^m × 2^m
     footprint (computed from full resolution, so levels are exact block
     means, not compounded approximations), all-invalid footprints get
     nodata back.  Integer dtypes round half-to-even like the sink's dtype
     conversion."""
-    import math
-
     if data.ndim == 2:
         data = data[None]
     spp, h, w = data.shape
-    if min(h, w) < 1:
-        return []
-    max_ovw_levels = int(math.floor(math.log2(min(h, w))))
-    n_levels = min(max_num_levels,
-                   max_ovw_levels - int(math.log2(min_level_pixels)))
-    if n_levels <= 0:
+    n_levels = overview_level_count((h, w), max_num_levels, min_level_pixels)
+    if n_levels == 0:
         return []
     vals = data.astype(np.float64)
     if nodata is not None and not np.isnan(nodata):

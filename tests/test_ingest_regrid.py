@@ -278,6 +278,52 @@ def test_windowed_gtiff_ingestion_matches_whole_file(spark, tmp_path):
     assert mism == 0
 
 
+def test_binaryfile_ingestion_matches_driver_path_written_files(spark, tmp_path):
+    """``ingest_gtiff_files`` (binaryFile scan → executor decode → regrid)
+    is payload-identical to the driver path (``read_gtiff`` rows with
+    nodata set to NaN → ``regrid_tiles``) on four small uint16 GTiffs with
+    a nodata hole, off the canonical grid (the real-imagery version of this
+    check needs the reference's NGI files)."""
+    from pyspark.sql import functions as F
+
+    from homonim_spark.operators.ingest import ingest_gtiff_files
+    from homonim_spark.tiffio import read_gtiff, write_gtiff
+
+    rng = np.random.default_rng(5)
+    px = PX * 0.75
+    rows = []
+    for i in (1, 2, 3, 4):
+        img = rng.integers(1, 4000, (2, 40 + 4 * i, 56)).astype(np.uint16)
+        img[:, 10:20, 12 + i:30] = 0                      # nodata hole
+        tr = (px, 0.0, 3.5 * i * px, 0.0, px, 5.25 * px)  # non-aligned origin
+        path = str(tmp_path / f"img_{i}.tif")
+        write_gtiff(path, img, transform=tr, nodata=0.0, tile=(16, 16))
+        t = read_gtiff(path)
+        arr = t.data.astype(np.float32)
+        arr[t.data == 0] = np.nan
+        rows += [{"image_id": f"img_{i}", "role": "src", "band": b,
+                  "transform": list(t.transform), "h": arr.shape[1],
+                  "w": arr.shape[2], "data": encode_tile(arr[b])}
+                 for b in range(arr.shape[0])]
+    (tmp_path / "img_5.tif").write_bytes(b"")               # outside the glob
+
+    exec_side = ingest_gtiff_files(spark, str(tmp_path / "img_[1234].tif"),
+                                   role="src", res=RES, tile_px=TILE,
+                                   nodata=0.0).cache()
+    driver_side = regrid_tiles(spark.createDataFrame(pd.DataFrame(rows)),
+                               RES, TILE).cache()
+    n = exec_side.count()
+    assert n == driver_side.count() > 0
+    assert exec_side.select("image_id").distinct().count() == 4
+    key = ["image_id", "band", "cell_id"]
+    joined = exec_side.select(*key, F.md5("data").alias("h_a")).join(
+        driver_side.select(*key, F.md5("data").alias("h_b")), key, "full")
+    mism = joined.filter(
+        F.col("h_a").isNull() | F.col("h_b").isNull()
+        | (F.col("h_a") != F.col("h_b"))).count()
+    assert mism == 0
+
+
 def test_modis_sinusoidal_ref_fuses_like_utm_native(spark):
     """The reference tutorial's CRS pairing: a MODIS-sinusoidal reference
     raster ingests through the closed-form sinusoidal→UTM warp and fuses

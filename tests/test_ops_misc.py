@@ -45,14 +45,17 @@ def test_partition_lineage_counts(spark):
 
 
 def test_streaming_incremental_media_refs(spark, tmp_path):
-    from homonim_spark.streaming import incremental_media_refs, read_document_stream
+    from homonim_spark.streaming import incremental_media_refs
     docs_pdf, tiles_pdf = datagen.build_pair_tables(datagen.RasterFixtureSpec(cells=(2, 2)))
     in_dir = str(tmp_path / "in"); out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     docs, _ = datagen.to_spark(spark, docs_pdf, tiles_pdf)
     docs.write.parquet(in_dir)
 
-    stream = read_document_stream(spark, in_dir)
+    def read_docs():
+        return spark.readStream.schema(datagen.DOCUMENTS_SCHEMA).parquet(in_dir)
+
+    stream = read_docs()
     assert stream.isStreaming
     q = incremental_media_refs(stream, out_dir, ckpt)
     q.awaitTermination(120)
@@ -60,7 +63,7 @@ def test_streaming_incremental_media_refs(spark, tmp_path):
     want = sum(sum(1 for s in spans if s["kind"] == "media") for spans in docs_pdf["spans"])
     assert out.count() == want
     # restart with no new files: exactly-once — nothing reprocessed
-    q2 = incremental_media_refs(read_document_stream(spark, in_dir), out_dir, ckpt)
+    q2 = incremental_media_refs(read_docs(), out_dir, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == want
 
@@ -68,7 +71,7 @@ def test_streaming_incremental_media_refs(spark, tmp_path):
 def test_incremental_fuse_exactly_once(spark, tmp_path):
     """Streaming fuse: new document files are corrected exactly once;
     restart with no new input appends nothing."""
-    from homonim_spark.streaming import incremental_fuse, read_document_stream
+    from homonim_spark.streaming import incremental_fuse
     spec = datagen.RasterFixtureSpec(pair_id="inc", cells=(2, 2), tile=16, factor=2)
     docs_pdf, tiles_pdf = datagen.build_pair_tables(spec)
     docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
@@ -77,14 +80,17 @@ def test_incremental_fuse_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     docs.write.parquet(in_dir)
 
-    q = incremental_fuse(read_document_stream(spark, in_dir), tiles, out_dir, ckpt,
+    def read_docs():
+        return spark.readStream.schema(datagen.DOCUMENTS_SCHEMA).parquet(in_dir)
+
+    q = incremental_fuse(read_docs(), tiles, out_dir, ckpt,
                          model="gain", kernel_shape=(3, 3))
     q.awaitTermination(180)
     n1 = spark.read.parquet(out_dir).count()
     assert n1 == 4
 
     # restart: no new files → nothing reprocessed
-    q2 = incremental_fuse(read_document_stream(spark, in_dir), tiles, out_dir, ckpt,
+    q2 = incremental_fuse(read_docs(), tiles, out_dir, ckpt,
                           model="gain", kernel_shape=(3, 3))
     q2.awaitTermination(180)
     assert spark.read.parquet(out_dir).count() == n1
@@ -96,7 +102,7 @@ def test_incremental_fuse_exactly_once(spark, tmp_path):
     docs2, tiles2 = datagen.to_spark(spark, docs2_pdf, tiles2_pdf)
     all_tiles = tiles.unionByName(tiles2).cache()
     docs2.write.mode("append").parquet(in_dir)
-    q3 = incremental_fuse(read_document_stream(spark, in_dir), all_tiles, out_dir, ckpt,
+    q3 = incremental_fuse(read_docs(), all_tiles, out_dir, ckpt,
                           model="gain", kernel_shape=(3, 3))
     q3.awaitTermination(180)
     out = spark.read.parquet(out_dir).toPandas()

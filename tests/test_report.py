@@ -4,7 +4,7 @@ import argparse
 
 import pytest
 
-from homonim_spark.report import combine_profiles, format_table, merge_cli_config
+from homonim_spark.report import format_table, merge_cli_config
 
 
 def test_format_table_reference_style():
@@ -61,25 +61,3 @@ def test_merge_cli_config_dash_underscore_equivalence(tmp_path):
     args = _args()
     merge_cli_config(args, [], str(cfg), parser_dests=["proc_crs"])
     assert args.proc_crs == "src"
-
-
-def test_combine_profiles_same_driver_nested_flatten():
-    inp = {"driver": "GTiff", "width": 10, "dtype": "float32",
-           "blockxsize": 256}
-    conf = {"driver": "GTiff",
-            "creation_options": {"compress": "deflate", "blockxsize": 512}}
-    out = combine_profiles(inp, conf)
-    assert out["compress"] == "deflate"
-    assert out["blockxsize"] == 512      # nested value overrides root
-    assert out["width"] == 10            # untouched input keys survive
-
-
-def test_combine_profiles_driver_change_drops_specifics():
-    inp = {"driver": "GTiff", "width": 10, "height": 20, "count": 3,
-           "dtype": "float32", "crs": "epsg:3857", "transform": (1, 0, 0),
-           "blockxsize": 256}
-    conf = {"driver": "COG", "creation_options": {"compress": "lzw"}}
-    out = combine_profiles(inp, conf)
-    assert "blockxsize" not in out       # driver-specific key dropped
-    assert out["driver"] == "COG" and out["compress"] == "lzw"
-    assert out["width"] == 10 and out["crs"] == "epsg:3857"

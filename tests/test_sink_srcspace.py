@@ -139,7 +139,7 @@ def test_src_space_fuse(spark, factor):
 def test_overview_stop_rule_level_counts():
     """Reference _build_overviews semantics (fuse.py:151-165): levels =
     min(max_levels, floor(log2(min_shape)) - log2(min_px))."""
-    from homonim_spark.operators.sink import overview_level_count
+    from homonim_spark.tiffio import overview_level_count
     # 1024x2048 image, min_px 256: floor(log2(1024))=10, log2(256)=8 -> 2
     assert overview_level_count((1024, 2048)) == 2
     # huge image: capped at max_levels
@@ -241,14 +241,15 @@ def test_export_gtiff_with_internal_overviews(spark, fused, tmp_path):
 
 def test_overview_level_rule_column_matches_python(spark):
     """The collect-free build_overviews derives per-image level counts as a
-    Spark column (bit-length integer math); it must equal the Python
-    ``overview_level_count`` rule for every (ch, cw) shape in range —
-    including the log2 power-of-two boundaries where float log would
-    drift."""
+    Spark column (bit-length integer math); that column must equal the
+    Python ``tiffio.overview_level_count`` rule for every (ch, cw) shape in
+    range — including the log2 power-of-two boundaries where float log
+    would drift."""
     from pyspark.sql import functions as F
 
     from homonim_spark import grid
-    from homonim_spark.operators.sink import overview_level_count
+    from homonim_spark.operators.sink import _overview_level_col
+    from homonim_spark.tiffio import overview_level_count
 
     tile_px, max_levels, min_px = 8, 8, 256
     shapes = [(ch, cw) for ch in [1, 2, 3, 31, 32, 33, 63, 64, 65, 255, 256]
@@ -264,12 +265,10 @@ def test_overview_level_rule_column_matches_python(spark):
     row, col = grid.cell_row_col_expr(F.col("cell_id"))
     min_shape = F.least(
         F.max(row) - F.min(row) + 1, F.max(col) - F.min(col) + 1) * tile_px
-    max_ovw = F.length(F.bin(min_shape)) - F.lit(1)
-    n_col = F.when(min_shape < 1, F.lit(0)).otherwise(
-        F.greatest(F.lit(0), F.least(F.lit(max_levels),
-                                     max_ovw - F.lit(int(np.log2(min_px))))))
+    n_col = _overview_level_col(min_shape, max_levels, min_px)
     got = {r["image_id"]: r["n"]
            for r in df.groupBy("image_id").agg(n_col.alias("n")).collect()}
+    assert len(got) == len(shapes) == 66
     for i, (ch, cw) in enumerate(shapes):
         exp = overview_level_count((ch * tile_px, cw * tile_px),
                                    max_levels, min_px)

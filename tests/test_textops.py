@@ -35,10 +35,6 @@ def test_token_count_and_profile(spark, docs):
 
 
 def test_exact_dedup(spark, docs):
-    groups = dedup.exact_duplicates(docs).toPandas()
-    assert len(groups) == 1
-    assert groups.iloc[0]["n_docs"] == 3
-    assert groups.iloc[0]["canonical_doc_id"] == "d0"
     kept = dedup.dedup_exact(docs).toPandas()
     assert len(kept) == 4  # d0 survives, d1/d2 dropped
 
@@ -305,12 +301,10 @@ def test_train_ivf_centroids_no_global_sort(spark):
 def test_duplicate_clusters_transitive_and_collapse(spark):
     """Connected components over near-dup pairs: transitivity (a~b, b~c ⇒
     one cluster even without the a-c pair), a 12-hop chain (pointer
-    jumping must converge well under the iteration cap), and the corpus
-    collapse keeping exactly one canonical doc per cluster."""
+    jumping must converge well under the iteration cap)."""
     import pandas as pd
 
-    from homonim_spark.operators.dedup import (collapse_duplicate_clusters,
-                                               duplicate_clusters)
+    from homonim_spark.operators.dedup import duplicate_clusters
 
     chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)]  # c00..c12
     pairs = pd.DataFrame(chain + [("a", "b"), ("b", "z"), ("p", "q")],
@@ -321,15 +315,6 @@ def test_duplicate_clusters_transitive_and_collapse(spark):
     assert out["p"] == out["q"] == "p"
     for i in range(13):
         assert out[f"c{i:02d}"] == "c00"                # 12-hop chain
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["a", "b", "z", "p", "q", "c00", "c05", "solo"],
-                      "text": ["t"] * 8}))
-    kept = collapse_duplicate_clusters(docs, spark.createDataFrame(pairs)) \
-        .toPandas()
-    # canonical per cluster (a, c00, p) + the untouched singleton; c05 is
-    # non-canonical in the chain cluster and b/z/q are non-canonical
-    assert sorted(kept["doc_id"]) == ["a", "c00", "p", "solo"]
 
 
 def test_content_chunks_position_invariant_passage(spark):
