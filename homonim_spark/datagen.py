@@ -256,6 +256,9 @@ def distributed_fixture(
         return uid // (ch * bands), (uid // ch) % bands, uid % ch
 
     def gen_tiles(batches):
+        # consecutive unit ids are the cell rows of one (pair, band): build
+        # that pair's images once, not once per cell row
+        key = arrays = None
         for pdf in batches:
             rows = []
             for pi, band, cr in map(unit, pdf["id"]):
@@ -265,7 +268,9 @@ def distributed_fixture(
                     true_offset=float(2 * (pi % 3)),
                     origin=(8 * (pi // 4096), 8 * (pi % 4096)),
                 )
-                rows += _tile_rows(spec, band, cr, *make_pair_arrays(spec, band))
+                if key != (pi, band):
+                    key, arrays = (pi, band), make_pair_arrays(spec, band)
+                rows += _tile_rows(spec, band, cr, *arrays)
             yield pd.DataFrame(rows, columns=TILES_SCHEMA.fieldNames())
 
     def gen_docs(batches):

@@ -4,6 +4,24 @@ Tuned for Arrow-batched pandas UDF pipelines over binary tile payloads;
 designed for a multi-executor cluster (AQE on, skew-join on) and tested on
 ``local[N]``.  Local defaults are sized from the host: one core per CPU in
 the process's affinity set, a driver heap of min(16g, half of physical RAM).
+
+Two settings cut the fixed CPU every query pays; neither is an option.
+
+- ``spark.sql.codegen.cache.maxEntries`` is ``CODEGEN_CACHE_ENTRIES``.
+  Spark's default of 100 generated classes is smaller than one pass of the
+  perfbench operator suite (145 classes), so every warm pass evicted and
+  recompiled 88-104 of them at about 10 ms each.
+- For ``local[...]`` masters, the Python worker daemon is
+  ``homonim_spark.pydaemon``.  It stops every task from re-reading the
+  directory of ``pyspark.zip``, 0.2-0.3 CPU-s per task before Python 3.13.
+
+The daemon setting fails open: a UDF that runs without it must run with
+it.  The daemon process has to import this package, so it is set only when
+the package is a directory on disk (under ``--py-files`` the driver imports
+it from a zip, and nothing changes) and only on a local master (an
+executor host need not have that directory).  The package root is then
+added to ``spark.executorEnv.PYTHONPATH``, ahead of any value the caller
+passes in ``extra_conf``, so the daemon starts from any working directory.
 """
 
 from __future__ import annotations
@@ -15,6 +33,12 @@ from pyspark.sql import SparkSession
 from homonim_spark.enums import ConfigError
 
 _UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+#: About 2x the distinct generated classes that one ``tools/check_oracles.py``
+#: session compiles (858 for its 56 queries at sf0.01, counted with a cache
+#: of 2048); that tool warns when a run compiles more than this.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def _ram_bytes() -> int:
@@ -101,7 +125,14 @@ def get_spark(
         # the DuckDB oracles read the same parquet NTZ values as UTC
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.split("[")[0] == "local" and os.path.isdir(_PKG_DIR):
+        b = b.config("spark.python.daemon.module", "homonim_spark.pydaemon")
+        key = "spark.executorEnv.PYTHONPATH"
+        extra_conf[key] = os.pathsep.join(
+            p for p in (os.path.dirname(_PKG_DIR), extra_conf.get(key)) if p)
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -3,7 +3,8 @@
 Packages homonim_spark with tools/make_pyfiles.sh, then actually submits a
 job through ``spark-submit --py-files dist/homonim_spark.zip`` in a clean
 working directory (so the package can ONLY come from the zip) and checks
-the job's fuse output."""
+the job's fuse output, a ``get_spark`` session that keeps pyspark's own
+worker daemon, and a pandas UDF run through it."""
 
 import json
 import os
@@ -19,16 +20,25 @@ SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 JOB = """
 import json, sys
-from pyspark.sql import SparkSession
-spark = SparkSession.builder.getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
 from homonim_spark import datagen                     # from --py-files zip
 from homonim_spark.operators.fuse import fuse
+from homonim_spark.session import get_spark
+spark = get_spark(master="local[2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("ERROR")
+# the engine is a zip here, so the worker daemon stays pyspark's own
+daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", None)
+
+def double(batches):
+    import numpy as np
+    for pdf in batches:
+        yield pdf.assign(id=np.asarray(pdf["id"]) * 2)
+
+ids = sorted(r.id for r in spark.range(3).mapInPandas(double, "id long").collect())
 docs_pdf, tiles_pdf = datagen.build_pair_tables(
     datagen.RasterFixtureSpec(pair_id="sub", cells=(2, 2), tile=16, factor=2))
 docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
 out = fuse(docs, tiles, model="gain", kernel_shape=(3, 3))
-print("RESULT " + json.dumps({"n": out.count()}))
+print("RESULT " + json.dumps({"n": out.count(), "ids": ids, "daemon": daemon}))
 spark.stop()
 """
 
@@ -54,4 +64,4 @@ def test_spark_submit_pyfiles(tmp_path):
     assert r.returncode == 0, (r.stderr[-2500:], r.stdout[-500:])
     line = [l for l in r.stdout.splitlines() if l.startswith("RESULT ")]
     assert line, r.stdout[-1000:]
-    assert json.loads(line[0][7:]) == {"n": 4}
+    assert json.loads(line[0][7:]) == {"n": 4, "ids": [0, 2, 4], "daemon": None}

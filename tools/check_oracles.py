@@ -44,6 +44,9 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    compiles0 = compiles.getCount()
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
@@ -104,6 +107,14 @@ def main():
             failures.append((name, "value mismatch"))
 
     print("\n=== SUMMARY ===")
+    # with a large enough cache every distinct generated class compiles
+    # once, so the count is the figure session.CODEGEN_CACHE_ENTRIES rests on
+    n_compiles = compiles.getCount() - compiles0
+    cache = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    print(f"codegen: {n_compiles} Janino compiles, cache {cache} entries")
+    if n_compiles > cache:
+        print(f"WARNING: {n_compiles} compiles exceed the codegen cache of {cache}; "
+              "warm queries recompile evicted classes")
     if failures:
         for n, r in failures:
             print("FAIL", n, r)
