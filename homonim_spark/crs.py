@@ -134,24 +134,24 @@ def utm_to_lonlat(x, y, zone: int, south: bool = False):
     return np.degrees(lam + lam0), np.degrees(phi)
 
 
-def lonlat_to_sinusoidal(lon, lat, radius: float = _R_SINU):
+def lonlat_to_sinusoidal(lon, lat):
     """Spherical sinusoidal (MODIS grid): x = R·λ·cosφ, y = R·φ — the CRS
     of the reference tutorial's MODIS NBAR reference imagery (paired there
     with UTM aerial source via a WarpedVRT, ``utils.py:190-209``)."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     phi = np.radians(lat)
-    x = radius * np.radians(lon) * np.cos(phi)
-    y = radius * phi
+    x = _R_SINU * np.radians(lon) * np.cos(phi)
+    y = _R_SINU * phi
     return x, y
 
 
-def sinusoidal_to_lonlat(x, y, radius: float = _R_SINU):
+def sinusoidal_to_lonlat(x, y):
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    phi = y / radius
+    phi = y / _R_SINU
     with np.errstate(divide="ignore", invalid="ignore"):
-        lam = x / (radius * np.cos(phi))
+        lam = x / (_R_SINU * np.cos(phi))
     return np.degrees(lam), np.degrees(phi)
 
 

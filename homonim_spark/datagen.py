@@ -166,14 +166,14 @@ def _document(pair_id: str, band: int, cr: int, n_cols: int,
     return {"doc_id": f"doc-{pair_id}-b{band}-r{cr:04d}", "spans": spans}
 
 
-def build_pair_tables(spec: RasterFixtureSpec, seed: int = 42) -> Tuple[pd.DataFrame, pd.DataFrame]:
+def build_pair_tables(spec: RasterFixtureSpec) -> Tuple[pd.DataFrame, pd.DataFrame]:
     """(documents_pdf, tiles_pdf) for one image pair.
 
     Documents interleave text and media spans (pattern text, media, media,
     text, … from a seeded RNG — FIXTURES.md §1); one document per
     (band, cell-row) holding that row's src and ref tiles as media spans.
     """
-    rng = np.random.default_rng([seed, zlib.crc32(spec.pair_id.encode())])
+    rng = np.random.default_rng([42, zlib.crc32(spec.pair_id.encode())])
     tile_rows: List[dict] = []
     doc_rows: List[dict] = []
     for band in range(spec.bands):
@@ -185,11 +185,11 @@ def build_pair_tables(spec: RasterFixtureSpec, seed: int = 42) -> Tuple[pd.DataF
 
 
 def build_fixture_tables(
-    specs: List[RasterFixtureSpec], seed: int = 42
+    specs: List[RasterFixtureSpec],
 ) -> Tuple[pd.DataFrame, pd.DataFrame]:
     docs, tiles = [], []
     for spec in specs:
-        d, t = build_pair_tables(spec, seed=seed)
+        d, t = build_pair_tables(spec)
         docs.append(d)
         tiles.append(t)
     return pd.concat(docs, ignore_index=True), pd.concat(tiles, ignore_index=True)
@@ -197,14 +197,9 @@ def build_fixture_tables(
 
 def to_spark(
     spark: SparkSession, docs_pdf: pd.DataFrame, tiles_pdf: pd.DataFrame,
-    partitions: Optional[int] = None,
 ) -> Tuple[DataFrame, DataFrame]:
-    docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
-    tiles = spark.createDataFrame(tiles_pdf, schema=TILES_SCHEMA)
-    if partitions:
-        docs = docs.repartition(partitions, "doc_id")
-        tiles = tiles.repartition(partitions, "cell_id")
-    return docs, tiles
+    return (spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA),
+            spark.createDataFrame(tiles_pdf, schema=TILES_SCHEMA))
 
 
 def default_specs(scale: int = 1, bands: int = 1, tile: int = 16) -> List[RasterFixtureSpec]:
@@ -229,16 +224,13 @@ def default_specs(scale: int = 1, bands: int = 1, tile: int = 16) -> List[Raster
 def distributed_fixture(
     spark: SparkSession,
     n_pairs: int,
-    cells: Tuple[int, int] = (4, 4),
     tile: int = 16,
-    factor: int = 2,
-    bands: int = 1,
-    seed: int = 42,
     partitions: Optional[int] = None,
 ) -> Tuple[DataFrame, DataFrame]:
     """Generate the documents + tiles tables **in executors** — one task
-    per (pair, band, cell-row) work unit, everything derived closed-form
-    from the unit index (deterministic under any partitioning).
+    per (pair, cell-row) work unit of a 4×4-cell, one-band, factor-2 pair,
+    everything derived closed-form from the unit index (deterministic under
+    any partitioning).
 
     Tiles and documents come from the same row builders as
     ``build_pair_tables``; document text/interleaving uses a per-unit
@@ -246,38 +238,36 @@ def distributed_fixture(
     byte-identical to ``build_pair_tables`` — use that one for golden
     tests, this one for scale benchmarks).
     """
-    ch, cw = cells
-    n_units = n_pairs * bands * ch
+    n_units = n_pairs * 4
     parts = partitions or max(32, n_units // 8)
     units = spark.range(0, n_units, 1, parts)
 
     def unit(uid):
-        uid = int(uid)
-        return uid // (ch * bands), (uid // ch) % bands, uid % ch
+        return divmod(int(uid), 4)
 
     def gen_tiles(batches):
-        # consecutive unit ids are the cell rows of one (pair, band): build
-        # that pair's images once, not once per cell row
+        # consecutive unit ids are the cell rows of one pair: build that
+        # pair's images once, not once per cell row
         key = arrays = None
         for pdf in batches:
             rows = []
-            for pi, band, cr in map(unit, pdf["id"]):
+            for pi, cr in map(unit, pdf["id"]):
                 spec = RasterFixtureSpec(
-                    pair_id=f"pair{pi}", cells=cells, tile=tile, factor=factor,
-                    bands=bands, true_gain=1.0 + 0.25 * (pi % 4),
+                    pair_id=f"pair{pi}", tile=tile,
+                    true_gain=1.0 + 0.25 * (pi % 4),
                     true_offset=float(2 * (pi % 3)),
                     origin=(8 * (pi // 4096), 8 * (pi % 4096)),
                 )
-                if key != (pi, band):
-                    key, arrays = (pi, band), make_pair_arrays(spec, band)
-                rows += _tile_rows(spec, band, cr, *arrays)
+                if key != pi:
+                    key, arrays = pi, make_pair_arrays(spec, 0)
+                rows += _tile_rows(spec, 0, cr, *arrays)
             yield pd.DataFrame(rows, columns=TILES_SCHEMA.fieldNames())
 
     def gen_docs(batches):
         for pdf in batches:
-            rows = [_document(f"pair{pi}", band, cr, cw,
-                              np.random.default_rng([seed, pi, band, cr]))
-                    for pi, band, cr in map(unit, pdf["id"])]
+            rows = [_document(f"pair{pi}", 0, cr, 4,
+                              np.random.default_rng([42, pi, 0, cr]))
+                    for pi, cr in map(unit, pdf["id"])]
             yield pd.DataFrame(rows, columns=DOCUMENTS_SCHEMA.fieldNames())
 
     tiles = units.mapInPandas(gen_tiles, schema=TILES_SCHEMA)
@@ -295,9 +285,7 @@ BLKNORM_CELL_PARAMS = ((4.0, 2.0, 3.0), (6.0, 0.5, -1.0),
                        (8.0, 1.5, 0.5), (10.0, 2.5, 2.0))
 
 
-def build_blknorm_tables(
-    pair_id: str = "blk", tile: int = 16, border: int = 3,
-) -> Tuple[pd.DataFrame, pd.DataFrame]:
+def build_blknorm_tables() -> Tuple[pd.DataFrame, pd.DataFrame]:
     """2×2-cell src/ref pair designed so the gain-blk-offset fit
     (``kernel/models.py:fit_gain_blk_offset``, reference
     ``/root/reference/homonim/kernel_model.py:216-229,276-303``) is EXACT in
@@ -313,14 +301,12 @@ def build_blknorm_tables(
     - ``ref = G·src + C`` pointwise with small dyadic ``G``/``C``, so the
       normalised source equals the reference bit-for-bit and the sliding
       gain fit is exactly 1.0 → folded params are exactly ``(G, C)``.
-    - Each tile carries a ``border``-px NaN ring ≥ the 5×5 kernel halo
+    - Each 16×16 tile carries a 3-px NaN ring ≥ the 5×5 kernel halo
       (ceil(5/2)=3), so with ``chunk=1`` every chunk's valid data is its own
       cell's pattern only — per-chunk block-norm scoping is pinned (mixing
       chunks would change the std ratio).
     """
-    cells = 2
-    interior = tile - 2 * border
-    assert interior % 2 == 0, "interior must be even for exact 50/50 counts"
+    pair_id, cells, tile, border = "blk", 2, 16, 3
     tile_rows: List[dict] = []
     doc_rows: List[dict] = []
     px_sz = grid.cell_size(FIXTURE_RES) / tile
@@ -357,11 +343,11 @@ def build_blknorm_tables(
 
 # --- spatial fixtures (FIXTURES.md §3) -------------------------------------
 
-def build_footprints(n: int = 8, res: int = FIXTURE_RES, seed: int = 42) -> pd.DataFrame:
+def build_footprints(n: int = 8) -> pd.DataFrame:
     """Deterministic irregular flight-footprint polygons: seeded vertex
-    jitter around rectangles in cell-grid coordinates."""
-    rng = np.random.default_rng(seed)
-    s = grid.cell_size(res)
+    jitter around rectangles in ``FIXTURE_RES`` cell-grid coordinates."""
+    rng = np.random.default_rng(42)
+    s = grid.cell_size(FIXTURE_RES)
     rows = []
     for i in range(n):
         # ranges chosen to overlap the default_specs fixture cells

@@ -87,15 +87,13 @@ def k_ring(cid: int, k: int) -> List[int]:
     ]
 
 
-def parent(cid: int, steps: int = 1) -> int:
-    """Parent cell ``steps`` resolutions coarser (aperture-4: floor-div 2)."""
+def parent(cid: int) -> int:
+    """Parent cell one resolution coarser (aperture-4: floor-div 2)."""
     res = cell_res(cid)
-    if res - steps < 0:
+    if res == 0:
         raise ValueError("parent below resolution 0")
     # floor-division must round toward -inf for negative indices
-    r = cell_row(cid) >> steps
-    c = cell_col(cid) >> steps
-    return cell_id(res - steps, r, c)
+    return cell_id(res - 1, cell_row(cid) >> 1, cell_col(cid) >> 1)
 
 
 def children(cid: int) -> List[int]:
@@ -187,10 +185,10 @@ def k_ring_expr(cid: Column, k: int) -> Column:
     return F.array(*[neighbor_expr(cid, F.lit(dr), F.lit(dc)) for dr, dc in deltas])
 
 
-def parent_expr(cid: Column, steps: int = 1) -> Column:
+def parent_expr(cid: Column) -> Column:
     row, col = cell_row_col_expr(cid)
     return cell_id_col(
-        cell_res_expr(cid) - F.lit(steps),
-        F.shiftright(row, steps),
-        F.shiftright(col, steps),
+        cell_res_expr(cid) - F.lit(1),
+        F.shiftright(row, 1),
+        F.shiftright(col, 1),
     )

@@ -560,13 +560,11 @@ def encode_jpeg(
     return bytes(out)
 
 
-def jpeg_tables_stream(quality: int = 90, chroma: bool = False,
-                       restart_interval: int = 0) -> bytes:
+def jpeg_tables_stream(quality: int = 90, chroma: bool = False) -> bytes:
     """Abbreviated tables-only stream for the TIFF JPEGTables tag (347):
-    SOI + DQT(+DRI) + DHT + EOI, matching :func:`encode_jpeg` with
-    ``omit_tables=True`` at the same settings."""
+    SOI + DQT + DHT + EOI, matching :func:`encode_jpeg` with
+    ``omit_tables=True`` and no restart interval at the same settings."""
     quants = [(0, scaled_quant(QUANT_LUMA, quality))]
     if chroma:
         quants.append((1, scaled_quant(QUANT_CHROMA, quality)))
-    return b"\xff\xd8" + _tables_segments(quants, restart_interval) \
-        + b"\xff\xd9"
+    return b"\xff\xd8" + _tables_segments(quants, 0) + b"\xff\xd9"

@@ -90,7 +90,6 @@ def _r2_array(
     mask_sum: Optional[NDArray] = None,
     ref_sum: Optional[NDArray] = None,
     src_sum: Optional[NDArray] = None,
-    ref2_sum: Optional[NDArray] = None,
     src2_sum: Optional[NDArray] = None,
     src_ref_sum: Optional[NDArray] = None,
 ) -> NDArray:
@@ -106,8 +105,7 @@ def _r2_array(
         mask_sum = ops.box_sum(mask.astype(np.float32), kernel_shape)
     if ref_sum is None:
         ref_sum = ops.box_sum(ref_array, kernel_shape)
-    if ref2_sum is None:
-        ref2_sum = ops.sqr_box_sum(ref_array, kernel_shape)
+    ref2_sum = ops.sqr_box_sum(ref_array, kernel_shape)
     if src2_sum is None:
         src2_sum = ops.sqr_box_sum(src_array, kernel_shape)
     if src_ref_sum is None:

@@ -236,13 +236,13 @@ def _catmull_rom_weights(t: float):
             np.float32(0.5 * t3 - 0.5 * t2))
 
 
-def _lanczos_weights(t: float, a: int = 3):
-    """2a-tap Lanczos weights at fraction ``t``: w(d) = sinc(d)·sinc(d/a)
-    for taps at distances d = t + (a−1) − m, m = 0..2a−1, normalized to
-    sum 1 (the standard partition-of-unity correction for the windowed
-    sinc).  a = 3 matches GDAL's ``Resampling.lanczos``."""
-    d = float(t) + np.arange(a - 1, -a - 1, -1, dtype=np.float64)
-    w = np.sinc(d) * np.sinc(d / a)
+def _lanczos_weights(t: float):
+    """6-tap Lanczos-3 weights at fraction ``t``: w(d) = sinc(d)·sinc(d/3)
+    for taps at distances d = t + 2 − m, m = 0..5, normalized to sum 1
+    (the standard partition-of-unity correction for the windowed sinc).
+    Lanczos-3 matches GDAL's ``Resampling.lanczos``."""
+    d = float(t) + np.arange(2, -4, -1, dtype=np.float64)
+    w = np.sinc(d) * np.sinc(d / 3)
     w /= w.sum()
     return w.astype(np.float32)
 

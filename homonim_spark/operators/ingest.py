@@ -64,12 +64,12 @@ def bilinear_sample(arr: np.ndarray, ys: np.ndarray, xs: np.ndarray) -> np.ndarr
     return out
 
 
-def _lanczos_w(t: np.ndarray, a: int = 3) -> np.ndarray:
-    """Lanczos-a weights sinc(t)·sinc(t/a) on |t| < a (0 outside)."""
+def _lanczos_w(t: np.ndarray) -> np.ndarray:
+    """Lanczos-3 weights sinc(t)·sinc(t/3) on |t| < 3 (0 outside)."""
     out = np.zeros_like(t, dtype=np.float64)
-    m = np.abs(t) < a
+    m = np.abs(t) < 3
     tm = t[m]
-    out[m] = np.sinc(tm) * np.sinc(tm / a)
+    out[m] = np.sinc(tm) * np.sinc(tm / 3)
     return out
 
 
@@ -398,7 +398,6 @@ def gtiff_band_rows(binary_files: DataFrame, role: str,
 
 
 def gtiff_window_rows(spark, paths: list, role: str,
-                      nodata: float | None = None,
                       window_rows: int = 512) -> DataFrame:
     """Windowed executor-side GTiff decode (S1 at scale, round-3 verdict
     #4): executors parse each file's IFD (a few KB of seeks — range GETs
@@ -412,6 +411,12 @@ def gtiff_window_rows(spark, paths: list, role: str,
     the whole-file path: every canonical pixel's interpolation neighbors
     exist in at least one window, and halo-overlap fragments carry
     identical values, so the mosaic average reproduces them exactly.
+    The halo is exact for bilinear only.  A cubic (4×4) or Lanczos-3 (6×6)
+    kernel whose sample point lies in a window but whose taps reach past it
+    renormalizes over the taps the window holds, and the mosaic averages
+    that value with the neighbouring window's; ``regrid_tiles`` must
+    therefore resample these rows bilinearly.  Nodata comes from each
+    file's own tag.
     """
     from homonim_spark.tiffio import read_gtiff_meta
 
@@ -444,7 +449,7 @@ def gtiff_window_rows(spark, paths: list, role: str,
                 if meta is None:
                     meta = metas[r.path] = read_gtiff_meta(r.path)
                 _emit_band_rows(out, r.path, r.path, meta, int(r.y0),
-                                int(r.y1), role, nodata)
+                                int(r.y1), role, None)
             yield pd.DataFrame(out)
 
     return units.mapInPandas(decode, schema=_BAND_ROW_SCHEMA)
@@ -452,14 +457,15 @@ def gtiff_window_rows(spark, paths: list, role: str,
 
 def ingest_gtiff_files_windowed(
     spark, path: str, role: str, res: int, tile_px: int,
-    nodata: float | None = None, grid_crs: str | None = None,
-    window_rows: int = 512, resampling: str = "bilinear",
+    grid_crs: str | None = None, window_rows: int = 512,
 ) -> DataFrame:
     """End-to-end windowed real-file ingestion: glob → IFD-planned window
-    units → per-window executor decode → canonical-grid regrid.  The
-    large-single-file counterpart of :func:`ingest_gtiff_files` (which is
-    one task per FILE and materializes whole files — fine for many small
-    files, a memory spike and parallelism floor for multi-GB mosaics)."""
+    units → per-window executor decode → canonical-grid bilinear regrid.
+    The large-single-file counterpart of :func:`ingest_gtiff_files` (which
+    is one task per FILE and materializes whole files — fine for many small
+    files, a memory spike and parallelism floor for multi-GB mosaics).
+    Bilinear is the only resampling whose result does not depend on the
+    window split (see :func:`gtiff_window_rows`)."""
     import glob as _glob
     if path.startswith(("http://", "https://")):
         # remote object-store / https source: no filesystem glob — the
@@ -470,16 +476,13 @@ def ingest_gtiff_files_windowed(
         paths = sorted(_glob.glob(path))
         if not paths:
             raise FileNotFoundError(f"no files match {path!r}")
-    return regrid_tiles(gtiff_window_rows(spark, paths, role, nodata,
-                                          window_rows),
-                        res, tile_px, grid_crs=grid_crs,
-                        resampling=resampling)
+    return regrid_tiles(gtiff_window_rows(spark, paths, role, window_rows),
+                        res, tile_px, grid_crs=grid_crs)
 
 
 def ingest_gtiff_files(spark, path: str, role: str, res: int, tile_px: int,
                        nodata: float | None = None,
-                       grid_crs: str | None = None,
-                       resampling: str = "bilinear") -> DataFrame:
+                       grid_crs: str | None = None) -> DataFrame:
     """Scan a directory/glob of GTiffs with ``binaryFile``, decode per-band
     in executors, and regrid onto the canonical cell grid — the end-to-end
     real-file ingestion used in place of driver-side ``read_gtiff(path)``.
@@ -489,7 +492,7 @@ def ingest_gtiff_files(spark, path: str, role: str, res: int, tile_px: int,
     different CRS are warped through ``homonim_spark.crs`` during the regrid
     (the reference's ``WarpedVRT`` path, ``utils.py:190-209``).  ``None``
     keeps the legacy behaviour: every file is assumed to already be in the
-    grid CRS."""
+    grid CRS.  Resampling is bilinear."""
     bf = spark.read.format("binaryFile").load(path)
     return regrid_tiles(gtiff_band_rows(bf, role, nodata), res, tile_px,
-                        grid_crs=grid_crs, resampling=resampling)
+                        grid_crs=grid_crs)

@@ -115,9 +115,9 @@ def media_features(
     )
 
 
-def resize_media(media: DataFrame, out_h: int, out_w: int, codec: str = "raw-f32") -> DataFrame:
-    """Resize payloads to (out_h, out_w) — real for raw-f32 (block mean /
-    nearest), stubbed for compressed codecs."""
+def resize_media(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
+    """Resize raw-f32 payloads to (out_h, out_w): block mean when shrinking,
+    nearest when growing."""
     from homonim_spark.kernel import ops
 
     schema = T.StructType([
@@ -139,19 +139,9 @@ def resize_media(media: DataFrame, out_h: int, out_w: int, codec: str = "raw-f32
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                arr = decode_media(r.data, codec, r.h, r.w)
-                if arr.ndim == 3:  # per-channel resample (png RGB/RGBA)
-                    out = np.stack([resize_plane(arr[:, :, c].astype(np.float32))
-                                    for c in range(arr.shape[2])], axis=-1)
-                else:
-                    out = resize_plane(arr)
-                if codec == "png":
-                    from homonim_spark.pngio import write_png
-                    buf = write_png(np.clip(np.round(out), 0, 255).astype(np.uint8))
-                else:
-                    buf = encode_tile(out)
+                out = resize_plane(decode_tile(r.data, r.h, r.w))
                 rows.append({"media_ref": r.media_ref, "h": out.shape[0],
-                             "w": out.shape[1], "data": buf})
+                             "w": out.shape[1], "data": encode_tile(out)})
             yield pd.DataFrame(rows, columns=["media_ref", "h", "w", "data"])
 
     return media.select("media_ref", "h", "w", "data").mapInPandas(resize, schema=schema)

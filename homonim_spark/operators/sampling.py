@@ -7,7 +7,7 @@ that has md5), and (c) computed without a shuffle.  `rand(seed)` fails
 (a) across repartitions and (b) entirely; Spark's xxhash64 fails (b).
 
 The assignment here hashes a stable key column with md5 and buckets the
-first 8 hex chars (32 bits) into [0, granularity): row → split i iff
+first 8 hex chars (32 bits) into [0, 1000): row → split i iff
 bucket < cumulative boundary i.  Pure projection — no shuffle, no state,
 same answer at any parallelism, and one line of SQL in any other engine.
 """
@@ -19,13 +19,12 @@ from pyspark.sql import functions as F
 __all__ = ["hash_bucket", "hash_split"]
 
 
-def hash_bucket(key: Column, salt: str = "", granularity: int = 1000) -> Column:
-    """Uniform bucket in [0, granularity) from md5(key ∥ salt) — the
-    first 8 hex chars as a 32-bit int, mod granularity.  Changing
-    ``salt`` yields an independent assignment (fresh holdout)."""
+def hash_bucket(key: Column, salt: str = "") -> Column:
+    """Uniform bucket in [0, 1000) from md5(key ∥ salt) — the first 8 hex
+    chars as a 32-bit int, mod 1000.  Changing ``salt`` yields an
+    independent assignment (fresh holdout)."""
     h = F.md5(F.concat(key.cast("string"), F.lit(salt)))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % int(granularity))
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 1000
 
 
 def hash_split(
@@ -33,27 +32,25 @@ def hash_split(
     key_col: str,
     fractions: dict[str, float],
     salt: str = "",
-    granularity: int = 1000,
-    out_col: str = "split",
 ) -> DataFrame:
-    """Append a split label ('train'/'val'/… in ``fractions`` order) by
+    """Append a ``split`` label ('train'/'val'/… in ``fractions`` order) by
     deterministic hash bucketing on ``key_col``.  Fractions must sum to
     ≤ 1; any remainder is labelled NULL (excluded rows).  Boundaries are
-    ``round(cum_frac * granularity)`` — exact integers, so membership is
+    ``round(cum_frac * 1000)`` — exact integers, so membership is
     bit-stable and re-derivable in any engine with md5.
     """
     total = sum(fractions.values())
     if total > 1.0 + 1e-9:
         raise ValueError(f"fractions sum to {total} > 1")
-    bucket = hash_bucket(F.col(key_col), salt, granularity)
+    bucket = hash_bucket(F.col(key_col), salt)
     expr = F.lit(None).cast("string")
     bounds: list[tuple[str, int]] = []
     cum = 0.0
     for name, frac in fractions.items():
         cum += frac
-        bounds.append((name, round(cum * granularity)))
+        bounds.append((name, round(cum * 1000)))
     for name, hi in reversed(bounds):
         expr = F.when(bucket < hi, F.lit(name)).otherwise(expr)
     # reversed + otherwise-chaining makes the FIRST band win at each
     # boundary: bucket < hi_train → train even though also < hi_val
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)

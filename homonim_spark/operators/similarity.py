@@ -50,8 +50,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k: broadcast the (small) query set against the corpus.
 
@@ -59,10 +57,10 @@ def cosine_topk(
     rank ties broken by neighbor_id.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -79,8 +77,6 @@ def cosine_topk_np(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_dp: int = 6,
 ) -> DataFrame:
     """Exact top-k, BLAS scale path. Same output contract as ``cosine_topk``.
@@ -98,7 +94,7 @@ def cosine_topk_np(
     rounds only the displayed value: two neighbors colliding at ``round_dp``
     may swap relative rank between the two paths.
     """
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = queries.select("vec_id", "embedding").collect()
     if not q_rows:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int")
@@ -120,8 +116,8 @@ def cosine_topk_np(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            C = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            C = np.asarray(list(pdf["embedding"]), dtype=np.float64)
             c_norm = np.linalg.norm(C, axis=1, keepdims=True)
             # zero-norm corpus rows: cosine undefined → score 0, never NaN
             Cn = C / np.where(c_norm == 0.0, 1.0, c_norm)
@@ -148,7 +144,7 @@ def cosine_topk_np(
     # round-robin exchange costs more than the single-task GEMM it
     # parallelizes (A/B at sf1.0: 0.48 s vs 0.64 s); large corpora arrive
     # multi-partition from the scan itself
-    scored = corpus.select(id_col, vec_col).mapInPandas(
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
         part, schema="query_id long, neighbor_id long, cosine double"
     )
     return _top_k(scored, k)
@@ -216,9 +212,6 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: SRP bucket join + exact rerank within candidates.
 
@@ -227,14 +220,14 @@ def lsh_topk(
     At 100 TB the bucket join replaces the O(n·q) crossJoin with
     O(n·q·(n_planes + 1) / 2^n_planes) candidate volume.
     """
-    planes = make_planes(dim, n_planes, seed)
+    planes = make_planes(dim, n_planes)
     c = srp_buckets(
-        rebalance(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("c_vec"))),
+        rebalance(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                F.col("embedding").alias("c_vec"))),
         "c_vec", planes, "bucket")
     q = srp_buckets(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec")),
         "q_vec", planes, "q_bucket")
     q = q.withColumn("bucket", F.explode(_hamming1(F.col("q_bucket"), n_planes)))
     return _rerank(c, q, "bucket", k)
@@ -244,9 +237,7 @@ def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     iters: int = 5,
-    vec_col: str = "embedding",
     sample: int = 4096,
-    seed: int = 42,
 ) -> np.ndarray:
     """IVF coarse quantizer: k-means on a deterministic sample.
 
@@ -261,21 +252,21 @@ def train_ivf_centroids(
     reproducible sample independent of partitioning. At 100 TB this is one
     filtered scan; no corpus-wide shuffle or per-partition giant heaps.
     """
-    h = F.crc32(F.col(vec_col).cast("string"))
+    h = F.crc32(F.col("embedding").cast("string"))
     n = corpus.count()
     keep_mod = max(1, n // (sample * 4))
-    pdf = (corpus.select(vec_col, h.alias("_h"))
-           .filter(F.pmod(F.xxhash64(F.col(vec_col).cast("string")),
+    pdf = (corpus.select("embedding", h.alias("_h"))
+           .filter(F.pmod(F.xxhash64(F.col("embedding").cast("string")),
                           F.lit(keep_mod)) == 0)
            .orderBy("_h").limit(sample).drop("_h").toPandas())
     if len(pdf) < min(sample, n):
         # duplicate-heavy / tiny corpora can underfill the hash filter —
         # fall back to the direct top-k pull (small by construction here)
-        pdf = (corpus.select(vec_col, h.alias("_h"))
+        pdf = (corpus.select("embedding", h.alias("_h"))
                .orderBy("_h").limit(sample).drop("_h").toPandas())
-    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iters):
         sims = X @ C.T
@@ -302,8 +293,6 @@ def ivf_topk(
     centroids: np.ndarray,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are bucketed by nearest centroid
     (inverted file); each query probes its ``nprobe`` nearest lists and
@@ -320,11 +309,11 @@ def ivf_topk(
 
     C = normalize_centroids(centroids)
 
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
+    vec_t = corpus.schema["embedding"].dataType.simpleString()
 
     def _normed(pdf):
-        X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        X = np.asarray(list(pdf["embedding"]), dtype=np.float64)
         n = np.linalg.norm(X, axis=1, keepdims=True)
         return X / np.where(n == 0.0, 1.0, n)
 
@@ -334,8 +323,8 @@ def ivf_topk(
                 continue
             lid = np.argmax(_normed(pdf) @ C.T, axis=1)  # ties → lower id,
             yield pd.DataFrame({                         # like the CASE chain
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "c_vec": pdf[vec_col],
+                "neighbor_id": pdf["vec_id"].to_numpy(),
+                "c_vec": pdf["embedding"],
                 "list_id": lid.astype(np.int32),
             })
 
@@ -350,14 +339,14 @@ def ivf_topk(
                 # reverse(array_sort(struct(s,i))) form produced)
                 order = np.lexsort((-np.arange(len(C)), -S[r]))[:nprobe]
                 for lid in order:
-                    rows["query_id"].append(pdf[id_col].iloc[r])
-                    rows["q_vec"].append(pdf[vec_col].iloc[r])
+                    rows["query_id"].append(pdf["vec_id"].iloc[r])
+                    rows["q_vec"].append(pdf["embedding"].iloc[r])
                     rows["list_id"].append(int(lid))
             yield pd.DataFrame(rows)
 
-    c = rebalance(corpus.select(id_col, vec_col)).mapInPandas(
+    c = rebalance(corpus.select("vec_id", "embedding")).mapInPandas(
         assign_corpus, schema=f"neighbor_id {id_t}, c_vec {vec_t}, list_id int")
-    q = queries.select(id_col, vec_col).mapInPandas(
+    q = queries.select("vec_id", "embedding").mapInPandas(
         probe_queries, schema=f"query_id {id_t}, q_vec {vec_t}, list_id int")
     return _rerank(c, q, "list_id", k)
 
@@ -371,12 +360,9 @@ VERIFY_BROADCAST_BYTES = 64 << 20
 def embedding_near_duplicates(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     n_planes: int = 8,
     exact: bool = False,
-    seed: int = 42,
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold.
 
@@ -386,7 +372,7 @@ def embedding_near_duplicates(
     is missed only when its signatures differ in ≥2 bits (probability
     ~(n·θ/π)² for cosine angle θ); candidates verified exactly.
     """
-    c = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    c = corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     if exact:
         cr = rebalance(c)
         a, b = cr.alias("a"), c.alias("b")
@@ -394,7 +380,7 @@ def embedding_near_duplicates(
     else:
         if dim is None:
             raise ValueError("dim required for bucketed mode")
-        planes = make_planes(dim, n_planes, seed)
+        planes = make_planes(dim, n_planes)
         # Decide with small rows, move big rows once (guide §8): the
         # candidate join and pair-dedup shuffle ONLY (vid, bucket) /
         # (vid, vid) rows; the embedding payloads are re-attached

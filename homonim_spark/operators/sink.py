@@ -101,16 +101,12 @@ def convert_tiles(
 def write_corrected(
     fused: DataFrame, path: str, dtype: str = "float32",
     nodata: Optional[float] = None, scale_h: int = 1,
-    partition_by_band: bool = True,
 ) -> None:
     """S6/S8: corrected-tile sink — parquet partitioned by band (the
     columnar stand-in for the Iceberg table; band partitioning gives the
     same partition pruning the reference gets from per-band reads)."""
     out = convert_tiles(fused, "corr", dtype, nodata, scale_h)
-    w = out.write.mode("overwrite")
-    if partition_by_band:
-        w = w.partitionBy("band")
-    w.parquet(path)
+    out.write.mode("overwrite").partitionBy("band").parquet(path)
 
 
 def export_corrected_gtiff(
@@ -266,7 +262,7 @@ def _overview_level_col(min_shape: Column, max_levels: int, min_px: int) -> Colu
 
 
 def build_overviews(
-    tiles: DataFrame, tile_px: int, value_col: str = "data",
+    tiles: DataFrame, tile_px: int,
     max_levels: int = 8, min_px: int = 256,
 ) -> list[DataFrame]:
     """S9: overview pyramid with the reference's stop rule
@@ -289,7 +285,7 @@ def build_overviews(
     # the ONE driver-visible value: the pyramid depth (a scalar aggregate)
     total = lvl.agg(F.max("n_levels")).first()[0] or 0
     levels = []
-    cur = tiles if value_col == "data" else tiles.withColumnRenamed(value_col, "data")
+    cur = tiles
     for i in range(total):
         # per-level image filter as a broadcast semi-join — an isin() list
         # would grow the plan linearly with image count (100 TB = millions

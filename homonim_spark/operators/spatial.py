@@ -38,9 +38,8 @@ def salted_join(
     small: DataFrame,
     on: List[str],
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with explicit key salting for skewed fan-out.
+    """Inner equi-join with explicit key salting for skewed fan-out.
 
     The drone-mosaic case: very many source tiles land in one reference
     cell, so the hash partition for that cell hot-spots.  The big side gets
@@ -56,11 +55,11 @@ def salted_join(
     big_s = big.withColumn(
         "_salt", F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(n_salt)))
     small_s = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-    out = big_s.join(small_s, on + ["_salt"], how)
+    out = big_s.join(small_s, on + ["_salt"], "inner")
     return out.drop("_salt")
 
 
-def skew_report(df: DataFrame, keys: List[str], top: int = 10) -> DataFrame:
+def skew_report(df: DataFrame, keys: List[str]) -> DataFrame:
     """Key-distribution diagnostics for a prospective join/groupBy: per-key
     row counts reduced to (n_keys, total_rows, max_rows, avg_rows,
     skew_ratio). The north_rule requires skew handled *explicitly* — this is

@@ -14,7 +14,7 @@ boxes offset to global pixel coordinates.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,11 +47,10 @@ _PARTIAL_SCHEMA = T.StructType([
 
 def param_partials(
     fused: DataFrame, model: Model | str = Model.gain_blk_offset,
-    r2_inpaint_thresh: float = 0.25,
 ) -> DataFrame:
     """Per-tile partial stats for each parameter plane of the fused output.
 
-    ``inpaint_n`` counts r2 < thresh only for the gain-offset model's R²
+    ``inpaint_n`` counts r2 < 0.25 only for the gain-offset model's R²
     plane, mirroring the band test at ``stats.py:226-228``.
     """
     is_gain_offset = Model(model) == Model.gain_offset
@@ -79,7 +78,7 @@ def param_partials(
                         "vmax": float(vals.max()) if n else None,
                         "vsum": float(vals.sum()), "vsum2": float((vals ** 2).sum()),
                         "n": n,
-                        "inpaint_n": int((vals < r2_inpaint_thresh).sum())
+                        "inpaint_n": int((vals < 0.25).sum())
                         if (is_gain_offset and pname == "r2") else None,
                         "row0": trow * r.h + win[0] if win else None,
                         "col0": tcol * r.w + win[1] if win else None,
@@ -95,11 +94,10 @@ def param_partials(
 
 def param_stats(
     fused: DataFrame, model: Model | str = Model.gain_blk_offset,
-    r2_inpaint_thresh: float = 0.25,
 ) -> DataFrame:
     """Final per-(band, param) stats: mean, cumulative-formula std
     (``sqrt(Σx²/n − (Σx/n)²)``, ``stats.py:184``), min, max, inpaint_p."""
-    p = param_partials(fused, model, r2_inpaint_thresh)
+    p = param_partials(fused, model)
     agg = p.groupBy("image_id", "band", "param").agg(
         F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax"),
         F.sum("vsum").alias("vsum"), F.sum("vsum2").alias("vsum2"),
@@ -116,7 +114,7 @@ def param_stats(
     )
 
 
-def vectorize_params(fused: DataFrame, res: Optional[int] = None) -> DataFrame:
+def vectorize_params(fused: DataFrame) -> DataFrame:
     """Raster→vector bridge (north_star): per-cell vector features from the
     parameter rasters — cell polygon bounds in world coordinates plus the
     per-tile parameter summaries (mean/std gain, offset, r2, valid share).

@@ -59,13 +59,12 @@ def span_text_profile(documents: DataFrame) -> DataFrame:
     return text_profile(flat).join(flat.select("doc_id", "n_media_spans"), "doc_id")
 
 
-def vocabulary_stats(documents: DataFrame, text_col: str = "text",
-                     top_k: int = 50) -> DataFrame:
+def vocabulary_stats(documents: DataFrame, top_k: int = 50) -> DataFrame:
     """Corpus vocabulary: top-k words by document frequency with total
     term frequency — one explode + one groupBy (classic training-pipeline
     vocabulary pass; partial aggregation handles the heavy tail)."""
     words = documents.select(
-        "doc_id", F.explode(tokens(normalize_text(F.col(text_col)))).alias("word")
+        "doc_id", F.explode(tokens(normalize_text(F.col("text")))).alias("word")
     ).filter(F.length("word") > 0)
     return (
         words.groupBy("word")
@@ -76,20 +75,19 @@ def vocabulary_stats(documents: DataFrame, text_col: str = "text",
     )
 
 
-def length_histogram(documents: DataFrame, text_col: str = "text",
-                     bucket: int = 100) -> DataFrame:
+def length_histogram(documents: DataFrame, bucket: int = 100) -> DataFrame:
     """Document-length distribution: counts per ``bucket``-char bin — the
     standard corpus-curation length filter input."""
-    b = F.floor(F.length(F.col(text_col)) / bucket).cast("long")
+    b = F.floor(F.length(F.col("text")) / bucket).cast("long")
     return (
         documents.groupBy(b.alias("bucket"))
         .agg(F.count("*").alias("n_docs"),
-             F.sum(F.length(F.col(text_col))).alias("total_chars"))
+             F.sum(F.length(F.col("text"))).alias("total_chars"))
         .orderBy("bucket")
     )
 
 
-def text_profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def text_profile(documents: DataFrame) -> DataFrame:
     """One row per document with the full text-analysis feature set.
 
     Structured as staged projections so every expensive expression (regex
@@ -109,10 +107,10 @@ def text_profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
     non-whitespace chars, equal because whitespace-split tokens partition
     exactly those chars and integer-valued doubles are exact).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     low_toks = tokens(F.lower(c))
     # stage 0: the one array both the stopword count and its denominator need
-    s0 = documents.select("doc_id", c.alias(text_col),
+    s0 = documents.select("doc_id", c.alias("text"),
                           low_toks.alias("_low_toks"))
     # stage 1: every regex / HOF / digest, each exactly once
     s1 = s0.select(

@@ -31,7 +31,6 @@ def asof_join(
     by: list[str] | tuple[str, ...] = ("user_id",),
     direction: str = "backward",
     tolerance_seconds: float | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """Left as-of join: for each left row, the single right row with the
     greatest ``on`` value ≤ the left row's (``direction='backward'``), or
@@ -41,7 +40,7 @@ def asof_join(
     the given gap (pandas ``merge_asof`` semantics).
 
     Right columns that collide with left column names (or the key/time
-    columns) come back with ``suffix`` appended.
+    columns) come back with ``_right`` appended.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward: {direction}")
@@ -87,7 +86,7 @@ def asof_join(
     taken = set(left.columns)
     cols: list[Column] = [F.col("_l")[c].alias(c) for c in left.columns]
     for c in right.columns:
-        name = c + suffix if c in taken or c in by else c
+        name = c + "_right" if c in taken or c in by else c
         cols.append(F.col("_m")[c].alias(name))
     return out.select(*cols)
 
@@ -99,19 +98,19 @@ def range_join(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    by: list[str] | tuple[str, ...] = (),
-    suffix: str = "_right",
 ) -> DataFrame:
     """Inner join of points to half-open intervals ``[lo, hi)`` without a
     cross-product: intervals explode into the fixed-width buckets they
     cover, points compute their single bucket, and a plain equi-join on
-    (``by``…, bucket) + the exact containment filter does the rest.
+    the bucket + the exact containment filter does the rest.  Right
+    columns that collide with left column names come back with ``_right``
+    appended.
 
     Catalyst plans a raw ``l.v >= r.lo AND l.v < r.hi`` predicate as
     BroadcastNestedLoopJoin — O(|L|·|R|) compares even when each point
     falls in few intervals.  Bucketizing makes the candidate volume
     O(|L| + Σ interval_width/bucket_width) and the join a hash join that
-    shuffles only on (key, bucket) — the standard interval-join strategy
+    shuffles only on the bucket — the standard interval-join strategy
     (Flink/KDB): pick ``bucket_width`` near the median interval width so
     most intervals explode into O(1) buckets.
     """
@@ -128,14 +127,12 @@ def range_join(
     # rename colliding right columns BEFORE the join so the containment
     # filter and output projection are never ambiguous
     taken = set(left.columns)
-    renames = {c: (c + suffix if c in taken else c)
-               for c in right.columns if c not in by}
+    renames = {c: (c + "_right" if c in taken else c) for c in right.columns}
     for old, new in renames.items():
         if new != old:
             exploded = exploded.withColumnRenamed(old, new)
-    keys = list(by) + ["_bkt"]
     tagged = left.withColumn("_bkt", l_bkt.cast("long"))
-    joined = tagged.join(exploded, on=keys, how="inner").filter(
+    joined = tagged.join(exploded, on=["_bkt"], how="inner").filter(
         (F.col(left_val) >= F.col(renames[right_lo]))
         & (F.col(left_val) < F.col(renames[right_hi])))
     return joined.select(*[F.col(c) for c in left.columns],

@@ -23,15 +23,13 @@ def staged_fuse_pipeline(
     run_dir: str,
     model: str = "gain-blk-offset",
     kernel_shape: Tuple[int, int] = (5, 5),
-    dtype: str = "float32",
-    nodata: Optional[float] = None,
     overview_warehouse: Optional[str] = None,
-    overview_max_levels: int = 8,
     overview_min_px: int = 256,
     **fuse_kwargs,
 ) -> dict:
     """ingest-audit → fuse → corrected sink → param stats, each a resumable
     stage. Returns {stage: DataFrame} plus the runner for metrics access.
+    The sink stage keeps float32 and the NaN nodata.
 
     With ``overview_warehouse`` set, a final stage builds the corrected-tile
     overview pyramid (reference stop rule, ``fuse.py:151-165``) and commits
@@ -51,23 +49,22 @@ def staged_fuse_pipeline(
     used = runner.run("ingest", cfg, lambda: fz.referenced_tiles(documents, tiles))
     fused = runner.run("fuse", cfg, lambda: fz.fuse(
         documents, used, model=model, kernel_shape=kernel_shape, **fuse_kwargs))
-    corrected = runner.run("sink", {**cfg, "dtype": dtype, "nodata": nodata},
-                           lambda: convert_tiles(fused, "corr", dtype, nodata,
+    corrected = runner.run("sink", {**cfg, "dtype": "float32", "nodata": None},
+                           lambda: convert_tiles(fused, "corr", "float32", None,
                                                  scale_h=_factor(used)))
     stats = runner.run("stats", cfg, lambda: param_stats(fused, model=model))
     out = {"ingest": used, "fuse": fused, "sink": corrected,
            "stats": stats, "runner": runner}
     if overview_warehouse is not None:
         out["overviews"] = _overview_snapshots(
-            spark, corrected, cfg, overview_warehouse,
-            overview_max_levels, overview_min_px)
+            spark, corrected, cfg, overview_warehouse, overview_min_px)
     return out
 
 
-def _overview_snapshots(spark, corrected, cfg, warehouse, max_levels, min_px):
-    """Build corrected-tile overviews and commit one catalog snapshot per
-    level; resume = read back levels whose (fingerprint, level) snapshot
-    already exists in the log."""
+def _overview_snapshots(spark, corrected, cfg, warehouse, min_px):
+    """Build corrected-tile overviews (at most 8 levels) and commit one
+    catalog snapshot per level; resume = read back levels whose
+    (fingerprint, level) snapshot already exists in the log."""
     import hashlib
     import json as _json
 
@@ -76,7 +73,7 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, max_levels, min_px):
 
     fp = hashlib.md5(_json.dumps(
         {**{k: str(v) for k, v in cfg.items()},
-         "max_levels": max_levels, "min_px": min_px},
+         "max_levels": 8, "min_px": min_px},
         sort_keys=True).encode()).hexdigest()[:16]
     cat = TableCatalog(spark, warehouse)
     # snapshots() returns [] for a not-yet-created table on both backends
@@ -86,7 +83,7 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, max_levels, min_px):
     tile_px = int(corrected.agg({"h": "max"}).collect()[0][0])
     levels = build_overviews(
         corrected.select("image_id", "band", "cell_id", "h", "w", "data"),
-        tile_px, max_levels=max_levels, min_px=min_px)
+        tile_px, min_px=min_px)
     out = []
     from pyspark.sql import functions as F
     # the fingerprint rides as a COLUMN on every row (not just a snapshot

@@ -12,23 +12,22 @@ from __future__ import annotations
 from typing import Any, Dict, List, Sequence
 
 
-def _fmt_cell(v: Any, float_dp: int = 3) -> str:
+def _fmt_cell(v: Any) -> str:
     if v is None:
         return "-"
     if isinstance(v, float):
-        return f"{v:.{float_dp}f}"
+        return f"{v:.3f}"
     return str(v)
 
 
-def format_table(records: List[Dict[str, Any]], headers: Sequence[str] | None = None,
-                 float_dp: int = 3) -> str:
+def format_table(records: List[Dict[str, Any]]) -> str:
     """Plain-text stats table in the reference's tabulate format (header row,
     dashed rule, space-separated columns, zero padding; numbers right-aligned,
-    text left-aligned)."""
+    text left-aligned, floats to 3 dp); columns are the first record's keys."""
     if not records:
         return ""
-    cols = list(headers) if headers else list(records[0].keys())
-    cells = [[_fmt_cell(r.get(c), float_dp) for c in cols] for r in records]
+    cols = list(records[0].keys())
+    cells = [[_fmt_cell(r.get(c)) for c in cols] for r in records]
     numeric = [all(isinstance(r.get(c), (int, float)) or r.get(c) is None
                    for r in records) for c in cols]
     widths = [max([len(c)] + [len(row[i]) for row in cells])

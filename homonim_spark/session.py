@@ -86,9 +86,8 @@ def get_spark(
         # is conservative against the 8 GB broadcast cap and any executor
         # profile that can run this engine's Arrow pipelines; joins whose
         # build side outgrows it (the 100 TB case) degrade gracefully to
-        # the shuffled plans.  Parameterised for cluster tuning.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
+        # the shuffled plans.
+        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Coalescing merges shuffle partitions by BYTES.  The engine's
         # pandas-UDF group stages are CPU-bound per byte and bytes-based
         # coalescing starves cores there (measured 4-6x on the fuse
@@ -103,8 +102,7 @@ def get_spark(
         # advisory size; the 64k floor stops over-coalescing of small-byte
         # but CPU-heavy stages (regex profiling: ~0.5 MB/partition).
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Arrow is the only Python<->JVM path the engine uses.
         # Batch size: tile rows are ~40-300 KB of binary payload, so the
         # 10k default (and even 2048) builds multi-hundred-MB Arrow batches
@@ -115,8 +113,7 @@ def get_spark(
         # faster at ≥512 (9k batches → 2.2k), so 512 is the new default —
         # still ≤ tens of MB per batch for the fattest tile rows.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         # binary tile payloads make rows heavy; keep file partitions modest
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", _driver_memory())
@@ -125,6 +122,9 @@ def get_spark(
         # the DuckDB oracles read the same parquet NTZ values as UTC
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # progress bars share the terminal with the tools' own output and
+        # break line-anchored log parsing
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     extra_conf = dict(extra_conf or {})

@@ -7,7 +7,7 @@ continuously and each micro-batch must be corrected exactly once.
 - ``incremental_media_refs`` / ``incremental_fuse``: readStream over a
   documents directory → explode → append sink, ``Trigger.AvailableNow`` for
   catch-up-then-stop semantics with a durable checkpoint.
-- ``windowed_event_stats``: watermarked sliding-window aggregation over an
+- ``windowed_event_stats``: watermarked tumbling-window aggregation over an
   event stream (late data dropped after the watermark) — the standard
   late-data pattern for the metrics/telemetry tables.
 """
@@ -94,7 +94,6 @@ def incremental_fuse(
 def stateful_sessionize(
     events_stream: DataFrame,
     gap_seconds: int = 1800,
-    state_timeout_ms: int = 3600_000,
 ) -> DataFrame:
     """Custom stateful streaming operator: per-user session aggregation with
     ``applyInPandasWithState`` — sessions close after ``gap_seconds`` of
@@ -102,7 +101,8 @@ def stateful_sessionize(
     user, emitted when the gap passes or the state times out.
 
     The streaming twin of the batch ``sessionize`` query (lag windows);
-    state is bounded per key and expires via processing-time timeout.
+    state is bounded per key and expires after one hour of processing time
+    without data for the key.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -155,7 +155,7 @@ def stateful_sessionize(
                 n += 1
                 vsum += float(value)
             state.update((start_us, last_us, n, vsum))
-            state.setTimeoutDuration(state_timeout_ms)
+            state.setTimeoutDuration(3600_000)
         yield pd.DataFrame(rows, columns=["user_id", "sess_start", "sess_end",
                                           "n_events", "sess_value"])
 
@@ -171,15 +171,13 @@ def stateful_sessionize(
 def windowed_event_stats(
     events_stream: DataFrame,
     window: str = "1 minute",
-    slide: str | None = None,
     watermark: str = "2 minutes",
 ) -> DataFrame:
-    """Watermarked (sliding) window aggregation over an event stream:
+    """Watermarked tumbling-window aggregation over an event stream:
     late rows beyond the watermark are dropped; state is bounded."""
-    w = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         events_stream.withWatermark("ts", watermark)
-        .groupBy(w.alias("win"), "event_type")
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -191,8 +189,6 @@ def windowed_event_stats(
 
 def streaming_dedup_exact(
     doc_stream: DataFrame,
-    text_col: str = "text",
-    state_timeout_ms: int = 0,
 ) -> DataFrame:
     """Streaming exact dedup: emit each document only the FIRST time its
     normalized-text fingerprint is seen across the whole stream — the
@@ -204,8 +200,7 @@ def streaming_dedup_exact(
     tiny row per distinct text (canonical doc_id + seen count), so the
     state store scales with DISTINCT content, not stream volume — at
     production scale the key space is hash-partitioned across executors'
-    RocksDB state stores.  ``state_timeout_ms`` > 0 expires fingerprints
-    (sliding-freshness dedup); 0 keeps them forever (exact semantics).
+    RocksDB state stores.  Fingerprints never expire (exact semantics).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -225,11 +220,6 @@ def streaming_dedup_exact(
 
     def update(key, pdfs, state: GroupState):
         (fp,) = key
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=["doc_id", "fingerprint",
-                                            "n_dupes_so_far"])
-            return
         canonical, n_seen = (state.get if state.exists else (None, 0))
         was_new = canonical is None
         # min(doc_id) must be taken over ALL pandas chunks of the group —
@@ -246,8 +236,6 @@ def streaming_dedup_exact(
         if was_new and batch_min is not None:
             canonical = batch_min
         state.update((canonical, n_seen))
-        if state_timeout_ms > 0:
-            state.setTimeoutDuration(state_timeout_ms)
         rows = ([(canonical, fp, 0)]
                 if was_new and canonical is not None else [])
         yield pd.DataFrame(rows, columns=["doc_id", "fingerprint",
@@ -259,11 +247,10 @@ def streaming_dedup_exact(
     # docs would invent duplicates across semantically different rows.
     keyed = doc_stream.select(
         "doc_id",
-        fingerprint(F.col(text_col)).alias("fingerprint"),
+        fingerprint(F.col("text")).alias("fingerprint"),
     ).filter(F.col("fingerprint").isNotNull())
     return keyed.groupBy("fingerprint").applyInPandasWithState(
         update, outputStructType=out_schema, stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                     if state_timeout_ms > 0 else GroupStateTimeout.NoTimeout),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

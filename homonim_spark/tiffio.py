@@ -801,12 +801,11 @@ def overview_level_count(shape: tuple, max_levels: int = 8,
 def build_overviews(
     data: np.ndarray,
     nodata: float | None = None,
-    max_num_levels: int = 8,
     min_level_pixels: int = 256,
 ) -> list[np.ndarray]:
     """Reduced-resolution pyramid for :func:`write_gtiff`'s ``overviews``.
 
-    Level count from :func:`overview_level_count`; average
+    Level count from :func:`overview_level_count`, at most 8; average
     resampling (rasterio ``Resampling.average``), nodata/NaN-aware — each
     output pixel is the mean of the VALID source pixels in its 2^m × 2^m
     footprint (computed from full resolution, so levels are exact block
@@ -816,7 +815,7 @@ def build_overviews(
     if data.ndim == 2:
         data = data[None]
     spp, h, w = data.shape
-    n_levels = overview_level_count((h, w), max_num_levels, min_level_pixels)
+    n_levels = overview_level_count((h, w), 8, min_level_pixels)
     if n_levels == 0:
         return []
     vals = data.astype(np.float64)

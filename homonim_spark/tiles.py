@@ -35,10 +35,10 @@ def nan_equals(a, b):
     return (a == b) | (np.isnan(a) & np.isnan(b))
 
 
-def tile_mask(arr: np.ndarray, nodata=DEFAULT_NODATA) -> np.ndarray:
-    """Valid-data mask: ``~nan_equals(arr, nodata)``; any-band reduction for
-    3-D arrays (reference ``raster_array.py:298-308``)."""
-    mask = ~nan_equals(arr, nodata)
+def tile_mask(arr: np.ndarray) -> np.ndarray:
+    """Valid-data mask: ``~nan_equals(arr, DEFAULT_NODATA)``; any-band
+    reduction for 3-D arrays (reference ``raster_array.py:298-308``)."""
+    mask = ~nan_equals(arr, DEFAULT_NODATA)
     if arr.ndim == 3:
         mask = np.any(mask, axis=0)
     return mask

@@ -125,5 +125,6 @@ def test_warm_queries_compile_no_codegen_class(spark, tmp_path):
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == \
         str(CODEGEN_CACHE_ENTRIES)
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
     run_leaves()  # about 136 classes on a fresh session
     assert run_leaves() == 0

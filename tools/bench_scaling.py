@@ -199,7 +199,7 @@ engine's own contribution is separable.
   churn on both sides of the socket; tiny-row Python paths instead pay
   per-batch overhead.  Round-6 interleaved A/B: fuse flat across
   256/512/1024, LSH verify ~20% faster ≥512
-  (`session.py`, env `SPARK_GRAFT_ARROW_BATCH`).
+  (`session.py`).
 - Shuffle partitions ≈ 4× cores for the fuse exchange; driver heap sized
   above the cached input (56 GB heap → 110 s vs 80 GB → 33 s at identical
   plan — pure GC).
