@@ -36,20 +36,18 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return rebalance(_t(spark, sf_dir, name))
 
 
-@functools.lru_cache(maxsize=4)
-def _raster_tables(sf_key: str):
+@functools.lru_cache(maxsize=1)
+def _raster_tables():
     """Deterministic synthetic interleaved-documents fixture (independent of
-    sf_dir content; sf_key only selects a size)."""
+    sf_dir content): two 4×4-cell image pairs."""
     from homonim_spark import datagen
-    scale = {"small": 2, "medium": 8}.get(sf_key, 2)
-    specs = datagen.default_specs(scale=scale, bands=1, tile=16)
+    specs = datagen.default_specs(scale=2, bands=1, tile=16)
     return datagen.build_fixture_tables(specs)
 
 
-def _raster_spark(spark: SparkSession, sf_key: str = "small"):
+def _raster_spark(spark: SparkSession):
     from homonim_spark import datagen
-    docs_pdf, tiles_pdf = _raster_tables(sf_key)
-    return datagen.to_spark(spark, docs_pdf, tiles_pdf)
+    return datagen.to_spark(spark, *_raster_tables())
 
 
 # ---------------------------------------------------------------------------
@@ -1715,15 +1713,15 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk(emb, q, dim=64, k=5).orderBy("query_id", "rank")
 
 
-def _srp_planes_values(dim: int = 64, n_planes: int = 8,
-                       seed: int = 42) -> str:
-    """The seeded SRP hyperplanes as a SQL VALUES list — float64 repr
-    round-trips exactly, so DuckDB's plane matrix is bit-identical to the
-    one srp_buckets broadcasts to executors."""
+def _srp_planes_values() -> str:
+    """The seeded SRP hyperplanes of ``lsh_topk(dim=64)`` (8 planes, seed
+    42) as a SQL VALUES list — float64 repr round-trips exactly, so
+    DuckDB's plane matrix is bit-identical to the one srp_buckets
+    broadcasts to executors."""
     from homonim_spark.operators.similarity import make_planes
     return ",\n    ".join(
         "(%d, [%s])" % (i, ", ".join(repr(float(x)) for x in p))
-        for i, p in enumerate(make_planes(dim, n_planes, seed)))
+        for i, p in enumerate(make_planes(64, 8, 42)))
 
 
 ORACLE_ANN_LSH_TOPK = f"""

@@ -11,9 +11,9 @@ Layout of the 64-bit cell id (always positive, fits Spark ``LongType``)::
 
     [ res : 5 bits ][ row + 2^28 : 29 bits ][ col + 2^28 : 29 bits ]
 
-Everything is expressible both as numpy-vectorized Python (inside pandas
-UDFs) and as JVM-side Spark ``Column`` arithmetic (for joins / halo explode —
-no Python in the shuffle-key hot path).
+Everything is expressible both as numpy-vectorized Python (inside the tile
+UDFs) and as JVM-side Spark SQL expressions (for joins / halo explode — no
+Python in the shuffle-key hot path).
 """
 
 from __future__ import annotations
@@ -68,11 +68,6 @@ def cell_col(cid):
     v = np.asarray(cid, dtype=np.int64) & ((1 << COORD_BITS) - 1)
     v = v - COORD_BIAS
     return int(v) if np.isscalar(cid) else v
-
-
-def neighbor(cid: int, drow: int, dcol: int) -> int:
-    """Cell id of the (drow, dcol) grid neighbor at the same resolution."""
-    return cell_id(cell_res(cid), cell_row(cid) + drow, cell_col(cid) + dcol)
 
 
 def k_ring(cid: int, k: int) -> List[int]:
@@ -151,44 +146,63 @@ def polyfill(ring: Sequence[Tuple[float, float]], res: int) -> List[int]:
 
 
 # ---------------------------------------------------------------------------
-# Spark Column side (JVM arithmetic — used in joins / halo explode)
+# Spark side: SQL text over column names (JVM arithmetic, codegen)
 # ---------------------------------------------------------------------------
+#
+# The bit layout is written once, as SQL text.  Text composes into larger
+# expressions (``operators.fuse.route_tiles`` parses its whole routing in
+# two ``selectExpr`` calls), and parsing it is one driver round trip where
+# the equivalent ``Column`` arithmetic costs about ten per operator.
 
-def cell_id_col(res: Column, row: Column, col: Column) -> Column:
-    """JVM-side cell id from res/row/col columns (no Python UDF)."""
-    return (
-        F.shiftleft(res.cast("long"), 2 * COORD_BITS)
-        .bitwiseOR(F.shiftleft(row.cast("long") + F.lit(COORD_BIAS), COORD_BITS))
-        .bitwiseOR(col.cast("long") + F.lit(COORD_BIAS))
-    )
-
-
-def cell_row_col_expr(cid: Column) -> Tuple[Column, Column]:
-    row = F.shiftrightunsigned(cid, COORD_BITS).bitwiseAND(F.lit((1 << COORD_BITS) - 1)) - F.lit(COORD_BIAS)
-    col = cid.bitwiseAND(F.lit((1 << COORD_BITS) - 1)) - F.lit(COORD_BIAS)
-    return row, col
+_COORD_MASK = (1 << COORD_BITS) - 1
 
 
-def cell_res_expr(cid: Column) -> Column:
-    return F.shiftrightunsigned(cid, 2 * COORD_BITS)
+def cell_id_sql(res: str, row: str, col: str) -> str:
+    """SQL text of the cell id of the ``res``/``row``/``col`` expressions."""
+    return (f"(shiftleft(CAST({res} AS BIGINT), {2 * COORD_BITS})"
+            f" | shiftleft(CAST({row} AS BIGINT) + {COORD_BIAS}, {COORD_BITS})"
+            f" | (CAST({col} AS BIGINT) + {COORD_BIAS}))")
 
 
-def neighbor_expr(cid: Column, drow: Column, dcol: Column) -> Column:
-    """JVM-side neighbor id — the halo-explode hot path stays in codegen."""
-    row, col = cell_row_col_expr(cid)
-    return cell_id_col(cell_res_expr(cid), row + drow, col + dcol)
+def cell_row_sql(cid: str) -> str:
+    return f"((shiftrightunsigned({cid}, {COORD_BITS}) & {_COORD_MASK}) - {COORD_BIAS})"
 
 
-def k_ring_expr(cid: Column, k: int) -> Column:
-    """Array column of the (2k+1)² k-ring cell ids (JVM-side)."""
-    deltas = [(dr, dc) for dr in range(-k, k + 1) for dc in range(-k, k + 1)]
-    return F.array(*[neighbor_expr(cid, F.lit(dr), F.lit(dc)) for dr, dc in deltas])
+def cell_col_sql(cid: str) -> str:
+    return f"(({cid} & {_COORD_MASK}) - {COORD_BIAS})"
 
 
-def parent_expr(cid: Column) -> Column:
-    row, col = cell_row_col_expr(cid)
-    return cell_id_col(
-        cell_res_expr(cid) - F.lit(1),
-        F.shiftright(row, 1),
-        F.shiftright(col, 1),
-    )
+def cell_res_sql(cid: str) -> str:
+    return f"shiftrightunsigned({cid}, {2 * COORD_BITS})"
+
+
+# Column forms of the text above: one parsed ``F.expr`` each, over a
+# cell-id column name or SQL text.
+
+def cell_row_expr(cid: str) -> Column:
+    return F.expr(cell_row_sql(cid))
+
+
+def cell_col_expr(cid: str) -> Column:
+    return F.expr(cell_col_sql(cid))
+
+
+def cell_res_expr(cid: str) -> Column:
+    return F.expr(cell_res_sql(cid))
+
+
+def k_ring_expr(cid: str, k: int) -> Column:
+    """Array column of the (2k+1)² k-ring cell ids, row-major like
+    :func:`k_ring` (JVM-side)."""
+    res, row, col = cell_res_sql(cid), cell_row_sql(cid), cell_col_sql(cid)
+    return F.expr("array(" + ", ".join(
+        cell_id_sql(res, f"{row} + {dr}", f"{col} + {dc}")
+        for dr in range(-k, k + 1) for dc in range(-k, k + 1)) + ")")
+
+
+def parent_expr(cid: str) -> Column:
+    """Parent cell id one resolution coarser (floor-div 2 via an arithmetic
+    shift, toward -inf like :func:`parent`)."""
+    return F.expr(cell_id_sql(f"{cell_res_sql(cid)} - 1",
+                              f"shiftright({cell_row_sql(cid)}, 1)",
+                              f"shiftright({cell_col_sql(cid)}, 1)"))

@@ -344,8 +344,7 @@ def fit_and_apply_ref_space(
     src_proc = ops.downsample_average(src, factor)
     param = fit_model(src_proc, ref, params)
 
-    up = ops.param_upsampler(params.param_interp)
-    param_us = np.stack([up(param[0], factor), up(param[1], factor)])
+    param_us = ops.param_upsampler(params.param_interp)(param[:2], factor)
     if params.mask_partial:
         out_mask = full_coverage_mask(
             ~np.isnan(src), ~np.isnan(param[0]), factor, params.kernel_shape
@@ -383,8 +382,7 @@ def fit_and_apply_canvas(
         return a[..., oh * scale:(oh + span) * scale, ow * scale:(ow + span) * scale]
 
     up = ops.param_upsampler(params.param_interp)
-    param_src = np.stack([interior(ops.to_grid(p, proc_scale, src_scale, up), src_scale)
-                          for p in param[:2]])
+    param_src = interior(ops.to_grid(param[:2], proc_scale, src_scale, up), src_scale)
     src_in = interior(src, src_scale)
     if params.mask_partial:
         other, other_scale = (ref, ref_scale) if proc_src else (src, src_scale)
@@ -393,7 +391,8 @@ def fit_and_apply_canvas(
         se = (params.kernel_shape[0] + 2, params.kernel_shape[1] + 2)
         full = ops.erode_rect(mask, se).astype(bool)
         keep = ops.coverage_to_grid(interior(full, proc_scale), proc_scale, src_scale)
-        param_src[:, ~keep] = np.nan
     else:
-        param_src[:, np.isnan(src_in)] = np.nan
+        keep = ~np.isnan(src_in)
+    # a new array: on the proc grid, param_src is a view of param
+    param_src = np.where(keep, param_src, np.float32(np.nan))
     return interior(param, proc_scale), apply_model(src_in, param_src)

@@ -28,25 +28,24 @@ def box_sum(arr: np.ndarray, kernel_shape: Tuple[int, int]) -> np.ndarray:
     is centered (odd shapes only — enforced upstream like the reference's
     ``utils.validate_kernel_shape``), pixels outside the array count as 0.
 
-    Accumulates in float64 (integral image) and returns float32.
+    Accumulates in float64 (integral image) and returns float32.  The
+    integral image is taken over the array zero-padded by the kernel, so
+    every window sum is four plain slices (no index gathers); the padding
+    only adds exact zeros, so the sums equal those of the unpadded image
+    read at clipped indices.
     """
     kh, kw = int(kernel_shape[0]), int(kernel_shape[1])
     if kh == 1 and kw == 1:
         return arr.astype(np.float32, copy=True)
-    return _box_sum_clipped(arr, kh, kw, kh // 2, kw // 2)
-
-
-def _box_sum_clipped(arr: np.ndarray, kh: int, kw: int, ph: int, pw: int) -> np.ndarray:
     h, w = arr.shape
-    ii = np.zeros((h + 1, w + 1), dtype=np.float64)
-    ii[1:, 1:] = arr
+    ph, pw = kh // 2, kw // 2
+    ii = np.zeros((h + kh + 1, w + kw + 1), dtype=np.float64)
+    ii[1 + ph:1 + ph + h, 1 + pw:1 + pw + w] = arr
     np.cumsum(ii, axis=0, out=ii)
     np.cumsum(ii, axis=1, out=ii)
-    r0 = np.clip(np.arange(h) - ph, 0, h)
-    r1 = np.clip(np.arange(h) - ph + kh, 0, h)
-    c0 = np.clip(np.arange(w) - pw, 0, w)
-    c1 = np.clip(np.arange(w) - pw + kw, 0, w)
-    out = ii[np.ix_(r1, c1)] - ii[np.ix_(r0, c1)] - ii[np.ix_(r1, c0)] + ii[np.ix_(r0, c0)]
+    out = ii[kh:kh + h, kw:kw + w] - ii[:h, kw:kw + w]
+    out -= ii[kh:kh + h, :w]
+    out += ii[:h, :w]
     return out.astype(np.float32)
 
 
@@ -81,20 +80,21 @@ def downsample_average(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
+    h, w = arr.shape[-2:]
     assert h % fh == 0 and w % fw == 0, "tile not divisible by resample factor"
     # strided slice-adds instead of reshape+float64 nansum: ~4x less memory
     # traffic (the fuse group stage is bandwidth-bound); f² ≤ ~16 float32
     # adds per output pixel lose no precision that matters here
     valid = ~np.isnan(arr)
     v = np.where(valid, arr, np.float32(0.0))
-    tot = np.zeros((h // fh, w // fw), dtype=np.float32)
-    cnt = np.zeros((h // fh, w // fw), dtype=np.float32)
+    shape = arr.shape[:-2] + (h // fh, w // fw)
+    tot = np.zeros(shape, dtype=np.float32)
+    cnt = np.zeros(shape, dtype=np.float32)
     for i in range(fh):
         for j in range(fw):
-            tot += v[i::fh, j::fw]
-            cnt += valid[i::fh, j::fw]
-    out = np.full((h // fh, w // fw), np.nan, dtype=np.float32)
+            tot += v[..., i::fh, j::fw]
+            cnt += valid[..., i::fh, j::fw]
+    out = np.full(shape, np.nan, dtype=np.float32)
     np.divide(tot, cnt, out=out, where=cnt > 0)
     return out
 
@@ -124,15 +124,18 @@ def upsample_nearest(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     ``tests/test_fuse_api.py:114``); nearest is deterministic, exact at
     identity, and has no halo requirement.  A bilinear variant is provided
     below for smoother parameter fields.
+
+    Like every upsampler here it resamples the last two axes, so a stack
+    of planes goes through in one call.
     """
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
-    out = np.empty((h * fh, w * fw), dtype=np.float32)
+    h, w = arr.shape[-2:]
+    out = np.empty(arr.shape[:-2] + (h * fh, w * fw), dtype=np.float32)
     for i in range(fh):  # strided assigns: ~10x faster than np.kron
         for j in range(fw):
-            out[i::fh, j::fw] = arr
+            out[..., i::fh, j::fw] = arr
     return out
 
 
@@ -148,9 +151,9 @@ def upsample_bilinear(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
+    h, w = arr.shape[-2:]
     a = np.ascontiguousarray(arr, dtype=np.float32)
-    out = np.empty((h * fh, w * fw), dtype=np.float32)
+    out = np.empty(arr.shape[:-2] + (h * fh, w * fw), dtype=np.float32)
 
     def phase(f: int, i: int):
         """(pair_offset, weight): output phase i interpolates input k+off →
@@ -161,22 +164,22 @@ def upsample_bilinear(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     for i in range(fh):
         roff, wy = phase(fh, i)
         if roff < 0:
-            r0 = np.vstack([a[:1], a[:-1]])   # clamped up-shift
+            r0 = _shift_rows(a, -1)   # clamped up-shift
             r1 = a
         else:
             r0 = a
-            r1 = np.vstack([a[1:], a[-1:]])   # clamped down-shift
+            r1 = _shift_rows(a, 1)    # clamped down-shift
         ri = r0 * (np.float32(1.0) - wy) + r1 * wy if wy != 0 else r0
         for j in range(fw):
             coff, wx = phase(fw, j)
             if coff < 0:
-                c0 = np.hstack([ri[:, :1], ri[:, :-1]])
+                c0 = _shift_cols(ri, -1)
                 c1 = ri
             else:
                 c0 = ri
-                c1 = np.hstack([ri[:, 1:], ri[:, -1:]])
-            out[i::fh, j::fw] = (c0 * (np.float32(1.0) - wx) + c1 * wx
-                                 if wx != 0 else c0)
+                c1 = _shift_cols(ri, 1)
+            out[..., i::fh, j::fw] = (c0 * (np.float32(1.0) - wx) + c1 * wx
+                                      if wx != 0 else c0)
     return out
 
 
@@ -187,19 +190,28 @@ def _upsample_masked(arr: np.ndarray, factor: Tuple[int, int], up,
     ring of valid output, and validity follows the *nearest* input pixel,
     as the reference masks reprojected params by the proc-grid mask
     (``kernel_model.py:138-140,396-409``).  Output
-    is NaN where |weight sum| ≤ ``guard`` (signed kernels need more)."""
+    is NaN where |weight sum| ≤ ``guard`` (signed kernels need more).
+
+    ``arr`` is one plane or a stack of planes (gain, offset).  Planes that
+    share one NaN mask share its validity weights and nearest-validity
+    mask, computed once; a stack whose masks differ is upsampled plane by
+    plane, so each plane's result never depends on the others."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
     valid = ~np.isnan(arr)
     if valid.all():
         return up(arr, factor)  # fast path: the common interior-chunk case
-    v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = up(v, factor)
+    if arr.ndim > 2:
+        if not (valid == valid[:1]).all():
+            return np.stack([_upsample_masked(p, factor, up, guard) for p in arr])
+        valid = valid[0]
+    num = up(np.where(valid, arr, np.float32(0.0)).astype(np.float32, copy=False), factor)
     den = up(valid.astype(np.float32), factor)
+    keep = np.abs(den) > np.float32(guard)
+    keep &= upsample_nearest(valid.astype(np.float32), factor) >= 0.5
     out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=np.abs(den) > np.float32(guard))
-    out[~(upsample_nearest(valid.astype(np.float32), factor) >= 0.5)] = np.nan
+    np.divide(num, den, out=out, where=keep)
     return out
 
 
@@ -209,20 +221,21 @@ def upsample_bilinear_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.nda
 
 
 def _shift_rows(a: np.ndarray, s: int) -> np.ndarray:
-    """result[k] = a[clamp(k+s)] (edge-replicate shift along axis 0)."""
+    """result[k] = a[clamp(k+s)] (edge-replicate shift along axis -2)."""
     if s == 0:
         return a
     if s > 0:
-        return np.vstack([a[s:], np.repeat(a[-1:], s, axis=0)])
-    return np.vstack([np.repeat(a[:1], -s, axis=0), a[:s]])
+        return np.concatenate([a[..., s:, :], np.repeat(a[..., -1:, :], s, axis=-2)], axis=-2)
+    return np.concatenate([np.repeat(a[..., :1, :], -s, axis=-2), a[..., :s, :]], axis=-2)
 
 
 def _shift_cols(a: np.ndarray, s: int) -> np.ndarray:
+    """result[..., k] = a[..., clamp(k+s)] (edge-replicate shift along axis -1)."""
     if s == 0:
         return a
     if s > 0:
-        return np.hstack([a[:, s:], np.repeat(a[:, -1:], s, axis=1)])
-    return np.hstack([np.repeat(a[:, :1], -s, axis=1), a[:, :s]])
+        return np.concatenate([a[..., s:], np.repeat(a[..., -1:], s, axis=-1)], axis=-1)
+    return np.concatenate([np.repeat(a[..., :1], -s, axis=-1), a[..., :s]], axis=-1)
 
 
 def _catmull_rom_weights(t: float):
@@ -256,9 +269,9 @@ def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
+    h, w = arr.shape[-2:]
     a = np.ascontiguousarray(arr, dtype=np.float32)
-    out = np.empty((h * fh, w * fw), dtype=np.float32)
+    out = np.empty(arr.shape[:-2] + (h * fh, w * fw), dtype=np.float32)
 
     def phase(f: int, i: int):
         o = (i + 0.5) / f - 0.5
@@ -277,7 +290,7 @@ def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
         for j in range(fw):
             bc, tx = phase(fw, j)
             wx = weights(tx)
-            out[i::fh, j::fw] = sum(
+            out[..., i::fh, j::fw] = sum(
                 wx[m] * _shift_cols(ri, bc + lo + m) for m in range(len(wx)))
     return out
 

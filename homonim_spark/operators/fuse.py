@@ -10,12 +10,13 @@ Spark-native re-expression:
     span structure                 tile payloads
                                         │ (src tiles block-mean → proc grid)
                                         ▼
-                     chunk+halo routing (JVM Column routing of whole
-                     tiles, border-exact)
+                     chunk+halo routing (whole tiles, border-exact;
+                     two selectExpr calls of JVM SQL text)
                                         │ ONE shuffle on (image_id, band, chunk)
                                         ▼
-        repartition+sort ► mapInPandas streaming groups
-                     (assemble canvas + fit + apply, per-batch Arrow)
+        repartition+sort ► mapInArrow streaming groups
+                     (tiles as Arrow buffer views; assemble canvas +
+                     fit + apply; one output buffer per column per batch)
                                         │
                       corrected tiles + parameter tiles
                                         │ join back on media_ref
@@ -50,7 +51,6 @@ from dataclasses import dataclass
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,7 +62,7 @@ from homonim_spark.kernel.models import (
     chunk_halo,
     fit_and_apply_canvas,
 )
-from homonim_spark.tiles import decode_tile, encode_tile
+from homonim_spark.tiles import Columns, decode_tile, map_tile_batches
 
 # ---------------------------------------------------------------------------
 # schemas
@@ -150,26 +150,20 @@ def infer_fuse_config(tiles: DataFrame, params: KernelModelParams,
 # ---------------------------------------------------------------------------
 
 def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents → one row per span, position-preserving."""
-    return documents.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id", "pos",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    """documents → one row per span, position-preserving (SQL text: one
+    driver round trip per projection)."""
+    return documents.selectExpr(
+        "doc_id", "posexplode(spans) AS (pos, span)"
+    ).selectExpr(
+        "doc_id", "pos", "span.kind AS kind", "span.text AS text",
+        "span.media_ref AS media_ref", "span.offset AS offset",
     )
 
 
 def referenced_tiles(documents: DataFrame, tiles: DataFrame) -> DataFrame:
     """Tiles actually referenced by document media spans — left-semi hash
     join on media_ref (no payload duplication; AQE handles hot keys)."""
-    refs = (
-        explode_spans(documents)
-        .filter(F.col("kind") == "media")
-        .select("media_ref")
-    )
+    refs = explode_spans(documents).filter("kind = 'media'").select("media_ref")
     return tiles.join(refs, "media_ref", "left_semi")
 
 
@@ -213,15 +207,18 @@ def coverage_audit(tiles: DataFrame) -> int:
 def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
     """Explode each tile row to its own chunk plus any border-adjacent
     chunks that need it for halo continuity — all JVM-side (codegen):
-    no Python worker touches the payload until the group stage."""
+    no Python worker touches the payload until the group stage.
+
+    The routing is SQL text parsed by two ``selectExpr`` calls, so the
+    plan costs a few driver round trips instead of ~10 per operator."""
     K = cfg.chunk
-    row, col = grid.cell_row_col_expr(F.col("cell_id"))
-    res = grid.cell_res_expr(F.col("cell_id"))
+    row, col = grid.cell_row_sql("cell_id"), grid.cell_col_sql("cell_id")
     # floor division toward -inf (rows/cols may be negative)
-    R = F.floor(row.cast("double") / K).cast("long")
-    C = F.floor(col.cast("double") / K).cast("long")
-    lr = row - R * K
-    lc = col - C * K
+    located = tiles.selectExpr(
+        "image_id", "band", "cell_id", "role", "h", "w", "media_ref", "data",
+        f"{grid.cell_res_sql('cell_id')} AS _res",
+        f"floor({row} / {K}) AS _R", f"floor({col} / {K}) AS _C",
+        f"pmod({row}, {K}) AS _lr", f"pmod({col}, {K}) AS _lc")
     # Route only to chunks inside the image's OWNED (src-tile) chunk
     # extent: a destination outside it owns no src tile, so its group can
     # never emit output — yet border tiles were being shipped there anyway
@@ -230,27 +227,22 @@ def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
     # The extent is a metadata-scale aggregate broadcast by (image_id,
     # band); dropping ghost destinations cannot change output (guide §2.3
     # — don't shuffle bytes the consumer discards).
-    ext = (tiles.filter(F.col("role") == "src")
-           .select("image_id", "band", R.alias("_cR"), C.alias("_cC"))
-           .groupBy("image_id", "band")
-           .agg(F.min("_cR").alias("_minR"), F.max("_cR").alias("_maxR"),
-                F.min("_cC").alias("_minC"), F.max("_cC").alias("_maxC")))
-    t = tiles.join(F.broadcast(ext), ["image_id", "band"])
-    empty = F.array().cast("array<long>")
-    cands = []
+    ext = (located.filter("role = 'src'").groupBy("image_id", "band")
+           .agg(*[F.expr(f"{fn}({c}) AS _{fn}{c[1:]}")
+                  for fn in ("min", "max") for c in ("_R", "_C")]))
+    cases = []
     for dR in (-1, 0, 1):
         # the halo is ≥ 1 px, so a border tile always feeds its neighbor
-        rc = F.lit(True) if dR == 0 else (lr == 0) if dR == -1 else (lr == K - 1)
+        conds = [] if dR == 0 else ["_lr = 0" if dR == -1 else f"_lr = {K - 1}"]
+        conds.append(f"_R + {dR} BETWEEN _minR AND _maxR")
         for dC in (-1, 0, 1):
-            cc = F.lit(True) if dC == 0 else (lc == 0) if dC == -1 else (lc == K - 1)
-            inb = (R + dR).between(F.col("_minR"), F.col("_maxR")) & \
-                (C + dC).between(F.col("_minC"), F.col("_maxC"))
-            dest = grid.cell_id_col(res, R + dR, C + dC)
-            cands.append(F.when(rc & cc & inb, F.array(dest)).otherwise(empty))
-    return t.select(
+            cc = [] if dC == 0 else ["_lc = 0" if dC == -1 else f"_lc = {K - 1}"]
+            cc.append(f"_C + {dC} BETWEEN _minC AND _maxC")
+            dest = grid.cell_id_sql("_res", f"_R + {dR}", f"_C + {dC}")
+            cases.append(f"CASE WHEN {' AND '.join(conds + cc)} THEN {dest} END")
+    return located.join(F.broadcast(ext), ["image_id", "band"]).selectExpr(
         "image_id", "band", "cell_id", "role", "h", "w", "media_ref", "data",
-        F.explode(F.concat(*cands)).alias("chunk_id"),
-    )
+        f"explode(filter(array({', '.join(cases)}), x -> x IS NOT NULL)) AS chunk_id")
 
 
 def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
@@ -260,9 +252,10 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
     machinery costs more than the model fit for small groups), this uses
     the scalable many-small-groups pattern: hash-repartition on the chunk
     key, sort within partitions, and stream sorted batches through ONE
-    ``mapInPandas`` that detects group boundaries itself — Arrow overhead
-    is per batch (~100 groups), not per group.  Results are identical; the
-    sort is per-partition (spillable, no extra exchange).
+    ``mapInArrow`` (:func:`tiles.map_tile_batches`) that detects group
+    boundaries itself — Arrow overhead is per batch (~100 groups), not per
+    group, and tiles cross as views of the Arrow buffers, not as pandas
+    rows.  The sort is per-partition (spillable, no extra exchange).
 
     Downsampling the assembled canvas equals downsampling each tile,
     because each proc pixel's f×f source block lies inside exactly one
@@ -282,8 +275,8 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
 
     def process_chunk(image_id, band, chunk_id, rows, out):
         """Assemble + fit + apply one chunk; append per-cell results to
-        ``out`` (dict of lists). ``rows`` = (role, cell_id, h, w,
-        media_ref, data) tuples."""
+        ``out`` (dict of lists; payloads as float32 arrays). ``rows`` =
+        (role, cell_id, h, w, media_ref, data) tuples."""
         Rc, Cc = grid.cell_row(int(chunk_id)), grid.cell_col(int(chunk_id))
         # ghost-group precheck BEFORE any payload decode: a chunk that owns
         # no src tile emits nothing (sparse interiors can still slip past
@@ -331,24 +324,24 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
             out["media_ref"].append(mref)
             out["h"].append(out_px)
             out["w"].append(out_px)
-            out["corr"].append(encode_tile(
-                corr_canvas[lr_ * src_px : (lr_ + 1) * src_px, lc_ * src_px : (lc_ + 1) * src_px]))
-            out["gain"].append(encode_tile(pc[0][sl]))
-            out["offset"].append(encode_tile(pc[1][sl]))
-            out["r2"].append(encode_tile(pc[2][sl]) if find_r2 and pc.shape[0] > 2 else None)
+            out["corr"].append(
+                corr_canvas[lr_ * src_px : (lr_ + 1) * src_px, lc_ * src_px : (lc_ + 1) * src_px])
+            out["gain"].append(pc[0][sl])
+            out["offset"].append(pc[1][sl])
+            out["r2"].append(pc[2][sl] if find_r2 and pc.shape[0] > 2 else None)
             out["n_valid"].append(int(np.count_nonzero(~np.isnan(pc[0][sl]))))
 
-    def stream_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stream_chunks(batches: Iterator[Columns]) -> Iterator[Columns]:
         """Rows arrive sorted by (image_id, band, chunk_id) within the
         partition; process each group as its key completes, emitting one
-        output frame per input batch (bounded memory)."""
+        output batch per input batch (bounded memory)."""
         cur_key = None
         buf: list = []
-        for pdf in batches:
+        for cols in batches:
             out = {f_.name: [] for f_ in FUSED_TILE_SCHEMA.fields}
-            for row in zip(pdf["image_id"], pdf["band"], pdf["chunk_id"],
-                           pdf["role"], pdf["cell_id"], pdf["h"], pdf["w"],
-                           pdf["media_ref"], pdf["data"]):
+            for row in zip(cols["image_id"], cols["band"], cols["chunk_id"],
+                           cols["role"], cols["cell_id"], cols["h"], cols["w"],
+                           cols["media_ref"], cols["data"]):
                 key = (row[0], row[1], row[2])
                 if key != cur_key:
                     if cur_key is not None and buf:
@@ -356,16 +349,16 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
                     cur_key, buf = key, []
                 buf.append((row[3], row[4], row[5], row[6], row[7], row[8]))
             if out["cell_id"]:
-                yield pd.DataFrame(out)
+                yield out
         if cur_key is not None and buf:
             out = {f_.name: [] for f_ in FUSED_TILE_SCHEMA.fields}
             process_chunk(cur_key[0], cur_key[1], cur_key[2], buf, out)
-            yield pd.DataFrame(out)
+            yield out
 
     from homonim_spark.partitioning import pinned_repartition
     keyed = pinned_repartition(routed, "image_id", "band", "chunk_id") \
         .sortWithinPartitions("image_id", "band", "chunk_id")
-    return keyed.mapInPandas(stream_chunks, schema=FUSED_TILE_SCHEMA)
+    return map_tile_batches(keyed, stream_chunks, FUSED_TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -415,8 +408,9 @@ def knn_ref_fallback(tiles: DataFrame, max_ring: int = 2) -> DataFrame:
         .withColumnRenamed("dest_cell", "cell_id")
         .withColumn("media_ref", F.concat(F.lit("knn://"), F.col("media_ref")))
     )
-    row, col = grid.cell_row_col_expr(F.col("cell_id"))
-    borrowed = borrowed.withColumn("row", row.cast("int")).withColumn("col", col.cast("int"))
+    borrowed = borrowed.withColumns({
+        "row": grid.cell_row_expr("cell_id").cast("int"),
+        "col": grid.cell_col_expr("cell_id").cast("int")})
     return tiles.unionByName(borrowed.select(*tiles.columns))
 
 
@@ -488,7 +482,7 @@ def fuse(
     (corrected src tiles + gain/offset/r2 parameter tiles per cell).
 
     Lazy end-to-end: Catalyst sees scan → semi-join → routing expr → one
-    hash-partitioned exchange → mapInPandas.
+    hash-partitioned exchange → mapInArrow.
     """
     params = KernelModelParams(
         model=Model(model), kernel_shape=tuple(kernel_shape), find_r2=find_r2,

@@ -244,7 +244,7 @@ def _coarsen_level(tiles: DataFrame, tile_px: int, value_col: str) -> DataFrame:
     src = tiles.select(
         "image_id", "band", "cell_id",
         F.col(value_col).alias("data"),
-        grid.parent_expr(F.col("cell_id")).alias("parent_id"),
+        grid.parent_expr("cell_id").alias("parent_id"),
     )
     return src.groupBy("image_id", "band", "parent_id").applyInPandas(
         coarsen, schema=_OVERVIEW_SCHEMA)
@@ -272,7 +272,7 @@ def build_overviews(
     aggregate — payloads never reach the driver).  Each returned DataFrame
     is one level, lazily defined, one 4-rows-per-group shuffle per level;
     images whose rule stops earlier simply drop out of deeper levels."""
-    row, col = grid.cell_row_col_expr(F.col("cell_id"))
+    row, col = grid.cell_row_expr("cell_id"), grid.cell_col_expr("cell_id")
     # Per-image level counts COMPUTED AS A COLUMN — no image list ever
     # reaches the driver (at 100 TB the former driver round-trip was
     # O(n_images) rows pulled plus O(n_images) rebuilt per level).

@@ -160,14 +160,14 @@ def knn_ref_tiles(
     """
     part_cols = list(src_cells.columns)  # rank within EACH src row's full
     # key — two bands/images sharing a cell_id must rank independently
-    row_s, col_s = grid.cell_row_col_expr(F.col("cell_id"))
-    src = src_cells.withColumn("_srow", row_s).withColumn("_scol", col_s)
+    src = src_cells.withColumns({"_srow": grid.cell_row_expr("cell_id"),
+                                 "_scol": grid.cell_col_expr("cell_id")})
     cand = src.withColumn(
-        "_nbr", F.explode(grid.k_ring_expr(F.col("cell_id"), max_ring))
+        "_nbr", F.explode(grid.k_ring_expr("cell_id", max_ring))
     )
     ref = ref_cells.select(F.col("cell_id").alias("_nbr")).distinct()
     joined = cand.join(ref, "_nbr", "inner")
-    row_r, col_r = grid.cell_row_col_expr(F.col("_nbr"))
+    row_r, col_r = grid.cell_row_expr("_nbr"), grid.cell_col_expr("_nbr")
     joined = joined.withColumn(
         "ring_dist",
         F.greatest(F.abs(row_r - F.col("_srow")), F.abs(col_r - F.col("_scol"))),

@@ -134,8 +134,8 @@ def vectorize_params(fused: DataFrame) -> DataFrame:
             F.first("n").alias("n"),
         )
     )
-    row, col = grid.cell_row_col_expr(F.col("cell_id"))
-    res_expr = grid.cell_res_expr(F.col("cell_id"))
+    row, col = grid.cell_row_expr("cell_id"), grid.cell_col_expr("cell_id")
+    res_expr = grid.cell_res_expr("cell_id")
     size = F.lit(float(grid.BASE_CELL_SIZE)) / F.pow(F.lit(2.0), res_expr.cast("double"))
     return wide.select(
         "image_id", "band", "cell_id",

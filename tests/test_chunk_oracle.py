@@ -118,4 +118,4 @@ def test_plan_hygiene_fuse_single_exchange(spark):
     assert payload_exchanges == 1, \
         f"expected 1 payload exchange, got {payload_exchanges}\n{plan}"
     assert "BroadcastExchange" in plan  # the semi-join refs side
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan

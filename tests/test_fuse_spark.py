@@ -142,6 +142,25 @@ def test_param_interp_and_sigma_clip_exposed_through_fuse(spark, fixture_tables)
     assert np.nanmedian(np.abs(g_clip - 1.0)) <= np.nanmedian(np.abs(g_raw - 1.0))
 
 
+def test_check_coverage_raises_on_uncovered_src_cell(spark, fixture_tables):
+    """J5 fail fast: a src cell without a same-cell ref tile makes
+    ``fuse(check_coverage=True)`` raise while the plan is built."""
+    from pyspark.sql import functions as F
+    from homonim_spark.enums import ImageContentError
+    spec, docs_pdf, tiles_pdf, docs, tiles = fixture_tables
+    gone = tiles_pdf[tiles_pdf.role == "ref"].cell_id.iloc[5]
+    holed = tiles.filter((F.col("role") == "src") | (F.col("cell_id") != F.lit(int(gone))))
+    assert fuse_ops.coverage_audit(holed) == 1
+    with pytest.raises(ImageContentError, match="do not cover"):
+        fuse_ops.fuse(docs, holed, model="gain", kernel_shape=(3, 3), check_coverage=True)
+
+
+def test_check_coverage_passes_when_covered(spark, fixture_tables):
+    spec, docs_pdf, tiles_pdf, docs, tiles = fixture_tables
+    fused = fuse_ops.fuse(docs, tiles, model="gain", kernel_shape=(3, 3), check_coverage=True)
+    assert fused.count() == spec.cells[0] * spec.cells[1]
+
+
 def test_fuse_gain_blk_offset_corrects_to_reference(spark, fixture_tables):
     """gain-blk-offset (the baseline model, 5×5): corrected src downsampled
     to the proc grid ≈ ref (reference test_fuse_api tolerance abs 2)."""

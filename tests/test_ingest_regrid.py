@@ -206,8 +206,8 @@ def test_cross_crs_regrid_and_fuse_match_same_crs(spark):
                              RES, TILE, grid_crs="EPSG:3857").cache()
         # only the 4x4 target cells (the WGS84 bbox pads past them)
         keep = tiles.filter(
-            (grid.cell_row_col_expr(tiles.cell_id)[0].between(cr0, cr0 + 3))
-            & (grid.cell_row_col_expr(tiles.cell_id)[1].between(cc0, cc0 + 3)))
+            (grid.cell_row_expr("cell_id").between(cr0, cr0 + 3))
+            & (grid.cell_col_expr("cell_id").between(cc0, cc0 + 3)))
         docs = spark.createDataFrame(pd.DataFrame([{
             "doc_id": "d", "spans": [
                 {"kind": "media", "text": "", "media_ref": r["media_ref"],
@@ -380,8 +380,8 @@ def test_modis_sinusoidal_ref_fuses_like_utm_native(spark):
         tiles = regrid_tiles(spark.createDataFrame(pd.DataFrame(rows)),
                              RES, TILE, grid_crs="EPSG:32734").cache()
         keep = tiles.filter(
-            (grid.cell_row_col_expr(tiles.cell_id)[0].between(cr0, cr0 + 3))
-            & (grid.cell_row_col_expr(tiles.cell_id)[1].between(cc0, cc0 + 3)))
+            (grid.cell_row_expr("cell_id").between(cr0, cr0 + 3))
+            & (grid.cell_col_expr("cell_id").between(cc0, cc0 + 3)))
         docs = spark.createDataFrame(pd.DataFrame([{
             "doc_id": "d", "spans": [
                 {"kind": "media", "text": "", "media_ref": r["media_ref"],

@@ -227,3 +227,59 @@ def test_upsample_lanczos_masked_validity_follows_nearest():
     # (6-7 output-px) ring; exclude it generously
     far = nv.copy(); far[:, :] = True; far[0:12, 0:12] = False
     np.testing.assert_allclose(up[far], full[far], atol=1e-3)
+
+
+def _box_sum_clipped_gather(arr, k):
+    """The integral-image box sum read with clipped ``np.ix_`` index gathers
+    on the unpadded image — the formulation ``ops.box_sum`` replaced."""
+    kh, kw = k
+    if kh == 1 and kw == 1:
+        return arr.astype(np.float32, copy=True)
+    ph, pw = kh // 2, kw // 2
+    h, w = arr.shape
+    ii = np.zeros((h + 1, w + 1), dtype=np.float64)
+    ii[1:, 1:] = arr
+    np.cumsum(ii, axis=0, out=ii)
+    np.cumsum(ii, axis=1, out=ii)
+    r0 = np.clip(np.arange(h) - ph, 0, h)
+    r1 = np.clip(np.arange(h) - ph + kh, 0, h)
+    c0 = np.clip(np.arange(w) - pw, 0, w)
+    c1 = np.clip(np.arange(w) - pw + kw, 0, w)
+    out = ii[np.ix_(r1, c1)] - ii[np.ix_(r0, c1)] - ii[np.ix_(r1, c0)] + ii[np.ix_(r0, c0)]
+    return out.astype(np.float32)
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (3, 7), (17, 23), (31, 4), (64, 65)])
+@pytest.mark.parametrize("k", [(1, 1), (3, 3), (5, 7), (1, 9), (21, 21), (99, 3)])
+def test_box_sum_bit_identical_to_clipped_gather(shape, k):
+    rng = np.random.default_rng(hash((shape, k)) % 2**32)
+    arr = (rng.normal(size=shape) * 1e3).astype(np.float32)
+    arr[rng.random(shape) < 0.2] = 0.0
+    got = ops.box_sum(arr, k)
+    want = _box_sum_clipped_gather(arr, k)
+    assert got.dtype == want.dtype == np.float32
+    assert got.tobytes() == want.tobytes()
+
+
+@pytest.mark.parametrize("name", ["nearest", "bilinear", "cubic", "lanczos"])
+@pytest.mark.parametrize("factor", [2, 3])
+@pytest.mark.parametrize("masks", ["none", "shared", "differ", "one_full"])
+def test_stacked_param_upsample_equals_per_plane(name, factor, masks):
+    """Gain and offset planes upsampled as one stack are bit-identical to
+    upsampling each plane alone, whether the planes' NaN masks agree or
+    not (a plane with no NaN takes the unmasked path either way)."""
+    up = ops.param_upsampler(name)
+    rng = np.random.default_rng(11)
+    planes = rng.normal(size=(2, 13, 10)).astype(np.float32)
+    hole = rng.random((13, 10)) < 0.15
+    if masks == "shared":
+        planes[:, hole] = np.nan
+    elif masks == "differ":
+        planes[0, hole] = np.nan
+        planes[1, rng.random((13, 10)) < 0.15] = np.nan
+    elif masks == "one_full":
+        planes[1, hole] = np.nan
+    got = up(planes, (factor, factor))
+    want = np.stack([up(p, (factor, factor)) for p in planes])
+    assert got.shape == want.shape == (2, 13 * factor, 10 * factor)
+    assert got.tobytes() == want.tobytes()

@@ -10,7 +10,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 ALLOWED = {
-    "neighbor": "Python twin of grid.neighbor_expr; tests compare the two",
     "k_ring": "Python twin of grid.k_ring_expr; tests compare the two",
     "parent": "Python twin of grid.parent_expr; tests compare the two",
     "children": "Python inverse of grid.parent; tests check the pair",

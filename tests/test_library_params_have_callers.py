@@ -1,4 +1,5 @@
-"""Every defaulted parameter of a function in ``homonim_spark/`` is passed by
+"""Every defaulted parameter of a function in ``homonim_spark/``, and of a
+top-level function of the driver module ``__spark_entry__.py``, is passed by
 some call in the repository, or has a one-line reason in ``ALLOWED`` why it
 stays.  A parameter that no call sets is its default constant.
 
@@ -19,8 +20,6 @@ ROOT = Path(__file__).resolve().parents[1]
 ALLOWED = {
     "homonim_spark/tiffio.py:_HttpRangeFile.seek(whence)":
         "file protocol: io readers call seek(offset, whence)",
-    "homonim_spark/operators/fuse.py:fuse(check_coverage)":
-        "documented operator (OPERATORS.md J5 coverage predicate, fail fast)",
     "homonim_spark/operators/ingest.py:ingest_gtiff_files(grid_crs)":
         "documented operator (OPERATORS.md GeoKey CRS row: threaded through ingest_gtiff_files*)",
     "homonim_spark/operators/ingest.py:ingest_gtiff_files_windowed(grid_crs)":
@@ -30,7 +29,11 @@ ALLOWED = {
 
 def _library_functions():
     """``(qualified name, call name, FunctionDef, skips self)`` for every
-    function and method in the library."""
+    function and method in the library and every top-level function of
+    the driver module."""
+    for node in ast.parse((ROOT / "__spark_entry__.py").read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield "__spark_entry__.py:" + node.name, node.name, node, False
     for path in sorted((ROOT / "homonim_spark").rglob("*.py")):
         rel = path.relative_to(ROOT).as_posix()
 

@@ -252,3 +252,33 @@ def test_streaming_dedup_min_across_pandas_chunks(spark, tmp_path):
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_map_tile_batches_round_trips_binary_payloads_and_nulls(spark):
+    """The Arrow tile boundary: binary inputs arrive as numpy views (None
+    for null rows), binary outputs are rebuilt from arrays, nulls survive."""
+    from pyspark.sql import types as T
+    from homonim_spark.tiles import map_tile_batches
+
+    rows = [(i, None if i % 5 == 0 else np.arange(i, dtype="<f4").tobytes())
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, data binary").repartition(3)
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("data", T.BinaryType()),
+                           T.StructField("n", T.IntegerType())])
+
+    def double(batches):
+        for cols in batches:
+            yield {"id": cols["id"],
+                   "data": [None if v is None else v.view("<f4") * 2 for v in cols["data"]],
+                   "n": [-1 if v is None else v.nbytes for v in cols["data"]]}
+
+    got = {r["id"]: r for r in map_tile_batches(df, double, schema).collect()}
+    assert sorted(got) == list(range(40))
+    for i, data in rows:
+        r = got[i]
+        if data is None:
+            assert r["data"] is None and r["n"] == -1
+        else:
+            assert r["n"] == 4 * i
+            assert bytes(r["data"]) == (np.arange(i, dtype="<f4") * 2).tobytes()

@@ -168,7 +168,7 @@ def test_real_imagery_grid_contract(spark, real_tiles):
     assert sizes == {"src": SRC_TILE, "ref": REF_TILE}
     # every cell is at the canonical resolution
     bad = tiles.filter(
-        grid.cell_res_expr(F.col("cell_id")) != F.lit(RES)).count()
+        grid.cell_res_expr("cell_id") != F.lit(RES)).count()
     assert bad == 0
 
 

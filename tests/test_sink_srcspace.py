@@ -262,7 +262,7 @@ def test_overview_level_rule_column_matches_python(spark):
     df = spark.createDataFrame(
         rows, "image_id string, band int, cell_id long, ch int, cw int")
 
-    row, col = grid.cell_row_col_expr(F.col("cell_id"))
+    row, col = grid.cell_row_expr("cell_id"), grid.cell_col_expr("cell_id")
     min_shape = F.least(
         F.max(row) - F.min(row) + 1, F.max(col) - F.min(col) + 1) * tile_px
     n_col = _overview_level_col(min_shape, max_levels, min_px)

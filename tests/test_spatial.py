@@ -43,15 +43,21 @@ def test_k_ring_and_distance():
 
 
 def test_spark_column_exprs_match_python(spark):
-    pdf = pd.DataFrame({"res": [10, 12], "row": [5, -7], "col": [-3, 9]})
+    pdf = pd.DataFrame({"res": [10, 12, 1], "row": [5, -7, -1], "col": [-3, 9, 0]})
     df = spark.createDataFrame(pdf).withColumn(
-        "cid", grid.cell_id_col(F.col("res"), F.col("row"), F.col("col")))
-    rows = df.select("res", "row", "col", "cid").collect()
-    for r in rows:
-        assert r["cid"] == grid.cell_id(r["res"], r["row"], r["col"])
-    df2 = df.withColumn("nbr", grid.neighbor_expr(F.col("cid"), F.lit(1), F.lit(-1)))
-    for r in df2.collect():
-        assert r["nbr"] == grid.neighbor(r["cid"], 1, -1)
+        "cid", F.expr(grid.cell_id_sql("res", "row", "col")))
+    df = df.select("res", "row", "col", "cid",
+                   grid.cell_res_expr("cid").alias("r_res"),
+                   grid.cell_row_expr("cid").alias("r_row"),
+                   grid.cell_col_expr("cid").alias("r_col"),
+                   grid.k_ring_expr("cid", 1).alias("ring"),
+                   grid.parent_expr("cid").alias("parent"))
+    for r in df.collect():
+        cid = grid.cell_id(r["res"], r["row"], r["col"])
+        assert r["cid"] == cid
+        assert (r["r_res"], r["r_row"], r["r_col"]) == (r["res"], r["row"], r["col"])
+        assert r["ring"] == grid.k_ring(cid, 1)
+        assert r["parent"] == grid.parent(cid)
 
 
 def test_polyfill_rectangle():
