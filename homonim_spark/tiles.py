@@ -17,19 +17,20 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-DEFAULT_DTYPE = np.float32
+#: the one definition of a payload's pixel format (float32 little-endian)
+TILE_DTYPE = np.dtype("<f4")
 #: canonical internal nodata (reference ``raster_array.py:48-49``)
 DEFAULT_NODATA = float("nan")
 
 
 def encode_tile(arr: np.ndarray) -> bytes:
     """numpy (h, w) or (bands, h, w) float array → float32-LE bytes."""
-    return np.ascontiguousarray(arr, dtype="<f4").tobytes()
+    return np.ascontiguousarray(arr, dtype=TILE_DTYPE).tobytes()
 
 
 def decode_tile(data: bytes, h: int, w: int) -> np.ndarray:
     """float32-LE bytes → numpy (h, w) float32 array (zero-copy view + reshape)."""
-    return np.frombuffer(data, dtype="<f4").reshape(h, w)
+    return np.frombuffer(data, dtype=TILE_DTYPE).reshape(h, w)
 
 
 #: one record batch as ``{column name: list of row values}``
@@ -51,16 +52,17 @@ def _binary_views(col) -> List[Optional[np.ndarray]]:
 
 
 def _binary_array(parts: List[Optional[np.ndarray]]):
-    """A binary Arrow array whose value buffer is one contiguous copy of
-    each part's C-order bytes (None makes a null row)."""
+    """A binary Arrow array whose value buffer holds each part, in C order,
+    as :data:`TILE_DTYPE` pixels (like :func:`encode_tile`; None makes a
+    null row), written in one contiguous copy."""
     import pyarrow as pa
-    sizes = [0 if p is None else p.nbytes for p in parts]
+    sizes = [0 if p is None else p.size * TILE_DTYPE.itemsize for p in parts]
     offsets = np.zeros(len(parts) + 1, np.int32)
     np.cumsum(sizes, out=offsets[1:])
     values = np.empty(int(offsets[-1]), np.uint8)
     for p, o, n in zip(parts, offsets.tolist(), sizes):
         if n:
-            values[o:o + n].view(p.dtype).reshape(p.shape)[...] = p
+            values[o:o + n].view(TILE_DTYPE).reshape(p.shape)[...] = p
     valid = np.array([p is not None for p in parts], dtype=bool)
     n_null = len(parts) - int(valid.sum())
     bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if n_null else None
@@ -77,7 +79,8 @@ def map_tile_batches(df: DataFrame, fn: Callable[[Iterator[Columns]], Iterator[C
     both as ``{column: list}`` dicts.  A binary input column arrives as
     uint8 numpy views into the batch's Arrow value buffer (no ``bytes``
     object per tile, no pandas frame); a binary output column takes numpy
-    arrays (or None for null) and is built from one contiguous buffer."""
+    arrays (or None for null), written as :data:`TILE_DTYPE` pixels into
+    one contiguous buffer."""
     def run(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema

@@ -1,5 +1,6 @@
 """Tests for lineage/checkpoint-resume, streaming, and multimodal plumbing."""
 
+import itertools
 import os
 
 import numpy as np
@@ -256,7 +257,8 @@ def test_streaming_dedup_min_across_pandas_chunks(spark, tmp_path):
 
 def test_map_tile_batches_round_trips_binary_payloads_and_nulls(spark):
     """The Arrow tile boundary: binary inputs arrive as numpy views (None
-    for null rows), binary outputs are rebuilt from arrays, nulls survive."""
+    for null rows), binary outputs are rebuilt from arrays in the tile
+    format whatever their dtype (float32 and float64 here), nulls survive."""
     from pyspark.sql import types as T
     from homonim_spark.tiles import map_tile_batches
 
@@ -270,7 +272,8 @@ def test_map_tile_batches_round_trips_binary_payloads_and_nulls(spark):
     def double(batches):
         for cols in batches:
             yield {"id": cols["id"],
-                   "data": [None if v is None else v.view("<f4") * 2 for v in cols["data"]],
+                   "data": [None if v is None else v.view("<f4").astype(dt) * 2
+                            for v, dt in zip(cols["data"], itertools.cycle((np.float32, np.float64)))],
                    "n": [-1 if v is None else v.nbytes for v in cols["data"]]}
 
     got = {r["id"]: r for r in map_tile_batches(df, double, schema).collect()}
