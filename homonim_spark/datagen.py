@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from homonim_spark import grid
-from homonim_spark.tiles import encode_tile
+from homonim_spark.tiles import encode_tile, map_tile_batches
 
 DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -120,7 +120,8 @@ def media_ref_str(pair_id: str, role: str, band: int, row: int, col: int) -> str
 
 def _tile_rows(spec: RasterFixtureSpec, band: int, cr: int,
                ref_img: np.ndarray, src_img: np.ndarray) -> List[dict]:
-    """Tile rows of one (band, cell-row) strip: ref then src per cell."""
+    """Tile rows of one (band, cell-row) strip: ref then src per cell, each
+    payload a float32 view of its image."""
     trow0, tcol0 = spec.origin
     size = grid.cell_size(FIXTURE_RES)
     px_ref = size / spec.tile
@@ -135,7 +136,7 @@ def _tile_rows(spec: RasterFixtureSpec, band: int, cr: int,
                 "cell_id": grid.cell_id(FIXTURE_RES, trow0 + cr, tcol0 + cc),
                 "row": trow0 + cr, "col": tcol0 + cc, "h": t, "w": t,
                 "transform": [px, 0.0, (tcol0 + cc) * size, 0.0, px, (trow0 + cr) * size],
-                "data": encode_tile(img[cr * t : (cr + 1) * t, cc * t : (cc + 1) * t]),
+                "data": img[cr * t : (cr + 1) * t, cc * t : (cc + 1) * t],
             })
     return rows
 
@@ -179,7 +180,8 @@ def build_pair_tables(spec: RasterFixtureSpec) -> Tuple[pd.DataFrame, pd.DataFra
     for band in range(spec.bands):
         ref_img, src_img = make_pair_arrays(spec, band)
         for cr in range(spec.cells[0]):
-            tile_rows += _tile_rows(spec, band, cr, ref_img, src_img)
+            tile_rows += [{**r, "data": encode_tile(r["data"])}
+                          for r in _tile_rows(spec, band, cr, ref_img, src_img)]
             doc_rows.append(_document(spec.pair_id, band, cr, spec.cells[1], rng))
     return pd.DataFrame(doc_rows), pd.DataFrame(tile_rows)
 
@@ -242,37 +244,30 @@ def distributed_fixture(
     parts = partitions or max(32, n_units // 8)
     units = spark.range(0, n_units, 1, parts)
 
-    def unit(uid):
-        return divmod(int(uid), 4)
+    arrays = {}
 
-    def gen_tiles(batches):
+    def gen_tiles(uid):
+        pi, cr = divmod(uid, 4)
+        spec = RasterFixtureSpec(
+            pair_id=f"pair{pi}", tile=tile,
+            true_gain=1.0 + 0.25 * (pi % 4),
+            true_offset=float(2 * (pi % 3)),
+            origin=(8 * (pi // 4096), 8 * (pi % 4096)),
+        )
         # consecutive unit ids are the cell rows of one pair: build that
         # pair's images once, not once per cell row
-        key = arrays = None
-        for pdf in batches:
-            rows = []
-            for pi, cr in map(unit, pdf["id"]):
-                spec = RasterFixtureSpec(
-                    pair_id=f"pair{pi}", tile=tile,
-                    true_gain=1.0 + 0.25 * (pi % 4),
-                    true_offset=float(2 * (pi % 3)),
-                    origin=(8 * (pi // 4096), 8 * (pi % 4096)),
-                )
-                if key != pi:
-                    key, arrays = pi, make_pair_arrays(spec, 0)
-                rows += _tile_rows(spec, 0, cr, *arrays)
-            yield pd.DataFrame(rows, columns=TILES_SCHEMA.fieldNames())
+        if pi not in arrays:
+            arrays.clear()
+            arrays[pi] = make_pair_arrays(spec, 0)
+        return [tuple(r.values()) for r in _tile_rows(spec, 0, cr, *arrays[pi])]
 
-    def gen_docs(batches):
-        for pdf in batches:
-            rows = [_document(f"pair{pi}", 0, cr, 4,
-                              np.random.default_rng([42, pi, 0, cr]))
-                    for pi, cr in map(unit, pdf["id"])]
-            yield pd.DataFrame(rows, columns=DOCUMENTS_SCHEMA.fieldNames())
+    def gen_docs(uid):
+        pi, cr = divmod(uid, 4)
+        doc = _document(f"pair{pi}", 0, cr, 4, np.random.default_rng([42, pi, 0, cr]))
+        yield doc["doc_id"], doc["spans"]
 
-    tiles = units.mapInPandas(gen_tiles, schema=TILES_SCHEMA)
-    docs = units.mapInPandas(gen_docs, schema=DOCUMENTS_SCHEMA)
-    return docs, tiles
+    return (map_tile_batches(units, gen_docs, DOCUMENTS_SCHEMA),
+            map_tile_batches(units, gen_tiles, TILES_SCHEMA))
 
 
 # --- block-norm oracle fixture ----------------------------------------------

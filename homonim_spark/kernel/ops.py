@@ -238,40 +238,53 @@ def _shift_cols(a: np.ndarray, s: int) -> np.ndarray:
     return np.concatenate([np.repeat(a[..., :1], -s, axis=-1), a[..., :s]], axis=-1)
 
 
-def _catmull_rom_weights(t: float):
-    """4-tap cubic-convolution weights at fraction ``t`` (a = −0.5, the
-    Catmull-Rom spline — interpolating, reproduces linears exactly)."""
-    t = float(t)
-    t2, t3 = t * t, t * t * t
-    return (np.float32(-0.5 * t3 + t2 - 0.5 * t),
-            np.float32(1.5 * t3 - 2.5 * t2 + 1.0),
-            np.float32(-1.5 * t3 + 2.0 * t2 + 0.5 * t),
-            np.float32(0.5 * t3 - 0.5 * t2))
+def _catmull_rom(d: np.ndarray) -> np.ndarray:
+    """Cubic-convolution kernel at distances ``d`` (a = −0.5, the
+    Catmull-Rom spline — interpolating, reproduces linears exactly);
+    0 at |d| ≥ 2."""
+    at = np.abs(d)
+    out = np.zeros_like(d, dtype=np.float64)
+    m1 = at < 1
+    m2 = ~m1 & (at < 2)
+    out[m1] = 1.5 * at[m1] ** 3 - 2.5 * at[m1] ** 2 + 1.0
+    out[m2] = -0.5 * at[m2] ** 3 + 2.5 * at[m2] ** 2 - 4.0 * at[m2] + 2.0
+    return out
 
 
-def _lanczos_weights(t: float):
-    """6-tap Lanczos-3 weights at fraction ``t``: w(d) = sinc(d)·sinc(d/3)
-    for taps at distances d = t + 2 − m, m = 0..5, normalized to sum 1
-    (the standard partition-of-unity correction for the windowed sinc).
-    Lanczos-3 matches GDAL's ``Resampling.lanczos``."""
-    d = float(t) + np.arange(2, -4, -1, dtype=np.float64)
-    w = np.sinc(d) * np.sinc(d / 3)
-    w /= w.sum()
-    return w.astype(np.float32)
+def _lanczos3(d: np.ndarray) -> np.ndarray:
+    """Lanczos-3 kernel sinc(d)·sinc(d/3) at distances ``d``; 0 at
+    |d| ≥ 3.  Lanczos-3 matches GDAL's ``Resampling.lanczos``."""
+    out = np.zeros_like(d, dtype=np.float64)
+    m = np.abs(d) < 3
+    out[m] = np.sinc(d[m]) * np.sinc(d[m] / 3)
+    return out
+
+
+#: separable resampling kernels: name → (support radius r in px, kernel of
+#: distance); a sample reads the 2r input px at offsets 1 − r .. r
+KERNELS = {"cubic": (2, _catmull_rom), "lanczos": (3, _lanczos3)}
 
 
 def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
-                        weights) -> np.ndarray:
-    """Integer-factor separable upsample, pixel-center aligned, edge
-    replicated: ``weights(t)`` gives the n taps at fraction t, tap m at input
-    offset floor + m − (n/2 − 1).  Weights repeat with period f (as in
-    :func:`upsample_bilinear`), so a pass is n clamped shifts per phase."""
+                        kind: str) -> np.ndarray:
+    """Integer-factor separable upsample with ``KERNELS[kind]``, pixel-center
+    aligned, edge replicated: at fraction t the taps m = 0..2r−1 sit at
+    input offset floor + m − (r − 1) and weigh kernel(t + r − 1 − m),
+    normalized to sum 1 (the partition-of-unity correction a windowed sinc
+    needs).  Weights repeat with period f (as in :func:`upsample_bilinear`),
+    so a pass is 2r clamped shifts per phase."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
     h, w = arr.shape[-2:]
     a = np.ascontiguousarray(arr, dtype=np.float32)
     out = np.empty(arr.shape[:-2] + (h * fh, w * fw), dtype=np.float32)
+    r, kernel = KERNELS[kind]
+    lo = 1 - r
+
+    def weights(t: float) -> np.ndarray:
+        wt = kernel(t - (lo + np.arange(2 * r)))
+        return (wt / wt.sum()).astype(np.float32)
 
     def phase(f: int, i: int):
         o = (i + 0.5) / f - 0.5
@@ -282,7 +295,6 @@ def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
     for i in range(fh):
         br, ty = phase(fh, i)
         wy = weights(ty)
-        lo = 1 - len(wy) // 2
         ri = row_cache.get((br, round(ty, 12)))
         if ri is None:
             ri = sum(wy[m] * _shift_rows(a, br + lo + m) for m in range(len(wy)))
@@ -298,13 +310,13 @@ def _upsample_separable(arr: np.ndarray, factor: Tuple[int, int],
 def upsample_cubic(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     """Catmull-Rom upsample — the analogue of the reference's default
     ``Resampling.cubic_spline`` param upsampling (``kernel_model.py:101``)."""
-    return _upsample_separable(arr, factor, _catmull_rom_weights)
+    return _upsample_separable(arr, factor, "cubic")
 
 
 def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     """Lanczos-3 upsample — the reference's sharpest resampling option,
     ``Resampling.lanczos`` (``raster_array.py:526-578``)."""
-    return _upsample_separable(arr, factor, _lanczos_weights)
+    return _upsample_separable(arr, factor, "lanczos")
 
 
 def upsample_cubic_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:

@@ -6,24 +6,22 @@ per band plus a cross-band ``Mean`` row (``compare.py:142-186``).
 
 Spark-native shape: an explicit **cell-ID hash join** of source tiles to
 reference tiles (the reference's implicit block pairing, J1), one
-``mapInPandas`` producing per-tile partial sums as plain columns, then a
-built-in ``groupBy(band).sum()`` — Spark's partial+final aggregation replaces
-the driver-side accumulation loop.  Sums accumulate in float64, matching the
+:func:`~homonim_spark.tiles.map_tile_batches` UDF producing per-tile
+partial sums as plain columns, then a built-in ``groupBy(band).sum()`` —
+Spark's partial+final aggregation replaces the driver-side accumulation
+loop.  Sums accumulate in float64, matching the
 reference's block-size invariance to rel 1e-5 (``tests/test_compare.py:108-127``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark.kernel import ops
-from homonim_spark.tiles import decode_tile
+from homonim_spark.tiles import decode_tile, map_tile_batches
 
 _SUMS_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -61,29 +59,21 @@ def block_sums(pairs: DataFrame, proc_crs: str = "ref") -> DataFrame:
     a finer one — reference ``compare.py:236-242``; either image may be the
     finer), mask to the common valid set, emit the seven sums."""
 
-    def sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                src = decode_tile(r.src_data, r.src_h, r.src_w)
-                ref = decode_tile(r.ref_data, r.ref_h, r.ref_w)
-                if proc_crs == "src":
-                    ref = ops.to_grid(ref, r.ref_h, r.src_h)
-                else:
-                    src = ops.to_grid(src, r.src_h, r.ref_h)
-                mask = ~np.isnan(src) & ~np.isnan(ref)
-                s = np.where(mask, src, 0).astype(np.float64)
-                v = np.where(mask, ref, 0).astype(np.float64)
-                rows.append({
-                    "image_id": r.image_id, "band": int(r.band),
-                    "src_sum": s.sum(), "ref_sum": v.sum(),
-                    "src2_sum": (s ** 2).sum(), "ref2_sum": (v ** 2).sum(),
-                    "src_ref_sum": (s * v).sum(), "res2_sum": ((v - s) ** 2).sum(),
-                    "mask_sum": float(mask.sum()),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in _SUMS_SCHEMA.fields])
+    def sums(image_id, band, src_h, src_w, src, ref_h, ref_w, ref):
+        src = decode_tile(src, src_h, src_w)
+        ref = decode_tile(ref, ref_h, ref_w)
+        if proc_crs == "src":
+            ref = ops.to_grid(ref, ref_h, src_h)
+        else:
+            src = ops.to_grid(src, src_h, ref_h)
+        mask = ~np.isnan(src) & ~np.isnan(ref)
+        s = np.where(mask, src, 0).astype(np.float64)
+        v = np.where(mask, ref, 0).astype(np.float64)
+        yield (image_id, band, s.sum(), v.sum(), (s ** 2).sum(), (v ** 2).sum(),
+               (s * v).sum(), ((v - s) ** 2).sum(), float(mask.sum()))
 
-    return pairs.mapInPandas(sums, schema=_SUMS_SCHEMA)
+    return map_tile_batches(pairs.select("image_id", "band", "src_h", "src_w", "src_data",
+                                         "ref_h", "ref_w", "ref_data"), sums, _SUMS_SCHEMA)
 
 
 def _final_stats(agg: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ Spark-native re-expression:
                      two selectExpr calls of JVM SQL text)
                                         │ ONE shuffle on (image_id, band, chunk)
                                         ▼
-        repartition+sort ► mapInArrow streaming groups
+        tiles.map_tile_groups (repartition+sort ► mapInArrow)
                      (tiles as Arrow buffer views; assemble canvas +
                      fit + apply; one output buffer per column per batch)
                                         │
@@ -28,7 +28,7 @@ Design notes for 100 TB scale:
 - **Chunked processing blocks**: a group is a *chunk* of ``chunk × chunk``
   cells (default 4×4), the engine analogue of the reference's
   ``max_block_mem`` block sizing (``raster_pair.py:227-269``) — it amortizes
-  the Arrow/pandas crossing over 16 tiles, fits one model per canvas instead
+  the Arrow crossing over 16 tiles, fits one model per canvas instead
   of per tile (bigger vectorized numpy ops), and needs halo tiles only at
   chunk borders, so border-tile duplication shrinks as ~2/chunk.
 - The src↔ref pairing (reference BlockPair generation,
@@ -48,7 +48,7 @@ Design notes for 100 TB scale:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -62,7 +62,7 @@ from homonim_spark.kernel.models import (
     chunk_halo,
     fit_and_apply_canvas,
 )
-from homonim_spark.tiles import Columns, decode_tile, map_tile_batches
+from homonim_spark.tiles import decode_tile, map_tile_groups
 
 # ---------------------------------------------------------------------------
 # schemas
@@ -246,16 +246,10 @@ def route_tiles(tiles: DataFrame, cfg: FuseConfig) -> DataFrame:
 
 
 def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
-    """Chunk-grouped assemble + fit + apply over whole-tile rows.
-
-    Instead of ``groupBy().applyInPandas`` (whose per-group Arrow/pandas
-    machinery costs more than the model fit for small groups), this uses
-    the scalable many-small-groups pattern: hash-repartition on the chunk
-    key, sort within partitions, and stream sorted batches through ONE
-    ``mapInArrow`` (:func:`tiles.map_tile_batches`) that detects group
-    boundaries itself — Arrow overhead is per batch (~100 groups), not per
-    group, and tiles cross as views of the Arrow buffers, not as pandas
-    rows.  The sort is per-partition (spillable, no extra exchange).
+    """Chunk-grouped assemble + fit + apply over whole-tile rows, one
+    :func:`tiles.map_tile_groups` group per (image_id, band, chunk_id):
+    Arrow overhead is per batch (~100 groups), not per group, and tiles
+    cross as views of the Arrow buffers, not as pandas rows.
 
     Downsampling the assembled canvas equals downsampling each tile,
     because each proc pixel's f×f source block lies inside exactly one
@@ -273,10 +267,10 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
         Model(params.model) == Model.gain_offset and params.r2_inpaint_thresh is not None
     )
 
-    def process_chunk(image_id, band, chunk_id, rows, out):
-        """Assemble + fit + apply one chunk; append per-cell results to
-        ``out`` (dict of lists; payloads as float32 arrays). ``rows`` =
-        (role, cell_id, h, w, media_ref, data) tuples."""
+    def process_chunk(image_id, band, chunk_id, rows):
+        """Assemble + fit + apply one chunk; yield one output row per owned
+        cell (payloads as float32 arrays). ``rows`` = (cell_id, role, h, w,
+        media_ref, data) tuples."""
         Rc, Cc = grid.cell_row(int(chunk_id)), grid.cell_col(int(chunk_id))
         # ghost-group precheck BEFORE any payload decode: a chunk that owns
         # no src tile emits nothing (sparse interiors can still slip past
@@ -284,7 +278,7 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
         if not any(role == "src"
                    and grid.cell_row(int(cid)) // K == Rc
                    and grid.cell_col(int(cid)) // K == Cc
-                   for role, cid, _h, _w, _m, _d in rows):
+                   for cid, role, _h, _w, _m, _d in rows):
             return
         # canvas origins in global pixels (coarse grid; per-role scaled)
         pg0r, pg0c = Rc * span - oh, Cc * span - ow          # coarse grid
@@ -293,7 +287,7 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
         src_canvas = np.full((ph_ * s_sc, pw_ * s_sc), np.nan, dtype=np.float32)
         owned = []
 
-        for role, cell_id, h, w, media_ref, data in rows:
+        for cell_id, role, h, w, media_ref, data in rows:
             arr = decode_tile(data, h, w)
             cr, cc_ = grid.cell_row(int(cell_id)), grid.cell_col(int(cell_id))
             canvas, sc = (src_canvas, s_sc) if role == "src" else (ref_canvas, r_sc)
@@ -318,47 +312,13 @@ def fuse_blocks_routed(routed: DataFrame, cfg: FuseConfig) -> DataFrame:
         for cid, mref, lr_, lc_ in owned:
             sl = (slice(lr_ * out_px, (lr_ + 1) * out_px),
                   slice(lc_ * out_px, (lc_ + 1) * out_px))
-            out["image_id"].append(image_id)
-            out["band"].append(int(band))
-            out["cell_id"].append(cid)
-            out["media_ref"].append(mref)
-            out["h"].append(out_px)
-            out["w"].append(out_px)
-            out["corr"].append(
-                corr_canvas[lr_ * src_px : (lr_ + 1) * src_px, lc_ * src_px : (lc_ + 1) * src_px])
-            out["gain"].append(pc[0][sl])
-            out["offset"].append(pc[1][sl])
-            out["r2"].append(pc[2][sl] if find_r2 and pc.shape[0] > 2 else None)
-            out["n_valid"].append(int(np.count_nonzero(~np.isnan(pc[0][sl]))))
+            corr = corr_canvas[lr_ * src_px : (lr_ + 1) * src_px, lc_ * src_px : (lc_ + 1) * src_px]
+            yield (image_id, int(band), cid, mref, out_px, out_px, corr, pc[0][sl], pc[1][sl],
+                   pc[2][sl] if find_r2 and pc.shape[0] > 2 else None,
+                   int(np.count_nonzero(~np.isnan(pc[0][sl]))))
 
-    def stream_chunks(batches: Iterator[Columns]) -> Iterator[Columns]:
-        """Rows arrive sorted by (image_id, band, chunk_id) within the
-        partition; process each group as its key completes, emitting one
-        output batch per input batch (bounded memory)."""
-        cur_key = None
-        buf: list = []
-        for cols in batches:
-            out = {f_.name: [] for f_ in FUSED_TILE_SCHEMA.fields}
-            for row in zip(cols["image_id"], cols["band"], cols["chunk_id"],
-                           cols["role"], cols["cell_id"], cols["h"], cols["w"],
-                           cols["media_ref"], cols["data"]):
-                key = (row[0], row[1], row[2])
-                if key != cur_key:
-                    if cur_key is not None and buf:
-                        process_chunk(cur_key[0], cur_key[1], cur_key[2], buf, out)
-                    cur_key, buf = key, []
-                buf.append((row[3], row[4], row[5], row[6], row[7], row[8]))
-            if out["cell_id"]:
-                yield out
-        if cur_key is not None and buf:
-            out = {f_.name: [] for f_ in FUSED_TILE_SCHEMA.fields}
-            process_chunk(cur_key[0], cur_key[1], cur_key[2], buf, out)
-            yield out
-
-    from homonim_spark.partitioning import pinned_repartition
-    keyed = pinned_repartition(routed, "image_id", "band", "chunk_id") \
-        .sortWithinPartitions("image_id", "band", "chunk_id")
-    return map_tile_batches(keyed, stream_chunks, FUSED_TILE_SCHEMA)
+    return map_tile_groups(routed, ("image_id", "band", "chunk_id"), process_chunk,
+                           FUSED_TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

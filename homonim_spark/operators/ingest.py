@@ -11,22 +11,25 @@ pipeline — after this job every tile satisfies the aligned-grid contract
 
 Per tile: compute the canonical cells its footprint covers, bilinear-sample
 the canonical pixel centers from the tile (NaN outside / at nodata), emit
-per-cell fragments; a groupBy(cell) mosaic merges fragments (valid pixels
-win; overlaps average).  All inside Arrow UDFs; one shuffle.
+per-cell fragments (:func:`~homonim_spark.tiles.map_tile_batches`); a
+per-cell mosaic (:func:`~homonim_spark.tiles.map_tile_groups`) merges
+fragments (valid pixels win; overlaps average).  One shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from functools import reduce
+from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark import grid
-from homonim_spark.tiles import decode_tile, encode_tile
+from homonim_spark.crs import transform_points
+from homonim_spark.kernel.ops import KERNELS
+from homonim_spark.tiles import decode_tile, map_tile_batches, map_tile_groups
 
 _FRAG_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -64,33 +67,6 @@ def bilinear_sample(arr: np.ndarray, ys: np.ndarray, xs: np.ndarray) -> np.ndarr
     return out
 
 
-def _lanczos_w(t: np.ndarray) -> np.ndarray:
-    """Lanczos-3 weights sinc(t)·sinc(t/3) on |t| < 3 (0 outside)."""
-    out = np.zeros_like(t, dtype=np.float64)
-    m = np.abs(t) < 3
-    tm = t[m]
-    out[m] = np.sinc(tm) * np.sinc(tm / 3)
-    return out
-
-
-def _catmull_rom_w(t: np.ndarray) -> np.ndarray:
-    """Catmull-Rom cubic weights (a = −0.5) on |t| < 2."""
-    at = np.abs(t)
-    out = np.zeros_like(t, dtype=np.float64)
-    m1 = at < 1
-    m2 = ~m1 & (at < 2)
-    out[m1] = 1.5 * at[m1] ** 3 - 2.5 * at[m1] ** 2 + 1.0
-    out[m2] = -0.5 * at[m2] ** 3 + 2.5 * at[m2] ** 2 - 4.0 * at[m2] + 2.0
-    return out
-
-
-#: separable-kernel taps per resampling method: (pixel offsets, weight fn)
-_KERNEL_TAPS = {
-    "cubic": (np.arange(-1, 3), _catmull_rom_w),
-    "lanczos": (np.arange(-2, 4), _lanczos_w),
-}
-
-
 def kernel_sample(arr: np.ndarray, ys: np.ndarray, xs: np.ndarray,
                   kind: str) -> np.ndarray:
     """Sample ``arr`` at fractional pixel coords with a separable kernel
@@ -101,7 +77,8 @@ def kernel_sample(arr: np.ndarray, ys: np.ndarray, xs: np.ndarray,
     (``raster_array.py:526-578``).  Targets outside the source extent, or
     with no valid tap, are NaN.  All-tap-valid interior points reduce to
     the textbook separable interpolation exactly (den = Σw = 1)."""
-    offs, wfun = _KERNEL_TAPS[kind]
+    r, wfun = KERNELS[kind]
+    offs = np.arange(1 - r, r + 1)
     h, w = arr.shape
     out = np.full(ys.shape, np.nan, dtype=np.float32)
     inb = (ys >= 0) & (ys <= h - 1) & (xs >= 0) & (xs <= w - 1)
@@ -189,80 +166,63 @@ def regrid_tiles(tiles: DataFrame, res: int, tile_px: int,
     px_out = cell_sz / tile_px
     has_crs = grid_crs is not None and "crs" in tiles.columns
 
-    def fragments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from homonim_spark.crs import transform_points
-        for pdf in batches:
-            out = {f.name: [] for f in _FRAG_SCHEMA.fields}
-            for r in pdf.itertuples(index=False):
-                arr = decode_tile(r.data, r.h, r.w)
-                a, b, c, d, e, f_ = [float(v) for v in r.transform]
-                tile_crs = getattr(r, "crs", None) if has_crs else None
-                # NULL crs (e.g. a GTiff with no GeoKey directory) → assume
-                # grid CRS, the documented legacy contract
-                warp = isinstance(tile_crs, str) and tile_crs != grid_crs
-                # covered cell range from the tile boundary (corners alone
-                # underestimate under a curved warp — sample the perimeter)
-                t = np.linspace(0.0, 1.0, 9)
-                cols = np.concatenate([t * r.w, t * r.w,
-                                       np.zeros_like(t), np.full_like(t, r.w)])
-                rows = np.concatenate([np.zeros_like(t), np.full_like(t, r.h),
-                                       t * r.h, t * r.h])
-                xs = a * cols + b * rows + c
-                ys = d * cols + e * rows + f_
-                if warp:
-                    xs, ys = transform_points(tile_crs, grid_crs, xs, ys)
-                c0 = int(np.floor(xs.min() / cell_sz))
-                c1 = int(np.floor((xs.max() - 1e-9) / cell_sz))
-                r0 = int(np.floor(ys.min() / cell_sz))
-                r1 = int(np.floor((ys.max() - 1e-9) / cell_sz))
-                # inverse affine (a,b;d,e)
-                det = a * e - b * d
-                ia, ib, id_, ie = e / det, -b / det, -d / det, a / det
-                # canonical pixel centers vectorized by CELL-ROW STRIPE:
-                # one transform_points call and one sampler pass per stripe
-                # (the per-cell-loop form made tile_px² warp calls per cell;
-                # the full-canvas form bounded scratch by the tile's
-                # bounding BOX, which under a curved warp or diagonal tile
-                # can be many times the tile area — stripes cap scratch at
-                # O(n_cols·tile_px²) while per-element arithmetic is
-                # unchanged, so payloads stay bit-identical)
-                crs_r = np.arange(r0, r1 + 1)
-                crs_c = np.arange(c0, c1 + 1)
-                gx = (crs_c[:, None] * cell_sz
-                      + (np.arange(tile_px)[None, :] + 0.5) * px_out).ravel()
-                for i_r, cr in enumerate(crs_r):
-                    gy = (cr * cell_sz
-                          + (np.arange(tile_px) + 0.5) * px_out)
-                    WX, WY = np.meshgrid(gx, gy)
-                    if warp:
-                        fx, fy = transform_points(grid_crs, tile_crs,
-                                                  WX.ravel(), WY.ravel())
-                        WX = fx.reshape(WX.shape)
-                        WY = fy.reshape(WY.shape)
-                    # world → source pixel coords (center convention:
-                    # pixel (i,j) center at col=j+0.5, row=i+0.5)
-                    px_c = ia * (WX - c) + ib * (WY - f_) - 0.5
-                    py_c = id_ * (WX - c) + ie * (WY - f_) - 0.5
-                    vals_row = sampler(arr, py_c, px_c)
-                    for i_c, cc in enumerate(crs_c):
-                        vals = vals_row[:, i_c * tile_px:(i_c + 1) * tile_px]
-                        valid = ~np.isnan(vals)
-                        if not valid.any():
-                            continue
-                        out["image_id"].append(r.image_id)
-                        out["role"].append(r.role)
-                        out["band"].append(int(r.band))
-                        out["cell_id"].append(grid.cell_id(res, int(cr), int(cc)))
-                        out["h"].append(tile_px)
-                        out["w"].append(tile_px)
-                        out["sum"].append(encode_tile(np.where(valid, vals, 0)))
-                        out["cnt"].append(encode_tile(valid.astype(np.float32)))
-            yield pd.DataFrame(out)
+    def fragments(image_id, role, band, transform, h, w, data, tile_crs):
+        arr = decode_tile(data, h, w)
+        a, b, c, d, e, f_ = transform
+        # NULL crs (e.g. a GTiff with no GeoKey directory) → assume
+        # grid CRS, the documented legacy contract
+        warp = tile_crs is not None and tile_crs != grid_crs
+        # covered cell range from the tile boundary (corners alone
+        # underestimate under a curved warp — sample the perimeter)
+        t = np.linspace(0.0, 1.0, 9)
+        cols = np.concatenate([t * w, t * w, np.zeros_like(t), np.full_like(t, w)])
+        rows = np.concatenate([np.zeros_like(t), np.full_like(t, h), t * h, t * h])
+        xs = a * cols + b * rows + c
+        ys = d * cols + e * rows + f_
+        if warp:
+            xs, ys = transform_points(tile_crs, grid_crs, xs, ys)
+        c0 = int(np.floor(xs.min() / cell_sz))
+        c1 = int(np.floor((xs.max() - 1e-9) / cell_sz))
+        r0 = int(np.floor(ys.min() / cell_sz))
+        r1 = int(np.floor((ys.max() - 1e-9) / cell_sz))
+        # inverse affine (a,b;d,e)
+        det = a * e - b * d
+        ia, ib, id_, ie = e / det, -b / det, -d / det, a / det
+        # canonical pixel centers vectorized by CELL-ROW STRIPE:
+        # one transform_points call and one sampler pass per stripe
+        # (the per-cell-loop form made tile_px² warp calls per cell;
+        # the full-canvas form bounded scratch by the tile's
+        # bounding BOX, which under a curved warp or diagonal tile
+        # can be many times the tile area — stripes cap scratch at
+        # O(n_cols·tile_px²) while per-element arithmetic is
+        # unchanged, so payloads stay bit-identical)
+        crs_c = np.arange(c0, c1 + 1)
+        gx = (crs_c[:, None] * cell_sz
+              + (np.arange(tile_px)[None, :] + 0.5) * px_out).ravel()
+        for cr in range(r0, r1 + 1):
+            gy = cr * cell_sz + (np.arange(tile_px) + 0.5) * px_out
+            WX, WY = np.meshgrid(gx, gy)
+            if warp:
+                fx, fy = transform_points(grid_crs, tile_crs, WX.ravel(), WY.ravel())
+                WX = fx.reshape(WX.shape)
+                WY = fy.reshape(WY.shape)
+            # world → source pixel coords (center convention:
+            # pixel (i,j) center at col=j+0.5, row=i+0.5)
+            px_c = ia * (WX - c) + ib * (WY - f_) - 0.5
+            py_c = id_ * (WX - c) + ie * (WY - f_) - 0.5
+            vals_row = sampler(arr, py_c, px_c)
+            for i_c, cc in enumerate(crs_c):
+                vals = vals_row[:, i_c * tile_px:(i_c + 1) * tile_px]
+                valid = ~np.isnan(vals)
+                if valid.any():
+                    yield (image_id, role, band, grid.cell_id(res, int(cr), int(cc)),
+                           tile_px, tile_px, np.where(valid, vals, np.float32(0)),
+                           valid.astype(np.float32))
 
-    in_cols = ["image_id", "role", "band", "transform", "h", "w", "data"]
-    if has_crs:
-        in_cols.append("crs")
-    frags = tiles.select(*in_cols).mapInPandas(fragments, schema=_FRAG_SCHEMA)
+    crs = "crs" if has_crs else F.lit(None).cast("string")
+    frags = map_tile_batches(
+        tiles.select("image_id", "role", "band", "transform", "h", "w", "data", crs),
+        fragments, _FRAG_SCHEMA)
 
     out_schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
@@ -278,52 +238,18 @@ def regrid_tiles(tiles: DataFrame, res: int, tile_px: int,
         T.StructField("data", T.BinaryType(), False),
     ])
 
-    def mosaic(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur = None
-        acc_sum = acc_cnt = None
+    def mosaic(image_id, role, band, cell_id, rows):
+        # valid pixels win; overlapping fragments average (float64 sums)
+        acc_sum = reduce(np.add, (decode_tile(v, h, w).astype(np.float64) for h, w, v, _ in rows))
+        acc_cnt = reduce(np.add, (decode_tile(n, h, w).astype(np.float64) for h, w, _, n in rows))
+        with np.errstate(invalid="ignore"):
+            vals = np.where(acc_cnt > 0, acc_sum / acc_cnt, np.nan).astype(np.float32)
+        cr, cc = grid.cell_row(cell_id), grid.cell_col(cell_id)
+        yield (f"tile://{image_id}/{role}/{band}/{cr}/{cc}", image_id, role, band, cell_id,
+               cr, cc, tile_px, tile_px,
+               [px_out, 0.0, cc * cell_sz, 0.0, px_out, cr * cell_sz], vals)
 
-        def flush(out):
-            image_id, role, band, cell_id = cur
-            with np.errstate(invalid="ignore"):
-                vals = np.where(acc_cnt > 0, acc_sum / acc_cnt, np.nan).astype(np.float32)
-            cr, cc = grid.cell_row(int(cell_id)), grid.cell_col(int(cell_id))
-            out["media_ref"].append(f"tile://{image_id}/{role}/{band}/{cr}/{cc}")
-            out["image_id"].append(image_id)
-            out["role"].append(role)
-            out["band"].append(int(band))
-            out["cell_id"].append(int(cell_id))
-            out["row"].append(cr)
-            out["col"].append(cc)
-            out["h"].append(tile_px)
-            out["w"].append(tile_px)
-            out["transform"].append([px_out, 0.0, cc * cell_sz, 0.0, px_out, cr * cell_sz])
-            out["data"].append(encode_tile(vals))
-
-        for pdf in batches:
-            out = {f.name: [] for f in out_schema.fields}
-            for row in zip(pdf["image_id"], pdf["role"], pdf["band"], pdf["cell_id"],
-                           pdf["h"], pdf["w"], pdf["sum"], pdf["cnt"]):
-                key = (row[0], row[1], int(row[2]), int(row[3]))
-                s = decode_tile(row[6], row[4], row[5]).astype(np.float64)
-                n = decode_tile(row[7], row[4], row[5]).astype(np.float64)
-                if key != cur:
-                    if cur is not None:
-                        flush(out)
-                    cur, acc_sum, acc_cnt = key, s.copy(), n.copy()
-                else:
-                    acc_sum += s
-                    acc_cnt += n
-            if out["cell_id"]:
-                yield pd.DataFrame(out)
-        if cur is not None:
-            out = {f.name: [] for f in out_schema.fields}
-            flush(out)
-            yield pd.DataFrame(out)
-
-    from homonim_spark.partitioning import pinned_repartition
-    keyed = pinned_repartition(frags, "image_id", "role", "band", "cell_id") \
-        .sortWithinPartitions("image_id", "role", "band", "cell_id")
-    return keyed.mapInPandas(mosaic, schema=out_schema)
+    return map_tile_groups(frags, ("image_id", "role", "band", "cell_id"), mosaic, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -342,11 +268,16 @@ _BAND_ROW_SCHEMA = T.StructType([
 ])
 
 
-def _emit_band_rows(out: dict, src, path: str, meta, y0: int, y1: int,
-                    role: str, nodata: float | None) -> None:
+_WINDOW_SCHEMA = T.StructType([T.StructField("path", T.StringType()),
+                              T.StructField("y0", T.IntegerType()),
+                              T.StructField("y1", T.IntegerType())])
+
+
+def _emit_band_rows(src, path: str, meta, y0: int, y1: int,
+               role: str, nodata: float | None) -> Iterator[tuple]:
     """Decode rows [y0, y1) of ``src`` (a path, URL or raw file bytes with
-    IFD ``meta``) and append one ``_BAND_ROW_SCHEMA`` row per band to
-    ``out``: nodata → NaN, transform = the window-local affine."""
+    IFD ``meta``) into one ``_BAND_ROW_SCHEMA`` row per band: nodata →
+    NaN, transform = the window-local affine."""
     from homonim_spark.tiffio import decode_window
     if meta.transform is None:
         raise ValueError(f"{path}: no geo transform tags")
@@ -361,14 +292,7 @@ def _emit_band_rows(out: dict, src, path: str, meta, y0: int, y1: int,
     tr = [float(v) for v in (a, b, b * y0 + c, d, e, e * y0 + f_)]
     stem = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
     for band in range(arr.shape[0]):
-        out["image_id"].append(stem)
-        out["role"].append(role)
-        out["band"].append(band)
-        out["transform"].append(tr)
-        out["h"].append(arr.shape[1])
-        out["w"].append(arr.shape[2])
-        out["crs"].append(meta.crs)
-        out["data"].append(encode_tile(arr[band]))
+        yield stem, role, band, tr, arr.shape[1], arr.shape[2], meta.crs, arr[band]
 
 
 def gtiff_band_rows(binary_files: DataFrame, role: str,
@@ -382,19 +306,13 @@ def gtiff_band_rows(binary_files: DataFrame, role: str,
     (None → use the tag).  Output feeds :func:`regrid_tiles` directly.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(path, content):
         from homonim_spark.tiffio import read_gtiff_meta
-        for pdf in batches:
-            out = {f.name: [] for f in _BAND_ROW_SCHEMA.fields}
-            for r in pdf.itertuples(index=False):
-                src = bytes(r.content)
-                meta = read_gtiff_meta(src)
-                _emit_band_rows(out, src, r.path, meta, 0, meta.height,
-                                role, nodata)
-            yield pd.DataFrame(out)
+        src = bytes(content)
+        meta = read_gtiff_meta(src)
+        return _emit_band_rows(src, path, meta, 0, meta.height, role, nodata)
 
-    return binary_files.select("path", "content").mapInPandas(
-        decode, schema=_BAND_ROW_SCHEMA)
+    return map_tile_batches(binary_files.select("path", "content"), decode, _BAND_ROW_SCHEMA)
 
 
 def gtiff_window_rows(spark, paths: list, role: str,
@@ -418,41 +336,26 @@ def gtiff_window_rows(spark, paths: list, role: str,
     therefore resample these rows bilinearly.  Nodata comes from each
     file's own tag.
     """
+    from homonim_spark.partitioning import pinned_repartition
     from homonim_spark.tiffio import read_gtiff_meta
 
-    paths_df = spark.createDataFrame(pd.DataFrame({"path": list(paths)}))
+    def plan(path):
+        meta = read_gtiff_meta(path)
+        step = max(meta.block_h, (window_rows // meta.block_h) * meta.block_h)
+        for a in range(0, meta.height, step):
+            yield path, max(0, a - 1), min(meta.height, a + step + 1)
 
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                meta = read_gtiff_meta(p)
-                step = max(meta.block_h,
-                           (window_rows // meta.block_h) * meta.block_h)
-                for a in range(0, meta.height, step):
-                    b = min(meta.height, a + step)
-                    rows.append({"path": p, "y0": max(0, a - 1),
-                                 "y1": min(meta.height, b + 1)})
-            yield pd.DataFrame(rows, columns=["path", "y0", "y1"])
-
-    from homonim_spark.partitioning import pinned_repartition
-    units = pinned_repartition(
-        paths_df.mapInPandas(plan, schema="path string, y0 int, y1 int"),
+    units = pinned_repartition(map_tile_batches(
+        spark.createDataFrame([(p,) for p in paths], "path string"), plan, _WINDOW_SCHEMA),
         "path", "y0")
+    metas = {}
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        metas = {}
-        for pdf in batches:
-            out = {f.name: [] for f in _BAND_ROW_SCHEMA.fields}
-            for r in pdf.itertuples(index=False):
-                meta = metas.get(r.path)
-                if meta is None:
-                    meta = metas[r.path] = read_gtiff_meta(r.path)
-                _emit_band_rows(out, r.path, r.path, meta, int(r.y0),
-                                int(r.y1), role, None)
-            yield pd.DataFrame(out)
+    def decode(path, y0, y1):
+        if path not in metas:
+            metas[path] = read_gtiff_meta(path)
+        return _emit_band_rows(path, path, metas[path], y0, y1, role, None)
 
-    return units.mapInPandas(decode, schema=_BAND_ROW_SCHEMA)
+    return map_tile_batches(units, decode, _BAND_ROW_SCHEMA)
 
 
 def ingest_gtiff_files_windowed(

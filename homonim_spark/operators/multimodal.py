@@ -2,7 +2,8 @@
 
 Media payloads are opaque ``binary`` columns with typed metadata — exactly
 the engine's tile model generalized.  Decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` UDFs.
+frame-sample run as :func:`~homonim_spark.tiles.map_tile_batches` UDFs, with
+each payload a view of the Arrow buffer.
 
 Real codecs in this container: ``raw-f32`` (the engine's native float32-LE
 tile codec), ``png`` (pure-python decoder/encoder, ``homonim_spark.pngio``
@@ -15,14 +16,11 @@ shape — is real and tested for all codecs.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from homonim_spark.tiles import decode_tile
+from homonim_spark.tiles import decode_tile, map_tile_batches
 
 MEDIA_FEATURES_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -87,32 +85,22 @@ def media_features(
     nothing is collected.
     """
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rec = {"media_ref": r.media_ref, "codec": codec,
-                       "n_bytes": len(r.data), "width": None, "height": None,
-                       "mean": None, "std": None, "p_valid": None}
-                try:
-                    arr = decode_media(r.data, codec, r.h, r.w)
-                    valid = ~np.isnan(arr)
-                    rec.update(
-                        width=int(arr.shape[1]), height=int(arr.shape[0]),
-                        # float64 accumulation: exact for integer-valued
-                        # (png) pixels, oracle-reproducible
-                        mean=float(np.nanmean(arr, dtype=np.float64)) if valid.any() else None,
-                        std=float(np.nanstd(arr, dtype=np.float64)) if valid.any() else None,
-                        p_valid=float(valid.mean()),
-                    )
-                except NotImplementedError:
-                    pass  # undecodable codec: byte-level features only
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
+    def extract(media_ref, h, w, data):
+        try:
+            arr = decode_media(data, codec, h, w)
+        except NotImplementedError:  # undecodable codec: byte-level features only
+            yield media_ref, codec, data.size, None, None, None, None, None
+            return
+        valid = ~np.isnan(arr)
+        # float64 accumulation: exact for integer-valued (png) pixels,
+        # oracle-reproducible
+        yield (media_ref, codec, data.size, int(arr.shape[1]), int(arr.shape[0]),
+               float(np.nanmean(arr, dtype=np.float64)) if valid.any() else None,
+               float(np.nanstd(arr, dtype=np.float64)) if valid.any() else None,
+               float(valid.mean()))
 
-    return media.select("media_ref", "h", "w", "data").mapInPandas(
-        extract, schema=MEDIA_FEATURES_SCHEMA
-    )
+    return map_tile_batches(media.select("media_ref", "h", "w", "data"), extract,
+                            MEDIA_FEATURES_SCHEMA)
 
 
 def resize_media(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
@@ -134,14 +122,8 @@ def resize_media(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
         f = (out_h // arr.shape[0], out_w // arr.shape[1])
         return ops.upsample_nearest(arr, f)
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from homonim_spark.tiles import encode_tile
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                out = resize_plane(decode_tile(r.data, r.h, r.w))
-                rows.append({"media_ref": r.media_ref, "h": out.shape[0],
-                             "w": out.shape[1], "data": encode_tile(out)})
-            yield pd.DataFrame(rows, columns=["media_ref", "h", "w", "data"])
+    def resize(media_ref, h, w, data):
+        out = resize_plane(decode_tile(data, h, w))
+        yield media_ref, out.shape[0], out.shape[1], out
 
-    return media.select("media_ref", "h", "w", "data").mapInPandas(resize, schema=schema)
+    return map_tile_batches(media.select("media_ref", "h", "w", "data"), resize, schema)

@@ -6,26 +6,28 @@ promote/round/clip + nodata rewrite on write — and the overview build
 (``/root/reference/homonim/fuse.py:151-165``): power-of-2 downsampled
 pyramids, ≤8 levels, min 256 px.
 
-Spark-native: the dtype conversion runs inside the write-path Arrow UDF
-(numpy semantics identical to the reference: round-half-to-even, clip to
-iinfo bounds); overviews are parent-cell coarsening aggregations on the
-H3-style grid — each level is one ``groupBy(parent(cell))`` with block-mean
-averaging, exactly the aperture-4 hierarchy.
+Spark-native: the dtype conversion is a
+:func:`~homonim_spark.tiles.map_tile_batches` UDF on the write path (numpy
+semantics identical to the reference: round-half-to-even, clip to iinfo
+bounds); the GeoTIFF export and each overview level are
+:func:`~homonim_spark.tiles.map_tile_groups` stages — one group per image,
+and one per parent cell of the H3-style grid with block-mean averaging,
+exactly the aperture-4 hierarchy.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark import grid
 from homonim_spark.kernel import ops
-from homonim_spark.tiles import convert_array_dtype, decode_tile, encode_tile
+from homonim_spark.tiles import (TILE_DTYPE, convert_array_dtype, decode_tile,
+                                 map_tile_batches, map_tile_groups)
 
 _OUT_TILE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -37,6 +39,14 @@ _OUT_TILE_SCHEMA = T.StructType([
     T.StructField("dtype", T.StringType(), False),
     T.StructField("nodata", T.DoubleType(), True),
     T.StructField("data", T.BinaryType(), False),
+])
+
+_EXPORT_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType()),
+    T.StructField("path", T.StringType()),
+    T.StructField("n_bands", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("width", T.IntegerType()),
 ])
 
 
@@ -55,47 +65,32 @@ def convert_tiles(
     ``np.round`` (half-to-even) → rewrite masked pixels to ``nodata``.
     """
 
-    def conv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in _OUT_TILE_SCHEMA.fields}
-            for r in pdf.itertuples(index=False):
-                data = getattr(r, value_col)
-                if data is None:
-                    continue
-                hh, ww = r.h * scale_h, r.w * scale_h
-                n_px = len(data) // 4
-                if hh * ww != n_px:
-                    # payload lives on a different grid than h·scale_h can
-                    # express (e.g. proc-crs=ref with a coarser-than-ref
-                    # source: params on the ref grid, corr on the src grid,
-                    # related by 1/f) — derive the square payload side from
-                    # the byte length instead of crashing in the reshape
-                    side = int(np.sqrt(n_px))
-                    if side * side != n_px:
-                        raise ValueError(
-                            f"convert_tiles: payload of {n_px} px for "
-                            f"(image_id={r.image_id}, band={r.band}, "
-                            f"cell_id={r.cell_id}) matches neither "
-                            f"h*scale_h x w*scale_h = {hh}x{ww} nor a "
-                            f"square tile; cannot infer geometry")
-                    hh = ww = side
-                arr = decode_tile(data, hh, ww)
-                conv_arr = convert_array_dtype(arr, dtype, nodata)
-                out["image_id"].append(r.image_id)
-                out["band"].append(int(r.band))
-                out["cell_id"].append(int(r.cell_id))
-                out["media_ref"].append(getattr(r, "media_ref", None))
-                out["h"].append(hh)
-                out["w"].append(ww)
-                out["dtype"].append(dtype)
-                out["nodata"].append(nodata)
-                out["data"].append(np.ascontiguousarray(conv_arr).tobytes())
-            yield pd.DataFrame(out)
+    def conv(image_id, band, cell_id, h, w, data, media_ref):
+        if data is None:
+            return
+        hh, ww = h * scale_h, w * scale_h
+        n_px = data.size // TILE_DTYPE.itemsize
+        if hh * ww != n_px:
+            # payload lives on a different grid than h·scale_h can
+            # express (e.g. proc-crs=ref with a coarser-than-ref
+            # source: params on the ref grid, corr on the src grid,
+            # related by 1/f) — derive the square payload side from
+            # the byte length instead of crashing in the reshape
+            side = int(np.sqrt(n_px))
+            if side * side != n_px:
+                raise ValueError(
+                    f"convert_tiles: payload of {n_px} px for "
+                    f"(image_id={image_id}, band={band}, "
+                    f"cell_id={cell_id}) matches neither "
+                    f"h*scale_h x w*scale_h = {hh}x{ww} nor a "
+                    f"square tile; cannot infer geometry")
+            hh = ww = side
+        yield (image_id, band, cell_id, media_ref, hh, ww, dtype, nodata,
+               convert_array_dtype(decode_tile(data, hh, ww), dtype, nodata))
 
-    cols = ["image_id", "band", "cell_id", "h", "w", value_col]
-    if "media_ref" in fused.columns:
-        cols.append("media_ref")
-    return fused.select(*cols).mapInPandas(conv, schema=_OUT_TILE_SCHEMA)
+    mref = "media_ref" if "media_ref" in fused.columns else F.lit(None).cast("string")
+    return map_tile_batches(fused.select("image_id", "band", "cell_id", "h", "w", value_col, mref),
+                            conv, _OUT_TILE_SCHEMA)
 
 
 def write_corrected(
@@ -125,7 +120,8 @@ def export_corrected_gtiff(
     Spark stage.
 
     Distributed per image: tiles are dtype-converted by
-    :func:`convert_tiles`, hash-partitioned by ``image_id``, and each
+    :func:`convert_tiles` and grouped by ``image_id``
+    (:func:`~homonim_spark.tiles.map_tile_groups`), and each
     group's executor assembles the image canvas from its cells and writes
     a tiled/deflate GTiff (``tiffio.write_gtiff``) with the canonical-grid
     transform and nodata tag.  Per-task memory is one output IMAGE — the
@@ -135,34 +131,29 @@ def export_corrected_gtiff(
     manifest rows — paths are executor-local, so ``out_dir`` must be
     shared storage on a real cluster.
     """
-    from homonim_spark import grid as _grid
-
     conv = convert_tiles(fused, "corr", dtype, nodata, scale_h)
 
-    def write_image(pdf: pd.DataFrame) -> pd.DataFrame:
-        image_id = pdf["image_id"].iloc[0]
+    def write_image(image_id, rows):
         # grid resolution is encoded in every cell id — deriving it here
         # (instead of a caller-supplied parameter) makes a silently wrong
         # geotransform impossible for data at a non-default resolution
-        cell_sz = _grid.cell_size(int(_grid.cell_res(
-            int(pdf["cell_id"].iloc[0]))) if res is None else res)
-        t = int(pdf["h"].max())
-        rows = _grid.cell_row(pdf["cell_id"].to_numpy())
-        cols = _grid.cell_col(pdf["cell_id"].to_numpy())
-        r0, c0 = int(rows.min()), int(cols.min())
-        nb = int(pdf["band"].max()) + 1
-        H = (int(rows.max()) - r0 + 1) * t
-        W = (int(cols.max()) - c0 + 1) * t
+        band, cell_id, h, w, data = zip(*rows)
+        cell_sz = grid.cell_size(int(grid.cell_res(cell_id[0])) if res is None else res)
+        t = max(h)
+        crow = grid.cell_row(np.array(cell_id))
+        ccol = grid.cell_col(np.array(cell_id))
+        r0, c0 = int(crow.min()), int(ccol.min())
+        nb = max(band) + 1
+        H = (int(crow.max()) - r0 + 1) * t
+        W = (int(ccol.max()) - c0 + 1) * t
         dt = np.dtype(dtype)
         nd = nodata if nodata is not None else \
             (np.nan if dt.kind == "f" else 0)
         canvas = np.full((nb, H, W), nd, dtype=dt)
-        for r in pdf.itertuples(index=False):
-            arr = np.frombuffer(r.data, dtype=dt.newbyteorder("<")) \
-                .reshape(r.h, r.w)
-            rr = (_grid.cell_row(int(r.cell_id)) - r0) * t
-            cc = (_grid.cell_col(int(r.cell_id)) - c0) * t
-            canvas[int(r.band), rr: rr + r.h, cc: cc + r.w] = arr
+        for b, r, c, hh, ww, d in zip(band, crow, ccol, h, w, data):
+            rr, cc = (int(r) - r0) * t, (int(c) - c0) * t
+            canvas[b, rr: rr + hh, cc: cc + ww] = \
+                np.frombuffer(d, dtype=dt.newbyteorder("<")).reshape(hh, ww)
         # the engine grid's row axis points toward +y; GeoTIFF convention
         # is north-up (y decreasing with row) — flip rows and anchor the
         # tiepoint at the top edge so any GIS reader sees the right world
@@ -178,15 +169,12 @@ def export_corrected_gtiff(
         write_gtiff(path, canvas, transform=transform,
                     nodata=None if nodata is None else float(nodata),
                     tile=tile, compress=compress, epsg=epsg, overviews=ovw)
-        return pd.DataFrame([{"image_id": image_id, "path": path,
-                              "n_bands": nb, "height": H, "width": W}])
+        yield image_id, path, nb, H, W
 
-    os_schema = ("image_id string, path string, n_bands int, "
-                 "height int, width int")
     import os as _os
     _os.makedirs(out_dir, exist_ok=True)
-    return conv.groupBy("image_id").applyInPandas(write_image,
-                                                  schema=os_schema)
+    return map_tile_groups(conv.select("image_id", "band", "cell_id", "h", "w", "data"),
+                           ("image_id",), write_image, _EXPORT_SCHEMA)
 
 
 def run_manifest(model, kernel_shape, proc_crs, bands: int,
@@ -222,32 +210,26 @@ _OVERVIEW_SCHEMA = T.StructType([
 def _coarsen_level(tiles: DataFrame, tile_px: int, value_col: str) -> DataFrame:
     """One pyramid level: 4 child tiles → 1 parent tile at half resolution.
 
-    groupBy(parent(cell_id)) — a single shuffle whose groups are exactly 4
-    rows; block-mean downsample inside the UDF (NaN-aware average, the
-    reference's overview resampling default).
+    Grouped by parent(cell_id) — a single shuffle whose groups are exactly
+    4 rows; block-mean downsample inside the group function (NaN-aware
+    average, the reference's overview resampling default).
     """
 
-    def coarsen(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        image_id, band, parent_id = key
+    def coarsen(image_id, band, parent_id, rows):
         canvas = np.full((2 * tile_px, 2 * tile_px), np.nan, dtype=np.float32)
-        for r in pdf.itertuples(index=False):
-            cr = grid.cell_row(int(r.cell_id)) & 1
-            cc = grid.cell_col(int(r.cell_id)) & 1
+        for cell_id, data in rows:
+            cr, cc = grid.cell_row(cell_id) & 1, grid.cell_col(cell_id) & 1
             canvas[cr * tile_px : (cr + 1) * tile_px, cc * tile_px : (cc + 1) * tile_px] = \
-                decode_tile(r.data, tile_px, tile_px)
-        out = ops.downsample_average(canvas, (2, 2))
-        return pd.DataFrame({
-            "image_id": [image_id], "band": [int(band)], "cell_id": [int(parent_id)],
-            "h": [tile_px], "w": [tile_px], "data": [encode_tile(out)],
-        })
+                decode_tile(data, tile_px, tile_px)
+        yield (image_id, band, parent_id, tile_px, tile_px,
+               ops.downsample_average(canvas, (2, 2)))
 
     src = tiles.select(
         "image_id", "band", "cell_id",
         F.col(value_col).alias("data"),
         grid.parent_expr("cell_id").alias("parent_id"),
     )
-    return src.groupBy("image_id", "band", "parent_id").applyInPandas(
-        coarsen, schema=_OVERVIEW_SCHEMA)
+    return map_tile_groups(src, ("image_id", "band", "parent_id"), coarsen, _OVERVIEW_SCHEMA)
 
 
 def _overview_level_col(min_shape: Column, max_levels: int, min_px: int) -> Column:

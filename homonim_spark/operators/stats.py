@@ -6,25 +6,23 @@ gain-offset model), accumulated on the driver, finished with the cumulative
 std formula (``stats.py:175-192``).  And ``_get_data_window``
 (``stats.py:135-173``): the union of per-block valid-data bounding boxes.
 
-Spark-native: per-tile partial sums from one ``mapInPandas`` (reading as
-float64, matching ``stats.py:221``), then built-in ``groupBy(param).agg`` —
+Spark-native: per-tile partial sums from one
+:func:`~homonim_spark.tiles.map_tile_batches` UDF (reading as float64,
+matching ``stats.py:221``), then built-in ``groupBy(param).agg`` —
 min/max/sum/count reductions; the data window is an agg of per-tile bounding
 boxes offset to global pixel coordinates.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark import grid
 from homonim_spark.enums import Model
-from homonim_spark.tiles import decode_tile, get_data_window
+from homonim_spark.tiles import decode_tile, get_data_window, map_tile_batches
 
 _PARTIAL_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -55,41 +53,27 @@ def param_partials(
     """
     is_gain_offset = Model(model) == Model.gain_offset
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                trow = grid.cell_row(int(r.cell_id))
-                tcol = grid.cell_col(int(r.cell_id))
-                for pname in ("gain", "offset", "r2"):
-                    data = getattr(r, pname)
-                    if data is None:
-                        continue
-                    # read as float64 like the reference (stats.py:221)
-                    arr = decode_tile(data, r.h, r.w).astype(np.float64)
-                    mask = ~np.isnan(arr)
-                    n = int(mask.sum())
-                    vals = arr[mask]
-                    win = get_data_window(mask)
-                    rec = {
-                        "image_id": r.image_id, "band": int(r.band),
-                        "cell_id": int(r.cell_id), "param": pname,
-                        "vmin": float(vals.min()) if n else None,
-                        "vmax": float(vals.max()) if n else None,
-                        "vsum": float(vals.sum()), "vsum2": float((vals ** 2).sum()),
-                        "n": n,
-                        "inpaint_n": int((vals < 0.25).sum())
-                        if (is_gain_offset and pname == "r2") else None,
-                        "row0": trow * r.h + win[0] if win else None,
-                        "col0": tcol * r.w + win[1] if win else None,
-                        "row1": trow * r.h + win[2] if win else None,
-                        "col1": tcol * r.w + win[3] if win else None,
-                    }
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in _PARTIAL_SCHEMA.fields])
+    def partials(image_id, band, cell_id, h, w, *planes):
+        trow, tcol = grid.cell_row(cell_id), grid.cell_col(cell_id)
+        for pname, data in zip(("gain", "offset", "r2"), planes):
+            if data is None:
+                continue
+            # read as float64 like the reference (stats.py:221)
+            arr = decode_tile(data, h, w).astype(np.float64)
+            mask = ~np.isnan(arr)
+            n = int(mask.sum())
+            vals = arr[mask]
+            win = get_data_window(mask)
+            yield (image_id, band, cell_id, pname,
+                   float(vals.min()) if n else None, float(vals.max()) if n else None,
+                   float(vals.sum()), float((vals ** 2).sum()), n,
+                   int((vals < 0.25).sum()) if (is_gain_offset and pname == "r2") else None,
+                   *((trow * h + win[0], tcol * w + win[1], trow * h + win[2], tcol * w + win[3])
+                     if win else (None,) * 4))
 
-    return fused.select("image_id", "band", "cell_id", "h", "w", "gain", "offset", "r2") \
-        .mapInPandas(partials, schema=_PARTIAL_SCHEMA)
+    return map_tile_batches(
+        fused.select("image_id", "band", "cell_id", "h", "w", "gain", "offset", "r2"),
+        partials, _PARTIAL_SCHEMA)
 
 
 def param_stats(

@@ -26,11 +26,12 @@ def pinned_repartition(df: DataFrame, *cols: str) -> DataFrame:
 
     Semantically identical to ``df.repartition(*cols)`` — but the explicit
     count opts the exchange out of AQE partition coalescing, which merges
-    shuffle partitions by BYTES.  The engine's pandas-UDF group stages are
-    CPU-bound per byte (tile decode + kernel fit on ~16 KB rows), so
-    bytes-based coalescing starves cores there (measured 4-6× on the fuse
-    exchange, BENCH/BASELINE.md round 2) while the relational shuffles
-    benefit from it; pinning here lets coalescing stay on globally.
+    shuffle partitions by BYTES.  The engine's tile group stages
+    (:func:`homonim_spark.tiles.map_tile_groups`) are CPU-bound per byte
+    (tile decode + kernel fit on ~16 KB rows), so bytes-based coalescing
+    starves cores there (measured 4-6× on the fuse exchange,
+    BENCH/BASELINE.md round 2) while the relational shuffles benefit from
+    it; pinning here lets coalescing stay on globally.
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols)

@@ -1,6 +1,6 @@
 """SparkSession factory with engine defaults.
 
-Tuned for Arrow-batched pandas UDF pipelines over binary tile payloads;
+Tuned for Arrow-batched Python UDF pipelines over binary tile payloads;
 designed for a multi-executor cluster (AQE on, skew-join on) and tested on
 ``local[N]``.  Local defaults are sized from the host: one core per CPU in
 the process's affinity set, a driver heap of min(16g, half of physical RAM).
@@ -89,7 +89,7 @@ def get_spark(
         # the shuffled plans.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Coalescing merges shuffle partitions by BYTES.  The engine's
-        # pandas-UDF group stages are CPU-bound per byte and bytes-based
+        # tile group stages are CPU-bound per byte and bytes-based
         # coalescing starves cores there (measured 4-6x on the fuse
         # exchange), so those exchanges pin an explicit partition count
         # (partitioning.pinned_repartition), which opts them out.  With the

@@ -4,18 +4,21 @@ A *tile* is the engine's row-level payload: a dense float32 block of pixels
 with ``NaN`` as the canonical nodata, exactly like the reference's internal
 representation (``/root/reference/homonim/raster_array.py:48-49`` — all data
 is coerced to float32 with nodata=NaN on read).  Tiles travel through Spark
-as ``BinaryType`` (float32 little-endian, C row-major) and are decoded to
-numpy only inside Arrow-batched Python UDFs; :func:`map_tile_batches` is
-the Arrow-native boundary that hands them over without per-tile copies.
+as ``BinaryType`` (float32 little-endian, C row-major) and enter or leave
+Python only through this module's two ``mapInArrow`` helpers, which hand
+them over as views of the Arrow buffers: :func:`map_tile_batches` (one
+row at a time) and :func:`map_tile_groups` (one key group at a time).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterator, List, Optional, Tuple, Union
+from typing import Callable, Iterable, Iterator, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from homonim_spark.partitioning import pinned_repartition
 
 #: the one definition of a payload's pixel format (float32 little-endian)
 TILE_DTYPE = np.dtype("<f4")
@@ -33,16 +36,23 @@ def decode_tile(data: bytes, h: int, w: int) -> np.ndarray:
     return np.frombuffer(data, dtype=TILE_DTYPE).reshape(h, w)
 
 
-#: one record batch as ``{column name: list of row values}``
-Columns = Dict[str, list]
+def _rows(batch) -> Iterator[tuple]:
+    """The rows of one Arrow record batch as tuples: a binary value as a
+    uint8 numpy view into the batch's value buffer (None for null), any
+    other value as its Python object."""
+    import pyarrow as pa
+    return zip(*[_binary_views(c, np.int32) if pa.types.is_binary(c.type)
+                 else _binary_views(c, np.int64) if pa.types.is_large_binary(c.type)
+                 else c.to_pylist() for c in batch.columns])
 
 
-def _binary_views(col) -> List[Optional[np.ndarray]]:
+def _binary_views(col, offset_type) -> List[Optional[np.ndarray]]:
     """One uint8 numpy view per row into a binary Arrow array's value
-    buffer, cut at its offsets (None for a null row)."""
+    buffer, cut at its ``offset_type`` offsets (int64 when Spark sends
+    large binaries, ``arrow.useLargeVarTypes``; None for a null row)."""
     _, off_buf, val_buf = col.buffers()
-    offsets = np.frombuffer(off_buf, np.int32, count=len(col) + 1,
-                            offset=col.offset * 4).tolist()
+    offsets = np.frombuffer(off_buf, offset_type, count=len(col) + 1,
+                            offset=col.offset * np.dtype(offset_type).itemsize).tolist()
     values = np.frombuffer(val_buf, np.uint8) if val_buf is not None else np.empty(0, np.uint8)
     views = [values[o0:o1] for o0, o1 in zip(offsets[:-1], offsets[1:])]
     if col.null_count:
@@ -51,18 +61,19 @@ def _binary_views(col) -> List[Optional[np.ndarray]]:
     return views
 
 
-def _binary_array(parts: List[Optional[np.ndarray]]):
-    """A binary Arrow array whose value buffer holds each part, in C order,
-    as :data:`TILE_DTYPE` pixels (like :func:`encode_tile`; None makes a
-    null row), written in one contiguous copy."""
+def _binary_array(parts: Sequence[Optional[np.ndarray]]):
+    """A binary Arrow array whose value buffer holds each part's elements
+    in C order, little-endian in the part's own dtype (a float32 tile is
+    :data:`TILE_DTYPE`, as :func:`encode_tile` writes it; None makes a null
+    row), written in one contiguous copy."""
     import pyarrow as pa
-    sizes = [0 if p is None else p.size * TILE_DTYPE.itemsize for p in parts]
+    sizes = [0 if p is None else p.nbytes for p in parts]
     offsets = np.zeros(len(parts) + 1, np.int32)
     np.cumsum(sizes, out=offsets[1:])
     values = np.empty(int(offsets[-1]), np.uint8)
     for p, o, n in zip(parts, offsets.tolist(), sizes):
         if n:
-            values[o:o + n].view(TILE_DTYPE).reshape(p.shape)[...] = p
+            values[o:o + n].view(p.dtype.newbyteorder("<")).reshape(p.shape)[...] = p
     valid = np.array([p is not None for p in parts], dtype=bool)
     n_null = len(parts) - int(valid.sum())
     bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if n_null else None
@@ -71,33 +82,70 @@ def _binary_array(parts: List[Optional[np.ndarray]]):
                                  null_count=n_null)
 
 
-def map_tile_batches(df: DataFrame, fn: Callable[[Iterator[Columns]], Iterator[Columns]],
-                     schema: T.StructType) -> DataFrame:
-    """Run ``fn`` over each partition of ``df`` through ``mapInArrow``.
-
-    ``fn`` takes an iterator of input batches and yields output batches,
-    both as ``{column: list}`` dicts.  A binary input column arrives as
-    uint8 numpy views into the batch's Arrow value buffer (no ``bytes``
-    object per tile, no pandas frame); a binary output column takes numpy
-    arrays (or None for null), written as :data:`TILE_DTYPE` pixels into
-    one contiguous buffer."""
+def _map_arrow(df: DataFrame, fn: Callable[[Iterator[Iterator[tuple]]], Iterator[list]],
+               schema: T.StructType) -> DataFrame:
+    """``mapInArrow`` over ``df``: ``fn`` takes the input batches as row
+    iterators (:func:`_rows`) and yields lists of output row tuples in
+    ``schema`` order, each list one output batch (binary values as numpy
+    arrays, see :func:`_binary_array`)."""
     def run(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
         out_schema = to_arrow_schema(schema)
-
-        def columns(batch) -> Columns:
-            return {name: _binary_views(col) if pa.types.is_binary(col.type)
-                    else col.to_pylist()
-                    for name, col in zip(batch.schema.names, batch.columns)}
-
-        for cols in fn(columns(b) for b in batches):
-            yield pa.RecordBatch.from_arrays(
-                [_binary_array(cols[f.name]) if pa.types.is_binary(f.type)
-                 else pa.array(cols[f.name], type=f.type) for f in out_schema],
-                schema=out_schema)
+        for rows in fn(_rows(b) for b in batches):
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [_binary_array(c) if pa.types.is_binary(f.type) else pa.array(c, type=f.type)
+                     for f, c in zip(out_schema, zip(*rows))], schema=out_schema)
 
     return df.mapInArrow(run, schema)
+
+
+def map_tile_batches(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+                     schema: T.StructType) -> DataFrame:
+    """Run ``fn(*row)`` on every row of ``df`` through ``mapInArrow``; it
+    returns the row's output rows as tuples in ``schema`` order.  A binary
+    input arrives as a uint8 numpy view into the Arrow value buffer (no
+    ``bytes`` object per tile, no pandas frame); a binary output is a
+    numpy array (or None), and each input batch's outputs leave as one
+    Arrow batch."""
+    return _map_arrow(df, lambda batches: ([out for row in rows for out in fn(*row)]
+                                           for rows in batches), schema)
+
+
+def map_tile_groups(df: DataFrame, keys: Sequence[str], fn: Callable[..., Iterable[tuple]],
+                    schema: T.StructType) -> DataFrame:
+    """Run ``fn(*key, rows)`` once per group of ``df`` rows sharing the
+    ``keys`` columns; ``rows`` holds the group's other columns as tuples in
+    ``df`` order, and ``fn`` returns output rows as
+    :func:`map_tile_batches` does.
+
+    Instead of ``groupBy().applyInArrow`` (whose per-group Arrow machinery
+    costs more than the work of a small group), this hash-partitions on
+    the keys (:func:`pinned_repartition`),
+    sorts within partitions (spillable, no extra exchange) and streams the
+    sorted batches through one ``mapInArrow``: a group is a run of
+    consecutive rows, complete when the key changes or the partition ends,
+    even when it spans batches."""
+    n = len(keys)
+    rest = [c for c in df.columns if c not in keys]
+    keyed = pinned_repartition(df.select(*keys, *rest), *keys).sortWithinPartitions(*keys)
+
+    def stream(batches):
+        key, group = None, []
+        for rows in batches:
+            out = []
+            for row in rows:
+                if row[:n] != key:
+                    if group:
+                        out += fn(*key, group)
+                    key, group = row[:n], []
+                group.append(row[n:])
+            yield out
+        if group:
+            yield list(fn(*key, group))
+
+    return _map_arrow(keyed, stream, schema)
 
 
 def nan_equals(a, b):

@@ -1,6 +1,5 @@
 """Tests for lineage/checkpoint-resume, streaming, and multimodal plumbing."""
 
-import itertools
 import os
 
 import numpy as np
@@ -256,9 +255,12 @@ def test_streaming_dedup_min_across_pandas_chunks(spark, tmp_path):
 
 
 def test_map_tile_batches_round_trips_binary_payloads_and_nulls(spark):
-    """The Arrow tile boundary: binary inputs arrive as numpy views (None
-    for null rows), binary outputs are rebuilt from arrays in the tile
-    format whatever their dtype (float32 and float64 here), nulls survive."""
+    """The Arrow tile boundary: ``fn(*row)`` sees a binary input as a numpy
+    view (None for a null row), also when Spark sends large binaries, and
+    returns any number of output rows; a
+    binary output is written in its array's own dtype, little-endian, in C
+    order (float32 and a reversed, non-contiguous uint16 view here), and
+    nulls survive."""
     from pyspark.sql import types as T
     from homonim_spark.tiles import map_tile_batches
 
@@ -269,19 +271,34 @@ def test_map_tile_batches_round_trips_binary_payloads_and_nulls(spark):
                            T.StructField("data", T.BinaryType()),
                            T.StructField("n", T.IntegerType())])
 
-    def double(batches):
-        for cols in batches:
-            yield {"id": cols["id"],
-                   "data": [None if v is None else v.view("<f4").astype(dt) * 2
-                            for v, dt in zip(cols["data"], itertools.cycle((np.float32, np.float64)))],
-                   "n": [-1 if v is None else v.nbytes for v in cols["data"]]}
+    def double(i, v):
+        if v is None:
+            yield i, None, -1
+        elif i % 7:                      # i % 7 == 0 emits no row
+            arr = v.view("<f4") * 2
+            yield i, arr if i % 2 else arr.astype(np.uint16)[::-1], v.nbytes
 
-    got = {r["id"]: r for r in map_tile_batches(df, double, schema).collect()}
-    assert sorted(got) == list(range(40))
-    for i, data in rows:
-        r = got[i]
-        if data is None:
-            assert r["data"] is None and r["n"] == -1
+    large = "spark.sql.execution.arrow.useLargeVarTypes"
+    old = spark.conf.get(large, None)
+    try:
+        for use_large in ("false", "true"):     # binary or large_binary batches
+            spark.conf.set(large, use_large)
+            got = {r["id"]: r for r in map_tile_batches(df, double, schema).collect()}
+            assert sorted(got) == [i for i in range(40) if i % 5 == 0 or i % 7]
+            for i, data in rows:
+                if i not in got:
+                    continue
+                r = got[i]
+                if data is None:
+                    assert r["data"] is None and r["n"] == -1
+                    continue
+                assert r["n"] == 4 * i
+                want = np.arange(i, dtype="<f4") * 2
+                if i % 2 == 0:
+                    want = want.astype("<u2")[::-1]
+                assert bytes(r["data"]) == want.tobytes()
+    finally:
+        if old is None:
+            spark.conf.unset(large)
         else:
-            assert r["n"] == 4 * i
-            assert bytes(r["data"]) == (np.arange(i, dtype="<f4") * 2).tobytes()
+            spark.conf.set(large, old)

@@ -13,8 +13,15 @@ with zipfile.ZipFile("dist/homonim_spark.zip", "w", zipfile.ZIP_DEFLATED) as z:
         z.write(p, p.as_posix())
 print("wrote dist/homonim_spark.zip")
 EOF
-python -c "
-import sys; sys.path.insert(0, 'dist/homonim_spark.zip')
-import homonim_spark, homonim_spark.operators.fuse
-print('zip import OK:', homonim_spark.__version__)
-"
+# smoke test: import every module of the package from the archive alone
+python - <<'EOF'
+import importlib, sys, zipfile
+sys.path.insert(0, "dist/homonim_spark.zip")
+names = sorted(n[:-3].replace("/", ".").removesuffix(".__init__")
+               for n in zipfile.ZipFile("dist/homonim_spark.zip").namelist())
+for name in names:
+    mod = importlib.import_module(name)
+    assert mod.__file__.startswith("dist/homonim_spark.zip"), mod.__file__
+import homonim_spark
+print(f"zip import OK: {len(names)} modules, version {homonim_spark.__version__}")
+EOF
