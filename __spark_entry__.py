@@ -947,7 +947,7 @@ def q_overview_level1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = spark.createDataFrame(tiles_pdf).filter(F.col("role") == "ref")
     levels = build_overviews(ref.select("image_id", "band", "cell_id",
                                         "h", "w", "data"),
-                             tile_px=8, max_levels=1, min_px=8)
+                             max_levels=1, min_px=8)
     return (_explode_px(levels[0], 8, {"data": "val"})
             .filter(F.col("r").between(1, 6) & F.col("c").between(1, 6))
             .orderBy("r", "c"))

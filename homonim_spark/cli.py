@@ -124,13 +124,7 @@ def main(argv=None) -> int:
             param_interp=args.param_interp)
         cfg = infer_fuse_config(tiles, params, proc_crs=ProcCrs(args.proc_crs),
                                 chunk=args.chunk)
-        fused = fuse(docs, tiles, model=args.model, kernel_shape=tuple(args.kernel),
-                     find_r2=args.find_r2, mask_partial=args.mask_partial,
-                     proc_crs=args.proc_crs, chunk=args.chunk,
-                     param_interp=args.param_interp,
-                     sigma_clip=args.sigma_clip,
-                     sigma_clip_iters=args.sigma_clip_iters,
-                     cfg=cfg)
+        fused = fuse(docs, tiles, cfg=cfg)
         # corrected tiles live on the src grid; the h/w columns record the
         # param (proc-grid) tile size — scale between them:
         scale_h = (cfg.src_scale + cfg.ref_scale - 1) // cfg.ref_scale \

@@ -1,18 +1,24 @@
-"""Checkpoint-resumable staging + per-partition lineage + per-stage metrics.
+"""Checkpoint-resumable staging + per-file lineage + per-stage metrics.
 
 north_rule: "resumable from checkpoint with per-partition lineage + metrics".
 The reference has no analogue (single process, in-memory futures); the engine
-gets it from idempotent per-stage writes:
+gets it from idempotent per-stage writes.  A stage is one Spark write and
+launches no other job:
 
 - every pipeline stage lands in ``<run_dir>/<stage>/data`` (parquet) with a
   ``_MANIFEST.json`` recording the stage config fingerprint, row count and
-  wall time;
+  the wall time of its build and write;
+- the row count and the lineage come from the footers of the part files the
+  write produced, read on the driver: one lineage row (stage, partition_id,
+  n_rows) per ``part-NNNNN-*.parquet`` file, where NNNNN is the writer
+  task's partition, lands in ``<run_dir>/_metrics`` — an auditable record
+  of which partition produced what, the Spark analogue of the reference's
+  per-block progress (``fuse.py:404-408``);
 - re-running a stage whose manifest matches its config fingerprint is a
   no-op read (resume-from-checkpoint);
-- per-partition lineage rows (stage, partition_id, n_rows) land in
-  ``<run_dir>/_metrics`` — an auditable record of which partition produced
-  what, the Spark analogue of the reference's per-block progress
-  (``fuse.py:404-408``).
+- a rebuild removes the old manifest before it writes and commits the new one
+  by rename, so a killed run leaves no manifest rather than a stale or
+  truncated one, and the next run rebuilds the stage.
 
 No wall-clock enters any data path (timestamps live only in metrics).
 """
@@ -22,28 +28,21 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
+import tempfile
 import time
+import uuid
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet")
 
 
 def config_fingerprint(config: dict) -> str:
     return hashlib.sha256(json.dumps(config, sort_keys=True, default=str).encode()).hexdigest()[:16]
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts for a stage — cheap (one extra narrow agg)."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").count()
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            F.col("count").alias("n_rows"),
-        )
-    )
 
 
 class StageRunner:
@@ -76,24 +75,34 @@ class StageRunner:
         stage_dir, data_dir, manifest = self._paths(stage)
         if self.is_complete(stage, config):
             return self.spark.read.parquet(data_dir)
+        if os.path.exists(manifest):
+            os.remove(manifest)  # it vouches for the data about to be overwritten
 
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(data_dir)
-        out = self.spark.read.parquet(data_dir)
-        n = out.count()
-        lineage = partition_lineage(out, stage)
-        lineage.write.mode("append").parquet(os.path.join(self.run_dir, "_metrics"))
-        with open(manifest, "w") as f:
+        wall_sec = round(time.time() - t0, 3)
+        parts = [(int(m.group(1)), pq.read_metadata(os.path.join(data_dir, f)).num_rows)
+                 for f in sorted(os.listdir(data_dir)) if (m := _PART_FILE.fullmatch(f))]
+        metrics_dir = os.path.join(self.run_dir, "_metrics")
+        os.makedirs(metrics_dir, exist_ok=True)
+        pq.write_table(pa.table({
+            "stage": pa.array([stage] * len(parts), pa.string()),
+            "partition_id": pa.array([p for p, _ in parts], pa.int32()),
+            "n_rows": pa.array([n for _, n in parts], pa.int64()),
+        }), os.path.join(metrics_dir, f"{stage}-{uuid.uuid4().hex}.parquet"))
+        fd, tmp = tempfile.mkstemp(dir=stage_dir, suffix=".json.tmp")
+        with os.fdopen(fd, "w") as f:
             json.dump({
                 "stage": stage,
                 "fingerprint": config_fingerprint(config),
                 "config": {k: str(v) for k, v in config.items()},
-                "n_rows": n,
-                "wall_sec": round(time.time() - t0, 3),
+                "n_rows": sum(n for _, n in parts),
+                "wall_sec": wall_sec,
                 "complete": True,
             }, f, indent=2)
-        return out
+        os.replace(tmp, manifest)  # atomic commit
+        return self.spark.read.schema(df.schema).parquet(data_dir)
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.run_dir, "_metrics"))

@@ -207,28 +207,25 @@ _OVERVIEW_SCHEMA = T.StructType([
 ])
 
 
-def _coarsen_level(tiles: DataFrame, tile_px: int, value_col: str) -> DataFrame:
+def _coarsen_level(tiles: DataFrame) -> DataFrame:
     """One pyramid level: 4 child tiles → 1 parent tile at half resolution.
 
     Grouped by parent(cell_id) — a single shuffle whose groups are exactly
-    4 rows; block-mean downsample inside the group function (NaN-aware
+    4 rows; each child is decoded at its own ``h``×``w`` into a canvas of
+    twice the largest child, then block-mean downsampled (NaN-aware
     average, the reference's overview resampling default).
     """
 
     def coarsen(image_id, band, parent_id, rows):
-        canvas = np.full((2 * tile_px, 2 * tile_px), np.nan, dtype=np.float32)
-        for cell_id, data in rows:
-            cr, cc = grid.cell_row(cell_id) & 1, grid.cell_col(cell_id) & 1
-            canvas[cr * tile_px : (cr + 1) * tile_px, cc * tile_px : (cc + 1) * tile_px] = \
-                decode_tile(data, tile_px, tile_px)
-        yield (image_id, band, parent_id, tile_px, tile_px,
-               ops.downsample_average(canvas, (2, 2)))
+        h, w = max(r[1] for r in rows), max(r[2] for r in rows)
+        canvas = np.full((2 * h, 2 * w), np.nan, dtype=np.float32)
+        for cell_id, th, tw, data in rows:
+            r0, c0 = (grid.cell_row(cell_id) & 1) * h, (grid.cell_col(cell_id) & 1) * w
+            canvas[r0 : r0 + th, c0 : c0 + tw] = decode_tile(data, th, tw)
+        yield image_id, band, parent_id, h, w, ops.downsample_average(canvas, (2, 2))
 
-    src = tiles.select(
-        "image_id", "band", "cell_id",
-        F.col(value_col).alias("data"),
-        grid.parent_expr("cell_id").alias("parent_id"),
-    )
+    src = tiles.select("image_id", "band", "cell_id", "h", "w", "data",
+                       grid.parent_expr("cell_id").alias("parent_id"))
     return map_tile_groups(src, ("image_id", "band", "parent_id"), coarsen, _OVERVIEW_SCHEMA)
 
 
@@ -244,25 +241,26 @@ def _overview_level_col(min_shape: Column, max_levels: int, min_px: int) -> Colu
 
 
 def build_overviews(
-    tiles: DataFrame, tile_px: int,
-    max_levels: int = 8, min_px: int = 256,
+    tiles: DataFrame, max_levels: int = 8, min_px: int = 256,
 ) -> list[DataFrame]:
     """S9: overview pyramid with the reference's stop rule
     (``/root/reference/homonim/fuse.py:151-165``) enforced per image:
     each image gets ``min(max_levels, floor(log2(min_shape)) −
-    log2(min_px))`` levels, computed from tile metadata (one metadata-scale
-    aggregate — payloads never reach the driver).  Each returned DataFrame
-    is one level, lazily defined, one 4-rows-per-group shuffle per level;
-    images whose rule stops earlier simply drop out of deeper levels."""
+    log2(min_px))`` levels, computed from tile metadata (cell extent times
+    the rows' ``h``/``w``; one metadata-scale aggregate — payloads never
+    reach the driver).  Each returned DataFrame is one level, lazily
+    defined, one 4-rows-per-group shuffle per level; images whose rule
+    stops earlier simply drop out of deeper levels."""
     row, col = grid.cell_row_expr("cell_id"), grid.cell_col_expr("cell_id")
     # Per-image level counts COMPUTED AS A COLUMN — no image list ever
     # reaches the driver (at 100 TB the former driver round-trip was
     # O(n_images) rows pulled plus O(n_images) rebuilt per level).
-    min_shape = F.least(F.col("ch"), F.col("cw")) * F.lit(tile_px)
+    min_shape = F.least(F.col("ch") * F.col("h"), F.col("cw") * F.col("w"))
     n_levels_col = _overview_level_col(min_shape, max_levels, min_px)
     lvl = (tiles.groupBy("image_id")
            .agg((F.max(row) - F.min(row) + 1).alias("ch"),
-                (F.max(col) - F.min(col) + 1).alias("cw"))
+                (F.max(col) - F.min(col) + 1).alias("cw"),
+                F.max("h").alias("h"), F.max("w").alias("w"))
            .select("image_id", n_levels_col.alias("n_levels")))
     # the ONE driver-visible value: the pyramid depth (a scalar aggregate)
     total = lvl.agg(F.max("n_levels")).first()[0] or 0
@@ -273,7 +271,6 @@ def build_overviews(
         # would grow the plan linearly with image count (100 TB = millions
         # of images); the joined dim stays metadata-scale
         live = lvl.filter(F.col("n_levels") >= i + 1).select("image_id")
-        cur = _coarsen_level(cur.join(F.broadcast(live), "image_id", "left_semi"),
-                             tile_px, "data")
+        cur = _coarsen_level(cur.join(F.broadcast(live), "image_id", "left_semi"))
         levels.append(cur)
     return levels

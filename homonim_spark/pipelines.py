@@ -1,10 +1,10 @@
 """Staged, checkpoint-resumable end-to-end pipelines.
 
 Wires the fuse dataflow through :class:`homonim_spark.lineage.StageRunner`:
-each stage lands in parquet with a config-fingerprinted manifest and
-per-partition lineage metrics; re-running a completed stage is a checkpoint
-read (north_rule: resumable from checkpoint with per-partition lineage +
-metrics).
+each stage is one parquet write with a config-fingerprinted manifest and
+one lineage row per part file written; re-running a completed stage is a
+checkpoint read (north_rule: resumable from checkpoint with per-partition
+lineage + metrics).
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-from homonim_spark.lineage import StageRunner
+from homonim_spark.lineage import StageRunner, config_fingerprint
 
 
 def staged_fuse_pipeline(
@@ -65,25 +65,17 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, min_px):
     """Build corrected-tile overviews (at most 8 levels) and commit one
     catalog snapshot per level; resume = read back levels whose
     (fingerprint, level) snapshot already exists in the log."""
-    import hashlib
-    import json as _json
-
     from homonim_spark.catalog import TableCatalog
     from homonim_spark.operators.sink import build_overviews
 
-    fp = hashlib.md5(_json.dumps(
-        {**{k: str(v) for k, v in cfg.items()},
-         "max_levels": 8, "min_px": min_px},
-        sort_keys=True).encode()).hexdigest()[:16]
+    fp = config_fingerprint({**cfg, "max_levels": 8, "min_px": min_px})
     cat = TableCatalog(spark, warehouse)
     # snapshots() returns [] for a not-yet-created table on both backends
     done = {int(s["properties"]["level"]): s["snapshot_id"]
             for s in cat.snapshots("overviews")
             if s["properties"].get("fingerprint") == fp}
-    tile_px = int(corrected.agg({"h": "max"}).collect()[0][0])
     levels = build_overviews(
-        corrected.select("image_id", "band", "cell_id", "h", "w", "data"),
-        tile_px, min_px=min_px)
+        corrected.select("image_id", "band", "cell_id", "h", "w", "data"), min_px=min_px)
     out = []
     from pyspark.sql import functions as F
     # the fingerprint rides as a COLUMN on every row (not just a snapshot

@@ -45,11 +45,10 @@ def incremental_media_refs(
     """Append-mode extraction of media references from streaming documents —
     the ingest edge of an incremental fuse (each new file processed exactly
     once; restart resumes from the checkpoint)."""
-    media = (
-        docs_stream.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .filter(F.col("span.kind") == "media")
-        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
-    )
+    from homonim_spark.operators.fuse import explode_spans
+
+    media = explode_spans(docs_stream).filter("kind = 'media'").select(
+        "doc_id", "pos", "media_ref")
     return (
         media.writeStream.outputMode("append")
         .format("parquet").option("path", out_path)

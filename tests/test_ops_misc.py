@@ -1,5 +1,6 @@
 """Tests for lineage/checkpoint-resume, streaming, and multimodal plumbing."""
 
+import json
 import os
 
 import numpy as np
@@ -8,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from homonim_spark import datagen
-from homonim_spark.lineage import StageRunner, partition_lineage
+from homonim_spark import lineage
+from homonim_spark.lineage import StageRunner
 from homonim_spark.operators.multimodal import media_features, resize_media
 from homonim_spark.tiles import decode_tile
 
@@ -37,11 +39,68 @@ def test_stage_runner_checkpoint_resume(spark, tmp_path):
     assert m["n_rows"].sum() == 200  # two completed runs × 100 rows
 
 
-def test_partition_lineage_counts(spark):
-    df = spark.range(1000).repartition(4)
-    lin = partition_lineage(df, "s1").toPandas()
-    assert lin["n_rows"].sum() == 1000
-    assert len(lin) <= 4
+def test_stage_lineage_has_one_row_per_written_file(spark, tmp_path):
+    """Lineage rows are the writer's partitions: an 8-partition write gives
+    8 part files and 8 rows, summing to the manifest's and the data's count."""
+    runner = StageRunner(spark, str(tmp_path / "run"))
+    out = runner.run("s", {"v": 1}, lambda: spark.range(20000).repartition(8))
+    lin = runner.metrics().toPandas()
+    assert sorted(lin["partition_id"]) == list(range(8))
+    assert set(lin["stage"]) == {"s"}
+    with open(tmp_path / "run" / "s" / "_MANIFEST.json") as f:
+        n_rows = json.load(f)["n_rows"]
+    assert lin["n_rows"].sum() == n_rows == out.count() == 20000
+    assert runner.metrics().schema.simpleString() == \
+        "struct<stage:string,partition_id:int,n_rows:bigint>"
+
+
+def test_stage_runs_only_the_jobs_of_its_write(spark, tmp_path):
+    sc = spark.sparkContext
+    df = spark.range(20000).repartition(8)
+
+    def n_jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = n_jobs("plain_write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    runner = StageRunner(spark, str(tmp_path / "run"))
+    staged = n_jobs("stage_write", lambda: runner.run("s", {"v": 1}, lambda: df))
+    assert staged == plain
+
+
+def test_stage_rebuilds_after_a_crash_while_writing_its_manifest(spark, tmp_path, monkeypatch):
+    """A run killed inside the manifest write must leave no manifest that a
+    later run trusts or cannot parse: the next run rebuilds the stage."""
+    runner = StageRunner(spark, str(tmp_path / "run"))
+    calls = {"a": 0, "b": 0}
+
+    def build(key, n):
+        def f():
+            calls[key] += 1
+            return spark.range(n)
+        return f
+
+    runner.run("s", {"v": "a"}, build("a", 10))
+    real_dump = lineage.json.dump
+
+    def crashing_dump(obj, fh, **kw):
+        text = json.dumps(obj, **kw)
+        fh.write(text[: len(text) // 2])
+        raise OSError("killed while writing the manifest")
+
+    monkeypatch.setattr(lineage.json, "dump", crashing_dump)
+    with pytest.raises(OSError, match="killed"):
+        runner.run("s", {"v": "b"}, build("b", 20))
+    monkeypatch.setattr(lineage.json, "dump", real_dump)
+    # the data on disk is b's; a's old manifest must not vouch for it
+    assert runner.run("s", {"v": "a"}, build("a", 10)).count() == 10
+    assert calls == {"a": 2, "b": 1}
+    assert runner.run("s", {"v": "b"}, build("b", 20)).count() == 20
+    assert calls == {"a": 2, "b": 2}
 
 
 def test_streaming_incremental_media_refs(spark, tmp_path):

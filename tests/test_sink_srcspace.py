@@ -53,8 +53,8 @@ def test_overview_pyramid(spark, fused):
     spec, tiles_pdf, fdf = fused
     # min_px=8 so the 32×64-px fixture passes the reference stop rule
     # (floor(log2(32)) − log2(8) = 2 levels available, capped at 1)
-    levels = build_overviews(fdf.select("image_id", "band", "cell_id",
-                                        F.col("gain").alias("data")), 16,
+    levels = build_overviews(fdf.select("image_id", "band", "cell_id", "h", "w",
+                                        F.col("gain").alias("data")),
                              max_levels=1, min_px=8)
     l1 = levels[0].toPandas()
     # 2x4 cells → parents at res-1: rows 0, cols 0..1 → 2 tiles
@@ -154,12 +154,12 @@ def test_overview_stop_rule_level_counts():
 def test_overview_stop_rule_per_image(spark, fused):
     """Images below the min-px rule drop out of the pyramid entirely."""
     spec, tiles_pdf, fdf = fused
-    levels = build_overviews(fdf.select("image_id", "band", "cell_id",
-                                        F.col("gain").alias("data")), 16,
+    levels = build_overviews(fdf.select("image_id", "band", "cell_id", "h", "w",
+                                        F.col("gain").alias("data")),
                              max_levels=8, min_px=256)
     assert levels == []  # 32x64-px fixture: rule says zero levels
-    levels = build_overviews(fdf.select("image_id", "band", "cell_id",
-                                        F.col("gain").alias("data")), 16,
+    levels = build_overviews(fdf.select("image_id", "band", "cell_id", "h", "w",
+                                        F.col("gain").alias("data")),
                              max_levels=8, min_px=8)
     assert len(levels) == 2  # floor(log2(32)) - 3 = 2
 

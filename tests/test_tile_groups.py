@@ -80,7 +80,7 @@ def _grouped_sites(docs, tiles, out_dir):
         .select("image_id", "role", "band", "transform", "h", "w", "data")
     corrected = convert_tiles(fused, "corr", scale_h=2)
     level = build_overviews(corrected.select("image_id", "band", "cell_id", "h", "w", "data"),
-                            32, min_px=16)[0]
+                            min_px=16)[0]
     manifest = export_corrected_gtiff(fused, out_dir, dtype="uint16", nodata=0, scale_h=2,
                                       res=datagen.FIXTURE_RES).collect()
     return {
