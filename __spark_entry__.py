@@ -41,7 +41,7 @@ def _raster_tables():
     """Deterministic synthetic interleaved-documents fixture (independent of
     sf_dir content): two 4×4-cell image pairs."""
     from homonim_spark import datagen
-    specs = datagen.default_specs(scale=2, bands=1, tile=16)
+    specs = datagen.default_specs(scale=2)
     return datagen.build_fixture_tables(specs)
 
 
@@ -1388,7 +1388,7 @@ def q_passage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-for-position."""
     from homonim_spark.operators.dedup import passage_overlap_pairs
     docs = _t(spark, sf_dir, "documents")
-    return (passage_overlap_pairs(docs, min_shared=2)
+    return (passage_overlap_pairs(docs)
             .select("doc_a", "doc_b",
                     F.col("shared_chunks").cast("long").alias("shared_chunks"))
             .orderBy("doc_a", "doc_b"))
@@ -1465,7 +1465,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from homonim_spark.streaming import stateful_sessionize
 
     stream = _stream_source(spark, sf_dir, "events", cast_ts=True)
-    out = stateful_sessionize(stream, gap_seconds=1800)
+    out = stateful_sessionize(stream)
     # stop_after_batch0: batch 0 holds all data, hence every gap-closed
     # session; the 1 h default state timeout guarantees no timeout
     # emission can race the stop, so the answer is exactly the closed
@@ -1521,7 +1521,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts")
     c = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts")
-    out = asof_join(p, c, on="ts", by=["user_id"])
+    out = asof_join(p, c, by=["user_id"])
     return (out.select(
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us"),
         F.coalesce("event_id_right", F.lit(-1)).alias("click_event_id"),
@@ -1637,7 +1637,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from homonim_spark.operators.dedup import (duplicate_clusters,
                                                minhash_near_duplicates)
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(docs, n=3, threshold=0.8)
+    pairs = minhash_near_duplicates(docs, threshold=0.8)
     return duplicate_clusters(pairs).orderBy("doc_id")
 
 
@@ -1721,7 +1721,7 @@ def _srp_planes_values() -> str:
     from homonim_spark.operators.similarity import make_planes
     return ",\n    ".join(
         "(%d, [%s])" % (i, ", ".join(repr(float(x)) for x in p))
-        for i, p in enumerate(make_planes(64, 8, 42)))
+        for i, p in enumerate(make_planes(64, 8)))
 
 
 ORACLE_ANN_LSH_TOPK = f"""

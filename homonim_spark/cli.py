@@ -114,7 +114,8 @@ def main(argv=None) -> int:
         docs = spark.read.parquet(args.documents)
         tiles = spark.read.parquet(args.tiles)
         # 'auto' resolves to the lower-res grid inside infer_fuse_config
-        # (the reference rule, raster_pair.py:193-224); resolved ONCE here
+        # (the reference rule, raster_pair.py:193-224); the manifest's
+        # FUSE_PROC_CRS needs the resolved grid, so it is resolved ONCE here
         # and shared with fuse() — one metadata-scale collect, not two
         from homonim_spark.enums import Model, ProcCrs
         params = KernelModelParams(
@@ -125,19 +126,14 @@ def main(argv=None) -> int:
         cfg = infer_fuse_config(tiles, params, proc_crs=ProcCrs(args.proc_crs),
                                 chunk=args.chunk)
         fused = fuse(docs, tiles, cfg=cfg)
-        # corrected tiles live on the src grid; the h/w columns record the
-        # param (proc-grid) tile size — scale between them:
-        scale_h = (cfg.src_scale + cfg.ref_scale - 1) // cfg.ref_scale \
-            if cfg.proc_crs == ProcCrs.ref else 1
         fused.cache()
         write_corrected(fused, f"{args.out}/corrected", dtype=args.dtype,
-                        nodata=args.nodata, scale_h=scale_h)
+                        nodata=args.nodata)
         fused.drop("corr").write.mode("overwrite").parquet(f"{args.out}/params")
         if args.export_gtiff:
             from homonim_spark.operators.sink import export_corrected_gtiff
             export_corrected_gtiff(
-                fused, args.export_gtiff, dtype=args.dtype,
-                nodata=args.nodata, scale_h=scale_h,
+                fused, args.export_gtiff, dtype=args.dtype, nodata=args.nodata,
                 epsg=args.export_epsg, build_ovw=args.build_ovw).collect()
         n_bands = fused.select("band").distinct().count()
         manifest = run_manifest(args.model, tuple(args.kernel),
@@ -151,7 +147,7 @@ def main(argv=None) -> int:
     elif args.cmd == "compare":
         from homonim_spark.operators.compare import compare_with_mean
         tiles = spark.read.parquet(args.tiles)
-        stats = compare_with_mean(tiles).toPandas().to_dict(orient="records")
+        stats = compare_with_mean(tiles, args.proc_crs).toPandas().to_dict(orient="records")
         _emit_stats(stats, args)
 
     elif args.cmd == "stats":

@@ -204,16 +204,15 @@ def to_spark(
             spark.createDataFrame(tiles_pdf, schema=TILES_SCHEMA))
 
 
-def default_specs(scale: int = 1, bands: int = 1, tile: int = 16) -> List[RasterFixtureSpec]:
-    """A deterministic family of image pairs; ``scale`` multiplies the cell
-    count (used by bench.py to grow input size without changing semantics)."""
+def default_specs(scale: int = 1) -> List[RasterFixtureSpec]:
+    """A deterministic family of one-band, 16-px-tile image pairs; ``scale``
+    multiplies the cell count (used by bench.py to grow input size without
+    changing semantics)."""
     specs = []
     for i in range(max(1, scale)):
         specs.append(RasterFixtureSpec(
             pair_id=f"pair{i}",
             cells=(4, 4),
-            tile=tile,
-            bands=bands,
             true_gain=1.0 + 0.25 * (i % 4),
             true_offset=float(2 * (i % 3)),
             origin=(8 * (i // 16), 8 * (i % 16)),

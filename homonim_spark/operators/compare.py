@@ -57,12 +57,14 @@ def block_sums(pairs: DataFrame, proc_crs: str = "ref") -> DataFrame:
     """Per-tile partial sums (``compare.py:232-256``): bring the other tile
     onto the processing grid (block-mean onto a coarser grid, bilinear onto
     a finer one — reference ``compare.py:236-242``; either image may be the
-    finer), mask to the common valid set, emit the seven sums."""
+    finer), mask to the common valid set, emit the seven sums.
+    ``proc_crs='auto'`` takes each pair's lower-resolution grid: ref when
+    the src tile has at least as many pixels, as ``infer_fuse_config``."""
 
     def sums(image_id, band, src_h, src_w, src, ref_h, ref_w, ref):
         src = decode_tile(src, src_h, src_w)
         ref = decode_tile(ref, ref_h, ref_w)
-        if proc_crs == "src":
+        if proc_crs == "src" or (proc_crs == "auto" and src_h < ref_h):
             ref = ops.to_grid(ref, ref_h, src_h)
         else:
             src = ops.to_grid(src, src_h, ref_h)
@@ -107,7 +109,7 @@ def compare(tiles: DataFrame, proc_crs: str = "ref") -> DataFrame:
     return _final_stats(agg)
 
 
-def compare_with_mean(tiles: DataFrame) -> DataFrame:
+def compare_with_mean(tiles: DataFrame, proc_crs: str = "ref") -> DataFrame:
     """compare + the reference's cross-band ``Mean`` summary row
     (``compare.py:177-186``): mean of each statistic over bands, with the
     integer field floor-divided exactly as the reference does
@@ -117,7 +119,7 @@ def compare_with_mean(tiles: DataFrame) -> DataFrame:
     # per-band projection evaluates twice — and nothing is left persisted
     # across invocations (a cached copy per call leaked under repeated
     # bench reps; guide §5 caching rules)
-    per_band = compare(tiles)
+    per_band = compare(tiles, proc_crs)
     mean_row = per_band.groupBy("image_id").agg(
         F.avg("r2").alias("r2"), F.avg("rmse").alias("rmse"), F.avg("rrmse").alias("rrmse"),
         (F.sum("n") / F.count("n")).cast("long").alias("n"),

@@ -122,6 +122,7 @@ def jaccard_pairs(
 #: LSH banding: the 64-permutation MinHash signature is 16 bands × 4 rows
 MINHASH_BANDS = 16
 MINHASH_ROWS = 4
+MINHASH_NGRAM = 3                # shingle length of minhash_near_duplicates
 _NUM_PERM = MINHASH_BANDS * MINHASH_ROWS
 
 
@@ -260,20 +261,20 @@ def _expand_pairs(rep_pairs: DataFrame, reps: DataFrame, members: DataFrame,
 
 def minhash_near_duplicates(
     documents: DataFrame,
-    n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: exact-duplicate collapse →
-    signature → band buckets → candidate pairs → exact-Jaccard verify ≥
-    threshold → expand back to member pairs.  The *answer* is
+    """Full MinHash-LSH near-dup pipeline over ``MINHASH_NGRAM``-character
+    shingles: exact-duplicate collapse → signature → band buckets →
+    candidate pairs → exact-Jaccard verify ≥ threshold → expand back to
+    member pairs.  The *answer* is
     exact-Jaccard-defined (LSH only prunes; collapse/expand is lossless),
     so it is SQL-oracle-checkable.  Duplicate-heavy corpora no longer
     produce B² candidate rows per bucket: buckets hold one representative
     per distinct text."""
     reps, members = _collapse_exact(documents)
-    sigs = minhash_signatures(reps, n)
+    sigs = minhash_signatures(reps, MINHASH_NGRAM)
     cands = lsh_candidates(sigs)
-    rep_pairs = jaccard_pairs(reps, n, threshold, candidates=cands)
+    rep_pairs = jaccard_pairs(reps, MINHASH_NGRAM, threshold, candidates=cands)
     out = _expand_pairs(rep_pairs, reps, members, "jaccard", 1.0)
     return out.filter(F.col("jaccard") >= threshold)
 
@@ -439,6 +440,7 @@ def _simhash_rep_pairs(
 
 CDC_WINDOW = 16                  # rolling-hash window (chars)
 CDC_MODULUS = 64                 # boundary probability 1/64 → ~64-char chunks
+MIN_SHARED_CHUNKS = 2            # passage_overlap_pairs' pair threshold
 _CDC_M = 2147483647              # Mersenne prime 2^31−1
 _CDC_P = 131
 
@@ -604,12 +606,11 @@ def content_chunks(documents: DataFrame) -> DataFrame:
         schema="doc_id long, chunk_idx int, chunk_len int, chunk_fp long")
 
 
-def passage_overlap_pairs(
-    documents: DataFrame, min_shared: int = 2,
-) -> DataFrame:
-    """Pairs of documents sharing ≥ ``min_shared`` distinct content-defined
-    chunks — partial-duplicate / contamination candidates that whole-doc
-    fingerprints and even MinHash (which needs global similarity) miss.
+def passage_overlap_pairs(documents: DataFrame) -> DataFrame:
+    """Pairs of documents sharing ≥ ``MIN_SHARED_CHUNKS`` distinct
+    content-defined chunks — partial-duplicate / contamination candidates
+    that whole-doc fingerprints and even MinHash (which needs global
+    similarity) miss.
 
     Inverted-index join on chunk fingerprints: candidate volume is
     Σ df(fp)² over shared fingerprints.  Only (doc_id, fp) pairs shuffle.
@@ -623,5 +624,5 @@ def passage_overlap_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"),
                  F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("shared_chunks"))
-        .filter(F.col("shared_chunks") >= min_shared)
+        .filter(F.col("shared_chunks") >= MIN_SHARED_CHUNKS)
     )

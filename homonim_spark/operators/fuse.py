@@ -342,7 +342,7 @@ def reassemble_documents(spans: DataFrame) -> DataFrame:
 
 def knn_ref_fallback(tiles: DataFrame, max_ring: int = 2) -> DataFrame:
     """J7 integration: source cells with no same-cell reference tile borrow
-    the nearest reference tile (k-ring expansion join, deterministic
+    the nearest reference tile (one ``max_ring`` k-ring join, deterministic
     nearest-by-(ring, cell_id)) — the donor tile is re-keyed to the missing
     cell so the downstream pairing proceeds.
 
@@ -453,8 +453,8 @@ def fuse(
     if cfg is None:
         cfg = infer_fuse_config(tiles, params, ProcCrs(proc_crs), chunk=chunk)
     # (callers that already resolved the config — e.g. the CLI, which also
-    # needs cfg for the sink scale — pass it in to avoid a second
-    # metadata-scale collect over the tile table)
+    # needs the resolved proc_crs for its manifest's FUSE_PROC_CRS — pass it
+    # in to avoid a second metadata-scale collect over the tile table)
     used = referenced_tiles(documents, tiles)
     if band_map is not None:
         used = apply_band_map(used, band_map)

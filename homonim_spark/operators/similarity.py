@@ -202,8 +202,12 @@ def srp_buckets(df: DataFrame, vec_col: str, planes: np.ndarray,
     return df.mapInPandas(bucketize, schema=schema)
 
 
-def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
-    return np.random.default_rng(seed).standard_normal((n_planes, dim))
+#: seed of the SRP hyperplanes; the gate's ann_lsh_topk oracle replays them
+PLANE_SEED = 42
+
+
+def make_planes(dim: int, n_planes: int = 8) -> np.ndarray:
+    return np.random.default_rng(PLANE_SEED).standard_normal((n_planes, dim))
 
 
 def lsh_topk(

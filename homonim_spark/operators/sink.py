@@ -17,6 +17,7 @@ exactly the aperture-4 hierarchy.
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 import numpy as np
@@ -52,64 +53,50 @@ _EXPORT_SCHEMA = T.StructType([
 
 def convert_tiles(
     fused: DataFrame,
-    value_col: str = "corr",
     dtype: str = "float32",
     nodata: Optional[float] = None,
-    scale_h: int = 1,
 ) -> DataFrame:
-    """Dtype-convert a fused payload column for the sink (S6/S7).
+    """Dtype-convert the fused ``corr`` payloads for the sink (S6/S7).
 
-    ``scale_h``: payload dim = h·scale_h (corr tiles are factor× the proc
-    tile). Conversion semantics match the reference exactly
+    Every corrected tile is square, so its side comes from the payload
+    length (the fused ``h``/``w`` columns describe the parameter tile).
+    Conversion semantics match the reference exactly
     (``raster_array.py:353-387``): promote → clip to integer bounds →
     ``np.round`` (half-to-even) → rewrite masked pixels to ``nodata``.
     """
 
-    def conv(image_id, band, cell_id, h, w, data, media_ref):
+    def conv(image_id, band, cell_id, media_ref, data):
         if data is None:
             return
-        hh, ww = h * scale_h, w * scale_h
-        n_px = data.size // TILE_DTYPE.itemsize
-        if hh * ww != n_px:
-            # payload lives on a different grid than h·scale_h can
-            # express (e.g. proc-crs=ref with a coarser-than-ref
-            # source: params on the ref grid, corr on the src grid,
-            # related by 1/f) — derive the square payload side from
-            # the byte length instead of crashing in the reshape
-            side = int(np.sqrt(n_px))
-            if side * side != n_px:
-                raise ValueError(
-                    f"convert_tiles: payload of {n_px} px for "
-                    f"(image_id={image_id}, band={band}, "
-                    f"cell_id={cell_id}) matches neither "
-                    f"h*scale_h x w*scale_h = {hh}x{ww} nor a "
-                    f"square tile; cannot infer geometry")
-            hh = ww = side
-        yield (image_id, band, cell_id, media_ref, hh, ww, dtype, nodata,
-               convert_array_dtype(decode_tile(data, hh, ww), dtype, nodata))
+        side = math.isqrt(data.size // TILE_DTYPE.itemsize)
+        if side * side * TILE_DTYPE.itemsize != data.size:
+            raise ValueError(
+                f"convert_tiles: payload of {data.size} bytes for "
+                f"(image_id={image_id}, band={band}, cell_id={cell_id}) "
+                f"is not a square tile")
+        yield (image_id, band, cell_id, media_ref, side, side, dtype, nodata,
+               convert_array_dtype(decode_tile(data, side, side), dtype, nodata))
 
-    mref = "media_ref" if "media_ref" in fused.columns else F.lit(None).cast("string")
-    return map_tile_batches(fused.select("image_id", "band", "cell_id", "h", "w", value_col, mref),
+    return map_tile_batches(fused.select("image_id", "band", "cell_id", "media_ref", "corr"),
                             conv, _OUT_TILE_SCHEMA)
 
 
 def write_corrected(
     fused: DataFrame, path: str, dtype: str = "float32",
-    nodata: Optional[float] = None, scale_h: int = 1,
+    nodata: Optional[float] = None,
 ) -> None:
     """S6/S8: corrected-tile sink — parquet partitioned by band (the
     columnar stand-in for the Iceberg table; band partitioning gives the
     same partition pruning the reference gets from per-band reads)."""
-    out = convert_tiles(fused, "corr", dtype, nodata, scale_h)
+    out = convert_tiles(fused, dtype, nodata)
     out.write.mode("overwrite").partitionBy("band").parquet(path)
 
 
 def export_corrected_gtiff(
     fused: DataFrame, out_dir: str, dtype: str = "float32",
-    nodata: Optional[float] = None, scale_h: int = 1,
-    res: Optional[int] = None, tile: Optional[tuple] = (256, 256),
-    compress: bool = True, epsg: Optional[int] = None,
-    build_ovw: bool = False, ovw_min_px: int = 256,
+    nodata: Optional[float] = None, tile: Optional[tuple] = (256, 256),
+    epsg: Optional[int] = None, build_ovw: bool = False, ovw_min_px: int = 256,
+    scale_h: int = 1,  # ignored: perfbench/workloads.py:run_pipeline passes it
 ) -> DataFrame:
     """S8 file-format parity: write ONE corrected GeoTIFF per image — the
     artifact a homonim user actually consumes (the reference writes
@@ -131,14 +118,13 @@ def export_corrected_gtiff(
     manifest rows — paths are executor-local, so ``out_dir`` must be
     shared storage on a real cluster.
     """
-    conv = convert_tiles(fused, "corr", dtype, nodata, scale_h)
+    conv = convert_tiles(fused, dtype, nodata)
 
     def write_image(image_id, rows):
-        # grid resolution is encoded in every cell id — deriving it here
-        # (instead of a caller-supplied parameter) makes a silently wrong
-        # geotransform impossible for data at a non-default resolution
+        # grid resolution is encoded in every cell id, so the geotransform
+        # cannot disagree with the data's resolution
         band, cell_id, h, w, data = zip(*rows)
-        cell_sz = grid.cell_size(int(grid.cell_res(cell_id[0])) if res is None else res)
+        cell_sz = grid.cell_size(int(grid.cell_res(cell_id[0])))
         t = max(h)
         crow = grid.cell_row(np.array(cell_id))
         ccol = grid.cell_col(np.array(cell_id))
@@ -168,7 +154,7 @@ def export_corrected_gtiff(
                if build_ovw else None)
         write_gtiff(path, canvas, transform=transform,
                     nodata=None if nodata is None else float(nodata),
-                    tile=tile, compress=compress, epsg=epsg, overviews=ovw)
+                    tile=tile, epsg=epsg, overviews=ovw)
         yield image_id, path, nb, H, W
 
     import os as _os

@@ -9,9 +9,10 @@ Scale design:
 - PIP: ``polyfill`` of each polygon at the tile resolution → the covering
   cell set is a *small* table → broadcast hash join against the tile table;
   only boundary cells take the exact vectorized point-in-polygon test.
-- kNN: staged k-ring expansion join (ring r ∈ {1, 2, 4, ...}) instead of a
-  crossJoin — candidate volume is O(tiles · ring²) not O(tiles²); ranking by
-  ``row_number`` over (Chebyshev ring distance, cell_id) is deterministic.
+- kNN: one k-ring join instead of a crossJoin — each src cell explodes to
+  its full ``max_ring`` ring once, so candidate volume is
+  O(tiles · max_ring²) not O(tiles²); ranking by ``row_number`` over
+  (Chebyshev ring distance, cell_id) is deterministic.
 - Skew: ``salted_join`` splits hot keys N-ways (explicit salting per
   north_rule) on top of AQE's runtime skew splitting.
 """

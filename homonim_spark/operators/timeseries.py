@@ -27,14 +27,14 @@ __all__ = ["asof_join", "range_join"]
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
     by: list[str] | tuple[str, ...] = ("user_id",),
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Left as-of join: for each left row, the single right row with the
-    greatest ``on`` value ≤ the left row's (``direction='backward'``), or
-    the smallest ≥ it (``'forward'``), within the same ``by`` key.  Equal
+    """Left as-of join on the time column ``ts`` of both sides: for each
+    left row, the single right row with the greatest ``ts`` ≤ the left
+    row's (``direction='backward'``), or the smallest ≥ it
+    (``'forward'``), within the same ``by`` key.  Equal
     timestamps match.  Unmatched left rows keep NULL right columns (left
     outer semantics).  ``tolerance_seconds`` drops matches farther than
     the given gap (pandas ``merge_asof`` semantics).
@@ -45,6 +45,7 @@ def asof_join(
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward: {direction}")
     by = list(by)
+    on = "ts"
     # at equal ts the right row must fall INSIDE the left row's frame:
     # backward frame is [start..current] -> right sorts first; forward
     # frame is [current..end] -> right sorts last

@@ -50,8 +50,7 @@ def staged_fuse_pipeline(
     fused = runner.run("fuse", cfg, lambda: fz.fuse(
         documents, used, model=model, kernel_shape=kernel_shape, **fuse_kwargs))
     corrected = runner.run("sink", {**cfg, "dtype": "float32", "nodata": None},
-                           lambda: convert_tiles(fused, "corr", "float32", None,
-                                                 scale_h=_factor(used)))
+                           lambda: convert_tiles(fused))
     stats = runner.run("stats", cfg, lambda: param_stats(fused, model=model))
     out = {"ingest": used, "fuse": fused, "sink": corrected,
            "stats": stats, "runner": runner}
@@ -95,11 +94,3 @@ def _overview_snapshots(spark, corrected, cfg, warehouse, min_px):
                    .filter(lvl_filter(i)).drop("level", "fingerprint"))
     return out
 
-
-def _factor(tiles: DataFrame) -> int:
-    """Corrected-tile px per param-tile px for the sink. src finer → factor;
-    src coarser (auto → src space: params already on the src grid) → 1."""
-    from pyspark.sql import functions as F
-    sizes = {r["role"]: r["h"] for r in
-             tiles.groupBy("role").agg(F.max("h").alias("h")).collect()}
-    return max(1, int(sizes.get("src", sizes["ref"])) // int(sizes["ref"]))

@@ -90,12 +90,13 @@ def incremental_fuse(
     )
 
 
-def stateful_sessionize(
-    events_stream: DataFrame,
-    gap_seconds: int = 1800,
-) -> DataFrame:
+#: inactivity that closes a stateful_sessionize session
+SESSION_GAP_SECONDS = 1800
+
+
+def stateful_sessionize(events_stream: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: per-user session aggregation with
-    ``applyInPandasWithState`` — sessions close after ``gap_seconds`` of
+    ``applyInPandasWithState`` — sessions close after ``SESSION_GAP_SECONDS`` of
     inactivity; state is (session start, last ts, count, value sum) per
     user, emitted when the gap passes or the state times out.
 
@@ -144,7 +145,7 @@ def stateful_sessionize(
             pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ts")
             for ts, value in zip(pdf["ts"], pdf["value"]):
                 us = int(pd.Timestamp(ts).value // 1000)
-                if last_us is not None and us - last_us > gap_seconds * 1_000_000:
+                if last_us is not None and us - last_us > SESSION_GAP_SECONDS * 1_000_000:
                     rows.append((user_id, pd.Timestamp(start_us, unit="us"),
                                  pd.Timestamp(last_us, unit="us"), n, vsum))
                     start_us, n, vsum = us, 0, 0.0

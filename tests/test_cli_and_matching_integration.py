@@ -84,9 +84,13 @@ def test_compare_src_coarser_mirrors_src_finer(spark):
         for i, col in enumerate(("r2", "rmse")):
             assert a[col] == pytest.approx(b[col], rel=1e-9)
             assert a[col] == pytest.approx(want[i], rel=1e-6)
+    # auto takes each pair's lower-resolution grid: src for the swapped pair
+    for pair, grid_ in ((swapped, "src"), (tiles, "ref")):
+        auto = compare(pair, proc_crs="auto").toPandas()
+        pd.testing.assert_frame_equal(auto, compare(pair, proc_crs=grid_).toPandas())
 
 
-def test_cli_fuse_compare_stats(tmp_path):
+def test_cli_fuse_compare_stats(spark, tmp_path):
     """Drive the CLI end-to-end in a subprocess: fuse → stats → compare."""
     import pyarrow  # noqa: F401  (ensure env)
     docs_pdf, tiles_pdf = datagen.build_pair_tables(
@@ -134,6 +138,19 @@ def test_cli_fuse_compare_stats(tmp_path):
     assert r3.returncode == 0, r3.stderr[-2000:]
     cmp_stats = json.loads(r3.stdout.strip().splitlines()[-1])
     assert any(abs(s["r2"] - 1.0) < 1e-6 for s in cmp_stats)
+
+    # --proc-crs reaches compare: the src grid has factor² more pixels
+    r4 = subprocess.run(
+        [sys.executable, "-m", "homonim_spark.cli", "compare", "--documents", ddir,
+         "--tiles", tdir, "--proc-crs", "src", "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
+    assert r4.returncode == 0, r4.stderr[-2000:]
+    src_stats = json.loads(r4.stdout.strip().splitlines()[-1])
+    _, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
+    want = compare(tiles, proc_crs="src").toPandas().iloc[0]
+    # one band: its row and the Mean row carry the same n
+    n_src = {s["n"] for s in src_stats}
+    assert n_src == {want["n"]} and n_src != {s["n"] for s in cmp_stats}
 
 
 def test_cli_yaml_conf_and_table_report(tmp_path):

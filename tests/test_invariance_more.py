@@ -70,7 +70,7 @@ def test_stateful_sessionize_executes(spark, tmp_path):
     spark.createDataFrame(pd.DataFrame(rows)).write.parquet(in_dir)
     stream = (spark.readStream
               .schema("ts timestamp, user_id long, value double").parquet(in_dir))
-    out = stateful_sessionize(stream, gap_seconds=1800)
+    out = stateful_sessionize(stream)
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("sessions").option("checkpointLocation", str(tmp_path / "sck"))
          .trigger(availableNow=True).start())
@@ -104,7 +104,7 @@ def test_stateful_sessionize_group_larger_than_arrow_batch(spark, tmp_path):
     stream = (spark.readStream
               .schema("ts timestamp, user_id long, value double")
               .parquet(in_dir))
-    out = stateful_sessionize(stream, gap_seconds=1800)
+    out = stateful_sessionize(stream)
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("big_sessions")
          .option("checkpointLocation", str(tmp_path / "big_sck"))

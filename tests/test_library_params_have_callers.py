@@ -10,7 +10,8 @@ A call sets a parameter when it passes it by keyword or by position
 the keys of a ``dict(...)``/``{...}`` literal bound to ``kw`` in the calling
 function, or, when ``kw`` is that function's own ``**`` parameter, every
 keyword its callers pass (followed through further splats); any other splat
-sets everything."""
+sets everything.  A call that passes a parameter its own default literal
+(``dtype="float32"`` where the default is ``"float32"``) does not set it."""
 
 import ast
 from pathlib import Path
@@ -55,14 +56,30 @@ def _library_functions():
 
 
 def _defaulted(fn, skip_self):
+    """``(name, positional index or None, default node)``."""
     args = fn.args
     pos = args.posonlyargs + args.args
     first = len(pos) - len(args.defaults)
     for i in range(first, len(pos)):
-        yield pos[i].arg, i - skip_self
+        yield pos[i].arg, i - skip_self, args.defaults[i - first]
     for arg, default in zip(args.kwonlyargs, args.kw_defaults):
         if default is not None:
-            yield arg.arg, None
+            yield arg.arg, None, default
+
+
+def _literal(node):
+    """``(True, value)`` for a literal node, ``(False, None)`` otherwise."""
+    try:
+        return True, ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return False, None
+
+
+def _is_default(value, default):
+    """``value`` is the same literal as ``default`` (type included, so
+    ``1`` is not ``True`` or ``1.0``)."""
+    (ok_v, v), (ok_d, d) = _literal(value), _literal(default)
+    return ok_v and ok_d and type(v) is type(d) and v == d
 
 
 def _calls():
@@ -89,8 +106,9 @@ def _calls():
         yield from visit(ast.parse(path.read_text()), ())
 
 
-def _dict_keys(fn, var):
-    """Keys of a ``var = dict(k=...)`` or ``var = {"k": ...}`` in ``fn``."""
+def _dict_items(fn, var):
+    """``{key: [value node]}`` of a ``var = dict(k=...)`` or
+    ``var = {"k": ...}`` in ``fn``."""
     for node in ast.walk(fn):
         if (isinstance(node, ast.Assign) and len(node.targets) == 1
                 and isinstance(node.targets[0], ast.Name)
@@ -98,62 +116,69 @@ def _dict_keys(fn, var):
             value = node.value
             if (isinstance(value, ast.Call) and isinstance(value.func, ast.Name)
                     and value.func.id == "dict" and not value.args):
-                return {k.arg for k in value.keywords if k.arg}
+                return {k.arg: [k.value] for k in value.keywords if k.arg}
             if isinstance(value, ast.Dict) and all(
                     isinstance(k, ast.Constant) for k in value.keys):
-                return {k.value for k in value.keys}
+                return {k.value: [v] for k, v in zip(value.keys, value.values)}
     return None
 
 
 def _set_parameters():
-    """``call name -> (keywords set, max positional count, sets everything)``."""
+    """``call name -> ({keyword: [value node]}, {position: [value node]},
+    sets everything)``."""
     by_name = {}
     for name, call, scopes in _calls():
         by_name.setdefault(name, []).append((call, scopes))
 
     def keywords(name, seen):
-        """Keywords passed to calls of ``name``, through ``**`` forwards."""
+        """Keywords passed to calls of ``name`` with their value nodes,
+        through ``**`` forwards."""
         if name in seen:
-            return set(), False
+            return {}, False
         seen = seen | {name}
-        out, everything = set(), False
+        out, everything = {}, False
         for call, scopes in by_name.get(name, []):
             for kw in call.keywords:
                 if kw.arg is not None:
-                    out.add(kw.arg)
+                    out.setdefault(kw.arg, []).append(kw.value)
                     continue
-                keys, forwards_all = None, False
+                items, forwards_all = None, False
                 var = kw.value.id if isinstance(kw.value, ast.Name) else None
                 for fn in reversed(scopes if var else ()):
                     if fn.args.kwarg is not None and fn.args.kwarg.arg == var:
-                        keys, forwards_all = keywords(fn.name, seen)
+                        items, forwards_all = keywords(fn.name, seen)
                         break
-                    keys = _dict_keys(fn, var)
-                    if keys is not None:
+                    items = _dict_items(fn, var)
+                    if items is not None:
                         break
-                if keys is None:
+                if items is None:
                     everything = True
                 else:
-                    out |= keys
+                    for key, values in items.items():
+                        out.setdefault(key, []).extend(values)
                     everything = everything or forwards_all
         return out, everything
 
     result = {}
     for name, pairs in by_name.items():
-        npos = max(next((i for i, a in enumerate(call.args)
-                         if isinstance(a, ast.Starred)), len(call.args))
-                   for call, _ in pairs)
+        positions = {}
+        for call, _ in pairs:
+            for i, a in enumerate(call.args):
+                if isinstance(a, ast.Starred):
+                    break
+                positions.setdefault(i, []).append(a)
         kws, everything = keywords(name, frozenset())
-        result[name] = (kws, npos, everything)
+        result[name] = (kws, positions, everything)
     return result
 
 
 def _uncalled():
     set_by = _set_parameters()
     for qual, call_name, fn, skip_self in _library_functions():
-        kws, npos, everything = set_by.get(call_name, (set(), 0, False))
-        for param, index in _defaulted(fn, skip_self):
-            if everything or param in kws or (index is not None and index < npos):
+        kws, positions, everything = set_by.get(call_name, ({}, {}, False))
+        for param, index, default in _defaulted(fn, skip_self):
+            values = kws.get(param, []) + positions.get(index, [])
+            if everything or any(not _is_default(v, default) for v in values):
                 continue
             yield f"{qual}({param})"
 

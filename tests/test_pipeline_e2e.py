@@ -89,6 +89,25 @@ def test_staged_pipeline_resumes(spark, tmp_path):
     assert m[m.stage == "fuse"]["n_rows"].sum() == n_fused
 
 
+def test_staged_pipeline_on_the_src_proc_grid(spark, tmp_path):
+    """proc_crs='src' with a finer source: parameter and corrected tiles
+    share the src side, and the sink stage writes the fused payloads at it."""
+    from homonim_spark.tiles import convert_array_dtype, decode_tile
+
+    spec = datagen.RasterFixtureSpec(pair_id="sp", cells=(2, 2), tile=16, factor=2)
+    docs, tiles = datagen.to_spark(spark, *datagen.build_pair_tables(spec))
+    out = staged_fuse_pipeline(spark, docs, tiles, str(tmp_path / "run"), proc_crs="src")
+    side = spec.tile * spec.factor
+    fused = {r.cell_id: r for r in out["fuse"].toPandas().itertuples(index=False)}
+    sink = out["sink"].toPandas()
+    assert len(fused) == len(sink) == 4
+    assert {r.h for r in fused.values()} == {side}
+    assert (sink["h"] == side).all() and (sink["w"] == side).all()
+    for r in sink.itertuples(index=False):
+        want = convert_array_dtype(decode_tile(fused[r.cell_id].corr, side, side), "float32", None)
+        assert bytes(r.data) == want.tobytes()
+
+
 def test_overview_snapshots_resume_across_restart(spark, tmp_path):
     """Overview levels commit as catalog snapshots; re-running the pipeline
     with the same config finds them in the snapshot log and skips the

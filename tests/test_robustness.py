@@ -25,7 +25,7 @@ def test_byte_image_roundtrip(spark):
     docs_pdf, tiles_pdf = datagen.build_pair_tables(spec)
     docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
     fused = fuse_ops.fuse(docs, tiles, model="gain-blk-offset", kernel_shape=(5, 5))
-    out = convert_tiles(fused, "corr", dtype="uint8", nodata=255, scale_h=2).toPandas()
+    out = convert_tiles(fused, dtype="uint8", nodata=255).toPandas()
     for r in out.itertuples(index=False):
         arr = np.frombuffer(r.data, dtype=np.uint8).reshape(r.h, r.w)
         # gradient values are 1..200 → corrected ≈ same range; nodata=255 at borders

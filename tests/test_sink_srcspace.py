@@ -33,17 +33,51 @@ def test_convert_array_dtype_semantics():
 
 def test_sink_dtype_conversion(spark, fused):
     spec, tiles_pdf, fdf = fused
-    out = convert_tiles(fdf, "corr", dtype="uint8", nodata=255, scale_h=spec.factor).toPandas()
+    out = convert_tiles(fdf, dtype="uint8", nodata=255).toPandas()
     assert len(out) == 8
     arr = np.frombuffer(out.iloc[0]["data"], dtype=np.uint8)
     assert arr.size == (16 * 2) ** 2
     assert (out["dtype"] == "uint8").all()
 
 
+@pytest.mark.parametrize("proc_crs", ["ref", "src"])
+@pytest.mark.parametrize("src_finer", [True, False], ids=["src-finer", "src-coarser"])
+def test_convert_tiles_takes_the_corrected_side_from_the_payload(spark, src_finer, proc_crs):
+    """On every grid pairing the sink writes each corrected tile at the src
+    side, whatever side the parameter tiles (the fused ``h``/``w``) have."""
+    spec = datagen.RasterFixtureSpec(pair_id="geo", cells=(2, 2), tile=16, factor=2,
+                                     true_gain=2.0, true_offset=10.0)
+    docs_pdf, tiles_pdf = datagen.build_pair_tables(spec)
+    if not src_finer:
+        tiles_pdf = tiles_pdf.assign(role=tiles_pdf["role"].map({"ref": "src", "src": "ref"}))
+    docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
+    fdf = fuse_ops.fuse(docs, tiles, model=Model.gain_blk_offset, kernel_shape=(5, 5),
+                        proc_crs=proc_crs).cache()
+    fine, coarse = spec.tile * spec.factor, spec.tile
+    side = fine if src_finer else coarse
+    fused = {r.cell_id: r for r in fdf.toPandas().itertuples(index=False)}
+    assert {r.h for r in fused.values()} == {fine if (proc_crs == "src") == src_finer else coarse}
+
+    out = convert_tiles(fdf, dtype="uint8", nodata=255).toPandas()
+    assert len(out) == 4
+    assert (out["h"] == side).all() and (out["w"] == side).all()
+    for r in out.itertuples(index=False):
+        want = convert_array_dtype(decode_tile(fused[r.cell_id].corr, side, side), "uint8", 255)
+        assert bytes(r.data) == want.tobytes()
+    fdf.unpersist()
+
+
+def test_convert_tiles_rejects_a_non_square_payload(spark):
+    schema = "image_id string, band int, cell_id long, media_ref string, corr binary"
+    bad = spark.createDataFrame([("img", 0, 7, "m", np.zeros(3, "<f4").tobytes())], schema)
+    with pytest.raises(Exception, match=r"cell_id=7\) is not a square tile"):
+        convert_tiles(bad).collect()
+
+
 def test_write_corrected_roundtrip(spark, fused, tmp_path):
     spec, tiles_pdf, fdf = fused
     path = str(tmp_path / "corrected")
-    write_corrected(fdf, path, dtype="float32", nodata=None, scale_h=spec.factor)
+    write_corrected(fdf, path, dtype="float32", nodata=None)
     back = spark.read.parquet(path)
     assert back.count() == 8
     assert "band" in back.columns  # partition column survives
@@ -176,8 +210,7 @@ def test_export_corrected_gtiff_roundtrip(spark, fused, tmp_path):
     out_dir = str(tmp_path / "tifs")
     manifest = export_corrected_gtiff(
         fdf, out_dir, dtype="float32", nodata=-9999.0,
-        scale_h=spec.factor, res=datagen.FIXTURE_RES,
-        tile=(32, 32), compress=True, epsg=32734).toPandas()
+        tile=(32, 32), epsg=32734).toPandas()
     assert list(manifest["image_id"]) == ["s0"]
     m = manifest.iloc[0]
     t = spec.tile * spec.factor                       # corrected tile px
@@ -192,8 +225,7 @@ def test_export_corrected_gtiff_roundtrip(spark, fused, tmp_path):
 
     # un-flip and compare each cell window against convert_tiles' payloads
     img = g.data[:, ::-1, :]
-    conv = convert_tiles(fdf, "corr", dtype="float32", nodata=-9999.0,
-                         scale_h=spec.factor).toPandas()
+    conv = convert_tiles(fdf, dtype="float32", nodata=-9999.0).toPandas()
     assert len(conv) == 8
     for r in conv.itertuples(index=False):
         rr = grid.cell_row(int(r.cell_id)) * t
@@ -217,14 +249,12 @@ def test_export_gtiff_with_internal_overviews(spark, fused, tmp_path):
     # -> a build_ovw export still has exactly ONE image IFD (reference
     # parity: rasterio builds zero levels here too)
     m0 = export_corrected_gtiff(
-        fdf, str(tmp_path / "t0"), dtype="float32", nodata=-9999.0,
-        scale_h=spec.factor, res=datagen.FIXTURE_RES, tile=(32, 32),
+        fdf, str(tmp_path / "t0"), dtype="float32", nodata=-9999.0, tile=(32, 32),
         build_ovw=True).toPandas()
     assert read_gtiff(m0.iloc[0]["path"]).n_overviews == 0
 
     m1 = export_corrected_gtiff(
-        fdf, str(tmp_path / "t1"), dtype="float32", nodata=-9999.0,
-        scale_h=spec.factor, res=datagen.FIXTURE_RES, tile=(32, 32),
+        fdf, str(tmp_path / "t1"), dtype="float32", nodata=-9999.0, tile=(32, 32),
         build_ovw=True, ovw_min_px=8).toPandas()
     g = read_gtiff(m1.iloc[0]["path"])
     assert g.n_overviews == 3  # floor(log2(64)) - 3

@@ -339,7 +339,7 @@ def test_content_chunks_position_invariant_passage(spark):
     assert len(shared01) >= 2        # interior passage chunks align
     assert not (fps[0] & fps[2]) and not (fps[1] & fps[2])
 
-    pairs = dedup.passage_overlap_pairs(docs, min_shared=2).toPandas()
+    pairs = dedup.passage_overlap_pairs(docs).toPandas()
     assert [(r.doc_a, r.doc_b) for r in pairs.itertuples(index=False)] \
         == [(0, 1)]
 

@@ -78,11 +78,10 @@ def _grouped_sites(docs, tiles, out_dir):
         "transform[3], transform[4] * 0.9, transform[5] + 11.0)"))
     regrid_in = tiles.unionByName(moved).filter("image_id = 'b0'") \
         .select("image_id", "role", "band", "transform", "h", "w", "data")
-    corrected = convert_tiles(fused, "corr", scale_h=2)
+    corrected = convert_tiles(fused)
     level = build_overviews(corrected.select("image_id", "band", "cell_id", "h", "w", "data"),
                             min_px=16)[0]
-    manifest = export_corrected_gtiff(fused, out_dir, dtype="uint16", nodata=0, scale_h=2,
-                                      res=datagen.FIXTURE_RES).collect()
+    manifest = export_corrected_gtiff(fused, out_dir, dtype="uint16", nodata=0).collect()
     return {
         "fuse": _rows(fused),
         "regrid": _rows(regrid_tiles(regrid_in, datagen.FIXTURE_RES, 16)),

@@ -34,7 +34,7 @@ def sides(spark):
 
 def test_backward_matches_latest_at_or_before(spark, sides):
     left, right = sides
-    out = asof_join(left, right, on="ts", by=["user"]).toPandas()
+    out = asof_join(left, right, by=["user"]).toPandas()
     got = {r.lid: r.rid for r in out.itertuples(index=False)}
     assert got[1] == 10          # equal ts matches
     assert got[2] == 11          # 9 < 10, not 11 (future)
@@ -45,7 +45,7 @@ def test_backward_matches_latest_at_or_before(spark, sides):
 
 def test_forward_matches_earliest_at_or_after(spark, sides):
     left, right = sides
-    out = asof_join(left, right, on="ts", by=["user"],
+    out = asof_join(left, right, by=["user"],
                     direction="forward").toPandas()
     got = {r.lid: r.rid for r in out.itertuples(index=False)}
     assert got[1] == 10          # equal ts matches forward too
@@ -55,7 +55,7 @@ def test_forward_matches_earliest_at_or_after(spark, sides):
 
 def test_tolerance_drops_stale_matches(spark, sides):
     left, right = sides
-    out = asof_join(left, right, on="ts", by=["user"],
+    out = asof_join(left, right, by=["user"],
                     tolerance_seconds=120).toPandas()
     got = {r.lid: r.rid for r in out.itertuples(index=False)}
     assert got[1] == 10 and got[2] == 11
@@ -64,14 +64,14 @@ def test_tolerance_drops_stale_matches(spark, sides):
 
 def test_collision_suffix_and_column_set(spark, sides):
     left, right = sides
-    out = asof_join(left, right, on="ts", by=["user"])
+    out = asof_join(left, right, by=["user"])
     assert out.columns == ["lid", "user", "ts", "rid", "user_right",
                            "ts_right"]
 
 
 def test_single_exchange_plan(spark, sides):
     left, right = sides
-    plan = asof_join(left, right, on="ts",
+    plan = asof_join(left, right,
                      by=["user"])._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
@@ -205,7 +205,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, case):
     left = spark.createDataFrame(lrows, "k int, ts int, lpay string")
     right = spark.createDataFrame(rrows or [(99, 0, "sentinel")],
                                   "k int, ts int, rpay string")
-    got = (asof_join(left, right, on="ts", by=["k"], direction=direction,
+    got = (asof_join(left, right, by=["k"], direction=direction,
                      tolerance_seconds=tol)
            .toPandas().sort_values(["k", "ts"]).reset_index(drop=True))
 
