@@ -16,6 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # ---------------------------------------------------------------------------
@@ -761,29 +762,21 @@ def _explode_px(df: DataFrame, tile: int, cols: dict,
     ``dp`` places (verified to agree with DuckDB ROUND on the fixtures'
     ranges) or left as is when ``dp`` is None."""
     import numpy as np
-    import pandas as pd
     from homonim_spark import grid
-    from homonim_spark.tiles import decode_tile
+    from homonim_spark.tiles import decode_tile, map_tile_batches
 
-    names = ["r", "c", *cols.values()]
+    def explode(cell_id, *data):
+        arrs = [decode_tile(d, tile, tile) for d in data]
+        ys, xs = np.nonzero(~np.isnan(arrs[0]))
+        vals = [a[ys, xs].astype(np.float64) for a in arrs]
+        if dp is not None:
+            vals = [np.round(v, dp) for v in vals]
+        return zip((grid.cell_row(cell_id) * tile + ys).tolist(),
+                   (grid.cell_col(cell_id) * tile + xs).tolist(), *(v.tolist() for v in vals))
 
-    def explode(batches):
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                arrs = [decode_tile(getattr(rr, k), tile, tile) for k in cols]
-                r0 = grid.cell_row(int(rr.cell_id)) * tile
-                c0 = grid.cell_col(int(rr.cell_id)) * tile
-                ys, xs = np.nonzero(~np.isnan(arrs[0]))
-                for y, x in zip(ys, xs):
-                    vals = [np.float64(a[y, x]) for a in arrs]
-                    if dp is not None:
-                        vals = [np.round(v, dp) for v in vals]
-                    rows.append([int(r0 + y), int(c0 + x), *map(float, vals)])
-            yield pd.DataFrame(rows, columns=names)
-
-    schema = ", ".join(["r int", "c int", *(f"{n} double" for n in cols.values())])
-    return df.select("cell_id", *cols).mapInPandas(explode, schema=schema)
+    schema = T.StructType([T.StructField("r", T.IntegerType()), T.StructField("c", T.IntegerType()),
+                           *(T.StructField(n, T.DoubleType()) for n in cols.values())])
+    return map_tile_batches(df.select("cell_id", *cols), explode, schema)
 
 
 def q_fuse_gain_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -974,7 +967,6 @@ def q_raster_compare_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational (src = ((band+1)·v + 2)/2), so the float64 sums are EXACT and
     DuckDB reproduces the statistics bit-for-bit from a generate_series
     rebuild of the pixel table (rounded to 6 dp on both sides)."""
-    import pandas as pd
     from homonim_spark import datagen
     from homonim_spark.operators.compare import compare
 
@@ -1017,6 +1009,13 @@ FROM agg ORDER BY band
 """
 
 
+#: the media rows the PNG and WAV gate queries render from embeddings
+_MEDIA_SCHEMA = T.StructType([T.StructField("media_ref", T.StringType()),
+                              T.StructField("h", T.IntegerType()),
+                              T.StructField("w", T.IntegerType()),
+                              T.StructField("data", T.BinaryType())])
+
+
 def q_media_features_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG decode path, ORACLE-CHECKED: render each embedding as a
     deterministically-quantized 8×8 greyscale PNG (pure-python codec,
@@ -1026,25 +1025,19 @@ def q_media_features_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     ·127.5) — floor, not round, so float semantics match exactly), which
     pins the encode→decode round-trip numerically."""
     import numpy as np
-    import pandas as pd
     from homonim_spark.operators.multimodal import media_features
+    from homonim_spark.pngio import write_png
+    from homonim_spark.tiles import map_tile_batches
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
 
-    def to_png(batches):
-        from homonim_spark.pngio import write_png
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                v = np.asarray(list(r.embedding), dtype=np.float64)
-                q = np.clip(np.floor((np.clip(v, -1.0, 1.0) + 1.0) * 127.5),
-                            0, 255).astype(np.uint8)
-                rows.append({"media_ref": f"png://{int(r.vec_id):06d}",
-                             "h": 8, "w": 8, "data": write_png(q.reshape(8, 8))})
-            yield pd.DataFrame(rows, columns=["media_ref", "h", "w", "data"])
+    def to_png(vec_id, embedding):
+        v = np.asarray(embedding, dtype=np.float64)
+        q = np.clip(np.floor((np.clip(v, -1.0, 1.0) + 1.0) * 127.5), 0, 255).astype(np.uint8)
+        yield (f"png://{vec_id:06d}", 8, 8,
+               np.frombuffer(write_png(q.reshape(8, 8)), np.uint8))
 
-    media = emb.select("vec_id", "embedding").mapInPandas(
-        to_png, schema="media_ref string, h int, w int, data binary")
+    media = map_tile_batches(emb.select("vec_id", "embedding"), to_png, _MEDIA_SCHEMA)
     feats = media_features(media, codec="png")
     return (feats.select("media_ref", "width", "height",
                          F.round("mean", 6).alias("mean_px"))
@@ -1071,29 +1064,23 @@ def q_media_features_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     import wave as wavemod
 
     import numpy as np
-    import pandas as pd
     from homonim_spark.operators.multimodal import media_features
+    from homonim_spark.tiles import map_tile_batches
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
 
-    def to_wav(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                v = np.asarray(list(r.embedding), dtype=np.float64)
-                s = np.floor(np.clip(v, -1.0, 1.0) * 32767.0).astype(np.int16)
-                buf = io.BytesIO()
-                with wavemod.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(16000)
-                    wf.writeframes(s.tobytes())
-                rows.append({"media_ref": f"wav://{int(r.vec_id):06d}",
-                             "h": len(s), "w": 1, "data": buf.getvalue()})
-            yield pd.DataFrame(rows, columns=["media_ref", "h", "w", "data"])
+    def to_wav(vec_id, embedding):
+        v = np.asarray(embedding, dtype=np.float64)
+        s = np.floor(np.clip(v, -1.0, 1.0) * 32767.0).astype(np.int16)
+        buf = io.BytesIO()
+        with wavemod.open(buf, "wb") as wf:
+            wf.setnchannels(1)
+            wf.setsampwidth(2)
+            wf.setframerate(16000)
+            wf.writeframes(s.tobytes())
+        yield f"wav://{vec_id:06d}", len(s), 1, np.frombuffer(buf.getvalue(), np.uint8)
 
-    media = emb.select("vec_id", "embedding").mapInPandas(
-        to_wav, schema="media_ref string, h int, w int, data binary")
+    media = map_tile_batches(emb.select("vec_id", "embedding"), to_wav, _MEDIA_SCHEMA)
     feats = media_features(media, codec="wav")
     return (feats.select("media_ref",
                          F.col("height").alias("n_frames"),
@@ -1243,28 +1230,18 @@ def _stream_source(spark: SparkSession, sf_dir: str, table: str,
     return stream
 
 
-def _run_to_memory(out: DataFrame, stop_after_batch0: bool = False):
+def _run_to_memory(out: DataFrame):
     """Run a streaming DataFrame to a memory sink with availableNow +
-    checkpoint; returns the committed result as a batch DataFrame.
-    ``stop_after_batch0``: for stateful queries with pending
-    processing-time timeouts — those never self-terminate (no-data
-    micro-batches run forever), so stop once the data batch committed."""
+    checkpoint; returns the committed result as a batch DataFrame."""
     import tempfile
     import uuid
 
-    from homonim_spark.streaming import stop_after_data_batch
-
     name = f"gate_stream_{uuid.uuid4().hex[:8]}"
     ck = tempfile.mkdtemp(prefix="homonim-stream-ck-")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName(name).option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    if stop_after_batch0:
-        stop_after_data_batch(q)
-    else:
-        q.awaitTermination()
-    spark = out.sparkSession
-    return spark.table(name)
+    (out.writeStream.outputMode("append").format("memory")
+     .queryName(name).option("checkpointLocation", ck)
+     .trigger(availableNow=True).start().awaitTermination())
+    return out.sparkSession.table(name)
 
 
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1462,15 +1439,15 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     each user's last session.  Timestamps compare as epoch micros;
     per-session value sums round to 6dp (python accumulates in event
     order, SQL SUM in scan order)."""
-    from homonim_spark.streaming import stateful_sessionize
+    from homonim_spark.streaming import data_batches_only, stateful_sessionize
 
     stream = _stream_source(spark, sf_dir, "events", cast_ts=True)
-    out = stateful_sessionize(stream)
-    # stop_after_batch0: batch 0 holds all data, hence every gap-closed
-    # session; the 1 h default state timeout guarantees no timeout
-    # emission can race the stop, so the answer is exactly the closed
-    # sessions (the never-self-terminating stream is stopped for us)
-    return (_run_to_memory(out, stop_after_batch0=True)
+    # batch 0 holds all data, hence every gap-closed session; without
+    # no-data batches the query ends after it, before any state timeout
+    # can emit, so the answer is exactly the closed sessions
+    with data_batches_only(spark):
+        sessions = _run_to_memory(stateful_sessionize(stream))
+    return (sessions
             .select("user_id",
                     F.unix_micros("sess_start").alias("start_us"),
                     F.unix_micros("sess_end").alias("end_us"),

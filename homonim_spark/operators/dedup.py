@@ -14,7 +14,8 @@ Scale design notes (these run over the full corpus at 100 TB):
   an inverted-index join on chunk fingerprints.
 
 Hashing uses xxhash64/md5 built-ins (JVM-side); the one Python stage is
-the ``mapInPandas`` chunker of :func:`content_chunks`.
+the chunker of :func:`content_chunks`, one ``tiles.map_tile_batches`` row
+function per document.
 """
 
 from __future__ import annotations
@@ -544,7 +545,9 @@ def content_chunks(documents: DataFrame) -> DataFrame:
     import re
 
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from homonim_spark.tiles import map_tile_batches
 
     pinv = pow(_CDC_P, _CDC_M - 2, _CDC_M)
     # mirror normalize_text (textops.py): trim spaces → lower → collapse
@@ -552,58 +555,48 @@ def content_chunks(documents: DataFrame) -> DataFrame:
     #  , …) drifts from the Spark/DuckDB regex semantics (ADVICE #5)
     ws_run = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    def chunk_batch(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "chunk_idx": [], "chunk_len": [],
-                    "chunk_fp": []}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["text"]):
-                if raw is None:
-                    continue
-                t = ws_run.sub(" ", str(raw).strip(" ").lower())
-                n = len(t)
-                if n == 0:
-                    continue
-                codes = np.frombuffer(
-                    t.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-                if n < CDC_WINDOW:
-                    bounds = np.array([0, n], dtype=np.int64)
-                else:
-                    cut_list = []
-                    # O(n) prefix-sum rolling hash: the window hash
-                    # Σⱼ cᵢ₊ⱼ·pʲ equals p⁻ⁱ·(T[i+w] − T[i]) with T the
-                    # ascending-power prefix sum — identical values mod M
-                    # to the definitional gather, 16× less multiply work
-                    # (the fold trick is documented in _chunk_fingerprints;
-                    # 2³¹ ≡ 1 mod the Mersenne prime).  Sliced by stride
-                    # so per-doc scratch stays O(stride) at any doc length.
-                    for s0 in range(0, n - CDC_WINDOW + 1, 65536):
-                        s1 = min(s0 + 65536, n - CDC_WINDOW + 1)
-                        m = s1 - s0
-                        L = m + CDC_WINDOW - 1
-                        t = codes[s0:s0 + L] * _pow_table(_CDC_P, _CDC_M, L)
-                        t = (t >> 31) + (t & 0x7FFFFFFF)
-                        T = np.zeros(L + 1, dtype=np.int64)
-                        np.cumsum(t, out=T[1:])
-                        hv = (_pow_table(pinv, _CDC_M, m)
-                              * ((T[CDC_WINDOW:CDC_WINDOW + m] - T[:m])
-                                 % _CDC_M)
-                              ) % _CDC_M
-                        cut_list.append(
-                            np.nonzero(hv % CDC_MODULUS == 0)[0] + s0 + CDC_WINDOW)
-                    cuts = np.concatenate(cut_list)
-                    bounds = np.unique(np.concatenate(
-                        [[0, n], cuts]).astype(np.int64))
-                fps = _chunk_fingerprints(codes, bounds)
-                k = len(fps)
-                rows["doc_id"].extend([doc_id] * k)
-                rows["chunk_idx"].extend(range(k))
-                rows["chunk_len"].extend(np.diff(bounds).tolist())
-                rows["chunk_fp"].extend(fps.tolist())
-            yield pd.DataFrame(rows)
+    def chunk(doc_id, raw):
+        if raw is None:
+            return ()
+        t = ws_run.sub(" ", raw.strip(" ").lower())
+        n = len(t)
+        if n == 0:
+            return ()
+        codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(np.int64)
+        if n < CDC_WINDOW:
+            bounds = np.array([0, n], dtype=np.int64)
+        else:
+            cut_list = []
+            # O(n) prefix-sum rolling hash: the window hash
+            # Σⱼ cᵢ₊ⱼ·pʲ equals p⁻ⁱ·(T[i+w] − T[i]) with T the
+            # ascending-power prefix sum — identical values mod M
+            # to the definitional gather, 16× less multiply work
+            # (the fold trick is documented in _chunk_fingerprints;
+            # 2³¹ ≡ 1 mod the Mersenne prime).  Sliced by stride
+            # so per-doc scratch stays O(stride) at any doc length.
+            for s0 in range(0, n - CDC_WINDOW + 1, 65536):
+                s1 = min(s0 + 65536, n - CDC_WINDOW + 1)
+                m = s1 - s0
+                L = m + CDC_WINDOW - 1
+                t = codes[s0:s0 + L] * _pow_table(_CDC_P, _CDC_M, L)
+                t = (t >> 31) + (t & 0x7FFFFFFF)
+                T = np.zeros(L + 1, dtype=np.int64)
+                np.cumsum(t, out=T[1:])
+                hv = (_pow_table(pinv, _CDC_M, m)
+                      * ((T[CDC_WINDOW:CDC_WINDOW + m] - T[:m]) % _CDC_M)
+                      ) % _CDC_M
+                cut_list.append(np.nonzero(hv % CDC_MODULUS == 0)[0] + s0 + CDC_WINDOW)
+            cuts = np.concatenate(cut_list)
+            bounds = np.unique(np.concatenate([[0, n], cuts]).astype(np.int64))
+        fps = _chunk_fingerprints(codes, bounds)
+        return zip([doc_id] * len(fps), range(len(fps)),
+                   np.diff(bounds).tolist(), fps.tolist())
 
-    return documents.select("doc_id", "text").mapInPandas(
-        chunk_batch,
-        schema="doc_id long, chunk_idx int, chunk_len int, chunk_fp long")
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("chunk_idx", IntegerType()),
+                         StructField("chunk_len", IntegerType()),
+                         StructField("chunk_fp", LongType())])
+    return map_tile_batches(documents.select("doc_id", "text"), chunk, schema)
 
 
 def passage_overlap_pairs(documents: DataFrame) -> DataFrame:

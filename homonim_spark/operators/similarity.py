@@ -11,16 +11,41 @@
 
 Deterministic: projection hyperplanes are seeded; ties in top-k rank break
 by vec_id.
+
+The batch-matrix stages (:func:`cosine_topk_np`, :func:`srp_buckets`,
+:func:`ivf_topk`, :func:`_verify_candidates`) run through ``mapInArrow``:
+each Arrow batch's embedding column is read as one float64 matrix
+(:func:`_matrix`) and the outputs are built from Arrow arrays.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from homonim_spark.partitioning import rebalance
+
+
+def _matrix(data, col: str) -> np.ndarray:
+    """The ``list<float|double>`` column ``col`` of an Arrow record batch
+    or table as an ``(n, dim)`` float64 matrix.  ``flatten`` honours a
+    sliced batch's offset; a null row or rows of different lengths raise
+    ``ValueError`` naming the column."""
+    arr = data.column(col)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        raise ValueError(f"{col}: {arr.null_count} null embedding row(s)")
+    lens = pc.list_value_length(arr).to_numpy()
+    if len(lens) and lens.min() != lens.max():
+        raise ValueError(f"{col}: rows of {lens.min()} to {lens.max()} elements, "
+                         "not one dimension")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(lens), int(lens[0]) if len(lens) else 0)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -94,12 +119,12 @@ def cosine_topk_np(
     rounds only the displayed value: two neighbors colliding at ``round_dp``
     may swap relative rank between the two paths.
     """
-    q_rows = queries.select("vec_id", "embedding").collect()
-    if not q_rows:
+    qt = queries.select("vec_id", "embedding").toArrow()
+    if not qt.num_rows:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int")
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+    q_ids = np.asarray(qt.column("vec_id"), np.int64)
+    Q = _matrix(qt, "embedding")
     q_norm = np.linalg.norm(Q, axis=1, keepdims=True)
     if np.any(q_norm == 0):
         raise ValueError("cosine_topk_np: zero-norm query vector(s) "
@@ -108,16 +133,14 @@ def cosine_topk_np(
     n_q = len(q_ids)
 
     def part(batches):
-        import pandas as pd
-
         # running per-query candidate pools, merged batch-by-batch
         pool_ids = [np.empty(0, dtype=np.int64) for _ in range(n_q)]
         pool_scores = [np.empty(0, dtype=np.float64) for _ in range(n_q)]
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C = np.asarray(list(pdf["embedding"]), dtype=np.float64)
+            ids = np.asarray(b.column("vec_id"), np.int64)
+            C = _matrix(b, "embedding")
             c_norm = np.linalg.norm(C, axis=1, keepdims=True)
             # zero-norm corpus rows: cosine undefined → score 0, never NaN
             Cn = C / np.where(c_norm == 0.0, 1.0, c_norm)
@@ -131,12 +154,10 @@ def cosine_topk_np(
                 # union of per-partition top-k under the same order
                 order = np.lexsort((cand_i, -cand_s))[:k]
                 pool_scores[j], pool_ids[j] = cand_s[order], cand_i[order]
-        out = {
-            "query_id": np.repeat(q_ids, [len(p) for p in pool_ids]),
-            "neighbor_id": np.concatenate(pool_ids) if n_q else np.empty(0, np.int64),
-            "cosine": np.concatenate(pool_scores) if n_q else np.empty(0, np.float64),
-        }
-        yield pd.DataFrame(out)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.repeat(q_ids, [len(p) for p in pool_ids])),
+             pa.array(np.concatenate(pool_ids)), pa.array(np.concatenate(pool_scores))],
+            names=["query_id", "neighbor_id", "cosine"])
 
     # no scan rebalance here (unlike the LSH chain): the corpus pass is a
     # single light GEMM with map-side top-k and nothing heavy hangs off
@@ -144,9 +165,8 @@ def cosine_topk_np(
     # round-robin exchange costs more than the single-task GEMM it
     # parallelizes (A/B at sf1.0: 0.48 s vs 0.64 s); large corpora arrive
     # multi-partition from the scan itself
-    scored = corpus.select("vec_id", "embedding").mapInPandas(
-        part, schema="query_id long, neighbor_id long, cosine double"
-    )
+    scored = corpus.select("vec_id", "embedding").mapInArrow(
+        part, schema="query_id long, neighbor_id long, cosine double")
     return _top_k(scored, k)
 
 
@@ -183,23 +203,17 @@ def srp_buckets(df: DataFrame, vec_col: str, planes: np.ndarray,
     literal-expression form is the same plan-explosion class as the fixed
     IVF CASE chain.  One (batch × dim) @ (dim × n_planes) BLAS product +
     a bit-pack replaces n_planes per-row ``aggregate`` passes."""
-    import pandas as pd
-
     P = np.ascontiguousarray(np.asarray(planes, dtype=np.float64).T)
     weights = (np.int64(1) << np.arange(P.shape[1], dtype=np.int64))
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + f", {out_col} long"
+    schema = T.StructType([*df.schema.fields, T.StructField(out_col, T.LongType())])
 
     def bucketize(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            pdf = pdf.copy()
-            pdf[out_col] = ((X @ P) > 0).astype(np.int64) @ weights
-            yield pdf
+        for b in batches:
+            if b.num_rows:
+                X = _matrix(b, vec_col)
+                yield b.append_column(out_col, pa.array(((X @ P) > 0).astype(np.int64) @ weights))
 
-    return df.mapInPandas(bucketize, schema=schema)
+    return df.mapInArrow(bucketize, schema)
 
 
 #: seed of the SRP hyperplanes; the gate's ann_lsh_topk oracle replays them
@@ -259,16 +273,16 @@ def train_ivf_centroids(
     h = F.crc32(F.col("embedding").cast("string"))
     n = corpus.count()
     keep_mod = max(1, n // (sample * 4))
-    pdf = (corpus.select("embedding", h.alias("_h"))
-           .filter(F.pmod(F.xxhash64(F.col("embedding").cast("string")),
-                          F.lit(keep_mod)) == 0)
-           .orderBy("_h").limit(sample).drop("_h").toPandas())
-    if len(pdf) < min(sample, n):
+    t = (corpus.select("embedding", h.alias("_h"))
+         .filter(F.pmod(F.xxhash64(F.col("embedding").cast("string")),
+                        F.lit(keep_mod)) == 0)
+         .orderBy("_h").limit(sample).drop("_h").toArrow())
+    if t.num_rows < min(sample, n):
         # duplicate-heavy / tiny corpora can underfill the hash filter —
         # fall back to the direct top-k pull (small by construction here)
-        pdf = (corpus.select("embedding", h.alias("_h"))
-               .orderBy("_h").limit(sample).drop("_h").toPandas())
-    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+        t = (corpus.select("embedding", h.alias("_h"))
+             .orderBy("_h").limit(sample).drop("_h").toArrow())
+    X = _matrix(t, "embedding")
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
@@ -309,49 +323,45 @@ def ivf_topk(
     (The round-2 plan-literal CASE chain exploded the Catalyst plan at
     realistic nlist ≥ 1024; the matrix form is O(1) plan size at any nlist.)
     """
-    import pandas as pd
-
     C = normalize_centroids(centroids)
+    id_t = corpus.schema["vec_id"].dataType
+    vec_t = corpus.schema["embedding"].dataType
 
-    id_t = corpus.schema["vec_id"].dataType.simpleString()
-    vec_t = corpus.schema["embedding"].dataType.simpleString()
-
-    def _normed(pdf):
-        X = np.asarray(list(pdf["embedding"]), dtype=np.float64)
+    def _sims(b):
+        X = _matrix(b, "embedding")
         n = np.linalg.norm(X, axis=1, keepdims=True)
-        return X / np.where(n == 0.0, 1.0, n)
+        return (X / np.where(n == 0.0, 1.0, n)) @ C.T  # (batch, nlist)
 
     def assign_corpus(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lid = np.argmax(_normed(pdf) @ C.T, axis=1)  # ties → lower id,
-            yield pd.DataFrame({                         # like the CASE chain
-                "neighbor_id": pdf["vec_id"].to_numpy(),
-                "c_vec": pdf["embedding"],
-                "list_id": lid.astype(np.int32),
-            })
+        for b in batches:
+            if b.num_rows:
+                lid = np.argmax(_sims(b), axis=1)  # ties → lower id, like the CASE chain
+                yield pa.RecordBatch.from_arrays(
+                    [b.column("vec_id"), b.column("embedding"), pa.array(lid.astype(np.int32))],
+                    names=["neighbor_id", "c_vec", "list_id"])
 
     def probe_queries(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            S = _normed(pdf) @ C.T  # (n_q, nlist)
-            rows = {"query_id": [], "q_vec": [], "list_id": []}
-            for r in range(len(pdf)):
-                # descending sim, ties → higher list id (the order the
-                # reverse(array_sort(struct(s,i))) form produced)
-                order = np.lexsort((-np.arange(len(C)), -S[r]))[:nprobe]
-                for lid in order:
-                    rows["query_id"].append(pdf["vec_id"].iloc[r])
-                    rows["q_vec"].append(pdf["embedding"].iloc[r])
-                    rows["list_id"].append(int(lid))
-            yield pd.DataFrame(rows)
+        for b in batches:
+            if b.num_rows:
+                S = _sims(b)
+                # per row: descending sim, ties → higher list id (the order
+                # the reverse(array_sort(struct(s,i))) form produced)
+                rank = np.broadcast_to(-np.arange(len(C)), S.shape)
+                lid = np.lexsort((rank, -S), axis=1)[:, :nprobe]
+                p = b.take(pa.array(np.repeat(np.arange(b.num_rows), lid.shape[1])))
+                yield pa.RecordBatch.from_arrays(
+                    [p.column("vec_id"), p.column("embedding"),
+                     pa.array(lid.ravel().astype(np.int32))],
+                    names=["query_id", "q_vec", "list_id"])
 
-    c = rebalance(corpus.select("vec_id", "embedding")).mapInPandas(
-        assign_corpus, schema=f"neighbor_id {id_t}, c_vec {vec_t}, list_id int")
-    q = queries.select("vec_id", "embedding").mapInPandas(
-        probe_queries, schema=f"query_id {id_t}, q_vec {vec_t}, list_id int")
+    def schema(id_name, vec_name):
+        return T.StructType([T.StructField(id_name, id_t), T.StructField(vec_name, vec_t),
+                             T.StructField("list_id", T.IntegerType())])
+
+    c = rebalance(corpus.select("vec_id", "embedding")).mapInArrow(
+        assign_corpus, schema("neighbor_id", "c_vec"))
+    q = queries.select("vec_id", "embedding").mapInArrow(
+        probe_queries, schema("query_id", "q_vec"))
     return _rerank(c, q, "list_id", k)
 
 
@@ -441,58 +451,53 @@ def _verify_candidates(c: DataFrame, cand: DataFrame, threshold: float,
     rearrangement, invisible at 6 dp — verified pairwise over the bench
     corpus and pinned by tests against the exact path).
     """
-    spark = c.sparkSession
+    def kept(batch, A, B, na, nb):
+        """The (_va, _vb) pairs of ``batch`` whose cosine reaches
+        ``threshold``, with that cosine; ``A``/``B`` hold their vectors and
+        ``na``/``nb`` the vector norms."""
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = np.einsum("ij,ij->i", A, B) / (na * nb)
+        keep = pa.array(cos >= threshold)  # NaN (zero-norm) compares False
+        return pa.RecordBatch.from_arrays(
+            [batch.column("_va").filter(keep), batch.column("_vb").filter(keep),
+             pa.array(cos).filter(keep)], names=["vec_a", "vec_b", "cosine"])
+
     # ONE job decides the path AND fetches the matrix: collect up to
     # cap+1 rows (cap = rows that fit the broadcast budget at the declared
-    # dim).  If the limit did not truncate, the collected frame IS the
+    # dim).  If the limit did not truncate, the collected table IS the
     # whole corpus; a 100 TB corpus stops the scan after cap+1 rows
     # instead of paying a full count.
     cap = max(1, VERIFY_BROADCAST_BYTES // (8 * dim))
-    pdf = c.limit(cap + 1).toPandas()
-    if 0 < len(pdf) <= cap:
-        ids = pdf["vid"].to_numpy(dtype=np.int64)
-        V = np.asarray(list(pdf["vec"]), dtype=np.float64)
+    t = c.limit(cap + 1).toArrow()
+    if 0 < t.num_rows <= cap:
+        ids = np.asarray(t.column("vid"), np.int64)
         order = np.argsort(ids)
-        ids_sorted, V_sorted = ids[order], V[order]
+        ids_sorted, V_sorted = ids[order], _matrix(t, "vec")[order]
         norms = np.linalg.norm(V_sorted, axis=1)
-        bc = spark.sparkContext.broadcast((ids_sorted, V_sorted, norms))
+        bc = c.sparkSession.sparkContext.broadcast((ids_sorted, V_sorted, norms))
 
         def verify(batches):
             ids_s, Vs, ns = bc.value
-            for pdf_b in batches:
-                if pdf_b.empty:
-                    continue
-                a = pdf_b["_va"].to_numpy(dtype=np.int64)
-                b = pdf_b["_vb"].to_numpy(dtype=np.int64)
-                ia = np.searchsorted(ids_s, a)
-                ib = np.searchsorted(ids_s, b)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = np.einsum("ij,ij->i", Vs[ia], Vs[ib]) \
-                        / (ns[ia] * ns[ib])
-                keep = cos >= threshold  # NaN (zero-norm) compares False
-                yield pd.DataFrame({"vec_a": a[keep], "vec_b": b[keep],
-                                    "cosine": cos[keep]})
+            for batch in batches:
+                if batch.num_rows:
+                    ia = np.searchsorted(ids_s, np.asarray(batch.column("_va"), np.int64))
+                    ib = np.searchsorted(ids_s, np.asarray(batch.column("_vb"), np.int64))
+                    yield kept(batch, Vs[ia], Vs[ib], ns[ia], ns[ib])
 
-        kept = cand.mapInPandas(
-            verify, schema="vec_a long, vec_b long, cosine double")
+        pairs = cand
     else:
-        @F.pandas_udf("double")
-        def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-            A = np.asarray(list(a), dtype=np.float64)
-            B = np.asarray(list(b), dtype=np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.einsum("ij,ij->i", A, B) \
-                    / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
-            return pd.Series(cos)
+        def verify(batches):
+            for batch in batches:
+                if batch.num_rows:
+                    A, B = _matrix(batch, "_vva"), _matrix(batch, "_vvb")
+                    yield kept(batch, A, B, np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1))
 
-        kept = (
+        pairs = (
             cand
             .join(c.select(F.col("vid").alias("_va"), F.col("vec").alias("_vva")), "_va")
             .join(c.select(F.col("vid").alias("_vb"), F.col("vec").alias("_vvb")), "_vb")
-            .select(F.col("_va").alias("vec_a"), F.col("_vb").alias("vec_b"),
-                    pair_cosine(F.col("_vva"), F.col("_vvb")).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
         )
+    kept_pairs = pairs.mapInArrow(verify, "vec_a long, vec_b long, cosine double")
     # ROUND outside the UDF: Spark's half-up semantics, matching the HOF
     # tail (np.round is half-even)
-    return kept.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
+    return kept_pairs.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))

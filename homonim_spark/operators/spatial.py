@@ -19,15 +19,15 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Sequence
+from typing import List
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark import grid
+from homonim_spark.tiles import map_tile_batches
 
 
 # ---------------------------------------------------------------------------
@@ -91,34 +91,28 @@ def polyfill_footprints(footprints: DataFrame, res: int) -> DataFrame:
     """footprints(footprint_id, polygon:array<struct<x,y>>) → one row per
     covering cell at ``res``, flagged ``boundary`` when the cell rectangle
     crosses the polygon edge (center-in but not all-corners-in, or
-    vice-versa).  Runs as an Arrow UDF per polygon — polygons are metadata-
-    scale; cells are the big side."""
+    vice-versa).  Runs as a ``tiles.map_tile_batches`` row function per
+    polygon — polygons are metadata-scale; cells are the big side."""
 
-    def fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ring = [(p["x"], p["y"]) for p in r.polygon]
-                cells = grid.polyfill(ring, res)
-                if not cells:
-                    continue
-                s = grid.cell_size(res)
-                cells_a = np.array(cells, dtype=np.int64)
-                cr = grid.cell_row(cells_a).astype(np.float64)
-                cc = grid.cell_col(cells_a).astype(np.float64)
-                # a cell is interior iff all 4 corners are inside
-                corners_in = np.ones(len(cells), dtype=bool)
-                for dy in (0.0, 1.0):
-                    for dx in (0.0, 1.0):
-                        corners_in &= grid.points_in_polygon(
-                            (cc + dx) * s, (cr + dy) * s, ring)
-                for cid, interior in zip(cells, corners_in):
-                    rows.append({"footprint_id": r.footprint_id,
-                                 "cell_id": int(cid),
-                                 "boundary": not bool(interior)})
-            yield pd.DataFrame(rows, columns=["footprint_id", "cell_id", "boundary"])
+    s = grid.cell_size(res)
 
-    return footprints.mapInPandas(fill, schema=_PIP_SCHEMA)
+    def fill(footprint_id, polygon):
+        ring = [(p["x"], p["y"]) for p in polygon]
+        cells = grid.polyfill(ring, res)
+        if not cells:
+            return ()
+        cells_a = np.array(cells, dtype=np.int64)
+        cr = grid.cell_row(cells_a).astype(np.float64)
+        cc = grid.cell_col(cells_a).astype(np.float64)
+        # a cell is interior iff all 4 corners are inside
+        corners_in = np.ones(len(cells), dtype=bool)
+        for dy in (0.0, 1.0):
+            for dx in (0.0, 1.0):
+                corners_in &= grid.points_in_polygon((cc + dx) * s, (cr + dy) * s, ring)
+        return [(footprint_id, int(cid), not bool(interior))
+                for cid, interior in zip(cells, corners_in)]
+
+    return map_tile_batches(footprints.select("footprint_id", "polygon"), fill, _PIP_SCHEMA)
 
 
 def assign_tiles_to_footprints(

@@ -14,29 +14,30 @@ continuously and each micro-batch must be corrected exactly once.
 
 from __future__ import annotations
 
-import time
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-def stop_after_data_batch(q: StreamingQuery) -> None:
-    """Stop an ``availableNow`` query once its data batch has committed.
 
-    A stateful query with pending processing-time timeouts never ends on
-    its own: it keeps running no-data micro-batches.  Batch 0 holds all the
-    data available at start, so stop once batch 1 reports progress (or the
-    query ends by itself, or 240 s pass)."""
-    deadline = time.time() + 240
-    while time.time() < deadline:
-        if q.awaitTermination(3):
-            break
-        p = q.lastProgress
-        if p is not None and p.get("batchId", -1) >= 1:
-            break
-    q.stop()
-    q.awaitTermination(60)
+@contextmanager
+def data_batches_only(spark: SparkSession):
+    """Start the queries of the ``with`` block without no-data micro-batches.
+
+    A stateful query with pending processing-time timeouts runs no-data
+    micro-batches forever, so under ``availableNow`` it never ends.  Without
+    them it ends after its data batches.  The session setting is restored
+    on exit: a watermarked aggregation needs its closing no-data batch to
+    emit the windows the final watermark closes."""
+    old = spark.conf.get(_NO_DATA_BATCHES)
+    spark.conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(_NO_DATA_BATCHES, old)
 
 
 def incremental_media_refs(

@@ -55,7 +55,7 @@ def test_media_payload_dedup(spark):
 def test_stateful_sessionize_executes(spark, tmp_path):
     """applyInPandasWithState sessionization over a file stream: sessions
     split on the inactivity gap and match the batch lag-window answer."""
-    from homonim_spark.streaming import stateful_sessionize, stop_after_data_batch
+    from homonim_spark.streaming import data_batches_only, stateful_sessionize
     base = pd.Timestamp("2026-01-01 00:00:00")
     rows = []
     # user 1: two sessions separated by 1 hour; user 2: one session
@@ -71,10 +71,10 @@ def test_stateful_sessionize_executes(spark, tmp_path):
     stream = (spark.readStream
               .schema("ts timestamp, user_id long, value double").parquet(in_dir))
     out = stateful_sessionize(stream)
-    q = (out.writeStream.outputMode("append").format("memory")
+    with data_batches_only(spark):
+        (out.writeStream.outputMode("append").format("memory")
          .queryName("sessions").option("checkpointLocation", str(tmp_path / "sck"))
-         .trigger(availableNow=True).start())
-    stop_after_data_batch(q)
+         .trigger(availableNow=True).start().awaitTermination())
     res = spark.sql("select * from sessions").toPandas()
     # the gap-closed session for user 1 is emitted; open sessions stay in
     # state (would emit on timeout in a long-running stream)
@@ -90,7 +90,7 @@ def test_stateful_sessionize_group_larger_than_arrow_batch(spark, tmp_path):
     operator must sessionize the whole group in ts order, not per chunk
     (regression: per-chunk sorting merged/split sessions whenever a
     later-ts chunk was processed first)."""
-    from homonim_spark.streaming import stateful_sessionize, stop_after_data_batch
+    from homonim_spark.streaming import data_batches_only, stateful_sessionize
     base = pd.Timestamp("2026-01-01 00:00:00")
     rows = []
     # one user, 3 sessions x 220 events (660 rows total, ~3 Arrow chunks),
@@ -105,11 +105,11 @@ def test_stateful_sessionize_group_larger_than_arrow_batch(spark, tmp_path):
               .schema("ts timestamp, user_id long, value double")
               .parquet(in_dir))
     out = stateful_sessionize(stream)
-    q = (out.writeStream.outputMode("append").format("memory")
+    with data_batches_only(spark):
+        (out.writeStream.outputMode("append").format("memory")
          .queryName("big_sessions")
          .option("checkpointLocation", str(tmp_path / "big_sck"))
-         .trigger(availableNow=True).start())
-    stop_after_data_batch(q)
+         .trigger(availableNow=True).start().awaitTermination())
     res = spark.sql("select * from big_sessions").toPandas()
     # first two sessions closed by the 2h gaps; third stays in state
     assert len(res) == 2

@@ -1,8 +1,9 @@
-"""Every public top-level def/class in ``homonim_spark/`` has a caller
-outside ``tests/``, or a one-line reason in ``ALLOWED`` why only tests
-reach it.  A name counts as called when a ``Name``, an ``Attribute`` or an
-import alias refers to it in the library, the driver module, the bench
-scripts, ``tools/`` or ``perfbench/``."""
+"""Every public top-level def/class in ``homonim_spark/``, and every
+top-level def/class of the driver module ``__spark_entry__.py``, has a
+caller outside ``tests/``, or a one-line reason in ``ALLOWED`` why only
+tests reach it.  A name counts as called when a ``Name``, an ``Attribute``
+or an import alias refers to it in the library, the driver module, the
+bench scripts, ``tools/`` or ``perfbench/``."""
 
 import ast
 from pathlib import Path
@@ -30,11 +31,12 @@ ALLOWED = {
 
 
 def _public_names():
-    for path in sorted((ROOT / "homonim_spark").rglob("*.py")):
+    driver = ROOT / "__spark_entry__.py"
+    for path in [*sorted((ROOT / "homonim_spark").rglob("*.py")), driver]:
         for node in ast.parse(path.read_text()).body:
             if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                   ast.ClassDef))
-                    and not node.name.startswith("_")):
+                    and (path == driver or not node.name.startswith("_"))):
                 yield path.relative_to(ROOT), node.name
 
 

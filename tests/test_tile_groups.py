@@ -1,10 +1,12 @@
-"""Grouped tile stages at Arrow batch boundaries.
+"""Python stages at Arrow batch boundaries.
 
 ``tiles.map_tile_groups`` streams sorted rows through ``mapInArrow`` and
 must hand its function every complete group, also a group that spans
 record batches.  Each grouped site runs with
 ``spark.sql.execution.arrow.maxRecordsPerBatch=3`` and with the session
-default (512), and must give byte-identical payloads and GeoTIFF pixels."""
+default (512), and must give byte-identical payloads and GeoTIFF pixels.
+The batch-matrix similarity stages and the per-row text and polygon
+stages must give identical rows at both batch sizes too."""
 
 from contextlib import contextmanager
 
@@ -15,8 +17,10 @@ from pyspark.sql import types as T
 
 from homonim_spark import datagen
 from homonim_spark.operators.fuse import fuse
+from homonim_spark.operators import dedup, similarity
 from homonim_spark.operators.ingest import regrid_tiles
 from homonim_spark.operators.sink import build_overviews, convert_tiles, export_corrected_gtiff
+from homonim_spark.operators.spatial import polyfill_footprints
 from homonim_spark.tiffio import read_gtiff
 from homonim_spark.tiles import map_tile_groups
 
@@ -99,5 +103,58 @@ def test_grouped_sites_are_byte_identical_at_three_rows_per_batch(spark, tables,
     assert spark.conf.get(BATCH) == "512"
     assert len(default["fuse"]) == 24 and len(default["overview"]) > 0
     assert sorted(default["gtiff"]) == ["b0", "b1"]
+    for site in default:
+        assert small[site] == default[site], site
+
+
+@pytest.fixture(scope="module")
+def row_inputs(spark):
+    """60 embeddings (the last 30 near-copies of the first 30), documents
+    sharing one long passage, and the fixture footprints; each frame has
+    several rows per partition, so 3 rows per batch splits them."""
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((60, 8)).astype(np.float32)
+    base[30:] = base[:30] + 0.05 * rng.standard_normal((30, 8)).astype(np.float32)
+    vecs = spark.createDataFrame([(i, base[i].tolist()) for i in range(60)],
+                                 "vec_id long, embedding array<float>").coalesce(2)
+    words = "raster band landsat sentinel drone aerial footprint ortho scene tile".split()
+    shared = " ".join(rng.choice(words, 120))
+    texts = [" ".join(rng.choice(words, 40)) + (" " + shared if i % 2 else "")
+             for i in range(12)]
+    docs = spark.createDataFrame([(i, t) for i, t in enumerate(texts)] + [(12, None), (13, "")],
+                                 "doc_id long, text string").coalesce(2)
+    footprints = spark.createDataFrame(datagen.build_footprints(8)).coalesce(1)
+    return vecs, docs, footprints
+
+
+def _row_sites(vecs, docs, footprints, centroids, monkeypatch):
+    queries = vecs.filter("vec_id < 6")
+    sites = {
+        "cosine_topk_np": _rows(similarity.cosine_topk_np(vecs, queries, k=4)),
+        "ivf_topk": _rows(similarity.ivf_topk(vecs, queries, centroids, k=4, nprobe=2)),
+        "neardup": _rows(similarity.embedding_near_duplicates(
+            vecs, threshold=0.9, dim=8, n_planes=4)),
+        "content_chunks": _rows(dedup.content_chunks(docs)),
+        "polyfill": _rows(polyfill_footprints(footprints, datagen.FIXTURE_RES)),
+    }
+    with monkeypatch.context() as m:  # the join branch of the verification
+        m.setattr(similarity, "VERIFY_BROADCAST_BYTES", 1)
+        sites["neardup_join"] = _rows(similarity.embedding_near_duplicates(
+            vecs, threshold=0.9, dim=8, n_planes=4))
+    return sites
+
+
+def test_row_and_matrix_sites_are_identical_at_three_rows_per_batch(
+        spark, row_inputs, monkeypatch):
+    vecs, docs, footprints = row_inputs
+    centroids = similarity.train_ivf_centroids(vecs, n_centroids=4)
+    default = _row_sites(vecs, docs, footprints, centroids, monkeypatch)
+    with _batch_rows(spark, 3):
+        small = _row_sites(vecs, docs, footprints, centroids, monkeypatch)
+    assert spark.conf.get(BATCH) == "512"
+    assert len(default["cosine_topk_np"]) == 24 and len(default["ivf_topk"]) == 24
+    assert len(default["neardup"]) >= 25 and default["neardup_join"] == default["neardup"]
+    assert {r["doc_id"] for r in default["content_chunks"]} == set(range(12))
+    assert {r["footprint_id"] for r in default["polyfill"]} == {f"fp-{i:03d}" for i in range(8)}
     for site in default:
         assert small[site] == default[site], site
